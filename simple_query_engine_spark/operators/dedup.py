@@ -32,7 +32,9 @@ chunks.
 from __future__ import annotations
 
 import os
+from collections import Counter, defaultdict
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -975,18 +977,27 @@ MAX_CC_ITERATIONS = 15
 # session instead of exporting an env var on every executor host.
 CC_SCRATCH_ENV = "SQE_CC_SCRATCH_DIR"
 
-# Size-adaptive components (guide §2.4 "remove shuffles outright" applied
-# to the iterative family): below this many SYMMETRIC edge rows the
-# fixpoint is solved on the driver by union-find over one bounded collect
-# — the broadcast-join analogue for graphs (a 200k-row edge list is ~3 MB
-# of longs, the same order as a broadcast relation), replacing
-# rounds × (3 joins + a parquet round-trip + a convergence count) with a
-# single bounded job.  This is the path the REDUCED per-batch graphs of
-# the incremental/streaming entries take even at 100 TB — their node set
-# is ∝ batch by construction (the whole point of rewriting delta edges
-# through the standing labels) — while a corpus-sized pair graph blows
-# the cap and takes the unchanged distributed pointer-doubling path.
-# 0 disables the fast path (tests pin the distributed algorithm with it).
+# Size-adaptive graphs (guide §2.4 "remove shuffles outright" applied to
+# the iterative family): one bounded ``limit(cap+1)`` probe sizes a
+# SYMMETRIC edge list and, when it holds at most this many rows, already
+# holds every edge — the broadcast-join analogue for graphs (a 200k-row
+# edge list is ~3 MB of longs, the same order as a broadcast relation).
+# Two placements follow from the probe:
+#
+# - under the cap, the whole graph is solved on the driver over the
+#   probe's rows: union-find for components, the pure per-graph solvers
+#   (PageRank, label spreading, k-core) via ``_solve_graph``;
+# - over the cap, components run the distributed pointer-doubling
+#   rounds, and the graph trio tags every edge with its component and
+#   runs the SAME solver once per component on the executors
+#   (``groupBy(component).applyInPandas``) — each algorithm depends only
+#   on a node's component, so the per-component results union to the
+#   whole-graph answer.
+#
+# The REDUCED per-batch graphs of the incremental/streaming entries stay
+# under the cap even at 100 TB (their node set is ∝ batch by
+# construction), while a corpus-sized pair graph crosses it.  0 forces
+# the over-cap placement (tests pin both placements against each other).
 CC_LOCAL_EDGE_CAP_CONF = "spark.sqe.cc.localEdgeCap"
 CC_LOCAL_EDGE_CAP_DEFAULT = 200_000
 
@@ -1001,149 +1012,32 @@ def _cc_local_edge_cap(spark: SparkSession) -> int:
         return CC_LOCAL_EDGE_CAP_DEFAULT
 
 
-def _bounded_edge_rows(edges: DataFrame, cap: int):
-    """One bounded ``limit(cap+1)`` probe of a ``(src, dst)`` edge list:
-    the (src, dst) python rows when the graph fits under ``cap``, else
-    None (caller takes its distributed path).  The probe early-outs — an
-    over-cap graph is never fully scanned."""
-    if cap <= 0:
-        return None
-    head = edges.select("src", "dst").limit(cap + 1).toPandas()
-    if len(head) > cap:
-        return None
-    return list(zip(head["src"].tolist(), head["dst"].tolist()))
+def _solve_graph(edges: DataFrame, solver, schema: str) -> DataFrame:
+    """Run a pure graph ``solver`` over a symmetric ``(src, dst[, seed
+    columns])`` edge list.  The solver maps a pandas edge frame to a
+    pandas result keyed by ``doc_id``; ``schema`` is the DDL of the
+    result columns after ``doc_id``, whose type is the edges' node type.
 
-
-def _local_pagerank(spark: SparkSession, edge_rows, node_type) -> DataFrame:
-    """Driver-side exact-integer PageRank over a bounded symmetric edge
-    list — value-identical to the distributed fixed-iteration chain
-    (integer micro-units, floored div, order-free int sums; Python ints
-    only widen, and both engines' int64 never overflows here or the
-    oracle comparison would already fail).  The same size-adaptive
-    discipline as :func:`_local_components`: bounded graphs (∝ batch at
-    scale) solve on the driver, over-cap graphs keep the distributed
-    5-iteration plan."""
-    from collections import defaultdict
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    deg: dict = defaultdict(int)
-    for s, _ in edge_rows:
-        deg[s] += 1
-    rank = {n: PAGERANK_UNIT for n in deg}
-    for _ in range(PAGERANK_ITERATIONS):
-        contrib: dict = defaultdict(int)
-        for s, d in edge_rows:
-            # Spark's integer `div` truncates; on the always-positive
-            # ranks that IS floor division, Python's //.
-            contrib[d] += rank[s] // deg[s]
-        rank = {
-            n: PAGERANK_BASE
-            + (contrib.get(n, 0) * PAGERANK_DAMP_NUM) // PAGERANK_DAMP_DEN
-            for n in deg
-        }
-    schema = StructType(
-        [
-            StructField("doc_id", node_type, True),
-            StructField("degree", LongType(), True),
-            StructField("rank_e6", LongType(), True),
-        ]
+    Placement (see ``CC_LOCAL_EDGE_CAP_CONF``): under the cap the solver
+    runs once on the driver over the bounded probe's rows; over it, every
+    edge is tagged with its ``_propagate_labels`` component and the
+    solver runs per component in a grouped map.  The per-group bound is
+    the largest component, which must fit in one Python worker."""
+    spark = edges.sparkSession
+    schema = f"doc_id {edges.schema['src'].dataType.simpleString()}, {schema}"
+    cap = _cc_local_edge_cap(spark)
+    if cap > 0:
+        head = edges.limit(cap + 1).toPandas()
+        if len(head) <= cap:
+            return spark.createDataFrame(solver(head), schema)
+    labels, _ = _propagate_labels(edges.select("src", "dst"))
+    component = labels.select(
+        F.col("doc_id").alias("src"), F.col("label").alias("_component")
     )
-    return spark.createDataFrame(
-        [(n, deg[n], rank[n]) for n in deg], schema
-    )
-
-
-def _local_label_spread(
-    spark: SparkSession, sf_dir: str, edge_rows, node_type
-) -> DataFrame:
-    """Driver-side exact label spreading over a bounded symmetric edge
-    list: same seed rule, per-round majority vote with the same
-    (count desc, label asc) total order, synchronous cumulative frontier.
-    Seed sources come from ONE bounded job (documents ⋈ seed ids — rows
-    ∝ graph nodes, never the corpus)."""
-    from collections import defaultdict
-
-    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
-
-    nodes = {s for s, _ in edge_rows}
-    # doc_ids are non-negative (the planted-id guard), so Spark's % and
-    # Python's % agree.
-    seed_ids = sorted(n for n in nodes if n % LABEL_SEED_MOD == 0)
-    ids_df = spark.createDataFrame(
-        [(n,) for n in seed_ids],
-        StructType([StructField("doc_id", node_type, True)]),
-    )
-    docs = table(spark, sf_dir, "documents").select("doc_id", "source")
-    src_of = {
-        r["doc_id"]: r["source"] for r in docs.join(ids_df, "doc_id").collect()
-    }
-    labeled = {n: (src_of[n], 0) for n in seed_ids if n in src_of}
-    for rnd in range(1, LABEL_SPREAD_ROUNDS + 1):
-        votes: dict = defaultdict(lambda: defaultdict(int))
-        for s, d in edge_rows:
-            if s in labeled and d not in labeled:
-                votes[d][labeled[s][0]] += 1
-        new = {}
-        for d, v in votes.items():
-            best = min(v.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-            new[d] = (best, rnd)
-        labeled.update(new)
-    schema = StructType(
-        [
-            StructField("doc_id", node_type, True),
-            StructField("label", StringType(), True),
-            StructField("labeled_round", IntegerType(), True),
-        ]
-    )
-    return spark.createDataFrame(
-        [(n, lab, rnd) for n, (lab, rnd) in labeled.items()], schema
-    )
-
-
-def _local_kcore(spark: SparkSession, edge_rows, node_type) -> DataFrame:
-    """Driver-side exact synchronized k-core peeling over a bounded
-    symmetric edge list — pure integer set arithmetic, mirroring the
-    distributed rounds edge-row-for-edge-row (degrees count edge rows,
-    exactly like the per-round groupBy)."""
-    from collections import defaultdict
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    alive = {s for s, _ in edge_rows}
-    peel = {n: 0 for n in alive}
-    for r in range(1, KCORE_ROUNDS + 1):
-        deg: dict = defaultdict(int)
-        for s, d in edge_rows:
-            if s in alive and d in alive:
-                deg[s] += 1
-        dropped = {n for n in alive if deg.get(n, 0) < KCORE_K}
-        for n in dropped:
-            peel[n] = r
-        alive -= dropped
-    core_deg: dict = defaultdict(int)
-    for s, d in edge_rows:
-        if s in alive and d in alive:
-            core_deg[s] += 1
-    schema = StructType(
-        [
-            StructField("doc_id", node_type, True),
-            StructField("peel_round", LongType(), True),
-            StructField("in_core", LongType(), True),
-            StructField("core_degree", LongType(), True),
-        ]
-    )
-    return spark.createDataFrame(
-        [
-            (
-                n,
-                peel[n],
-                1 if peel[n] == 0 else 0,
-                core_deg.get(n, 0) if peel[n] == 0 else 0,
-            )
-            for n in peel
-        ],
-        schema,
+    return (
+        edges.join(component, "src")
+        .groupBy("_component")
+        .applyInPandas(solver, schema)
     )
 
 
@@ -1619,18 +1513,15 @@ PAGERANK_BASE = PAGERANK_UNIT * (PAGERANK_DAMP_DEN - PAGERANK_DAMP_NUM) // PAGER
 def _neardup_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus near-dup pair list, session-cached ONCE for the whole
     graph-analysis family: clusters/pagerank/label-spread/triangles/k-core
-    all derive their edge lists from it, and before r18 each entry cached
-    its OWN copy (pagerank_edges, label_spread_edges, tri_oriented, ...)
-    — one banded-join evaluation per entry per session.  Sharing a single
-    cache is the same load-once/query-many policy with the duplication
-    removed; dedup_minhash_lsh ITSELF stays uncached (the bench's warm
-    number for it keeps measuring the pair computation)."""
+    all derive their edge lists from it, so the banded join is evaluated
+    once per session rather than once per entry; dedup_minhash_lsh ITSELF
+    stays uncached (the bench's warm number for it keeps measuring the
+    pair computation)."""
     return session_cache(
         q_dedup_minhash_lsh(spark, sf_dir).select("doc_id_a", "doc_id_b"),
         sf_dir,
         "neardup_graph_pairs",
     )
-
 
 
 def q_graph_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1651,60 +1542,40 @@ def q_graph_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     remainder mass — deterministically, identically, on both engines;
     ranking order is what the operator is for, not probability mass.)
 
-    Scale shape: per iteration ONE join of the static cached
-    (edge, degree) table with the |nodes|-sized rank table and one
-    map-side-combined sum per destination — PageRank's canonical
-    shuffle-per-iteration cost; 5 fixed iterations ⇒ linear plan depth,
-    no lineage blow-up (the self-join analyzer explosion that forces
-    ``_propagate_labels``' parquet truncation does not occur here
-    because rank never joins itself)."""
-    pairs = _neardup_pairs_cached(spark, sf_dir)
-    edges = _symmetric_edges(pairs)
-    # Size-adaptive fast path (guide §2.4/§5, the _local_components
-    # discipline, r18): a bounded graph solves on the driver in exact
-    # integer arithmetic — value-identical to the distributed chain
-    # (pinned in test_pagerank_fast_path_matches_distributed and by the
-    # Python-model test) — replacing 5 iterations × (join + partial-agg
-    # shuffle + join) with one bounded probe.  Over-cap graphs (a
-    # corpus-sized pair graph at 100 TB) keep the distributed plan below.
-    head = _bounded_edge_rows(edges, _cc_local_edge_cap(spark))
-    if head is not None:
-        return _local_pagerank(spark, head, edges.schema["src"].dataType)
-    # BOTH static tables cache: deg is referenced in every iteration's
-    # rank rebuild (and the final join) — uncached, each reference
-    # re-executes the whole LSH candidate join upstream of it.
-    deg = session_cache(
-        edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg")),
-        sf_dir,
-        "pagerank_deg",
-    )
-    edges_deg = session_cache(edges.join(deg, "src"), sf_dir, "pagerank_edges")
-    base = PAGERANK_BASE
-    rank = deg.select(F.col("src").alias("node"), F.lit(PAGERANK_UNIT).alias("rank"))
+    Scale shape: PageRank here adds the constant ``PAGERANK_BASE``
+    rather than a 1/N teleport term, so a node's rank depends only on
+    its connected component.  :func:`_pagerank_solver` runs through
+    :func:`_solve_graph`: once on the driver over a bounded graph, or
+    once per component in a grouped map over an over-cap one — no
+    per-iteration shuffle either way."""
+    edges = _symmetric_edges(_neardup_pairs_cached(spark, sf_dir))
+    return _solve_graph(edges, _pagerank_solver, "degree bigint, rank_e6 bigint")
+
+
+def _pagerank_solver(edges: pd.DataFrame) -> pd.DataFrame:
+    """Exact-integer PageRank over a symmetric ``(src, dst)`` edge frame:
+    integer micro-units, floored division, order-free int sums (Python
+    ints only widen; int64 never overflows here or the oracle comparison
+    would already fail)."""
+    src, dst = edges["src"].tolist(), edges["dst"].tolist()
+    deg = Counter(src)
+    rank = dict.fromkeys(deg, PAGERANK_UNIT)
     for _ in range(PAGERANK_ITERATIONS):
-        contrib = (
-            edges_deg.join(rank, edges_deg.src == rank.node)
-            .select("dst", F.expr("rank div out_deg").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        rank = (
-            deg.join(contrib, deg.src == contrib.dst, "left")
-            .select(
-                F.col("src").alias("node"),
-                (
-                    F.lit(base)
-                    + F.expr(
-                        f"coalesce(contrib, 0L) * {PAGERANK_DAMP_NUM} "
-                        f"div {PAGERANK_DAMP_DEN}"
-                    )
-                ).alias("rank"),
-            )
-        )
-    return rank.join(deg, rank.node == deg.src).select(
-        F.col("node").alias("doc_id"),
-        F.col("out_deg").alias("degree"),
-        F.col("rank").alias("rank_e6"),
+        contrib: dict = defaultdict(int)
+        for s, d in zip(src, dst):
+            # Spark's and DuckDB's integer division truncate; on the
+            # always-positive ranks that IS floor division, Python's //.
+            contrib[d] += rank[s] // deg[s]
+        rank = {
+            n: PAGERANK_BASE + (contrib[n] * PAGERANK_DAMP_NUM) // PAGERANK_DAMP_DEN
+            for n in deg
+        }
+    return pd.DataFrame(
+        {
+            "doc_id": list(deg),
+            "degree": list(deg.values()),
+            "rank_e6": list(rank.values()),
+        }
     )
 
 
@@ -1770,78 +1641,73 @@ def q_graph_label_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     chained CTEs.  Seeds never relabel; rounds are synchronous (the
     frontier sees the PREVIOUS cumulative labeled set).
 
-    Scale shape: per round one join of the cached symmetric edge list
-    with the labeled set (shuffle keyed on node), one map-side-combined
-    (node, label) count, one per-node row_number pick, one anti-join
-    against the labeled set — every stage ∝ frontier edges, never the
-    corpus; {LABEL_SPREAD_ROUNDS} fixed rounds ⇒ linear plan depth.
-    Labels never join themselves recursively (the cumulative set is a
-    3-deep union), so no lineage truncation is needed."""
-    from pyspark.sql.window import Window
-
-    pairs = _neardup_pairs_cached(spark, sf_dir)
-    # Size-adaptive fast path (r18, the _local_components discipline):
-    # bounded graphs solve on the driver — same seed rule, same majority
-    # total order, one bounded probe + one seed-source lookup job instead
-    # of rounds × (vote join + anti-join + window).  Equality pinned in
-    # test_label_spread_fast_path_matches_distributed and by the
-    # Python-model test; over-cap graphs keep the distributed rounds.
-    head = _bounded_edge_rows(_symmetric_edges(pairs), _cc_local_edge_cap(spark))
-    if head is not None:
-        return _local_label_spread(
-            spark, sf_dir, head, pairs.schema["doc_id_a"].dataType
-        )
-    edges = session_cache(
-        _symmetric_edges(pairs),
-        sf_dir,
-        "label_spread_edges",
-    )
-    nodes = edges.select(F.col("src").alias("node")).distinct()
-    docs = table(spark, sf_dir, "documents").select("doc_id", "source")
-    # Each round references the cumulative labeled set TWICE (vote join +
-    # anti-join), so an uncached union chain re-evaluates exponentially
-    # (3^rounds leaf references).  Caching the seeds and each round's
-    # DELTA keeps the union a cheap lazy node over cached children —
-    # every reference is linear (the pagerank iterations don't need this
-    # because rank never joins itself twice).
-    labels = session_cache(
-        nodes.filter(F.col("node") % LABEL_SEED_MOD == 0)
-        .join(docs, F.col("node") == F.col("doc_id"))
+    Scale shape: a node's label depends only on the seeds in its
+    connected component.  Seed sources join onto the symmetric edge list
+    on the executors (``is_seed``/``seed_label`` on each edge's ``src``),
+    and :func:`_label_spread_solver` runs through :func:`_solve_graph`:
+    once on the driver over a bounded graph, or once per component in a
+    grouped map over an over-cap one."""
+    seeds = (
+        table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % LABEL_SEED_MOD == 0)
         .select(
-            "node", F.col("source").alias("label"), F.lit(0).alias("labeled_round")
-        ),
-        sf_dir,
-        "label_spread_seeds",
-    )
-    for r in range(1, LABEL_SPREAD_ROUNDS + 1):
-        w = Window.partitionBy("dst").orderBy(F.col("c").desc(), F.col("label"))
-        new = session_cache(
-            edges.join(labels.select(F.col("node").alias("src"), "label"), "src")
-            .join(
-                labels.select(F.col("node").alias("dst")),
-                "dst",
-                "left_anti",
-            )
-            .groupBy("dst", "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(
-                F.col("dst").alias("node"), "label", F.lit(r).alias("labeled_round")
-            ),
-            sf_dir,
-            f"label_spread_delta_r{r}",
+            F.col("doc_id").alias("src"),
+            F.col("source").alias("seed_label"),
+            F.lit(True).alias("is_seed"),
         )
-        labels = labels.union(new)
-    return labels.select(
-        F.col("node").alias("doc_id"), "label", F.col("labeled_round").cast("int")
+    )
+    edges = (
+        _symmetric_edges(_neardup_pairs_cached(spark, sf_dir))
+        .join(seeds, "src", "left")
+        .na.fill(False, ["is_seed"])
+    )
+    return _solve_graph(edges, _label_spread_solver, "label string, labeled_round int")
+
+
+def _vote_order(vote: tuple) -> tuple:
+    """Majority-pick sort key for a ``(label, count)`` vote: count desc,
+    then label asc with NULL first — Spark's ascending default, spelled
+    out because Python cannot compare None with a string."""
+    label, count = vote
+    return (-count, label is not None, label or "")
+
+
+def _label_spread_solver(edges: pd.DataFrame) -> pd.DataFrame:
+    """Synchronous label spreading over a symmetric ``(src, dst,
+    seed_label, is_seed)`` edge frame: seeds keep their label at round 0;
+    each round every unlabeled neighbor of the PREVIOUS labeled set adopts
+    its majority label (:func:`_vote_order`)."""
+    src, dst = edges["src"].tolist(), edges["dst"].tolist()
+    labeled = {
+        s: (label, 0)
+        for s, label, seed in zip(
+            src, edges["seed_label"].tolist(), edges["is_seed"].tolist()
+        )
+        if seed
+    }
+    for rnd in range(1, LABEL_SPREAD_ROUNDS + 1):
+        votes: dict = defaultdict(Counter)
+        for s, d in zip(src, dst):
+            if s in labeled and d not in labeled:
+                votes[d][labeled[s][0]] += 1
+        labeled.update(
+            (d, (min(v.items(), key=_vote_order)[0], rnd)) for d, v in votes.items()
+        )
+    return pd.DataFrame(
+        {
+            "doc_id": list(labeled),
+            "label": [lab for lab, _ in labeled.values()],
+            "labeled_round": [rnd for _, rnd in labeled.values()],
+        }
     )
 
 
 def _label_spread_oracle_sql() -> str:
     """Unrolled fixed-round twin of q_graph_label_spread: cumulative
     labeled-set CTEs all0..allN, majority pick via the same
-    (count desc, label asc) total order."""
+    (count desc, label asc NULLS FIRST) total order as the solver's
+    :func:`_vote_order` — spelled out because DuckDB defaults to NULLS
+    LAST."""
     steps = []
     prev = "all0"
     for r in range(1, LABEL_SPREAD_ROUNDS + 1):
@@ -1849,7 +1715,8 @@ def _label_spread_oracle_sql() -> str:
             SELECT node, label, {r} AS labeled_round FROM (
                 SELECT e.dst AS node, l.label, COUNT(*) AS c,
                        ROW_NUMBER() OVER (PARTITION BY e.dst
-                                          ORDER BY COUNT(*) DESC, l.label) AS rn
+                                          ORDER BY COUNT(*) DESC,
+                                                   l.label NULLS FIRST) AS rn
                 FROM edges e
                 JOIN {prev} l ON e.src = l.node
                 WHERE e.dst NOT IN (SELECT node FROM {prev})
@@ -2195,29 +2062,6 @@ def q_graph_components_incremental(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-def _alive_degrees(edges: DataFrame, alive: DataFrame) -> DataFrame:
-    """Per-node degree INSIDE the alive subgraph: two semi-join-shaped
-    inner joins against the alive node list, then one map-side-combined
-    count per source node."""
-    return (
-        edges.join(alive.withColumnRenamed("node", "src"), "src")
-        .join(alive.withColumnRenamed("node", "dst"), "dst")
-        .groupBy("src")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-
-
-def _kcore_round(edges: DataFrame, alive: DataFrame) -> DataFrame:
-    """ONE synchronized peel round — the loop body of
-    :func:`q_graph_kcore_neardup`, extracted so the per-round plan can be
-    audited un-materialized by ``tools/plan_audit.py``."""
-    return (
-        _alive_degrees(edges, alive)
-        .filter(F.col("deg") >= KCORE_K)
-        .select(F.col("src").alias("node"))
-    )
-
-
 # k-core peeling: K is the degree bar, KCORE_ROUNDS the FIXED number of
 # synchronized peel rounds (the graph-family fixed-iteration discipline —
 # both engines run exactly R rounds, so results are engine-identical even
@@ -2245,70 +2089,43 @@ def q_graph_kcore_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     a data-dependent fixpoint; the fixed-R form is declared, and the model
     test asserts round {KCORE_ROUNDS + 1} changes nothing at the test SFs.
 
-    Scale shape: each round is two semi-joins of the static edge table
-    against the shrinking alive set plus one map-side-combined degree
-    count — O(m) per round, R fixed rounds.  The alive set is referenced
-    TWICE per round (src side and dst side), so each round is materialized
-    to scratch parquet and read back (the ``_propagate_labels`` lineage-
-    truncation discipline — the analyzer's self-join deduplication would
-    otherwise copy the nested subtree and the plan doubles per round,
-    observed OOM by round 6); scratch holds R+1 node lists, all of which
-    the final union scans.  Nothing is all-pairs and the driver never
-    sees a node list."""
-    pairs = _neardup_pairs_cached(spark, sf_dir)
-    # Size-adaptive fast path (r18, the _local_components discipline):
-    # a bounded graph peels on the driver — pure integer set arithmetic,
-    # edge-row-for-edge-row the distributed rounds' semantics — replacing
-    # R rounds × (2 semi-joins + degree count + parquet round-trip) with
-    # one bounded probe.  Equality pinned in
-    # test_kcore_fast_path_matches_distributed and by the Python-model
-    # test; over-cap graphs keep the materialized peeling loop.
-    head = _bounded_edge_rows(_symmetric_edges(pairs), _cc_local_edge_cap(spark))
-    if head is not None:
-        return _local_kcore(spark, head, pairs.schema["doc_id_a"].dataType)
-    scratch = _cc_scratch_dir(spark)
-
-    def _materialize(df: DataFrame, name: str) -> DataFrame:
-        path = os.path.join(scratch, name)
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-
-    edges = _materialize(_symmetric_edges(pairs), "kcore_edges")
-    alive = _materialize(
-        edges.select(F.col("src").alias("node")).distinct(), "kcore_alive_0"
+    Scale shape: peeling never crosses a component boundary, so
+    :func:`_kcore_solver` runs through :func:`_solve_graph`: once on the
+    driver over a bounded graph, or once per component in a grouped map
+    over an over-cap one — no per-round shuffle or scratch
+    materialization either way."""
+    edges = _symmetric_edges(_neardup_pairs_cached(spark, sf_dir))
+    return _solve_graph(
+        edges, _kcore_solver, "peel_round bigint, in_core bigint, core_degree bigint"
     )
 
-    removed_frames = []
+
+def _kcore_solver(edges: pd.DataFrame) -> pd.DataFrame:
+    """Synchronized k-core peeling over a symmetric ``(src, dst)`` edge
+    frame — pure integer set arithmetic; degrees count edge rows inside
+    the alive subgraph, as the oracle's per-round GROUP BY does.  A
+    round-R survivor can end with core degree 0 (its supporting
+    neighbors peeled in the same round); it still survived."""
+    src, dst = edges["src"].tolist(), edges["dst"].tolist()
+    alive = set(src)
+    peel = dict.fromkeys(alive, 0)
+
+    def alive_degrees() -> Counter:
+        return Counter(s for s, d in zip(src, dst) if s in alive and d in alive)
+
     for r in range(1, KCORE_ROUNDS + 1):
-        new_alive = _materialize(_kcore_round(edges, alive), f"kcore_alive_{r}")
-        removed_frames.append(
-            alive.join(new_alive, "node", "left_anti").select(
-                "node", F.lit(r).alias("peel_round")
-            )
-        )
-        alive = new_alive
-    # LEFT join: a round-R survivor can end with degree 0 *inside* the
-    # final alive set (its supporting neighbors peeled in the same round);
-    # it still survived R rounds and must not vanish from the output.
-    survivors = alive.join(
-        _alive_degrees(edges, alive).withColumnRenamed("src", "node"),
-        "node",
-        "left",
-    ).select(
-        "node",
-        F.lit(0).alias("peel_round"),
-        F.coalesce("deg", F.lit(0)).alias("core_degree"),
-    )
-    removed = removed_frames[0]
-    for frame in removed_frames[1:]:
-        removed = removed.union(frame)
-    return survivors.union(
-        removed.select("node", "peel_round", F.lit(0).alias("core_degree"))
-    ).select(
-        F.col("node").alias("doc_id"),
-        F.col("peel_round").cast("long").alias("peel_round"),
-        (F.col("peel_round") == 0).cast("long").alias("in_core"),
-        F.col("core_degree").cast("long").alias("core_degree"),
+        deg = alive_degrees()
+        dropped = {n for n in alive if deg[n] < KCORE_K}
+        peel.update(dict.fromkeys(dropped, r))
+        alive -= dropped
+    core_deg = alive_degrees()
+    return pd.DataFrame(
+        {
+            "doc_id": list(peel),
+            "peel_round": list(peel.values()),
+            "in_core": [int(r == 0) for r in peel.values()],
+            "core_degree": [core_deg[n] for n in peel],
+        }
     )
 
 

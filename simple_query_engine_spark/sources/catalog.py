@@ -59,22 +59,21 @@ def load_tables(
     runs, so "loading" 100 TB of tables is metadata-only.
     """
     tables: dict[str, DataFrame] = {}
+    generations = []
     for name in names:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if not os.path.exists(path):
             continue
-        df = _read(spark, path)
-        tables[name] = df
+        generation, tables[name] = _read_generation(spark, path)
+        generations.append((name, generation))
     if register_views:
-        # The marker folds each handle's identity in (ADVICE r17): after an
-        # in-place regeneration of the same sf_dir, _read hands back FRESH
-        # DataFrames (the handle memo keys on size/mtime) — a marker of
-        # (sf_dir, names) alone would keep serving SQL views pinned to the
-        # old, possibly deleted file listing.
-        marker = (
-            os.path.abspath(sf_dir),
-            tuple(sorted((name, id(df)) for name, df in tables.items())),
-        )
+        # The marker names each table's file generation: after an in-place
+        # regeneration of the same sf_dir, the memo hands back FRESH
+        # DataFrames — a marker of (sf_dir, names) alone would keep serving
+        # SQL views pinned to the old, possibly deleted file listing.  (A
+        # handle's id() is no key: CPython reuses it once the memo drops
+        # the old handle.)
+        marker = (os.path.abspath(sf_dir), tuple(generations))
         if _VIEWS.get(spark) != marker:
             for name, df in tables.items():
                 df.createOrReplaceTempView(name)
@@ -84,15 +83,18 @@ def load_tables(
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load a single named table from ``sf_dir``."""
-    return _read(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    return _read_generation(spark, os.path.join(sf_dir, f"{name}.parquet"))[1]
 
 
-def _read(spark: SparkSession, path: str) -> DataFrame:
+def _read_generation(spark: SparkSession, path: str) -> tuple[object, DataFrame]:
+    """The memoized handle for ``path`` plus the file generation it reads:
+    the memo key ``(path, size, mtime_ns)``, or a fresh ``object()`` that
+    equals nothing when the file cannot be stat-ed (uncached read)."""
     try:
         st = os.stat(path)
         key = (path, st.st_size, st.st_mtime_ns)
     except OSError:
-        return _read_uncached(spark, path)
+        return object(), _read_uncached(spark, path)
     per_session = _HANDLES.setdefault(spark, {})
     df = per_session.get(key)
     if df is None:
@@ -101,7 +103,7 @@ def _read(spark: SparkSession, path: str) -> DataFrame:
         # Drop handles for older generations of the same path.
         for other in [k for k in per_session if k[0] == path and k != key]:
             del per_session[other]
-    return df
+    return key, df
 
 
 def _read_uncached(spark: SparkSession, path: str) -> DataFrame:

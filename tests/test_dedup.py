@@ -856,24 +856,82 @@ def test_standing_state_dirs_swept_but_live_snapshot_spared(
     assert warm == live
 
 def test_graph_fast_paths_match_distributed(spark, sf_dir):
-    """r18: the three graph-analysis entries grew the same size-adaptive
-    driver fast path as connected components.  Both paths must produce
-    IDENTICAL rows AND dtypes over the real near-dup fixture graph —
-    pagerank (exact integer micro-units), label spread (majority total
-    order), k-core (synchronized peeling)."""
+    """PageRank, label spreading and k-core each have ONE solver, run in
+    two placements by ``_solve_graph``: on the driver over the whole
+    bounded graph (default cap), or per connected component in a grouped
+    map (cap=0 forces it).  Over the real near-dup fixture graph both
+    placements must produce IDENTICAL rows AND dtypes."""
     for q in (
         D.q_graph_pagerank_neardup,
         D.q_graph_label_spread,
         D.q_graph_kcore_neardup,
     ):
-        fast = q(spark, sf_dir)
+        driver = q(spark, sf_dir)
         spark.conf.set(D.CC_LOCAL_EDGE_CAP_CONF, "0")
         try:
-            slow = q(spark, sf_dir)
-            assert fast.dtypes == slow.dtypes, q.__name__
-            assert (
-                sorted(map(tuple, fast.collect()))
-                == sorted(map(tuple, slow.collect()))
+            per_component = q(spark, sf_dir)
+            assert "FlatMapGroupsInPandas" in (
+                per_component._jdf.queryExecution().executedPlan().toString()
             ), q.__name__
+            assert driver.dtypes == per_component.dtypes, q.__name__
+            assert (
+                sorted(map(tuple, driver.collect()))
+                == sorted(map(tuple, per_component.collect()))
+            ), q.__name__
+        finally:
+            spark.conf.unset(D.CC_LOCAL_EDGE_CAP_CONF)
+
+
+def test_label_spread_solver_orders_null_labels_first():
+    """A NULL-source seed and a string-source seed tie for a neighbor's
+    vote: the majority pick's label order puts NULL first (Spark's
+    ascending default, and the oracle's explicit NULLS FIRST) instead of
+    raising on a None-vs-str comparison.  A clear majority still wins
+    over a NULL."""
+    import pandas as pd
+
+    # Node 1 sees seeds 0 (NULL) and 3 ("web") once each: a tie.  Node 2
+    # sees "web" twice (6, 9) and NULL once (0).
+    one_way = [(0, 1), (3, 1), (6, 2), (9, 2), (0, 2)]
+    seed_label = {0: None, 3: "web", 6: "web", 9: "web"}
+    rows = one_way + [(b, a) for a, b in one_way]
+    edges = pd.DataFrame(
+        {
+            "src": [s for s, _ in rows],
+            "dst": [d for _, d in rows],
+            "seed_label": [seed_label.get(s) for s, _ in rows],
+            "is_seed": [s in seed_label for s, _ in rows],
+        }
+    )
+    got = D._label_spread_solver(edges)
+    assert {
+        r.doc_id: (r.label, r.labeled_round) for r in got.itertuples()
+    } == {
+        0: (None, 0),
+        3: ("web", 0),
+        6: ("web", 0),
+        9: ("web", 0),
+        1: (None, 1),
+        2: ("web", 1),
+    }
+
+
+def test_solve_graph_empty_edges_both_placements(spark):
+    """An empty edge list yields an empty, correctly typed result from
+    every graph solver, on the driver and per component alike."""
+    edges = spark.createDataFrame(
+        [], "src bigint, dst bigint, seed_label string, is_seed boolean"
+    )
+    for solver, schema in (
+        (D._pagerank_solver, "degree bigint, rank_e6 bigint"),
+        (D._label_spread_solver, "label string, labeled_round int"),
+        (D._kcore_solver, "peel_round bigint, in_core bigint, core_degree bigint"),
+    ):
+        driver = D._solve_graph(edges, solver, schema)
+        spark.conf.set(D.CC_LOCAL_EDGE_CAP_CONF, "0")
+        try:
+            per_component = D._solve_graph(edges, solver, schema)
+            assert driver.dtypes == per_component.dtypes, solver.__name__
+            assert driver.collect() == per_component.collect() == [], solver.__name__
         finally:
             spark.conf.unset(D.CC_LOCAL_EDGE_CAP_CONF)

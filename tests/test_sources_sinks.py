@@ -96,3 +96,30 @@ def test_csv_dialect_payload_bytes_survive(spark, sf_dir):
     expected = 'pre,"mid" ' + src.text[:20] + ",\ntail"
     assert row.payload == expected
     assert "\n" in row.payload and '"' in row.payload and "," in row.payload
+
+
+def test_load_tables_views_follow_in_place_regeneration(spark, tmp_path, monkeypatch):
+    """Regenerating a table in place must re-point its SQL view at the new
+    file generation.  CPython may hand a new handle the id() of a freed
+    one; every handle getting the same id simulates that worst case."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from simple_query_engine_spark.sources import catalog
+
+    monkeypatch.setattr(catalog, "id", lambda _obj: 0, raising=False)
+    name = "catalog_regen_probe"
+    path = tmp_path / f"{name}.parquet"
+
+    def generation(n: int) -> list[int]:
+        # A fresh directory with a new part file, as a Spark overwrite does.
+        shutil.rmtree(path, ignore_errors=True)
+        path.mkdir()
+        pq.write_table(pa.table({"k": list(range(n))}), path / f"part-{n}.parquet")
+        catalog.load_tables(spark, str(tmp_path), names=(name,))
+        return sorted(r.k for r in spark.sql(f"SELECT k FROM {name}").collect())
+
+    assert generation(2) == [0, 1]
+    assert generation(5) == [0, 1, 2, 3, 4]

@@ -327,11 +327,10 @@ def main() -> int:
         "pipeline_dsir_weights",
         "text_bm25_search",
         "sim_hybrid_retrieval",
-        # round-11 second-continuation additions (graph_kcore_neardup and
-        # graph_components_incremental are deliberately absent for the same
-        # reason as sim_semantic_clusters: constructing their DataFrames runs
-        # the materialized propagation/peel rounds and the returned plan is
-        # a union of scratch scans)
+        # round-11 second-continuation additions (graph_components_incremental
+        # is deliberately absent for the same reason as sim_semantic_clusters:
+        # constructing its DataFrame runs the materialized propagation rounds
+        # and the returned plan is a union of scratch scans)
         "pipeline_mixture_sample",
         "dedup_cdc_chunks",
         # round-11 third-continuation additions
@@ -373,18 +372,17 @@ def main() -> int:
         # |Q|-broadcast brute-force reconciliation (training itself runs
         # eagerly through session caches, like sim_kmeans_train's row).
         "sim_recall_floor_planted",
-        # VERDICT r11 item 7: the two fixed-round iteratives whose loops
-        # do NOT materialize per round (rank/label tables never self-join,
-        # so lineage stays linear) — their full unrolled plans audit like
-        # any other query.
+        # The graph trio: one pure solver each, a local relation under the
+        # edge cap and a per-component grouped map above it.
         "graph_pagerank_neardup",
         "graph_label_spread",
-        # sim_semantic_clusters / graph_kcore_neardup /
-        # graph_components_incremental construct eagerly: building their
-        # DataFrames RUNS the materialized propagation/peel rounds (the
-        # parquet lineage-truncation discipline), so the returned plan is
-        # a scratch-scan aggregate.  Their REPEATING round bodies are
-        # audited un-materialized in the iterative section below.
+        "graph_kcore_neardup",
+        # sim_semantic_clusters / graph_components_incremental construct
+        # eagerly: building their DataFrames RUNS the materialized
+        # propagation rounds (the parquet lineage-truncation discipline),
+        # so the returned plan is a scratch-scan aggregate.  Their
+        # REPEATING round body is audited un-materialized in the iterative
+        # section below.
     ]
     # DML queries are deliberately absent: calling them executes the
     # mutation chain eagerly and the returned DataFrame's plan is just the
@@ -411,21 +409,18 @@ def main() -> int:
         .distinct()
         .withColumn("label", F.col("doc_id"))
     )
-    alive0 = edges.select(F.col("src").alias("node")).distinct()
     iterative_bodies = {
         # one min-label propagation + pointer-doubling round — the body of
         # dedup_clusters(_lsh), dedup_cluster_keeper_quality,
         # sim_semantic_clusters, and graph_components_incremental
         "iterative:components_round": D._propagation_round(edges, labels0),
-        # one synchronized k-core peel round (graph_kcore_neardup)
-        "iterative:kcore_peel_round": D._kcore_round(edges, alive0),
     }
     lines += [
         "",
         "## Iterative round bodies (audited un-materialized)",
         "",
         "The eager iteratives (`sim_semantic_clusters`,",
-        "`graph_kcore_neardup`, `graph_components_incremental`,",
+        "`graph_components_incremental`,",
         "`dedup_clusters*`, `dedup_cluster_keeper_quality`) materialize",
         "each round to scratch parquet, so their end-to-end plan is a",
         "scratch-scan aggregate.  The rows below audit ONE un-materialized",
