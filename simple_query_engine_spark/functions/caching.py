@@ -1,17 +1,31 @@
-"""Session cache registry for load-once/query-many DataFrames.
+"""Session reuse registry: one routine behind every session-scoped reuse.
 
-Several operators cache an expensive intermediate (shingle tables, LSH
-signature/bucket tables) for the session, because a typical analytics
-session loads one corpus and runs many queries against it.  Left
-unmanaged, a session that touches several scale dirs accumulates one
-cached copy per dir and relies on LRU eviction alone.
+A typical analytics session loads one corpus and runs many queries
+against it, so several operators keep an expensive intermediate
+(shingle tables, LSH signature/bucket tables, trained centroids) for the
+session.  The engine reuses results in four ways:
 
-``session_cache`` centralizes the policy: caches are tagged with the
-``sf_dir`` they derive from, and requesting a cache for a *different*
-``sf_dir`` unpersists every cache tagged with another dir first — the
-working set is always one scale dir wide.  Within one dir, repeated calls
-rebuild an identical plan and Spark's cache manager serves the existing
-materialization.
+- **session cache** (:func:`session_cache`): ``df.cache()`` — keeps the
+  rows, leaves the logical plan in place;
+- **session materialization** (:func:`session_materialize`): write the
+  rows to parquet under the scratch root and scan them back — keeps the
+  rows AND cuts the lineage (:func:`cut_lineage`, the same step that
+  truncates each connected-components round);
+- **staged copy** (``storage.materialize_once``): a derived parquet copy
+  shared across processes, keyed by its source files — not session
+  state, so not in this registry;
+- **query-scoped persist**: a ``persist``/``unpersist`` pair that lives
+  and dies inside one operator call (``ManagedTable.merge``, the
+  streaming sinks, the ``std`` labels in ``streaming_ops``, the edge
+  list of ``dedup._propagate_labels``) — stays at its call site, as
+  does the REPL's cache of its one CSV.
+
+The first two share one registry routine, :func:`_reuse`, with one
+eviction rule: a call tagged with ``sf_dir`` X first releases EVERY entry
+of BOTH kinds tagged with another dir, so the working set is always one
+scale dir wide.  Within a dir, a key whose plan is unchanged serves the
+existing handle; a key whose plan changed (e.g. a scratch-table path
+baked into the lineage) releases the old blocks or files and rebuilds.
 
 Assumes queries run sequentially in a session (the harness does);
 concurrent queries over different scale dirs would evict each other.
@@ -20,6 +34,7 @@ concurrent queries over different scale dirs would evict each other.
 from __future__ import annotations
 
 import os
+import shutil
 import warnings
 
 from py4j.protocol import Py4JError
@@ -28,14 +43,14 @@ from pyspark.sql import DataFrame
 
 # key -> (sf_dir, cached handle)
 _TRACKED: dict[str, tuple[str, DataFrame]] = {}
+# key -> (sf_dir, plan handle for sameSemantics, path, read-back handle)
+_MATERIALIZED: dict[str, tuple[str, DataFrame, str, DataFrame]] = {}
 
 
 def _unpersist_quietly(handle: DataFrame) -> None:
     """Unpersist, tolerating a handle whose SparkSession has been stopped
-    and recreated within the same Python process: the module-level
-    registry outlives sessions, and letting the py4j error escape BEFORE
-    the registry entry is removed would poison ``_TRACKED`` permanently
-    (every later call re-hits the dead handle and fails)."""
+    and recreated within the same Python process (the module-level
+    registry outlives sessions)."""
     try:
         handle.unpersist()
     except (Py4JError, AttributeError):
@@ -53,49 +68,81 @@ def _unpersist_quietly(handle: DataFrame) -> None:
         )
 
 
-def session_cache(df: DataFrame, sf_dir: str, key: str) -> DataFrame:
-    """Cache ``df`` for the session under ``key``, evicting caches that
-    belong to a different scale dir."""
-    for other_key, (other_dir, handle) in list(_TRACKED.items()):
-        if other_dir != sf_dir:
-            del _TRACKED[other_key]
-            _unpersist_quietly(handle)
-    prior = _TRACKED.get(key)
+def _path(entry: tuple) -> str | None:
+    """A materialized entry's parquet path; a cached entry has none."""
+    return entry[2] if len(entry) == 4 else None
+
+
+def _release(registry: dict, key: str) -> None:
+    """Drop ``key`` from ``registry`` BEFORE releasing what it holds, so
+    a failing release can never leave a dead entry behind."""
+    entry = registry.pop(key)
+    path = _path(entry)
+    if path is None:
+        _unpersist_quietly(entry[1])
+    else:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def _live(entry: tuple, df: DataFrame) -> bool:
+    """Whether ``entry`` can serve ``df``: same plan, a live session, and
+    (materialized) the files still exist — a session outliving
+    ``SQE_SCRATCH_TTL_SEC`` can have a later sweep reclaim them (ADVICE
+    r17).  A served entry's mkdtemp dir, the swept unit, ages from its
+    last USE."""
+    try:
+        if not df.sameSemantics(entry[1]):
+            return False
+    except Exception:
+        return False  # stale handle from a stopped session
+    path = _path(entry)
+    if path is None:
+        return True
+    if not os.path.exists(path):
+        return False
+    try:
+        os.utime(os.path.dirname(path), None)
+    except OSError:
+        pass
+    return True
+
+
+def _reuse(registry: dict, df: DataFrame, sf_dir: str, key: str, build) -> DataFrame:
+    """The one registry routine: evict other dirs' entries of both kinds,
+    serve a live same-plan entry, else release it and store
+    ``(sf_dir, *build())``.  The served handle is an entry's last field."""
+    for reg in (_TRACKED, _MATERIALIZED):
+        for other_key, entry in list(reg.items()):
+            if entry[0] != sf_dir:
+                _release(reg, other_key)
+    prior = registry.get(key)
     if prior is not None:
-        try:
-            if df.sameSemantics(prior[1]):
-                return prior[1]
-        except Exception:
-            # Stale handle from a stopped session: fall through to
-            # replace it (the cache itself died with that session).
-            pass
-        # Same key, new plan (e.g. a scratch-table path baked into the
-        # lineage changed): release the stale blocks instead of leaking
-        # them for the rest of the session.
-        del _TRACKED[key]
-        _unpersist_quietly(prior[1])
-    handle = df.cache()
-    _TRACKED[key] = (sf_dir, handle)
-    return handle
+        if _live(prior, df):
+            return prior[-1]
+        _release(registry, key)
+    entry = (sf_dir, *build())
+    registry[key] = entry
+    return entry[-1]
 
 
-def evict_all() -> None:
-    """Unpersist every tracked cache (test hook / explicit session reset)."""
-    handles = [handle for _, (_, handle) in list(_TRACKED.items())]
-    _TRACKED.clear()
-    for handle in handles:
-        _unpersist_quietly(handle)
-    evict_all_materialized()
+def cut_lineage(df: DataFrame, path: str) -> DataFrame:
+    """Write ``df`` to parquet at ``path`` and scan it back with
+    ``df.schema`` pinned (the plan's exact types, no footer inference).
+    Plans built on the result start from a scan LEAF, so Spark's eager
+    analysis no longer re-walks the upstream plan."""
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
-# key -> (sf_dir, plan handle for sameSemantics, path, read-back handle)
-_MATERIALIZED: dict[str, tuple[str, DataFrame, str, DataFrame]] = {}
+def session_cache(df: DataFrame, sf_dir: str, key: str) -> DataFrame:
+    """Cache ``df`` for the session under ``key`` (see module docstring
+    for the eviction rule)."""
+    return _reuse(_TRACKED, df, sf_dir, key, lambda: (df.cache(),))
 
 
 def session_materialize(df: DataFrame, sf_dir: str, key: str) -> DataFrame:
-    """Like :func:`session_cache`, but materialize ``df`` to parquet in a
-    PROCESS-scoped scratch dir and return a DataFrame that scans the
-    files — i.e. every downstream plan starts from a scan LEAF.
+    """Like :func:`session_cache`, but :func:`cut_lineage` ``df`` into a
+    fresh ``scratch_dir`` and return the scan of its files.
 
     Why this exists next to ``session_cache``: caching serves the rows
     but leaves the full LOGICAL plan in place, and Spark's classic-mode
@@ -104,55 +151,19 @@ def session_materialize(df: DataFrame, sf_dir: str, key: str) -> DataFrame:
     shingle explode) that re-analysis costs seconds per consumer query
     (measured: graph_label_spread spent ~9 s of a 12 s invocation in
     JVM analysis/canonicalization of plans embedding the signature
-    subtree).  Materializing truncates the lineage exactly like
-    ``_propagate_labels``' per-round parquet round-trip, for the same
-    guide-§3.3/"very large plans" reason.
-
-    The scratch root is created fresh per process (``mkdtemp`` under the
-    shared sweep-managed root), so nothing is ever served across
-    processes — a fresh bench/driver run always recomputes from the
-    source parquet.  Same-key/new-plan and cross-``sf_dir`` staleness
-    follow session_cache's rules; the read-back pins ``df.schema`` so
-    the scan's types (and nullability) are exactly the plan's."""
-    import shutil
-
-    for other_key, entry in list(_MATERIALIZED.items()):
-        if entry[0] != sf_dir:
-            del _MATERIALIZED[other_key]
-            shutil.rmtree(entry[2], ignore_errors=True)
-    prior = _MATERIALIZED.get(key)
-    if prior is not None:
-        try:
-            # Liveness guard (ADVICE r17): a session outliving
-            # SQE_SCRATCH_TTL_SEC can have a LATER materialization's root
-            # sweep reclaim this entry's parquet — verify the files still
-            # exist before serving the handle, and refresh the swept
-            # unit's mtime (the per-call mkdtemp dir) so a live entry
-            # keeps aging from its last USE, not its creation.
-            if df.sameSemantics(prior[1]) and os.path.exists(prior[2]):
-                try:
-                    os.utime(os.path.dirname(prior[2]), None)
-                except OSError:
-                    pass
-                return prior[3]
-        except Exception:
-            pass  # stale handle from a stopped session: rebuild below
-        del _MATERIALIZED[key]
-        shutil.rmtree(prior[2], ignore_errors=True)
+    subtree).  Each build writes under a fresh ``mkdtemp`` dir, so nothing
+    is ever served across processes."""
     from simple_query_engine_spark.operators.storage import scratch_dir
 
-    path = os.path.join(scratch_dir("mat_", "sqe_session_mat"), key)
-    df.write.parquet(path)
-    read_back = df.sparkSession.read.schema(df.schema).parquet(path)
-    _MATERIALIZED[key] = (sf_dir, df, path, read_back)
-    return read_back
+    def build() -> tuple[DataFrame, str, DataFrame]:
+        path = os.path.join(scratch_dir(df.sparkSession, "mat_"), key)
+        return df, path, cut_lineage(df, path)
+
+    return _reuse(_MATERIALIZED, df, sf_dir, key, build)
 
 
-def evict_all_materialized() -> None:
-    """Delete every in-session materialization (test hook / reset)."""
-    import shutil
-
-    entries = list(_MATERIALIZED.values())
-    _MATERIALIZED.clear()
-    for _, _, path, _ in entries:
-        shutil.rmtree(path, ignore_errors=True)
+def evict_all() -> None:
+    """Release every entry of both kinds (test hook / explicit reset)."""
+    for registry in (_TRACKED, _MATERIALIZED):
+        for key in list(registry):
+            _release(registry, key)

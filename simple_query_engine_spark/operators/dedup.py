@@ -42,7 +42,7 @@ from simple_query_engine_spark.functions.hashing import (
     md5_prefix_long,
     md5_prefix_long_sql,
 )
-from simple_query_engine_spark.functions.caching import session_cache
+from simple_query_engine_spark.functions.caching import cut_lineage, session_cache
 from simple_query_engine_spark.operators.text import _NORM, _normalized
 from simple_query_engine_spark.sources.catalog import table
 
@@ -966,16 +966,13 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 MAX_CC_ITERATIONS = 15
 
-# Scratch root for the per-round connected-components label tables.  On a
-# cluster, point this at a path every executor can read (HDFS/S3); locally it
-# defaults under the system temp dir.  This replaces ``localCheckpoint``:
-# reliable files survive executor loss, and round cleanup is an ordinary
-# directory delete instead of private-API block bookkeeping.
-# Resolution order (see session.cc_scratch_root): the SQE_CC_SCRATCH_DIR
-# env var, then the ``spark.sqe.cc.scratchDir`` session conf, then the
-# system temp dir — so a cluster deployment configures it once on the
-# session instead of exporting an env var on every executor host.
-CC_SCRATCH_ENV = "SQE_CC_SCRATCH_DIR"
+# The per-round connected-components label tables are cut to parquet
+# (``caching.cut_lineage``) under the engine's one scratch root
+# (``storage.scratch_dir``, session conf ``spark.sqe.scratchDir``; on a
+# cluster, a shared mount every executor can read).  This replaces
+# ``localCheckpoint``: reliable files survive executor loss, and round
+# cleanup is an ordinary directory delete instead of private-API block
+# bookkeeping.
 
 # Size-adaptive graphs (guide §2.4 "remove shuffles outright" applied to
 # the iterative family): one bounded ``limit(cap+1)`` probe sizes a
@@ -1002,14 +999,23 @@ CC_LOCAL_EDGE_CAP_CONF = "spark.sqe.cc.localEdgeCap"
 CC_LOCAL_EDGE_CAP_DEFAULT = 200_000
 
 
-def _cc_local_edge_cap(spark: SparkSession) -> int:
-    """The session's bounded-local-graph cap (edge rows); 0 disables."""
+def _bounded_probe(df: DataFrame) -> pd.DataFrame | None:
+    """The one bounded probe of ``CC_LOCAL_EDGE_CAP_CONF``: every row of
+    ``df`` as pandas when it holds at most cap rows, else None (always
+    None at cap 0).  One job that stops after cap + 1 rows — an over-cap
+    input is never scanned in full."""
     try:
-        return int(
-            spark.conf.get(CC_LOCAL_EDGE_CAP_CONF, str(CC_LOCAL_EDGE_CAP_DEFAULT))
+        cap = int(
+            df.sparkSession.conf.get(
+                CC_LOCAL_EDGE_CAP_CONF, str(CC_LOCAL_EDGE_CAP_DEFAULT)
+            )
         )
     except ValueError:
-        return CC_LOCAL_EDGE_CAP_DEFAULT
+        cap = CC_LOCAL_EDGE_CAP_DEFAULT
+    if cap <= 0:
+        return None
+    head = df.limit(cap + 1).toPandas()
+    return head if len(head) <= cap else None
 
 
 def _solve_graph(edges: DataFrame, solver, schema: str) -> DataFrame:
@@ -1022,15 +1028,15 @@ def _solve_graph(edges: DataFrame, solver, schema: str) -> DataFrame:
     runs once on the driver over the bounded probe's rows; over it, every
     edge is tagged with its ``_propagate_labels`` component and the
     solver runs per component in a grouped map.  The per-group bound is
-    the largest component, which must fit in one Python worker."""
+    the largest component, which must fit in one Python worker.  The
+    graph is probed once: an over-cap graph goes straight to the
+    distributed component rounds."""
     spark = edges.sparkSession
     schema = f"doc_id {edges.schema['src'].dataType.simpleString()}, {schema}"
-    cap = _cc_local_edge_cap(spark)
-    if cap > 0:
-        head = edges.limit(cap + 1).toPandas()
-        if len(head) <= cap:
-            return spark.createDataFrame(solver(head), schema)
-    labels, _ = _propagate_labels(edges.select("src", "dst"))
+    head = _bounded_probe(edges)
+    if head is not None:
+        return spark.createDataFrame(solver(head), schema)
+    labels, _ = _propagate_labels(edges.select("src", "dst"), probed=True)
     component = labels.select(
         F.col("doc_id").alias("src"), F.col("label").alias("_component")
     )
@@ -1087,34 +1093,6 @@ def _local_components(spark: SparkSession, src_pairs, node_type) -> DataFrame:
     )
 
 
-def _cc_scratch_dir(spark: SparkSession) -> str:
-    import tempfile
-
-    from simple_query_engine_spark.session import cc_scratch_root
-
-    root = cc_scratch_root(spark) or os.path.join(
-        tempfile.gettempdir(), "sqe_cc_scratch"
-    )
-    if "://" not in root:
-        # Python resolves relative paths against its cwd but the Spark JVM
-        # resolves them against ITS cwd — absolutize so both agree.
-        root = os.path.abspath(root)
-        # Each run's FINAL label/node tables must outlive this call (the
-        # returned lazy DataFrame scans them), so they can only be
-        # reclaimed by a later run's age-gated sweep (local roots only —
-        # an object-store root is the deployment's lifecycle policy).
-        # The sweep is restricted to OUR "cc_" entries: the root is
-        # user-configurable, and a shared directory must never have
-        # unrelated old files reclaimed (ADVICE r14).
-        from simple_query_engine_spark.operators.storage import (
-            sweep_stale_scratch,
-        )
-
-        sweep_stale_scratch(root, prefix="cc_")
-    os.makedirs(root, exist_ok=True)
-    return tempfile.mkdtemp(prefix="cc_", dir=root)
-
-
 def _propagation_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
     """ONE synchronous round of min-label propagation with pointer
     doubling — the loop body of :func:`_propagate_labels`, extracted so
@@ -1153,14 +1131,16 @@ def _propagation_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
 
 
 def _propagate_labels(
-    edges: DataFrame, max_iterations: int = MAX_CC_ITERATIONS
+    edges: DataFrame, max_iterations: int = MAX_CC_ITERATIONS, probed: bool = False
 ) -> tuple[DataFrame, int]:
     """Min-label propagation with pointer doubling over a bidirectional
     edge list ``(src, dst)``; returns the fixpoint ``(doc_id, label)``
     table and the number of distributed rounds it took (0 when the
     size-adaptive driver fast path solved the graph — see
     ``CC_LOCAL_EDGE_CAP_CONF``; both paths compute the identical
-    min-label fixpoint, pinned against each other in tests).
+    min-label fixpoint, pinned against each other in tests).  ``probed``
+    says the caller's own bounded probe already found ``edges`` over the
+    cap, so the distributed rounds start without a second probe.
 
     Each round does two jumps: (a) take the minimum label over direct
     neighbors, then (b) jump again to *that label's own current label*
@@ -1173,11 +1153,13 @@ def _propagate_labels(
     Two iterative-Spark disciplines, both load-bearing:
 
     - **Lineage truncation**: each round's label table is materialized to
-      parquet in a scratch dir (``SQE_CC_SCRATCH_DIR``) and read back, so
-      every round's plan starts from a scan leaf.  Without truncation the
-      logical plan nests one round inside the next and the analyzer's
-      self-join deduplication *copies* the nested subtree — exponential
-      plan growth that OOMs the driver around round 5 (observed).
+      parquet under ``storage.scratch_dir`` and scanned back with its
+      schema pinned (``caching.cut_lineage``, the step behind
+      ``session_materialize``), so every round's plan starts from a scan
+      leaf.  Without truncation the logical plan nests one round inside
+      the next and the analyzer's self-join deduplication *copies* the
+      nested subtree — exponential plan growth that OOMs the driver
+      around round 5 (observed).
       ``localCheckpoint`` would also truncate, but its executor-memory
       blocks are lost on executor failure and cannot be released through
       any public PySpark API; a reliable parquet round-trip costs one
@@ -1186,8 +1168,8 @@ def _propagate_labels(
     - **Bounded storage**: the previous round's files are deleted as soon
       as the next round has materialized, so scratch stays one label-table
       wide no matter how many rounds run.  Only the fixpoint table's files
-      survive the call (the returned DataFrame scans them); they live in
-      the session-scoped scratch dir.
+      survive the call (the returned DataFrame scans them); a later
+      ``scratch_dir`` call's age-gated sweep reclaims them.
 
     The driver sees only the 1-row convergence count per round; label
     data never touches the driver.
@@ -1195,39 +1177,36 @@ def _propagate_labels(
     if max_iterations < 1:
         raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
     spark = edges.sparkSession
-    # Size-adaptive fast path: ONE bounded probe (limit cap+1 — early-out,
+    # Size-adaptive fast path: ONE bounded probe (``_bounded_probe``,
     # never a full scan of an over-cap graph) both sizes the graph and,
     # when it fits, already holds every edge — union-find on the driver
     # replaces the whole round loop.  Rounds are reported as 0: no
     # distributed round ran.  See CC_LOCAL_EDGE_CAP_CONF above for why
     # this is the at-scale path for batch-reduced graphs, not a local rig
     # shortcut.
-    cap = _cc_local_edge_cap(spark)
     # Persist the edge list for the probe AND any distributed rounds
-    # (ADVICE r17): the bounded limit(cap+1) probe partially evaluates the
+    # (ADVICE r17): the bounded probe partially evaluates the
     # upstream pipeline (often the banded candidate joins) — persisting
     # first means the probe's partitions land in the cache instead of
     # being recomputed by the distributed loop, and the loop itself stops
     # re-running the un-cached upstream once per round.  Only unpersist
-    # what WE persisted: callers like _component_labels pass an
-    # already-cached frame they own.
+    # what WE persisted: a caller may pass a frame it cached itself.
     we_persisted = False
     if not edges.storageLevel.useMemory and not edges.storageLevel.useDisk:
         edges = edges.persist()
         we_persisted = True
     try:
-        if cap > 0:
-            head = edges.select("src", "dst").limit(cap + 1).toPandas()
-            if len(head) <= cap:
-                node_type = edges.schema["src"].dataType
-                return (
-                    _local_components(
-                        spark,
-                        zip(head["src"].tolist(), head["dst"].tolist()),
-                        node_type,
-                    ),
-                    0,
-                )
+        head = None if probed else _bounded_probe(edges.select("src", "dst"))
+        if head is not None:
+            node_type = edges.schema["src"].dataType
+            return (
+                _local_components(
+                    spark,
+                    zip(head["src"].tolist(), head["dst"].tolist()),
+                    node_type,
+                ),
+                0,
+            )
         return _propagate_labels_distributed(edges, max_iterations)
     finally:
         if we_persisted:
@@ -1240,13 +1219,12 @@ def _propagate_labels_distributed(
     """The distributed pointer-doubling fixpoint loop of
     :func:`_propagate_labels` (unchanged algorithm, split out so the
     size-adaptive wrapper can release its probe cache in one place)."""
-    spark = edges.sparkSession
-    scratch = _cc_scratch_dir(spark)
+    from simple_query_engine_spark.operators.storage import scratch_dir
+
+    scratch = scratch_dir(edges.sparkSession, "cc_")
 
     def _materialize(df: DataFrame, round_no: int) -> DataFrame:
-        path = os.path.join(scratch, f"round_{round_no}")
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
+        return cut_lineage(df, os.path.join(scratch, f"round_{round_no}"))
 
     def _drop_round(round_no: int) -> None:
         import shutil
@@ -1288,7 +1266,7 @@ def _propagate_labels_distributed(
 def _localize_bounded_pairs(pairs: DataFrame) -> DataFrame:
     """Evaluate a (doc_id_a, doc_id_b) pair list ONCE and pin it as a
     local relation when it fits under ``CC_LOCAL_EDGE_CAP_CONF`` (one
-    bounded ``limit(cap+1)`` job, the `_propagate_labels` discipline).
+    :func:`_bounded_probe` job).
 
     The incremental/streaming component entries consume their delta-edge
     list from several independent plans — the propagation probe, the
@@ -1297,14 +1275,10 @@ def _localize_bounded_pairs(pairs: DataFrame) -> DataFrame:
     The delta is ∝ batch by design, so under the cap it becomes a local
     relation reused by every consumer; an over-cap list is returned
     unchanged (lazy, the pre-existing behavior)."""
-    spark = pairs.sparkSession
-    cap = _cc_local_edge_cap(spark)
-    if cap <= 0:
+    head = _bounded_probe(pairs)
+    if head is None:
         return pairs
-    head = pairs.limit(cap + 1).toPandas()
-    if len(head) > cap:
-        return pairs
-    return spark.createDataFrame(head, schema=pairs.schema)
+    return pairs.sparkSession.createDataFrame(head, schema=pairs.schema)
 
 
 def _symmetric_edges(pairs: DataFrame) -> DataFrame:
@@ -1323,12 +1297,11 @@ def _symmetric_edges(pairs: DataFrame) -> DataFrame:
 
 def _component_labels(pairs: DataFrame) -> DataFrame:
     """(doc_id_a, doc_id_b) pair list → fixpoint (doc_id, label)
-    component labels: symmetrize, cache for the propagation rounds,
-    propagate, release — shared by the cluster rollup and the
-    quality-keeper entry so the prefix can never diverge."""
-    edges = _symmetric_edges(pairs).cache()
-    labels, _ = _propagate_labels(edges)
-    edges.unpersist()
+    component labels: symmetrize and propagate (``_propagate_labels``
+    persists the edges for its probe and rounds) — shared by the cluster
+    rollup and the quality-keeper entry so the prefix can never
+    diverge."""
+    labels, _ = _propagate_labels(_symmetric_edges(pairs))
     return labels
 
 

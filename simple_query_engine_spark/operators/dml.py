@@ -31,11 +31,10 @@ UPDATE_BONUS = 500.0
 MERGE_SCALE = 2.0
 
 
-def _scratch(prefix: str) -> str:
+def _scratch(spark: SparkSession, prefix: str) -> str:
     from simple_query_engine_spark.operators.storage import scratch_dir
 
-    # Same root name as ever, so the sweep also reclaims pre-r14 litter.
-    return os.path.join(scratch_dir(prefix, "sqe_dml_scratch"), "t")
+    return os.path.join(scratch_dir(spark, prefix), "t")
 
 
 def q_dml_insert_append(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -43,7 +42,7 @@ def q_dml_insert_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders")
     cutoff = F.lit("1998-01-01").cast("timestamp")
     t = ManagedTable.create(
-        spark, _scratch("insert_"), orders.filter(F.col("o_orderdate") < cutoff)
+        spark, _scratch(spark, "insert_"), orders.filter(F.col("o_orderdate") < cutoff)
     )
     t.insert(orders.filter(F.col("o_orderdate") >= cutoff))
     return (
@@ -59,7 +58,7 @@ def q_dml_insert_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dml_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DELETE all finished orders; aggregate the survivors by priority."""
     orders = table(spark, sf_dir, "orders")
-    t = ManagedTable.create(spark, _scratch("delete_"), orders)
+    t = ManagedTable.create(spark, _scratch(spark, "delete_"), orders)
     t.delete_where(F.col("o_orderstatus") == "F")
     return (
         t.read()
@@ -74,7 +73,7 @@ def q_dml_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dml_update_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UPDATE building-segment balances (+500); per-segment rollup after."""
     customer = table(spark, sf_dir, "customer")
-    t = ManagedTable.create(spark, _scratch("update_"), customer)
+    t = ManagedTable.create(spark, _scratch(spark, "update_"), customer)
     t.update(
         F.col("c_mktsegment") == "BUILDING",
         {"c_acctbal": F.col("c_acctbal") + UPDATE_BONUS},
@@ -108,7 +107,7 @@ def q_dml_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo, hi = mx * 2 // 5, mx * 3 // 5
     t = ManagedTable.create(
         spark,
-        _scratch("merge_"),
+        _scratch(spark, "merge_"),
         customer.filter(F.col("c_custkey") % 2 == 0).repartitionByRange(
             8, "c_custkey"
         ),
@@ -139,7 +138,7 @@ def q_dml_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot isolation as data: per-version row count + total after a
     CREATE → DELETE chain; the deleted rows must remain visible at v0."""
     orders = table(spark, sf_dir, "orders")
-    t = ManagedTable.create(spark, _scratch("travel_"), orders)
+    t = ManagedTable.create(spark, _scratch(spark, "travel_"), orders)
     t.delete_where(F.col("o_orderstatus") == "F")
 
     def snapshot(version: int) -> DataFrame:
@@ -173,7 +172,7 @@ def q_dml_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = F.pmod(F.col("o_orderkey"), F.lit(COMPACT_BATCHES))
     t = ManagedTable.create(
         spark,
-        _scratch("compact_"),
+        _scratch(spark, "compact_"),
         orders.filter(part == 0).repartition(COMPACT_FILES_PER_BATCH),
     )
     for b in range(1, COMPACT_BATCHES):
@@ -205,7 +204,7 @@ def q_dml_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
     t = ManagedTable.create(
         spark,
-        _scratch("evolve_"),
+        _scratch(spark, "evolve_"),
         orders.filter(F.col("o_orderdate") < cutoff).select(*base_cols),
     )
     t.insert(
@@ -236,7 +235,7 @@ def q_dml_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_managed.py.  Vacuum itself is pure manifest arithmetic —
     path strings, never rows."""
     orders = table(spark, sf_dir, "orders")
-    t = ManagedTable.create(spark, _scratch("vacuum_"), orders)
+    t = ManagedTable.create(spark, _scratch(spark, "vacuum_"), orders)
     t.delete_where(F.col("o_orderstatus") == "F")
     removed = t.vacuum(retain_versions=1)
     if not removed:
@@ -265,7 +264,7 @@ def q_dml_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest pruning that reads only rewritten files, see
     ``ManagedTable.changes``) is the operator's scale story."""
     orders = table(spark, sf_dir, "orders")
-    t = ManagedTable.create(spark, _scratch("cdc_"), orders)
+    t = ManagedTable.create(spark, _scratch(spark, "cdc_"), orders)
     t.delete_where(F.col("o_orderstatus") == "F")
     t.update(
         F.col("o_orderpriority") == "1-URGENT",
@@ -298,7 +297,7 @@ def q_dml_incremental_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_managed.py)."""
     orders = table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
-    t = ManagedTable.create(spark, _scratch("ivm_"), orders)
+    t = ManagedTable.create(spark, _scratch(spark, "ivm_"), orders)
     base_agg = (
         t.read(version=0)
         .groupBy("o_orderstatus")
@@ -356,7 +355,7 @@ def q_dml_table_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     events = table(spark, sf_dir, "events").select("event_id", "value")
     slices = [events.filter(F.col("event_id") % 4 == k).coalesce(1) for k in range(4)]
-    t = ManagedTable.create(spark, _scratch("history_"), slices[0])
+    t = ManagedTable.create(spark, _scratch(spark, "history_"), slices[0])
     for s in slices[1:]:
         t.insert(s)
     t.delete_where(F.col("value") > HISTORY_DELETE_ABOVE)
@@ -412,7 +411,7 @@ def q_dml_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    t = ManagedTable.create(spark, _scratch("zorder_"), orders.repartition(8))
+    t = ManagedTable.create(spark, _scratch(spark, "zorder_"), orders.repartition(8))
     t.compact(zorder_by=["o_custkey", "day"], target_files=16)
     # Deliberately driver-side: a 1-row bounds aggregate whose values
     # parameterize the scan box below (plan construction needs them as
@@ -457,8 +456,8 @@ def q_dml_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    src = ManagedTable.create(spark, _scratch("clone_src_"), customer)
-    dst = src.clone_shallow(_scratch("clone_dst_"))
+    src = ManagedTable.create(spark, _scratch(spark, "clone_src_"), customer)
+    dst = src.clone_shallow(_scratch(spark, "clone_dst_"))
     dst.update(
         F.col("c_mktsegment") == "BUILDING",
         {"c_acctbal": F.col("c_acctbal") + F.lit(CLONE_BONUS)},
@@ -489,7 +488,7 @@ def q_dml_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    t = ManagedTable.create(spark, _scratch("restore_"), orders)
+    t = ManagedTable.create(spark, _scratch(spark, "restore_"), orders)
     t.delete_where(F.col("o_orderstatus") == "F")  # the mistake
     v = t.restore(0)  # the recovery
     if v != 2 or [h["op"] for h in t.history()] != ["create", "delete", "restore"]:

@@ -836,7 +836,7 @@ def q_pipeline_incremental_curation(spark: SparkSession, sf_dir: str) -> DataFra
     # stats_columns on the merge key: the CDC batch's merge probes prune
     # to files whose doc_id box contains a batch key (VERDICT r13 item 2).
     t = ManagedTable.create(
-        spark, _scratch("inccur_"), documents, stats_columns=["doc_id"]
+        spark, _scratch(spark, "inccur_"), documents, stats_columns=["doc_id"]
     )
 
     n_tokens = F.size(F.split(_normalized(F.col("text")), " ")).alias("n_tokens")

@@ -169,16 +169,15 @@ except ValueError:
 
 
 def sweep_stale_scratch(root: str, prefix: str | None = None) -> None:
-    """Reclaim scratch-root entries older than ``_SCRATCH_TTL_SEC`` —
-    shared by :func:`scratch_dir` and the connected-components scratch
-    (``dedup._cc_scratch_dir``), whose per-run dirs must outlive their
-    function (a returned lazy DataFrame scans them) and therefore can
-    only ever be reclaimed by a LATER run's sweep.
+    """Reclaim scratch-root entries older than ``_SCRATCH_TTL_SEC``.
+    Per-run scratch dirs must outlive their function (a returned lazy
+    DataFrame scans them), so only a LATER run's sweep can reclaim them.
 
     ``prefix`` restricts the sweep to entries THIS code created (their
     mkdtemp name prefix) — mandatory hygiene when the root is
     user-configurable (ADVICE r14: a shared dir pointed at by
-    SQE_CC_SCRATCH_DIR must never have unrelated old files reclaimed)."""
+    ``spark.sqe.scratchDir`` must never have unrelated old files
+    reclaimed)."""
     import shutil
     import time
 
@@ -195,22 +194,41 @@ def sweep_stale_scratch(root: str, prefix: str | None = None) -> None:
             pass  # a concurrent sweep got there first
 
 
-def scratch_dir(prefix: str, root_name: str = "sqe_scratch") -> str:
-    """``mkdtemp`` under a shared per-purpose scratch root, sweeping
-    siblings older than ``_SCRATCH_TTL_SEC`` first.
+# The engine's one scratch root: session materializations, the
+# connected-components rounds, the DML scratch tables and the streaming
+# run roots all live under it.  On a cluster, set it to a shared mount
+# every executor can read; it defaults under the system temp dir.
+SCRATCH_CONF = "spark.sqe.scratchDir"
+# Name prefix of every dir scratch_dir creates: the only entries its sweep
+# may reclaim under a user-configured root.
+_SCRATCH_MARK = "sqe_"
 
-    The DML catalog entries and the streaming upsert/restart exhibits
-    each materialize a scratch managed table per RUN and hand its lazy
-    DataFrame to the driver — the files must outlive the function, so
-    nothing can delete them at return; before r14 nothing ever deleted
-    them at all, and every certification sweep left full scratch copies
-    of orders/customer/events in the shared tempdir forever (the same
-    litter class as the materialize_once lock sidecar closed in r14).
-    Sweeping the root on the NEXT run bounds the backlog to one sweep's
-    worth without touching any live run's scratch."""
-    root = os.path.join(tempfile.gettempdir(), root_name)
-    sweep_stale_scratch(root)
-    return tempfile.mkdtemp(prefix=prefix, dir=root)
+
+def scratch_dir(spark: SparkSession, prefix: str) -> str:
+    """``mkdtemp`` under the scratch root (``SCRATCH_CONF``), sweeping the
+    engine's entries older than ``_SCRATCH_TTL_SEC`` first.
+
+    Per-run scratch is scanned by lazy DataFrames handed back to the
+    caller, so nothing can delete it at return; sweeping on a LATER call
+    bounds the backlog without touching any live run's scratch.
+
+    Python creates and sweeps the root with ``os`` calls while the JVM
+    writes into it, so the root must be a local (or locally mounted)
+    path: a URI would half-work — Spark writing remotely, Python creating
+    a local ``./hdfs:/...`` tree that nothing sweeps — and is refused.  A
+    relative root is made absolute, since the JVM and Python resolve
+    relative paths against different working directories."""
+    root = spark.conf.get(SCRATCH_CONF, None) or os.path.join(
+        tempfile.gettempdir(), "sqe_scratch"
+    )
+    if "://" in root:
+        raise ValueError(
+            f"{SCRATCH_CONF}={root!r}: the scratch root must be a local or "
+            "locally mounted path, not a URI"
+        )
+    root = os.path.abspath(root)
+    sweep_stale_scratch(root, prefix=_SCRATCH_MARK)
+    return tempfile.mkdtemp(prefix=_SCRATCH_MARK + prefix, dir=root)
 
 
 def _partitioned_events_path(sf_dir: str) -> str:

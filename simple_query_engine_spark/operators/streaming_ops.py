@@ -113,7 +113,7 @@ def q_stream_restart_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.parquet(tmp),
     )
     part_files = sorted(f for f in os.listdir(staged) if f.endswith(".parquet"))
-    run_root = scratch_dir("stream_resume_")
+    run_root = scratch_dir(spark, "stream_resume_")
     src = os.path.join(run_root, "in")
     out = os.path.join(run_root, "out")
     ckpt = os.path.join(run_root, "ckpt")
@@ -155,7 +155,7 @@ def q_stream_upsert_managed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(4)
         .write.parquet(tmp),
     )
-    run_root = scratch_dir("stream_upsert_")
+    run_root = scratch_dir(spark, "stream_upsert_")
     return run_streaming_upsert_managed(
         spark,
         staged,
@@ -464,7 +464,7 @@ def run_ivf_ingest(
             .write.parquet(tmp),
         )
         stream_path = staged
-    run_root = scratch_dir("stream_ivf_")
+    run_root = scratch_dir(spark, "stream_ivf_")
     table_path = os.path.join(run_root, "table")
     run_ivf_ingest.last_table_path = table_path
     base_members = _kmeans_assign(vectors.filter(~is_batch), cent).select(
@@ -613,7 +613,7 @@ def run_components_ingest(
             .write.parquet(tmp),
         )
         stream_path = staged
-    run_root = scratch_dir("stream_cc_")
+    run_root = scratch_dir(spark, "stream_cc_")
     table_path = os.path.join(run_root, "table")
     run_components_ingest.last_table_path = table_path
     # stats on the merge key: each micro-batch's merge probes prune to

@@ -58,23 +58,6 @@ _DEFAULT_CONF: dict[str, str] = {
 }
 
 
-# Scratch root for iterative operators that materialize per-round state
-# (connected components in operators/dedup.py).  Resolution order:
-# the SQE_CC_SCRATCH_DIR env var, then this session conf, then the local
-# system temp dir.  On a cluster set it to a path every executor can
-# reach (shared mount / HDFS / S3); locally the default just works.
-CC_SCRATCH_CONF = "spark.sqe.cc.scratchDir"
-
-
-def cc_scratch_root(spark: SparkSession) -> str | None:
-    """The configured scratch root, or None when neither the env var nor
-    the session conf is set (caller falls back to the system temp dir)."""
-    env = os.environ.get("SQE_CC_SCRATCH_DIR")
-    if env:
-        return env
-    return spark.conf.get(CC_SCRATCH_CONF, None)
-
-
 def get_spark(
     app_name: str = "simple-query-engine-spark",
     master: str | None = None,

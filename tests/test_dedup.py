@@ -245,26 +245,28 @@ def test_local_components_fast_path_matches_distributed(spark):
         spark.conf.unset(D.CC_LOCAL_EDGE_CAP_CONF)
 
 
-def test_cc_scratch_root_session_conf_roundtrip(spark, tmp_path, monkeypatch):
-    """The CC scratch root is configurable via the spark.sqe.cc.scratchDir
-    session conf (cluster deployments set it once on the session instead of
-    exporting an env var per executor host); a relative path resolves and
-    round-trips, and the env var wins over the conf when both are set."""
+def test_cc_scratch_root_session_conf_roundtrip(spark, sf_dir, tmp_path, monkeypatch):
+    """The engine's one scratch root is the spark.sqe.scratchDir session
+    conf (cluster deployments set it once on the session): a relative
+    path resolves and round-trips, the distributed CC rounds write their
+    parquet under it, and so does a session materialization."""
     import os
+    import uuid
 
     from pyspark.sql import functions as F
 
-    from simple_query_engine_spark.session import CC_SCRATCH_CONF, cc_scratch_root
+    from simple_query_engine_spark.functions import caching
+    from simple_query_engine_spark.operators.storage import SCRATCH_CONF
 
-    monkeypatch.delenv("SQE_CC_SCRATCH_DIR", raising=False)
     monkeypatch.chdir(tmp_path)
-    spark.conf.set(CC_SCRATCH_CONF, "cc_scratch_rel")
+    root = str(tmp_path / "cc_scratch_rel")
+    spark.conf.set(SCRATCH_CONF, "cc_scratch_rel")
     # The materialization assertion below is about the DISTRIBUTED
     # rounds' parquet round-trip; pin cap=0 so the tiny graph can't take
     # the driver fast path (which writes nothing).
     spark.conf.set(D.CC_LOCAL_EDGE_CAP_CONF, "0")
+    key = f"_scratch_root_test_{uuid.uuid4().hex[:8]}"
     try:
-        assert cc_scratch_root(spark) == "cc_scratch_rel"
         one_way = spark.createDataFrame([(0, 1), (1, 2)], ["src", "dst"])
         edges = one_way.union(
             one_way.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -284,11 +286,14 @@ def test_cc_scratch_root_session_conf_roundtrip(spark, tmp_path, monkeypatch):
             if f.endswith(".parquet")
         ]
         assert parquet_parts, "no parquet files under the configured root"
-        # Env var takes precedence over the session conf.
-        monkeypatch.setenv("SQE_CC_SCRATCH_DIR", str(tmp_path / "env_root"))
-        assert cc_scratch_root(spark) == str(tmp_path / "env_root")
+        # A session materialization lands under the same root.  The real
+        # sf_dir tag keeps the shared fixture caches alive.
+        mat = caching.session_materialize(spark.range(3), sf_dir, key)
+        files = mat.inputFiles()
+        assert files and all(root + os.sep in f for f in files), files
     finally:
-        spark.conf.unset(CC_SCRATCH_CONF)
+        caching._MATERIALIZED.pop(key, None)
+        spark.conf.unset(SCRATCH_CONF)
         spark.conf.unset(D.CC_LOCAL_EDGE_CAP_CONF)
 
 
@@ -855,29 +860,43 @@ def test_standing_state_dirs_swept_but_live_snapshot_spared(
     }
     assert warm == live
 
-def test_graph_fast_paths_match_distributed(spark, sf_dir):
+def test_graph_fast_paths_match_distributed(spark, sf_dir, monkeypatch):
     """PageRank, label spreading and k-core each have ONE solver, run in
     two placements by ``_solve_graph``: on the driver over the whole
     bounded graph (default cap), or per connected component in a grouped
     map (cap=0 forces it).  Over the real near-dup fixture graph both
-    placements must produce IDENTICAL rows AND dtypes."""
+    placements must produce IDENTICAL rows AND dtypes.  A positive cap
+    the graph exceeds (cap=1) takes the per-component placement after
+    exactly ONE bounded probe — no second probe inside the component
+    rounds — and still returns the same rows."""
+    probes = []
+    real_probe = D._bounded_probe
+
+    def counting_probe(df):
+        probes.append(df)
+        return real_probe(df)
+
+    monkeypatch.setattr(D, "_bounded_probe", counting_probe)
     for q in (
         D.q_graph_pagerank_neardup,
         D.q_graph_label_spread,
         D.q_graph_kcore_neardup,
     ):
         driver = q(spark, sf_dir)
-        spark.conf.set(D.CC_LOCAL_EDGE_CAP_CONF, "0")
         try:
+            spark.conf.set(D.CC_LOCAL_EDGE_CAP_CONF, "0")
             per_component = q(spark, sf_dir)
             assert "FlatMapGroupsInPandas" in (
                 per_component._jdf.queryExecution().executedPlan().toString()
             ), q.__name__
-            assert driver.dtypes == per_component.dtypes, q.__name__
-            assert (
-                sorted(map(tuple, driver.collect()))
-                == sorted(map(tuple, per_component.collect()))
-            ), q.__name__
+            spark.conf.set(D.CC_LOCAL_EDGE_CAP_CONF, "1")
+            probes.clear()
+            over_cap = q(spark, sf_dir)
+            assert len(probes) == 1, (q.__name__, len(probes))
+            expected = sorted(map(tuple, driver.collect()))
+            for other in (per_component, over_cap):
+                assert driver.dtypes == other.dtypes, q.__name__
+                assert expected == sorted(map(tuple, other.collect())), q.__name__
         finally:
             spark.conf.unset(D.CC_LOCAL_EDGE_CAP_CONF)
 

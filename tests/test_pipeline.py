@@ -367,7 +367,9 @@ def test_incremental_curation_matches_full_recompute_and_is_delta_sized(
     from simple_query_engine_spark.sources.managed import ManagedTable
 
     t = ManagedTable.create(
-        spark, _scratch("inccur_test_"), docs.select("doc_id", "text", "lang", "source")
+        spark,
+        _scratch(spark, "inccur_test_"),
+        docs.select("doc_id", "text", "lang", "source"),
     )
     edits = (
         docs.select("doc_id", "text", "lang", "source")

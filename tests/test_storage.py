@@ -202,34 +202,63 @@ def test_materialize_once_reaps_its_lock_after_success(tmp_path):
     assert not os.path.exists(path + ".lock")
 
 
-def test_scratch_dir_sweeps_stale_siblings_only():
-    """The shared scratch root is self-cleaning: a sibling older than the
-    TTL is reclaimed on the next scratch_dir call, a fresh one (a live
-    run's scratch) is never touched."""
+def test_scratch_dir_sweeps_stale_siblings_only(spark, tmp_path):
+    """The scratch root is self-cleaning: a sibling the engine created
+    that is older than the TTL is reclaimed on the next scratch_dir call,
+    a fresh one (a live run's scratch) is never touched, and neither is
+    an old entry the engine did not create (the root is configurable)."""
     import os
     import time
-    import uuid
 
     from simple_query_engine_spark.operators.storage import (
+        _SCRATCH_MARK,
         _SCRATCH_TTL_SEC,
+        SCRATCH_CONF,
         scratch_dir,
     )
 
-    root_name = f"sqe_scratch_test_{uuid.uuid4().hex[:8]}"
-    fresh = scratch_dir("fresh_", root_name)
-    root = os.path.dirname(fresh)
-    stale = os.path.join(root, "stale_leftover")
-    os.makedirs(os.path.join(stale, "t"))
-    old = time.time() - _SCRATCH_TTL_SEC - 60
-    os.utime(stale, (old, old))
+    spark.conf.set(SCRATCH_CONF, str(tmp_path / "root"))
+    try:
+        fresh = scratch_dir(spark, "fresh_")
+        root = os.path.dirname(fresh)
+        assert root == str(tmp_path / "root")
+        stale = os.path.join(root, f"{_SCRATCH_MARK}stale_leftover")
+        foreign = os.path.join(root, "stale_user_data")
+        old = time.time() - _SCRATCH_TTL_SEC - 60
+        for p in (stale, foreign):
+            os.makedirs(os.path.join(p, "t"))
+            os.utime(p, (old, old))
 
-    new = scratch_dir("next_", root_name)
-    assert not os.path.exists(stale)
-    assert os.path.isdir(fresh) and os.path.isdir(new)
+        new = scratch_dir(spark, "next_")
+        assert not os.path.exists(stale)
+        assert os.path.isdir(foreign)
+        assert os.path.isdir(fresh) and os.path.isdir(new)
+    finally:
+        spark.conf.unset(SCRATCH_CONF)
 
-    import shutil
 
-    shutil.rmtree(root, ignore_errors=True)
+def test_scratch_dir_refuses_uri_root(spark, tmp_path, monkeypatch):
+    """A URI scratch root fails loudly, naming the conf: Python's os
+    calls would otherwise create a local ./hdfs:/... tree while Spark
+    writes remotely, and nothing would ever sweep the remote dirs."""
+    import os
+    import re
+
+    import pytest
+
+    from simple_query_engine_spark.operators.storage import (
+        SCRATCH_CONF,
+        scratch_dir,
+    )
+
+    monkeypatch.chdir(tmp_path)
+    spark.conf.set(SCRATCH_CONF, "hdfs://nn/sqe")
+    try:
+        with pytest.raises(ValueError, match=re.escape(SCRATCH_CONF)):
+            scratch_dir(spark, "cc_")
+    finally:
+        spark.conf.unset(SCRATCH_CONF)
+    assert os.listdir(tmp_path) == []
 
 
 def test_sweep_prefix_filter_spares_unrelated_entries():
