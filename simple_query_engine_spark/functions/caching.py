@@ -11,9 +11,15 @@ session.  The engine reuses results in four ways:
   rows to parquet under the scratch root and scan them back — keeps the
   rows AND cuts the lineage (:func:`cut_lineage`, the same step that
   truncates each connected-components round);
-- **staged copy** (``storage.materialize_once``): a derived parquet copy
-  shared across processes, keyed by its source files — not session
-  state, so not in this registry;
+- **staged copy** (``storage.staged_path`` + ``storage.materialize_once``):
+  a derived on-disk layout that outlives a query and is shared across
+  processes (the date-partitioned events, the bucketed join sides, the
+  staged stream replays, the cc standing state).  ``staged_path`` keys it
+  by the resolved sf_dir, its source tables' size and mtime and a caller
+  tag, places it under the scratch root, reaps its older generations and
+  touches it on use, so the root's TTL sweep reclaims only unused copies;
+  ``materialize_once`` builds it race-safely.  Not session state, so not
+  in this registry;
 - **query-scoped persist**: a ``persist``/``unpersist`` pair that lives
   and dies inside one operator call (``ManagedTable.merge``, the
   streaming sinks, the ``std`` labels in ``streaming_ops``, the edge

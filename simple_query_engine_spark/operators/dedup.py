@@ -1899,39 +1899,28 @@ def _standing_labels_managed(spark: SparkSession, sf_dir: str) -> DataFrame:
     back with ``restore``, and auditing a dedup decision reads the state
     as of the batch that made it.
 
-    The path is keyed on the SOURCE corpus identity (documents.parquet
-    size + mtime — the events-cache convention, so regenerated testdata
-    invalidates the state) plus the threshold and a format tag.  First
-    build computes the labels and commits them as version 0; every later
-    run — including a fresh session or a fresh process — reads the
-    committed snapshot and skips the corpus-wide banding + propagation
-    entirely.  A concurrent-create race is resolved by the manifest
-    link: the loser's data files are unreferenced litter (the managed
-    layer's vacuum discipline) and it reads the winner's commit."""
-    import tempfile
-
-    from simple_query_engine_spark.operators.storage import sweep_stale_scratch
+    The table is a staged copy (``storage.staged_path``) of the corpus,
+    tagged with the threshold and a format tag.  First build computes
+    the labels and commits them as version 0; every later run — including
+    a fresh process — reads the committed snapshot and skips the
+    corpus-wide banding + propagation.  It is created in place, not
+    renamed into place (manifests record absolute file paths): a
+    concurrent-create race is resolved by the manifest link — the loser's
+    data files are unreferenced litter (the managed layer's vacuum
+    discipline) and it reads the winner's commit."""
+    from simple_query_engine_spark.operators.storage import staged_path
     from simple_query_engine_spark.sources.managed import (
         ManagedTable,
         TableVersionConflict,
     )
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = (
-        f"{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{st.st_size}_{st.st_mtime_ns}"
-        f"_{int(PLANTED_JACCARD_THRESHOLD * 1000)}_{_CC_STATE_FORMAT}"
+    path = staged_path(
+        spark,
+        sf_dir,
+        ("documents",),
+        "cc_standing",
+        tag=f"{int(PLANTED_JACCARD_THRESHOLD * 1000)}_{_CC_STATE_FORMAT}",
     )
-    path = os.path.join(tempfile.gettempdir(), f"sqe_cc_standing_{tag}")
-    # Reclaim stale standing-state snapshots (old corpus identities /
-    # old format tags) — ADVICE r15: these dirs previously accumulated
-    # forever, one per testdata regeneration.  The live corpus's state
-    # is touched first so the TTL sweep can never reap the snapshot we
-    # are about to read.
-    if os.path.isdir(path):
-        os.utime(path, None)
-    sweep_stale_scratch(tempfile.gettempdir(), prefix="sqe_cc_standing_")
     t = ManagedTable(spark, path)
     if not t.versions():
         sig = _planted_sig(spark, sf_dir)

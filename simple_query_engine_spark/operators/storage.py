@@ -39,65 +39,6 @@ PRUNE_WEEK_START = "2024-01-08"
 PRUNE_WEEK_END = "2024-01-14"
 
 
-def source_cache_path(sf_dir: str, table_name: str, prefix: str) -> str:
-    """Deterministic per-scale cache path for derived copies of a source
-    table; the source file's size AND mtime are part of the tag so a
-    regenerated testdata set — even one of identical size — invalidates
-    every derived copy.
-
-    The name folds a short hash of the RESOLVED sf_dir path next to the
-    human-readable basename (ADVICE r16): two testdata roots sharing a
-    basename (``/a/sf0.1`` and ``/b/sf0.1``) keep independent derived
-    copies instead of reaping each other's on every alternating call.
-
-    Stale-identity siblings (same table + prefix + root, different
-    size/mtime — i.e. copies derived from a since-regenerated testdata
-    set) are reaped here, the ``_reap_stale_amplified`` discipline: they
-    can never be served again and otherwise accumulate one tree per
-    regeneration forever.  Names belonging to the LIVE identity — the
-    copy itself plus :func:`materialize_once`'s in-flight
-    ``<live>.tmp.<pid>`` and ``<live>.lock`` sidecars — are never
-    touched (ADVICE r16: reaping a concurrent builder's temp dir would
-    defeat materialize_once's flock/atomic-rename race safety; an
-    interleaved rmtree vs rename can leave a ``_SUCCESS``-present cache
-    with part files missing, served silently forever).  Copies for
-    OTHER roots or prefixes are untouched — they coexist legitimately;
-    pre-r17 names (no root hash) can never be served again and are
-    reaped as one-time litter."""
-    import contextlib
-    import hashlib
-    import shutil
-
-    source = os.path.join(sf_dir, f"{table_name}.parquet")
-    stat = os.stat(source)
-    base = os.path.basename(os.path.normpath(sf_dir))
-    root_tag = hashlib.md5(
-        os.path.realpath(os.path.abspath(sf_dir)).encode()
-    ).hexdigest()[:8]
-    head = f"sqe_{table_name}_{prefix}_{base}-{root_tag}_"
-    legacy_head = f"sqe_{table_name}_{prefix}_{base}_"  # pre-r17, hashless
-    live = f"{head}{stat.st_size}_{stat.st_mtime_ns}"
-    tmp = tempfile.gettempdir()
-    for name in os.listdir(tmp):
-        if name == live or name.startswith(live + "."):
-            continue  # live copy + its in-flight .tmp.<pid>/.lock sidecars
-        if not (name.startswith(head) or name.startswith(legacy_head)):
-            continue
-        path = os.path.join(tmp, name)
-        if os.path.isdir(path):
-            shutil.rmtree(path, ignore_errors=True)
-        else:
-            with contextlib.suppress(OSError):
-                os.unlink(path)
-    return os.path.join(tmp, live)
-
-
-def events_cache_path(sf_dir: str, prefix: str) -> str:
-    """:func:`source_cache_path` over the events table (the historical
-    name most call sites use)."""
-    return source_cache_path(sf_dir, "events", prefix)
-
-
 def materialize_once(path: str, write) -> None:
     """Build a derived-copy directory exactly once, race-safely.
 
@@ -116,7 +57,7 @@ def materialize_once(path: str, write) -> None:
 
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         return
-    # The lock file lives in a shared temp dir: another USER's leftover
+    # The lock file lives in a shared scratch root: another USER's leftover
     # lock (sticky /tmp forbids truncating it) must degrade to the old
     # lock-free rename-race protocol, not fail the query.
     try:
@@ -154,14 +95,15 @@ def materialize_once(path: str, write) -> None:
         _reap_lock()
 
 
-# A per-run scratch dir lives for one query run (minutes); anything this
-# old under a scratch root is a leak from a finished or crashed run.  The
-# gate is deliberately huge — a full 3-SF certification sweep stays under
-# a few hours — so a concurrent process can never lose a live scratch.
-# Long-lived deployments whose lazy DataFrames may be re-scanned days
-# after creation raise the TTL via SQE_SCRATCH_TTL_SEC (ADVICE r14).
-# A malformed value falls back to the 24h default instead of crashing
-# module import (ADVICE r15).
+# A per-run scratch dir lives for one query run (minutes), and a staged
+# copy is touched each time it is requested; anything this old under the
+# scratch root is a leak from a finished or crashed run, or a copy nobody
+# has used.  The gate is deliberately huge — a full 3-SF certification
+# sweep stays under a few hours — so a concurrent process can never lose
+# a live scratch.  Long-lived deployments whose lazy DataFrames may be
+# re-scanned days after creation raise the TTL via SQE_SCRATCH_TTL_SEC
+# (ADVICE r14).  A malformed value falls back to the 24h default instead
+# of crashing module import (ADVICE r15).
 try:
     _SCRATCH_TTL_SEC = int(os.environ.get("SQE_SCRATCH_TTL_SEC", 24 * 3600))
 except ValueError:
@@ -194,30 +136,27 @@ def sweep_stale_scratch(root: str, prefix: str | None = None) -> None:
             pass  # a concurrent sweep got there first
 
 
-# The engine's one scratch root: session materializations, the
-# connected-components rounds, the DML scratch tables and the streaming
-# run roots all live under it.  On a cluster, set it to a shared mount
-# every executor can read; it defaults under the system temp dir.
+# The engine's one scratch root: all on-disk engine state lives under it —
+# per-run scratch (session materializations, the connected-components
+# rounds, the DML scratch tables, the streaming run roots and throwaway
+# checkpoints) and the staged copies that outlive a query.  On a cluster,
+# set it to a shared mount every executor can read; it defaults under the
+# system temp dir.
 SCRATCH_CONF = "spark.sqe.scratchDir"
-# Name prefix of every dir scratch_dir creates: the only entries its sweep
-# may reclaim under a user-configured root.
+# Name prefix of every entry the engine creates under the root: the only
+# entries its sweep may reclaim under a user-configured root.
 _SCRATCH_MARK = "sqe_"
 
 
-def scratch_dir(spark: SparkSession, prefix: str) -> str:
-    """``mkdtemp`` under the scratch root (``SCRATCH_CONF``), sweeping the
-    engine's entries older than ``_SCRATCH_TTL_SEC`` first.
+def _scratch_root(spark: SparkSession) -> str:
+    """The scratch root (``SCRATCH_CONF``) as an absolute local path.
 
-    Per-run scratch is scanned by lazy DataFrames handed back to the
-    caller, so nothing can delete it at return; sweeping on a LATER call
-    bounds the backlog without touching any live run's scratch.
-
-    Python creates and sweeps the root with ``os`` calls while the JVM
-    writes into it, so the root must be a local (or locally mounted)
-    path: a URI would half-work — Spark writing remotely, Python creating
-    a local ``./hdfs:/...`` tree that nothing sweeps — and is refused.  A
-    relative root is made absolute, since the JVM and Python resolve
-    relative paths against different working directories."""
+    Python creates, reaps and sweeps entries with ``os`` calls while the
+    JVM writes into them, so the root must be a local (or locally
+    mounted) path: a URI would half-work — Spark writing remotely, Python
+    creating a local ``./hdfs:/...`` tree that nothing sweeps — and is
+    refused.  A relative root is made absolute, since the JVM and Python
+    resolve relative paths against different working directories."""
     root = spark.conf.get(SCRATCH_CONF, None) or os.path.join(
         tempfile.gettempdir(), "sqe_scratch"
     )
@@ -226,13 +165,72 @@ def scratch_dir(spark: SparkSession, prefix: str) -> str:
             f"{SCRATCH_CONF}={root!r}: the scratch root must be a local or "
             "locally mounted path, not a URI"
         )
-    root = os.path.abspath(root)
+    return os.path.abspath(root)
+
+
+def scratch_dir(spark: SparkSession, prefix: str) -> str:
+    """``mkdtemp`` under the scratch root, sweeping the engine's entries
+    older than ``_SCRATCH_TTL_SEC`` first.
+
+    Per-run scratch is scanned by lazy DataFrames handed back to the
+    caller, so nothing can delete it at return; sweeping on a LATER call
+    bounds the backlog without touching any live run's scratch."""
+    root = _scratch_root(spark)
     sweep_stale_scratch(root, prefix=_SCRATCH_MARK)
     return tempfile.mkdtemp(prefix=_SCRATCH_MARK + prefix, dir=root)
 
 
-def _partitioned_events_path(sf_dir: str) -> str:
-    return events_cache_path(sf_dir, "by_day")
+def staged_path(
+    spark: SparkSession,
+    sf_dir: str,
+    tables: tuple[str, ...],
+    name: str,
+    tag: str = "",
+) -> str:
+    """Path of a staged copy: a layout derived from ``sf_dir``'s
+    ``tables`` that outlives a query and is shared across processes
+    (build it with :func:`materialize_once`).
+
+    It is ``<root>/sqe_stage_<name>_<root tag>_<generation>``.  The root
+    tag digests the RESOLVED ``sf_dir``, so roots sharing a basename
+    (``/a/sf0.1``, ``/b/sf0.1``) keep independent copies (ADVICE r16).
+    The generation digests ``tag`` and each source table's size and
+    mtime, so a regenerated source or a new tag names a new copy.
+
+    Older generations of the same name and root can never be served
+    again and are reaped here; the live copy's in-flight ``.tmp.<pid>``
+    and ``.lock`` sidecars are spared (ADVICE r16: reaping them would
+    defeat materialize_once's race safety).  The live copy is touched,
+    so the root's TTL sweep (run by :func:`scratch_dir`) reclaims only
+    copies nobody uses."""
+    import contextlib
+    import hashlib
+    import shutil
+
+    def digest(text: str) -> str:
+        return hashlib.md5(text.encode()).hexdigest()[:12]
+
+    root = _scratch_root(spark)
+    os.makedirs(root, exist_ok=True)
+    identity = [tag]
+    for t in tables:
+        st = os.stat(os.path.join(sf_dir, f"{t}.parquet"))
+        identity.append(f"{t}:{st.st_size}:{st.st_mtime_ns}")
+    head = f"{_SCRATCH_MARK}stage_{name}_{digest(os.path.realpath(sf_dir))}_"
+    live = head + digest("|".join(identity))
+    for entry in os.listdir(root):
+        if not entry.startswith(head) or entry.split(".", 1)[0] == live:
+            continue
+        stale = os.path.join(root, entry)
+        if os.path.isdir(stale):
+            shutil.rmtree(stale, ignore_errors=True)
+        else:
+            with contextlib.suppress(OSError):
+                os.unlink(stale)
+    path = os.path.join(root, live)
+    with contextlib.suppress(FileNotFoundError):
+        os.utime(path)
+    return path
 
 
 def partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -241,7 +239,7 @@ def partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``event_date`` becomes the hive partition key.  The write goes through
     :func:`write_parquet`, the same sink a production pipeline would use.
     """
-    path = _partitioned_events_path(sf_dir)
+    path = staged_path(spark, sf_dir, ("events",), "by_day")
     materialize_once(
         path,
         lambda tmp: write_parquet(
@@ -313,10 +311,6 @@ def q_join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _roundtrip_path(sf_dir: str, fmt: str) -> str:
-    return events_cache_path(sf_dir, fmt)
-
-
 def _events_for_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events projected to roundtrip-stable types (timestamps as epoch
     longs — JSON/CSV have no canonical timestamp encoding; the epoch long
@@ -350,7 +344,7 @@ def q_source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     CSV type sniffing (reference ``src/table.rs:111-136``) but per-column
     over the whole sample.
     """
-    path = _roundtrip_path(sf_dir, "json")
+    path = staged_path(spark, sf_dir, ("events",), "json")
     materialize_once(
         path,
         lambda tmp: _events_for_roundtrip(spark, sf_dir)
@@ -365,7 +359,7 @@ def q_source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; oracle on the original parquet proves losslessness.  This
     is the reference's own load contract (header row, per-column type
     inference) exercised at catalog scale."""
-    path = _roundtrip_path(sf_dir, "csv")
+    path = staged_path(spark, sf_dir, ("events",), "csv")
     materialize_once(
         path,
         lambda tmp: _events_for_roundtrip(spark, sf_dir)
@@ -396,7 +390,7 @@ def q_source_csv_dialect(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross a split boundary), so the parallelism unit becomes the file —
     the production mitigation is many files, which the sink's
     partitioned write already produces."""
-    path = _roundtrip_path(sf_dir, "csvdialect")
+    path = staged_path(spark, sf_dir, ("documents",), "csvdialect")
     tricky = table(spark, sf_dir, "documents").select(
         "doc_id",
         F.concat(
@@ -465,7 +459,7 @@ def q_source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     unlike the text formats it carries types natively, so the roundtrip
     projection needs no epoch workaround — but we reuse the same stable
     projection so all three roundtrip queries share one oracle."""
-    path = _roundtrip_path(sf_dir, "orc")
+    path = staged_path(spark, sf_dir, ("events",), "orc")
     materialize_once(
         path,
         lambda tmp: _events_for_roundtrip(spark, sf_dir)
@@ -560,7 +554,7 @@ def q_sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_manifest_sink(spark)
-    path = events_cache_path(sf_dir, "pysink")
+    path = staged_path(spark, sf_dir, ("events",), "pysink")
     materialize_once(
         path,
         lambda tmp: _events_for_roundtrip(spark, sf_dir)
@@ -578,40 +572,26 @@ def q_join_bucketed_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue per order priority over two tables BUCKETED on the join key
     — the layout that elides the fact-fact join shuffle at 100 TB.
 
-    Both sides persist once as bucketed+sorted external tables (location
-    under the system temp dir; a real pipeline maintains these as its
+    Both sides persist once as bucketed+sorted external tables (staged
+    copies under the scratch root; a real pipeline maintains these as its
     canonical fact layout): identically-bucketed scans expose matching
     ``HashPartitioning(o_orderkey, N)``, so the sort-merge join consumes
     them with NO exchange — the no-shuffle property is plan-asserted in
     tests/test_bucketing.py, and this catalog entry proves the layout is
     lossless (the DuckDB oracle joins the original unbucketed parquet).
     """
-    import hashlib
-
     orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     lineitem = table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("o_orderkey"), "l_extendedprice", "l_discount"
     )
-    # Deterministic per-sf layout path (Python str hash is salted per
-    # process, so the previous abs(hash(sf_dir)) key rewrote the layout —
-    # and leaked a temp dir — on every run): md5 of the resolved sf_dir
-    # names the table; the source file's size+mtime tag (the repo's cache
-    # convention, see events_cache_path) invalidates on regenerated
-    # testdata.  The digest also suffixes the catalog table names so two
-    # sf_dirs in one session cannot clobber each other's registration.
-    digest = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    # BOTH source files are part of the tag: a regenerated lineitem.parquet
-    # with an untouched orders.parquet must invalidate the layout too.
-    stat_o = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    stat_l = os.stat(os.path.join(sf_dir, "lineitem.parquet"))
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"sqe_bucketed_{digest}_{stat_o.st_size}_{stat_o.st_mtime_ns}"
-        f"_{stat_l.st_size}_{stat_l.st_mtime_ns}",
-    )
-    names = (f"sqe_orders_bkt_{digest}", f"sqe_lineitem_bkt_{digest}")
-    for name, df in zip(names, (orders, lineitem)):
-        loc = os.path.join(base, name)
+    names = []
+    for source, df in (("orders", orders), ("lineitem", lineitem)):
+        loc = staged_path(spark, sf_dir, (source,), f"{source}_bkt")
+        # The staged name less its generation: one catalog table per
+        # (source, sf_dir), so two sf_dirs in one session cannot clobber
+        # each other's registration.
+        name = os.path.basename(loc).rsplit("_", 1)[0]
+        names.append(name)
 
         def _write_bucketed(tmp: str, df: DataFrame = df, name: str = name) -> None:
             # saveAsTable is the only writer that records the bucket spec,

@@ -98,13 +98,13 @@ def q_stream_restart_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from simple_query_engine_spark.operators.storage import (
-        events_cache_path,
         materialize_once,
         scratch_dir,
+        staged_path,
     )
     from simple_query_engine_spark.streaming.sinks import run_resumable_file_sink
 
-    staged = events_cache_path(sf_dir, "streamsrc")
+    staged = staged_path(spark, sf_dir, ("events",), "streamsrc")
     materialize_once(
         staged,
         lambda tmp: table(spark, sf_dir, "events")
@@ -139,15 +139,15 @@ def q_stream_upsert_managed(spark: SparkSession, sf_dir: str) -> DataFrame:
     vacuum-survival of the txn map are pinned in
     tests/test_streaming_sinks.py."""
     from simple_query_engine_spark.operators.storage import (
-        events_cache_path,
         materialize_once,
         scratch_dir,
+        staged_path,
     )
     from simple_query_engine_spark.streaming.sinks import (
         run_streaming_upsert_managed,
     )
 
-    staged = events_cache_path(sf_dir, "streamsrc_ts")
+    staged = staged_path(spark, sf_dir, ("events",), "streamsrc_ts")
     materialize_once(
         staged,
         lambda tmp: table(spark, sf_dir, "events")
@@ -176,8 +176,8 @@ def q_stream_ttl_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch gap-sessionization the oracle computes.  Checkpoint-restart
     state survival is pinned in tests/test_stateful_streaming.py."""
     from simple_query_engine_spark.operators.storage import (
-        events_cache_path,
         materialize_once,
+        staged_path,
     )
     from simple_query_engine_spark.streaming.stateful import (
         run_ttl_session_counts,
@@ -189,7 +189,7 @@ def q_stream_ttl_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import functions as F
 
-    staged = events_cache_path(sf_dir, "ttlsess_v1")
+    staged = staged_path(spark, sf_dir, ("events",), "ttlsess", tag="v1")
 
     def _stage(tmp: str) -> None:
         ev = table(spark, sf_dir, "events").select(
@@ -226,8 +226,8 @@ def q_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFra
     window is NOT suppressed — bounded state, bounded suppression) are
     pinned in tests/test_streaming.py."""
     from simple_query_engine_spark.operators.storage import (
-        events_cache_path,
         materialize_once,
+        staged_path,
     )
     from simple_query_engine_spark.streaming.windows import (
         DUP_PLANT_MOD,
@@ -237,7 +237,7 @@ def q_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFra
     )
     from pyspark.sql import functions as F
 
-    staged = events_cache_path(sf_dir, "dupwm_v1")
+    staged = staged_path(spark, sf_dir, ("events",), "dupwm", tag="v1")
 
     def _stage(tmp: str) -> None:
         ev = table(spark, sf_dir, "events").select(
@@ -438,7 +438,7 @@ def run_ivf_ingest(
     from simple_query_engine_spark.operators.storage import (
         materialize_once,
         scratch_dir,
-        source_cache_path,
+        staged_path,
     )
     from simple_query_engine_spark.sources.managed import ManagedTable
     from simple_query_engine_spark.streaming.explain_capture import record_explain
@@ -452,8 +452,12 @@ def run_ivf_ingest(
         # The staged content IS the vec_id % MOD == REM split, so the
         # cache tag derives from the split constants (ADVICE r16):
         # changing them can never serve a stale staged split.
-        staged = source_cache_path(
-            sf_dir, "embeddings", f"ivfingest_{IVF_BATCH_MOD}_{IVF_BATCH_REM}_v1"
+        staged = staged_path(
+            spark,
+            sf_dir,
+            ("embeddings",),
+            "ivfingest",
+            tag=f"{IVF_BATCH_MOD}_{IVF_BATCH_REM}_v1",
         )
         materialize_once(
             staged,
@@ -593,7 +597,7 @@ def run_components_ingest(
     from simple_query_engine_spark.operators.storage import (
         materialize_once,
         scratch_dir,
-        source_cache_path,
+        staged_path,
     )
     from simple_query_engine_spark.sources.managed import ManagedTable
     from simple_query_engine_spark.streaming.explain_capture import record_explain
@@ -602,8 +606,12 @@ def run_components_ingest(
     if stream_path is None:
         # The staged content IS the planted batch split, so the cache tag
         # derives from the plant constants (the ivfingest discipline).
-        staged = source_cache_path(
-            sf_dir, "documents", f"ccingest_{PLANT_DOC_MOD}_{PLANT_DOC_OFFSET}_v1"
+        staged = staged_path(
+            spark,
+            sf_dir,
+            ("documents",),
+            "ccingest",
+            tag=f"{PLANT_DOC_MOD}_{PLANT_DOC_OFFSET}_v1",
         )
         materialize_once(
             staged,

@@ -75,6 +75,14 @@ class ManagedTable:
     UPDATE / MERGE with copy-on-write rewrites and time-travel reads."""
 
     def __init__(self, spark: SparkSession, path: str):
+        # The layer lists, links and locks with local ``os``/``fcntl``
+        # calls, so a URI would half-work: ``abspath("hdfs://nn/t")`` is
+        # ``<cwd>/hdfs:/nn/t``, a local tree posing as the remote table.
+        if "://" in path:
+            raise ValueError(
+                f"managed table path {path!r}: must be a local or locally "
+                "mounted path, not a URI"
+            )
         self.spark = spark
         # Absolute from the start: manifests record the paths
         # _write_data_files produces, and copy-on-write subtracts the

@@ -22,9 +22,7 @@ QUERY — correctness gates don't depend on the audit trail.
 
 from __future__ import annotations
 
-import os
 import shutil
-import tempfile
 import uuid
 
 # label -> the last captured micro-batch physical plan (text).  One entry
@@ -81,11 +79,15 @@ def run_to_memory_sink(df, prefix: str, label: str, output_mode: str = "complete
     ``availableNow`` memory-sink queries are never resumed (each run gets
     a fresh uuid sink), so the directory exists only because Spark
     requires one — without the reap every certified run leaked a
-    checkpoint tree into the shared tempdir (same hygiene class as the
-    r13 materialize_once lock-sidecar advice item)."""
+    checkpoint tree (same hygiene class as the r13 materialize_once
+    lock-sidecar advice item).  The checkpoint is a ``scratch_dir``, so
+    one left by a query that raised is reclaimed by the scratch root's
+    TTL sweep."""
+    from simple_query_engine_spark.operators.storage import scratch_dir
+
     spark = df.sparkSession
     sink_name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    checkpoint = os.path.join(tempfile.gettempdir(), f"ckpt_{sink_name}")
+    checkpoint = scratch_dir(spark, f"ckpt_{prefix}_")
     query = (
         df.writeStream.format("memory")
         .queryName(sink_name)

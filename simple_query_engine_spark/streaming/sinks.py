@@ -12,10 +12,6 @@ windows.
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,6 +37,7 @@ def run_streaming_to_parquet(
     re-delivered batch overwrites exactly the windows it carries
     (``partitionOverwriteMode=dynamic``), never the whole table.
     """
+    from simple_query_engine_spark.operators.storage import scratch_dir
     from simple_query_engine_spark.streaming.windows import read_event_stream
 
     # Scope the overwrite-mode change to this query: leaking
@@ -61,9 +58,7 @@ def run_streaming_to_parquet(
                 .parquet(output_path)
             )
 
-        checkpoint = os.path.join(
-            tempfile.gettempdir(), f"ckpt_fb_{uuid.uuid4().hex[:8]}"
-        )
+        checkpoint = scratch_dir(spark, "ckpt_fb_")
         query = (
             windowed.writeStream.foreachBatch(upsert_batch)
             .outputMode("complete")
@@ -73,7 +68,7 @@ def run_streaming_to_parquet(
         )
         query.awaitTermination()
         record_explain(query, "windowed_upsert")
-        # Per-run throwaway checkpoint (uuid-named, never handed out) —
+        # Per-run throwaway checkpoint (a fresh scratch dir, never handed out) —
         # reap like run_to_memory_sink does.
         import shutil
 

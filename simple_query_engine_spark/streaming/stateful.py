@@ -21,8 +21,6 @@ exhibit.)
 
 from __future__ import annotations
 
-import os
-import tempfile
 import uuid
 from collections.abc import Iterable
 
@@ -221,6 +219,7 @@ def run_ttl_session_counts(
     test resumes a second query from the first's checkpoint and proves an
     open session's state survives (tests/test_stateful_streaming.py).
     """
+    from simple_query_engine_spark.operators.storage import scratch_dir
     from simple_query_engine_spark.streaming.windows import (
         WATERMARK,
         read_event_stream,
@@ -261,9 +260,7 @@ def run_ttl_session_counts(
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
         sink_name = f"ttlsess_{uuid.uuid4().hex[:8]}"
-        checkpoint = checkpoint_dir or os.path.join(
-            tempfile.gettempdir(), f"ckpt_{sink_name}"
-        )
+        checkpoint = checkpoint_dir or scratch_dir(spark, "ckpt_ttlsess_")
         if output_dir is not None:
             writer = sessions.writeStream.format("parquet").option(
                 "path", output_dir

@@ -280,12 +280,12 @@ def run_late_drop_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     neither stragglers-as-late-copies nor sentinels).
     """
     from simple_query_engine_spark.operators.storage import (
-        events_cache_path,
         materialize_once,
+        staged_path,
     )
     from simple_query_engine_spark.sources.catalog import table
 
-    staged = events_cache_path(sf_dir, "latedrop_v2")
+    staged = staged_path(spark, sf_dir, ("events",), "latedrop", tag="v2")
 
     def _stage(tmp: str) -> None:
         ev = table(spark, sf_dir, "events").select(

@@ -73,38 +73,74 @@ def test_bucketed_join_matches_unbucketed(spark, sf_dir, bucketed_tables):
 
 
 def test_bucketed_layout_reused_across_processes(spark, sf_dir):
-    """The layout path is a deterministic md5+mtime key (Python str hash is
+    """The layout path is a deterministic staged path (Python str hash is
     per-process salted), so a second process — simulated here by dropping
     the catalog entries while the files remain — must re-register the
     external tables metadata-only and NOT rewrite a single parquet file."""
     import glob
-    import hashlib
     import os
-    import tempfile
 
     from simple_query_engine_spark.operators.storage import (
         q_join_bucketed_revenue,
+        staged_path,
     )
 
     r1 = sorted(map(tuple, q_join_bucketed_revenue(spark, sf_dir).collect()))
-    digest = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    stat_o = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    stat_l = os.stat(os.path.join(sf_dir, "lineitem.parquet"))
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"sqe_bucketed_{digest}_{stat_o.st_size}_{stat_o.st_mtime_ns}"
-        f"_{stat_l.st_size}_{stat_l.st_mtime_ns}",
-    )
-    files = sorted(glob.glob(os.path.join(base, "*", "*.parquet")))
-    assert files, base
+    locs = [
+        staged_path(spark, sf_dir, (source,), f"{source}_bkt")
+        for source in ("orders", "lineitem")
+    ]
+
+    def layout_files():
+        return sorted(f for loc in locs for f in glob.glob(f"{loc}/*.parquet"))
+
+    files = layout_files()
+    assert len(files) >= 2, locs
     mtimes = [os.path.getmtime(f) for f in files]
-    spark.sql(f"DROP TABLE IF EXISTS sqe_orders_bkt_{digest}")
-    spark.sql(f"DROP TABLE IF EXISTS sqe_lineitem_bkt_{digest}")
+    for loc in locs:
+        spark.sql(f"DROP TABLE IF EXISTS {os.path.basename(loc).rsplit('_', 1)[0]}")
     r2 = sorted(map(tuple, q_join_bucketed_revenue(spark, sf_dir).collect()))
     assert r2 == r1
-    files2 = sorted(glob.glob(os.path.join(base, "*", "*.parquet")))
+    files2 = layout_files()
     assert files2 == files
     assert [os.path.getmtime(f) for f in files2] == mtimes
+
+
+def test_regenerated_source_reaps_old_bucketed_layout(spark, sf_dir, tmp_path):
+    """Regenerating one source (same bytes, new mtime) rebuilds that
+    side's bucketed layout and reaps the old one; the other side's
+    layout is reused, and the answer is unchanged."""
+    import os
+    import shutil
+
+    from simple_query_engine_spark.operators.storage import (
+        SCRATCH_CONF,
+        q_join_bucketed_revenue,
+    )
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for name in ("orders", "lineitem"):
+        shutil.copy(os.path.join(sf_dir, f"{name}.parquet"), sf / f"{name}.parquet")
+    root = tmp_path / "root"
+    spark.conf.set(SCRATCH_CONF, str(root))
+    try:
+        r1 = sorted(map(tuple, q_join_bucketed_revenue(spark, str(sf)).collect()))
+        before = set(os.listdir(root))
+        lineitem = sf / "lineitem.parquet"
+        st = os.stat(lineitem)
+        os.utime(lineitem, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+        r2 = sorted(map(tuple, q_join_bucketed_revenue(spark, str(sf)).collect()))
+        after = set(os.listdir(root))
+    finally:
+        spark.conf.unset(SCRATCH_CONF)
+    assert r2 == r1
+    old_lineitem = {n for n in before if n.startswith("sqe_stage_lineitem_bkt_")}
+    orders = {n for n in before if n.startswith("sqe_stage_orders_bkt_")}
+    assert len(old_lineitem) == 1 and len(orders) == 1, before
+    assert orders <= after, "untouched source's layout was rebuilt"
+    assert not old_lineitem & after, "old bucketed layout left behind"
+    assert len({n for n in after if n.startswith("sqe_stage_lineitem_bkt_")}) == 1
 
 
 def test_salted_join_matches_plain_join(spark, sf_dir):

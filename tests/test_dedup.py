@@ -816,39 +816,45 @@ def test_cc_state_format_derived_from_pipeline_params(monkeypatch):
 def test_standing_state_dirs_swept_but_live_snapshot_spared(
     spark, sf_dir, monkeypatch
 ):
-    """ADVICE r15: sqe_cc_standing_* snapshot dirs (one per corpus
-    identity) are reclaimed by the TTL sweep once stale — they no longer
-    accumulate forever — while the LIVE corpus's snapshot survives the
-    sweep even when older than the TTL (it is touched before sweeping)."""
+    """ADVICE r15: standing-state snapshots no longer accumulate — a
+    snapshot of an older generation (old corpus identity or format tag)
+    is reaped when the state is next requested — while the LIVE
+    snapshot survives the scratch root's TTL sweep even when older than
+    the TTL, because reading it touches it."""
     import os
-    import tempfile
     import time
 
-    from simple_query_engine_spark.operators.storage import _SCRATCH_TTL_SEC
+    from simple_query_engine_spark.operators.storage import (
+        _SCRATCH_TTL_SEC,
+        scratch_dir,
+        staged_path,
+    )
 
-    tmp = tempfile.gettempdir()
-    stale = os.path.join(tmp, "sqe_cc_standing_oldcorpus_1_2_800_deadbeef")
+    path = staged_path(
+        spark,
+        sf_dir,
+        ("documents",),
+        "cc_standing",
+        tag=f"{int(D.PLANTED_JACCARD_THRESHOLD * 1000)}_{D._CC_STATE_FORMAT}",
+    )
+    stale = f"{path.rsplit('_', 1)[0]}_0123456789ab"
     os.makedirs(stale, exist_ok=True)
-    old = time.time() - _SCRATCH_TTL_SEC - 60
-    os.utime(stale, (old, old))
 
     live = {
         (r.doc_id, r.label)
         for r in D._standing_labels_managed(spark, sf_dir).collect()
     }
     assert live and not os.path.exists(stale)
+    assert os.path.isdir(path)
 
-    # Age the live snapshot past the TTL: the next call must touch it
-    # first, sweep, and still read it warm (builder poisoned to prove
-    # no rebuild happened).
-    live_dirs = [
-        os.path.join(tmp, n)
-        for n in os.listdir(tmp)
-        if n.startswith("sqe_cc_standing_")
-    ]
-    assert live_dirs
-    for p in live_dirs:
-        os.utime(p, (old, old))
+    # Age the live snapshot past the TTL: using it touches it, so the
+    # next sweep spares it and a later read is still warm (builder
+    # poisoned to prove no rebuild happened).
+    old = time.time() - _SCRATCH_TTL_SEC - 60
+    os.utime(path, (old, old))
+    D._standing_labels_managed(spark, sf_dir)
+    scratch_dir(spark, "sweep_")
+    assert os.path.isdir(path)
 
     def boom(*a, **k):
         raise AssertionError("sweep reaped the live standing snapshot")

@@ -4,6 +4,7 @@ atomic commits, time travel, and merge semantics."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -1150,3 +1151,16 @@ def test_strict_merge_conf_reenables_duplicate_check(spark, tmp_path, people):
             )
     finally:
         spark.conf.unset("spark.sqe.strictMerge")
+
+
+@pytest.mark.parametrize("uri", ["hdfs://nn/t", "file:///tmp/sqe_uri_table"])
+def test_uri_table_path_is_refused(spark, tmp_path, monkeypatch, people, uri):
+    """A URI table path fails loudly, naming the path: abspath would turn
+    it into a local ``<cwd>/hdfs:/nn/t`` tree posing as the remote table
+    (the layer's listing, linking and locking are local os calls)."""
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match=re.escape(repr(uri))):
+        ManagedTable(spark, uri)
+    with pytest.raises(ValueError, match=re.escape(repr(uri))):
+        ManagedTable.create(spark, uri, people)
+    assert os.listdir(tmp_path) == []

@@ -77,8 +77,8 @@ def test_csv_dialect_payload_bytes_survive(spark, sf_dir):
     quoted newline all survive the sink+source roundtrip (the multiLine
     record reassembly the aggregate fingerprints corpus-wide)."""
     from simple_query_engine_spark.operators.storage import (
-        _roundtrip_path,
         q_source_csv_dialect,
+        staged_path,
     )
 
     q_source_csv_dialect(spark, sf_dir).collect()  # ensure materialized
@@ -87,7 +87,7 @@ def test_csv_dialect_payload_bytes_survive(spark, sf_dir):
         .option("multiLine", True)
         .option("quote", '"')
         .option("escape", '"')
-        .csv(_roundtrip_path(sf_dir, "csvdialect"))
+        .csv(staged_path(spark, sf_dir, ("documents",), "csvdialect"))
     )
     row = back.filter("CAST(doc_id AS BIGINT) = 0").collect()[0]
     src = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(

@@ -237,10 +237,11 @@ def test_scratch_dir_sweeps_stale_siblings_only(spark, tmp_path):
         spark.conf.unset(SCRATCH_CONF)
 
 
-def test_scratch_dir_refuses_uri_root(spark, tmp_path, monkeypatch):
-    """A URI scratch root fails loudly, naming the conf: Python's os
-    calls would otherwise create a local ./hdfs:/... tree while Spark
-    writes remotely, and nothing would ever sweep the remote dirs."""
+def test_scratch_dir_refuses_uri_root(spark, sf_dir, tmp_path, monkeypatch):
+    """A URI scratch root fails loudly, naming the conf, for per-run
+    scratch and staged copies alike: Python's os calls would otherwise
+    create a local ./hdfs:/... tree while Spark writes remotely, and
+    nothing would ever sweep the remote dirs."""
     import os
     import re
 
@@ -249,6 +250,7 @@ def test_scratch_dir_refuses_uri_root(spark, tmp_path, monkeypatch):
     from simple_query_engine_spark.operators.storage import (
         SCRATCH_CONF,
         scratch_dir,
+        staged_path,
     )
 
     monkeypatch.chdir(tmp_path)
@@ -256,6 +258,8 @@ def test_scratch_dir_refuses_uri_root(spark, tmp_path, monkeypatch):
     try:
         with pytest.raises(ValueError, match=re.escape(SCRATCH_CONF)):
             scratch_dir(spark, "cc_")
+        with pytest.raises(ValueError, match=re.escape(SCRATCH_CONF)):
+            staged_path(spark, sf_dir, ("events",), "by_day")
     finally:
         spark.conf.unset(SCRATCH_CONF)
     assert os.listdir(tmp_path) == []
@@ -374,81 +378,150 @@ def test_z_interleave_matches_python_bit_model(spark):
         assert r["z"] == model([r["a"], r["b"], r["c"]]), (r["a"], r["b"], r["c"])
 
 
-def test_source_cache_path_reaps_stale_identity_siblings(sf_dir):
-    """Regenerated-testdata litter (r16, the _reap_stale_amplified
-    discipline applied to staged source copies): a cached derived copy
-    whose size/mtime tag no longer matches the live source is reaped by
-    the next source_cache_path call for the same table+prefix+scale —
-    as is a pre-r17 hashless-format name (ADVICE r16 migration).  The
-    live copy, the live identity's in-flight materialize_once sidecars
-    (`.tmp.<pid>` dir, `.lock` file — ADVICE r16 medium: reaping those
-    would defeat the flock/atomic-rename race safety), other prefixes,
-    and other scale names all survive."""
+def _fake_sf(tmp_path, side: str = "sf") -> str:
+    """A one-table scale dir: staged_path only stats its source files."""
+    root = tmp_path / side / "sfX"
+    root.mkdir(parents=True)
+    (root / "events.parquet").write_bytes(b"x" * (len(side) + 7))
+    return str(root)
+
+
+def test_staged_path_reaps_stale_generation_siblings(spark, tmp_path):
+    """Regenerated-testdata litter (r16): a staged copy of an older
+    generation (same name and root, different source identity or tag) is
+    reaped by the next staged_path call.  The live copy, its in-flight
+    materialize_once sidecars (`.tmp.<pid>` dir, `.lock` file — ADVICE
+    r16 medium: reaping those would defeat the flock/atomic-rename race
+    safety), other names and other roots all survive."""
     import os
-    import tempfile
 
-    from simple_query_engine_spark.operators.storage import source_cache_path
+    from simple_query_engine_spark.operators.storage import (
+        SCRATCH_CONF,
+        staged_path,
+    )
 
-    prefix = f"reaptest{os.getpid()}"
-    live = source_cache_path(sf_dir, "events", prefix)
-    head = live.rsplit("_", 2)[0]  # sqe_events_<prefix>_<sfbase>-<roottag>
-    tmp = tempfile.gettempdir()
-    stale = f"{head}_1_2"
-    legacy = f"{head.rsplit('-', 1)[0]}_3_4"  # pre-r17: no -<roottag>
-    other_prefix = live.replace(prefix, prefix + "x")
-    other_scale = f"{head}zz_1_2"
-    live_tmp_sidecar = f"{live}.tmp.12345"
-    live_lock_sidecar = f"{live}.lock"
-    dirs = (live, stale, legacy, other_prefix, other_scale, live_tmp_sidecar)
+    sf = _fake_sf(tmp_path)
+    other_sf = _fake_sf(tmp_path, "other")
+    spark.conf.set(SCRATCH_CONF, str(tmp_path / "root"))
     try:
-        for p in dirs:
-            os.makedirs(p, exist_ok=True)
+        live = staged_path(spark, sf, ("events",), "reaptest")
+        assert os.path.dirname(live) == str(tmp_path / "root")
+        head = live.rsplit("_", 1)[0]
+        stale = f"{head}_0123456789ab"
+        other_name = staged_path(spark, sf, ("events",), "reaptestx")
+        other_root = staged_path(spark, other_sf, ("events",), "reaptest")
+        live_tmp_sidecar = f"{live}.tmp.12345"
+        live_lock_sidecar = f"{live}.lock"
+        for p in (live, stale, other_name, other_root, live_tmp_sidecar):
+            os.makedirs(p)
         with open(live_lock_sidecar, "w"):
             pass
-        got = source_cache_path(sf_dir, "events", prefix)
-        assert got == live
+        assert staged_path(spark, sf, ("events",), "reaptest") == live
         assert os.path.isdir(live)
         assert not os.path.exists(stale)
-        assert not os.path.exists(legacy)
-        assert os.path.isdir(other_prefix) and os.path.isdir(other_scale)
+        assert os.path.isdir(other_name) and os.path.isdir(other_root)
         assert os.path.isdir(live_tmp_sidecar), "in-flight builder temp reaped"
         assert os.path.exists(live_lock_sidecar), "builder lock reaped"
     finally:
-        import shutil
-
-        for p in dirs:
-            shutil.rmtree(p, ignore_errors=True)
-        if os.path.exists(live_lock_sidecar):
-            os.unlink(live_lock_sidecar)
+        spark.conf.unset(SCRATCH_CONF)
 
 
-def test_source_cache_path_same_basename_roots_coexist(tmp_path):
+def test_staged_path_same_basename_roots_coexist(spark, tmp_path):
     """ADVICE r16 low: two testdata roots sharing a basename (/a/sf0.1
     and /b/sf0.1) must keep INDEPENDENT derived copies — alternating
     calls against both roots must not reap each other's live trees
     (pre-fix they did, re-materializing multi-GB copies every swap)."""
     import os
 
-    from simple_query_engine_spark.operators.storage import source_cache_path
+    from simple_query_engine_spark.operators.storage import (
+        SCRATCH_CONF,
+        staged_path,
+    )
 
-    roots = []
-    for side in ("a", "b"):
-        root = tmp_path / side / "sfX"
-        root.mkdir(parents=True)
-        (root / "events.parquet").write_bytes(b"x" * (len(side) + 7))
-        roots.append(str(root))
-    p_a = source_cache_path(roots[0], "events", "coex")
-    p_b = source_cache_path(roots[1], "events", "coex")
-    assert p_a != p_b, "same-basename roots collide on cache identity"
+    roots = [_fake_sf(tmp_path, side) for side in ("a", "b")]
+    spark.conf.set(SCRATCH_CONF, str(tmp_path / "root"))
     try:
-        os.makedirs(p_a, exist_ok=True)
-        os.makedirs(p_b, exist_ok=True)
+        p_a = staged_path(spark, roots[0], ("events",), "coex")
+        p_b = staged_path(spark, roots[1], ("events",), "coex")
+        assert p_a != p_b, "same-basename roots collide on cache identity"
+        os.makedirs(p_a)
+        os.makedirs(p_b)
         # Alternating calls: each root's reap pass must spare the other's.
-        assert source_cache_path(roots[0], "events", "coex") == p_a
-        assert source_cache_path(roots[1], "events", "coex") == p_b
+        assert staged_path(spark, roots[0], ("events",), "coex") == p_a
+        assert staged_path(spark, roots[1], ("events",), "coex") == p_b
         assert os.path.isdir(p_a) and os.path.isdir(p_b)
     finally:
-        import shutil
+        spark.conf.unset(SCRATCH_CONF)
 
-        shutil.rmtree(p_a, ignore_errors=True)
-        shutil.rmtree(p_b, ignore_errors=True)
+
+def test_staged_path_new_generation_reaps_old(spark, tmp_path):
+    """A changed caller tag and a regenerated source (same bytes, new
+    mtime) each name a new generation, and the call that names it reaps
+    the old copy."""
+    import os
+
+    from simple_query_engine_spark.operators.storage import (
+        SCRATCH_CONF,
+        staged_path,
+    )
+
+    sf = _fake_sf(tmp_path)
+    spark.conf.set(SCRATCH_CONF, str(tmp_path / "root"))
+    try:
+        v1 = staged_path(spark, sf, ("events",), "gen", tag="v1")
+        os.makedirs(v1)
+        v2 = staged_path(spark, sf, ("events",), "gen", tag="v2")
+        assert v2 != v1 and not os.path.exists(v1)
+        os.makedirs(v2)
+        src = os.path.join(sf, "events.parquet")
+        st = os.stat(src)
+        os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+        regenerated = staged_path(spark, sf, ("events",), "gen", tag="v2")
+        assert regenerated != v2 and not os.path.exists(v2)
+    finally:
+        spark.conf.unset(SCRATCH_CONF)
+
+
+def test_staged_copy_touched_on_use_survives_sweep(spark, tmp_path):
+    """Liveness: a staged copy older than the TTL is touched when it is
+    requested, so scratch_dir's sweep spares it; a copy nobody requested
+    is reclaimed by the same sweep."""
+    import os
+    import time
+
+    from simple_query_engine_spark.operators.storage import (
+        _SCRATCH_TTL_SEC,
+        SCRATCH_CONF,
+        scratch_dir,
+        staged_path,
+    )
+
+    sf = _fake_sf(tmp_path)
+    spark.conf.set(SCRATCH_CONF, str(tmp_path / "root"))
+    try:
+        used = staged_path(spark, sf, ("events",), "used")
+        unused = staged_path(spark, sf, ("events",), "unused")
+        old = time.time() - _SCRATCH_TTL_SEC - 60
+        for p in (used, unused):
+            os.makedirs(p)
+            os.utime(p, (old, old))
+        assert staged_path(spark, sf, ("events",), "used") == used
+        scratch_dir(spark, "sweep_")
+        assert os.path.isdir(used)
+        assert not os.path.exists(unused)
+    finally:
+        spark.conf.unset(SCRATCH_CONF)
+
+
+def test_staged_copy_lands_under_scratch_root(spark, sf_dir, tmp_path):
+    """A staged copy is built under the configured scratch root."""
+    from simple_query_engine_spark.operators.storage import SCRATCH_CONF
+
+    root = str(tmp_path / "root")
+    spark.conf.set(SCRATCH_CONF, root)
+    try:
+        files = partitioned_events(spark, sf_dir).inputFiles()
+    finally:
+        spark.conf.unset(SCRATCH_CONF)
+    assert files
+    assert all(f.startswith(f"file://{root}/sqe_stage_by_day_") for f in files)

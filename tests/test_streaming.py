@@ -539,12 +539,11 @@ def test_run_to_memory_sink_reaps_its_checkpoint(spark, tmp_path):
     availableNow memory-sink queries are never resumed (fresh uuid sink
     per run), so the required-but-throwaway checkpoint dir is reaped
     after termination."""
-    import glob
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
+    from simple_query_engine_spark.operators.storage import SCRATCH_CONF
     from simple_query_engine_spark.streaming.explain_capture import (
         LAST_EXPLAINS,
         run_to_memory_sink,
@@ -555,9 +554,12 @@ def test_run_to_memory_sink_reaps_its_checkpoint(spark, tmp_path):
     stream = spark.readStream.schema("id long, k long").parquet(src)
     agg = stream.groupBy("k").agg(F.count(F.lit(1)).alias("n"))
 
-    before = set(glob.glob(os.path.join(tempfile.gettempdir(), "ckpt_reaptest_*")))
-    out = run_to_memory_sink(agg, "reaptest", "reaptest_label")
+    root = tmp_path / "root"
+    spark.conf.set(SCRATCH_CONF, str(root))
+    try:
+        out = run_to_memory_sink(agg, "reaptest", "reaptest_label")
+    finally:
+        spark.conf.unset(SCRATCH_CONF)
     assert {tuple(r) for r in out.collect()} == {(0, 4), (1, 3), (2, 3)}
-    after = set(glob.glob(os.path.join(tempfile.gettempdir(), "ckpt_reaptest_*")))
-    assert after == before  # checkpoint reaped
+    assert os.listdir(root) == []  # checkpoint made under the root, then reaped
     assert "reaptest_label" in LAST_EXPLAINS  # plan capture is structural

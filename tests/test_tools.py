@@ -12,6 +12,8 @@ import os
 
 import pytest
 
+from simple_query_engine_spark.operators.storage import SCRATCH_CONF
+
 
 def test_table_src_file_dir_and_empty_dir(tmp_path):
     """Plain file passes through; a Spark-written directory globs its part
@@ -34,72 +36,66 @@ def test_table_src_file_dir_and_empty_dir(tmp_path):
     assert _table_src(str(d)) == f"{d}/*.parquet"
 
 
-def test_ensure_amplified_tag_carries_format_version(tmp_path, monkeypatch):
-    """The amplified-copy cache path must embed _AMPLIFY_FORMAT: an
-    amplifier change bumps the version and every stale cached copy is
-    bypassed instead of silently served (the r15 whitespace-split fix
-    would otherwise have benchmarked f1-format fixtures forever)."""
+def _amplified_paths(spark, monkeypatch, tmp_path):
+    """ensure_amplified with the amplifier stubbed out (it only creates
+    the staged dir) over a one-table scale dir, under a tmp scratch root."""
     import tools.amplify_testdata as amp
 
     src = tmp_path / "sf"
     src.mkdir()
     (src / "orders.parquet").write_bytes(b"x")
 
-    captured = {}
-
     def fake_amplify_dir(spark, sf_dir, k, dst, hot_fraction=0.0, corpus=False):
-        captured["dst"] = dst
+        os.makedirs(dst, exist_ok=True)
         return dst
 
     monkeypatch.setattr(amp, "amplify_dir", fake_amplify_dir)
-    out = amp.ensure_amplified(None, str(src), 8, corpus=True)
-    assert out == captured["dst"]
-    base = os.path.basename(out)
-    assert f"_{amp._AMPLIFY_FORMAT}_" in base, base
-    assert base.endswith("_x8")
-    assert "_corpus_" in base
+    spark.conf.set(SCRATCH_CONF, str(tmp_path / "root"))
+    return amp, str(src)
 
 
-def test_reap_stale_amplified_removes_old_formats_keeps_live_variants(tmp_path):
-    """ADVICE r15: a format bump (or testdata regeneration) must REMOVE
-    the old cached amplified trees, not just stop serving them —
-    repeated bumps otherwise accumulate multi-GB stale fixtures in the
-    tempdir forever.  Variants of the CURRENT identity (other k / hot /
-    corpus) coexist and survive; a stale identity that is a string
-    prefix of the live one is still reaped (the trailing-underscore
-    guard)."""
-    import tempfile
-
-    import tools.amplify_testdata as amp
-
-    base = f"sfreap{os.getpid()}"
-    src = tmp_path / base
-    src.mkdir()
-    tmp = tempfile.gettempdir()
-    fmt = amp._AMPLIFY_FORMAT
-    live = [
-        f"sqe_amplified_{base}_100_200_{fmt}_x8",
-        f"sqe_amplified_{base}_100_200_{fmt}_corpus_x8",
-        f"sqe_amplified_{base}_100_200_{fmt}_hot30_x32",
-    ]
-    stale = [
-        f"sqe_amplified_{base}_100_200_f0_x8",      # old format tag
-        f"sqe_amplified_{base}_99_200_{fmt}_x8",    # old source identity
-        f"sqe_amplified_{base}_100_20_{fmt}_x8",    # mtime a string-prefix of live
-    ]
+def test_ensure_amplified_tag_carries_format_version(spark, tmp_path, monkeypatch):
+    """An amplifier change bumps _AMPLIFY_FORMAT: the next request gets a
+    new path and the old-format copy is reaped, never silently served
+    (the r15 whitespace-split fix would otherwise have benchmarked
+    f1-format fixtures forever)."""
+    amp, src = _amplified_paths(spark, monkeypatch, tmp_path)
     try:
-        for name in live + stale:
-            os.makedirs(os.path.join(tmp, name), exist_ok=True)
-        amp._reap_stale_amplified(str(src), 100, 200)
-        for name in live:
-            assert os.path.isdir(os.path.join(tmp, name)), name
-        for name in stale:
-            assert not os.path.exists(os.path.join(tmp, name)), name
+        old = amp.ensure_amplified(spark, src, 8, corpus=True)
+        assert old.startswith(str(tmp_path / "root"))
+        monkeypatch.setattr(amp, "_AMPLIFY_FORMAT", amp._AMPLIFY_FORMAT + "x")
+        new = amp.ensure_amplified(spark, src, 8, corpus=True)
     finally:
-        import shutil
+        spark.conf.unset(SCRATCH_CONF)
+    assert new != old
+    assert os.path.isdir(new) and not os.path.exists(old)
 
-        for name in live + stale:
-            shutil.rmtree(os.path.join(tmp, name), ignore_errors=True)
+
+def test_ensure_amplified_reaps_stale_generations_keeps_live_variants(
+    spark, tmp_path, monkeypatch
+):
+    """ADVICE r15: a testdata regeneration must REMOVE the old cached
+    amplified trees, not just stop serving them.  Each variant (k, hot
+    fraction, corpus mode) is its own staged copy: requesting one reaps
+    its own old generation, while the other variants stay until they are
+    next requested (or the scratch root's TTL sweep takes them)."""
+    amp, src = _amplified_paths(spark, monkeypatch, tmp_path)
+    try:
+        x8 = amp.ensure_amplified(spark, src, 8)
+        corpus = amp.ensure_amplified(spark, src, 8, corpus=True)
+        hot = amp.ensure_amplified(spark, src, 32, hot_fraction=0.3)
+        assert len({x8, corpus, hot}) == 3
+        orders = os.path.join(src, "orders.parquet")
+        st = os.stat(orders)
+        os.utime(orders, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+        x8_new = amp.ensure_amplified(spark, src, 8)
+        assert x8_new != x8 and not os.path.exists(x8)
+        assert os.path.isdir(corpus) and os.path.isdir(hot)
+        corpus_new = amp.ensure_amplified(spark, src, 8, corpus=True)
+        assert corpus_new != corpus and not os.path.exists(corpus)
+        assert os.path.isdir(x8_new) and os.path.isdir(hot)
+    finally:
+        spark.conf.unset(SCRATCH_CONF)
 
 
 def test_scratch_ttl_env_malformed_falls_back(tmp_path):

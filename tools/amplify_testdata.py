@@ -23,20 +23,20 @@ from __future__ import annotations
 
 import os
 import sys
-import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from simple_query_engine_spark.operators.storage import materialize_once, staged_path
 from simple_query_engine_spark.sources.catalog import TABLE_NAMES, table
 
 # Per-replica key offset: far above any real key, far below 2⁶³/k.
 REPLICA_OFFSET = 10**12
 
 # Bumped whenever the amplifier's output changes for identical input, so
-# cached amplified copies under the temp dir are rebuilt instead of
+# cached amplified copies under the scratch root are rebuilt instead of
 # silently serving the old format.  f2 = r15 whitespace-class token split.
 _AMPLIFY_FORMAT = "f2"
 
@@ -176,8 +176,6 @@ def amplify_dir(
     as-is (the bench shape); ``corpus=True`` inverts it — documents and
     embeddings amplify (see the two ``_amplified_*`` transforms), facts
     copy as-is — for the corpus-bound correctness gate."""
-    from simple_query_engine_spark.operators.storage import materialize_once
-
     os.makedirs(dst_dir, exist_ok=True)
     for name in TABLE_NAMES:
         src = os.path.join(sf_dir, f"{name}.parquet")
@@ -206,57 +204,22 @@ def ensure_amplified(
     hot_fraction: float = 0.0,
     corpus: bool = False,
 ) -> str:
-    """Amplified copy under the system temp dir, built once per (sf, k,
-    source contents) — total source byte size AND newest source mtime are
-    part of the tag, so a regenerated testdata set (even one of identical
-    size) invalidates the amplified copy instead of silently benchmarking
-    stale data."""
-    sources = [
-        os.path.join(sf_dir, f"{name}.parquet")
-        for name in TABLE_NAMES
-        if os.path.exists(os.path.join(sf_dir, f"{name}.parquet"))
-    ]
-    total_bytes = sum(os.path.getsize(p) for p in sources)
-    newest_mtime = max(os.stat(p).st_mtime_ns for p in sources)
-    # _AMPLIFY_FORMAT invalidates cached amplified copies when the
-    # amplifier itself changes (r15: whitespace-class token split).
-    tag = (
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{total_bytes}"
-        f"_{newest_mtime}_{_AMPLIFY_FORMAT}"
-    )
+    """Amplified copy of ``sf_dir``, a staged copy under the scratch root
+    built once per variant (k, hot fraction, corpus mode) and source
+    contents.  Every source table's size and mtime and ``_AMPLIFY_FORMAT``
+    (bumped when the amplifier itself changes; r15: whitespace-class
+    token split) name the generation, so a regenerated testdata set or an
+    amplifier change builds a new copy and reaps the variant's old one."""
+    name = f"amplified_x{k}"
     if hot_fraction > 0.0:
-        tag += f"_hot{int(hot_fraction * 100)}"
+        name += f"_hot{int(hot_fraction * 100)}"
     if corpus:
-        tag += "_corpus"
-    _reap_stale_amplified(sf_dir, total_bytes, newest_mtime)
-    dst = os.path.join(tempfile.gettempdir(), f"sqe_amplified_{tag}_x{k}")
+        name += "_corpus"
+    tables = tuple(
+        t for t in TABLE_NAMES if os.path.exists(os.path.join(sf_dir, f"{t}.parquet"))
+    )
+    dst = staged_path(spark, sf_dir, tables, name, tag=_AMPLIFY_FORMAT)
     return amplify_dir(spark, sf_dir, k, dst, hot_fraction, corpus=corpus)
-
-
-def _reap_stale_amplified(sf_dir: str, total_bytes: int, newest_mtime: int) -> None:
-    """Remove cached amplified copies of ``sf_dir`` whose tag no longer
-    matches the current source identity + ``_AMPLIFY_FORMAT`` (ADVICE
-    r15: a format bump retagged the cache but left every old-format tree
-    on disk forever — multi-GB litter per bump / testdata regeneration).
-    Variants of the CURRENT identity (other k, hot-fraction, corpus) are
-    kept — they coexist legitimately.  Only this repo's own
-    ``sqe_amplified_<sf-basename>_`` entries are candidates; concurrent
-    processes running the same code share the same current tag and are
-    unaffected (two different code versions amplifying concurrently is
-    not a supported scenario — the loser rebuilds, which is correct)."""
-    import shutil
-
-    base = os.path.basename(os.path.normpath(sf_dir))
-    stale_prefix = f"sqe_amplified_{base}_"
-    # Trailing "_" so a stale identity that happens to be a string prefix
-    # of the live one (e.g. mtime 456 vs 4567) can't survive the check —
-    # every cached name continues "_x<k>" / "_hot.." / "_corpus" after
-    # the format tag.
-    live_prefix = f"{stale_prefix}{total_bytes}_{newest_mtime}_{_AMPLIFY_FORMAT}_"
-    tmp = tempfile.gettempdir()
-    for name in os.listdir(tmp):
-        if name.startswith(stale_prefix) and not name.startswith(live_prefix):
-            shutil.rmtree(os.path.join(tmp, name), ignore_errors=True)
 
 
 def main() -> int:

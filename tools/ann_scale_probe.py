@@ -3,8 +3,9 @@ PQ-rerank wall time as the vector corpus grows.
 
 Builds a k×-amplified embeddings table (vec_id-shifted copies — query
 vectors stay vec_id < NUM_QUERY_VECTORS, so the query set is fixed while
-the corpus grows) in a scratch sf_dir, then times the three catalog
-retrieval paths warm (min of 3 passes, same protocol as bench.py).
+the corpus grows) in a staged sf_dir under the scratch root, then times
+the three catalog retrieval paths warm (min of 3 passes, same protocol
+as bench.py).
 
 Usage: python tools/ann_scale_probe.py [k] [sf_dir]
 Prints one JSON line; append it to ANN_SCALE.json by hand or via the
@@ -16,7 +17,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -33,6 +33,10 @@ def main() -> int:
         q_sim_pq_rerank,
         q_sim_sq_rerank,
         q_sim_topk_bruteforce,
+    )
+    from simple_query_engine_spark.operators.storage import (
+        materialize_once,
+        staged_path,
     )
     from simple_query_engine_spark.session import get_spark
     from simple_query_engine_spark.sources.catalog import table
@@ -59,12 +63,12 @@ def main() -> int:
                 "label",
             )
         )
-    scratch = os.path.join(
-        tempfile.gettempdir(), f"sqe_ann_scale_{os.path.basename(sf_dir)}_x{k}"
+    scratch = staged_path(spark, sf_dir, ("embeddings",), f"ann_scale_x{k}")
+    os.makedirs(scratch, exist_ok=True)
+    materialize_once(
+        os.path.join(scratch, "embeddings.parquet"),
+        lambda tmp: amplified.repartition(32).write.parquet(tmp),
     )
-    emb_path = os.path.join(scratch, "embeddings.parquet")
-    if not os.path.exists(emb_path):
-        amplified.repartition(32).write.mode("overwrite").parquet(emb_path)
 
     def timed(fn) -> float:
         best = float("inf")
