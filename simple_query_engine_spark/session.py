@@ -4,12 +4,26 @@ The reference engine is single-threaded and in-memory (``src/main.rs:27-30``);
 here the equivalent "engine startup" is building a SparkSession whose config
 is chosen for large-cluster execution (AQE, broadcast thresholds, pushdown)
 while remaining correct on ``local[N]`` for tests.
+
+The reference starts a fresh process per session, and most of this engine's
+start is JVM class loading.  When :func:`get_spark` launches the JVM it
+starts it from a dynamic class-data archive (AppCDS) kept in the user cache
+dir, ``${XDG_CACHE_HOME:-~/.cache}/simple_query_engine_spark/``: the first
+launch on a host records the classes it loaded into the archive at exit,
+every later launch maps them (SCALING.md, "Cold start").
 """
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import shutil
+import subprocess
+from contextlib import contextmanager
+from typing import NamedTuple
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # Defaults chosen for the 100 TB design point, not the local test rig:
@@ -72,21 +86,200 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = SparkSession.builder.appName(app_name).master(master or f"local[{cpus}]")
     conf = dict(_DEFAULT_CONF)
-    # Local mode runs every executor thread inside the driver JVM, whose
-    # un-configured heap is 1 GiB — 32 threads' shuffle/broadcast blocks
-    # plus a long session's accumulated broadcasts OOM at that size (r17:
-    # the 269-entry plan audit died in a broadcast exchange).  Only
-    # effective when this call actually LAUNCHES the JVM (a fresh
-    # process); sessions handed to us by a harness keep their own
-    # setting, as does an explicit SPARK_GRAFT_DRIVER_MEM.
-    conf.setdefault(
-        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g")
-    )
+    launching = _launches_jvm()
+    if launching:
+        # Local mode runs every executor thread inside the driver JVM, whose
+        # un-configured heap is 1 GiB — 32 threads' shuffle/broadcast blocks
+        # plus a long session's accumulated broadcasts OOM at that size (r17:
+        # the 269-entry plan audit died in a broadcast exchange).  Sessions
+        # handed to us by a harness keep their own setting, as does an
+        # explicit SPARK_GRAFT_DRIVER_MEM.
+        conf["spark.driver.memory"] = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g")
     if extra_conf:
         conf.update(extra_conf)
+    archive = _class_archive(_archive_root(), os.getpid()) if launching else None
+    if archive is not None:
+        # Spark puts defaultJavaOptions before extraJavaOptions, so a
+        # caller's own JVM flags still apply.
+        own = conf.get("spark.driver.defaultJavaOptions")
+        conf["spark.driver.defaultJavaOptions"] = " ".join(filter(None, [own, archive.option]))
     for key, value in conf.items():
         builder = builder.config(key, value)
-    return builder.getOrCreate()
+    if archive is None:
+        return builder.getOrCreate()
+    with _env("SPARK_CONF_DIR", archive.conf_dir):
+        spark = builder.getOrCreate()
+    if archive.dump is not None:
+        atexit.register(_finish_dump, archive, os.getpid())
+    return spark
+
+
+def _launches_jvm() -> bool:
+    """True when building a session in this process starts a new JVM:
+    none is running yet and no harness handed us a gateway."""
+    return SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
+
+
+# -- Class-data archive ---------------------------------------------------------
+#
+# A stand-in for JDK 19's -XX:+AutoCreateSharedArchive, which JDK 17 lacks.
+# A launch that finds the archive maps it.  One that misses has its JVM
+# dump the classes it loaded into a per-process temp file as it exits, and
+# an exit handler renames that file to the archive's name only if the JVM
+# exited 0.  Nothing writes the archive's name in place: a truncated
+# archive there kills JDK 17 at start with SIGBUS, while a missing or
+# mismatched one only means a plain start.
+
+# A dumping JVM otherwise prints hundreds of [cds] lines to stdout.
+_CDS_QUIET = "-Xlog:cds=off -Xlog:cds+dynamic=off"
+_DUMP_WAIT_S = 180.0  # the dump takes ~10 s of wall time on a 4-core host
+
+
+class _Archive(NamedTuple):
+    """One launch's plan: the JVM option, and for a miss the temp file
+    the JVM dumps into."""
+
+    root: str
+    key: str
+    option: str
+    dump: str | None
+
+    @property
+    def path(self) -> str:
+        return os.path.join(self.root, f"{self.key}.jsa")
+
+    @property
+    def conf_dir(self) -> str:
+        return os.path.join(self.root, "conf")
+
+
+def _archive_root() -> str:
+    cache = os.environ.get("XDG_CACHE_HOME") or os.path.join(os.path.expanduser("~"), ".cache")
+    return os.path.join(cache, "simple_query_engine_spark")
+
+
+def _class_archive(root: str, pid: int) -> _Archive | None:
+    """The archive plan for a JVM that process ``pid`` launches now, or
+    None for a plain start.
+
+    The dump refuses a non-empty directory on the classpath, and Spark puts
+    its conf dir there.  A conf dir holding only ``*.template`` files (all
+    Spark ships) is swapped for an empty one, which changes no setting; a
+    conf dir with a real file means a plain start.
+    """
+    from pyspark.find_spark_home import _find_spark_home
+
+    if any(ch.isspace() or ch in "\"'" for ch in root):
+        return None  # Spark splits the option string on whitespace
+    try:
+        spark_home = _find_spark_home()
+        conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+        names = os.listdir(conf_dir) if os.path.isdir(conf_dir) else []
+        if not all(name.endswith(".template") for name in names):
+            return None
+        key = _archive_key(spark_home)
+        os.makedirs(os.path.join(root, "conf"), exist_ok=True)
+        if not os.access(root, os.W_OK):
+            return None
+    except OSError:
+        return None
+    _reap(root, key)
+    path = os.path.join(root, f"{key}.jsa")
+    if os.path.isfile(path):
+        return _Archive(root, key, f"-XX:SharedArchiveFile={path} {_CDS_QUIET}", None)
+    dump = f"{path}.tmp.{pid}"
+    return _Archive(root, key, f"-XX:ArchiveClassesAtExit={dump} {_CDS_QUIET}", dump)
+
+
+def _archive_key(spark_home: str) -> str:
+    """Digest of what the archive's classes come from: the ``java`` binary
+    Spark's launcher runs (realpath and stat) and the Spark jar listing."""
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+    if java is None:
+        raise OSError("no java on PATH")
+    java = os.path.realpath(java)
+    jars = os.path.join(spark_home, "jars")
+    files = [(java, os.stat(java))]
+    files += [(name, os.stat(os.path.join(jars, name))) for name in sorted(os.listdir(jars))]
+    listing = "\n".join(f"{name} {st.st_size} {st.st_mtime_ns}" for name, st in files)
+    return hashlib.sha256(listing.encode()).hexdigest()[:16]
+
+
+def _reap(root: str, key: str) -> None:
+    """Delete other keys' archives, and temp files whose process is gone."""
+    try:
+        names = os.listdir(root)
+    except OSError:  # the cache dir was deleted meanwhile
+        return
+    for name in names:
+        if ".jsa.tmp." in name:
+            pid = name.rsplit(".", 1)[1]
+            if pid.isdigit() and _alive(int(pid)):
+                continue
+        elif not name.endswith(".jsa") or name == f"{key}.jsa":
+            continue
+        try:
+            os.unlink(os.path.join(root, name))
+        except OSError:
+            pass
+
+
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # alive, another user's
+        pass
+    return True
+
+
+def _finish_dump(archive: _Archive, pid: int) -> None:
+    """Exit handler of a launch that missed: stop the session, then end
+    the JVM, which writes the dump as it exits."""
+    if os.getpid() != pid:  # a forked child; the JVM belongs to its parent
+        return
+    try:
+        stop_spark()
+    except Exception:  # the JVM still exits on EOF, through its shutdown hooks
+        pass
+    proc = getattr(SparkContext._gateway, "proc", None)
+    if proc is not None:
+        _promote(archive, proc)
+
+
+def _promote(archive: _Archive, proc: subprocess.Popen) -> None:
+    """Close the gateway's stdin (it exits on EOF) and wait for it; rename
+    the dump to the archive's name only if it exited 0 in time, otherwise
+    delete it."""
+    try:
+        proc.stdin.close()
+        code = proc.wait(timeout=_DUMP_WAIT_S)
+    except (OSError, ValueError, subprocess.TimeoutExpired):
+        code = None
+    try:
+        if code == 0 and os.path.getsize(archive.dump) > 0:
+            os.replace(archive.dump, archive.path)
+        else:
+            os.unlink(archive.dump)
+    except OSError:
+        pass
+    _reap(archive.root, archive.key)
+
+
+@contextmanager
+def _env(name: str, value: str):
+    """Set one environment variable for the duration of the block."""
+    old = os.environ.get(name)
+    os.environ[name] = value
+    try:
+        yield
+    finally:
+        if old is None:
+            os.environ.pop(name, None)
+        else:
+            os.environ[name] = old
 
 
 def configure(spark: SparkSession) -> SparkSession:

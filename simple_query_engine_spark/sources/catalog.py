@@ -9,11 +9,13 @@ directory becomes a named temp view, queryable via DataFrame ops or
 
 from __future__ import annotations
 
+import json
 import os
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # The driver's synthetic star schema (TESTDATA.md).
 TABLE_NAMES: tuple[str, ...] = (
@@ -30,12 +32,11 @@ TABLE_NAMES: tuple[str, ...] = (
 )
 
 
-# Per-session memo of table HANDLES (lazy plans + the pyarrow nanos-schema
-# probe), keyed by (path, size, mtime_ns) so an in-place regeneration of
+# Per-session memo of table HANDLES (lazy plans built from the footer
+# schema), keyed by (path, size, mtime_ns) so an in-place regeneration of
 # testdata invalidates.  This caches METADATA ONLY — no rows: every query
 # still computes from the parquet files; what's skipped is re-listing the
-# footer and re-probing the schema on every `table()` call (~80 ms/table,
-# ~0.9 s per `load_tables`, paid by every query invocation before this).
+# file and re-reading its footer on every `table()` call.
 # WeakKeyDictionary: a stopped/replaced session's handles die with it.
 _HANDLES: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
@@ -107,7 +108,8 @@ def _read_generation(spark: SparkSession, path: str) -> tuple[object, DataFrame]
 
 
 def _read_uncached(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet read tolerant of TIMESTAMP(NANOS) columns.
+    """Parquet read tolerant of TIMESTAMP(NANOS) columns, with its schema
+    taken from a footer (:func:`footer_schema`), so it launches no job.
 
     Spark rejects nanosecond parquet timestamps outright
     (PARQUET_TYPE_ILLEGAL); with ``nanosAsLong`` — an engine-wide session
@@ -115,28 +117,76 @@ def _read_uncached(spark: SparkSession, path: str) -> DataFrame:
     LongType, which we convert back to TimestampType (microsecond precision —
     the same truncation DuckDB applies, keeping oracle comparisons exact).
     """
-    df = spark.read.parquet(path)
-    nanos_cols = _nanos_timestamp_columns(path)
-    dtypes = dict(df.dtypes)
+    schema, nanos_cols = footer_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
     for col in nanos_cols:
-        # Only convert if Spark actually surfaced the column as epoch-nanos
-        # longs — pyarrow also reports legacy INT96 timestamps as
-        # timestamp[ns], but Spark reads those as proper timestamps.
-        if dtypes.get(col) == "bigint":
-            df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
+        df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
     return df
 
 
-def _nanos_timestamp_columns(path: str) -> list[str]:
-    try:
-        import pyarrow.dataset as ds
-        import pyarrow as pa
+def footer_schema(spark: SparkSession, path: str) -> tuple[StructType, list[str]]:
+    """Spark's schema for the Parquet data at ``path`` plus its
+    TIMESTAMP(NANOS) column names, built on the driver from one footer.
 
-        schema = ds.dataset(path, format="parquet").schema
-        return [
-            field.name
-            for field in schema
-            if pa.types.is_timestamp(field.type) and field.type.unit == "ns"
-        ]
-    except Exception:
-        return []
+    ``spark.read.parquet(path)`` infers the same schema, but in a Spark job.
+    This reads the footer of the file that inference with ``mergeSchema``
+    off picks (``ParquetUtils.inferSchema``) and converts it with Spark's
+    own converter under the session's conf (``nanosAsLong``, NTZ
+    inference).  Hive-style partition columns live in directory names, not
+    in a footer: a batch read given this schema still appends them.  A path
+    that is not local, or holds no data file, is left to Spark's inference.
+    """
+    file = _schema_file(path)
+    if file is None:
+        return spark.read.parquet(path).schema, []
+    jvm = spark._jvm
+    state = spark._jsparkSession.sessionState()
+    hadoop_path = jvm.org.apache.hadoop.fs.Path(file)
+    parquet = jvm.org.apache.parquet.hadoop
+    meta = parquet.ParquetFileReader.readFooter(state.newHadoopConf(), hadoop_path)
+    converters = jvm.org.apache.spark.sql.execution.datasources.parquet
+    spark_schema = converters.ParquetFileFormat.readSchemaFromFooter(
+        parquet.Footer(hadoop_path, meta),
+        converters.ParquetToSparkSchemaConverter(state.conf()),
+    )
+    # A file source reads every column as nullable.
+    schema = StructType.fromJson(json.loads(spark_schema.asNullable().json()))
+    nanos = [
+        field.getName()
+        for field in meta.getFileMetaData().getSchema().getFields()
+        if field.isPrimitive()
+        and str(field.getLogicalTypeAnnotation()).startswith("TIMESTAMP(NANOS")
+    ]
+    return schema, nanos
+
+
+_SUMMARY_FILES = ("_common_metadata", "_metadata")
+
+
+def _schema_file(path: str) -> str | None:
+    """The file Spark's schema inference reads for ``path``: a summary file
+    if there is one, else the first data file in path order, skipping the
+    names Spark's file listing hides."""
+    if os.path.isfile(path):
+        return path
+    leaves = []
+    for dirpath, dirnames, filenames in os.walk(path):
+        dirnames[:] = [d for d in dirnames if not _hidden(d)]
+        leaves += [os.path.join(dirpath, f) for f in filenames if not _hidden(f)]
+
+    def rank(leaf: str) -> tuple[int, str]:
+        name = os.path.basename(leaf)
+        kind = _SUMMARY_FILES.index(name) if name in _SUMMARY_FILES else len(_SUMMARY_FILES)
+        return kind, leaf
+
+    return min(leaves, key=rank, default=None)
+
+
+def _hidden(name: str) -> bool:
+    """Spark's ``InMemoryFileIndex.shouldFilterOutPathName``."""
+    excluded = (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+    return excluded and not name.startswith(_SUMMARY_FILES)

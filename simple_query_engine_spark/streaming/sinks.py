@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from simple_query_engine_spark.sources.catalog import footer_schema
 from simple_query_engine_spark.streaming.explain_capture import (
     record_batch_explain,
     record_explain,
@@ -102,7 +103,7 @@ def run_resumable_file_sink(
     False (callers kill it mid-flight in tests); otherwise blocks until the
     availableNow run drains and returns None.
     """
-    schema = spark.read.parquet(input_dir).schema
+    schema, _ = footer_schema(spark, input_dir)
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

@@ -28,6 +28,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from simple_query_engine_spark.sources.catalog import footer_schema
 from simple_query_engine_spark.streaming.explain_capture import run_to_memory_sink
 
 TUMBLE = "1 hour"
@@ -35,10 +36,6 @@ SLIDE_SIZE = "1 hour"
 SLIDE_STEP = "30 minutes"
 SESSION_GAP = "10 minutes"
 WATERMARK = "1 hour"
-
-
-def _epoch(col: str) -> F.Column:
-    return F.col(col).cast("long")
 
 
 def read_event_stream(
@@ -51,11 +48,12 @@ def read_event_stream(
     Centralizes the quirks every streaming entry point needs: ts
     reconstruction from nanos-as-long parquet (Spark rejects
     TIMESTAMP(NANOS); the ``nanosAsLong`` conf is an engine-wide session
-    default, ``session._DEFAULT_CONF``), schema peek via a batch read, and
-    the single-file case (Spark's file stream source requires a directory,
-    so a file path becomes parent-dir + pathGlobFilter).
+    default, ``session._DEFAULT_CONF``), a job-free schema peek at one
+    footer (``catalog.footer_schema``), and the single-file case (Spark's
+    file stream source requires a directory, so a file path becomes
+    parent-dir + pathGlobFilter).
     """
-    schema = spark.read.parquet(events_path).schema
+    schema, _ = footer_schema(spark, events_path)
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

@@ -3,6 +3,8 @@ parquet writes with pruning on re-read, JSON."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -123,3 +125,71 @@ def test_load_tables_views_follow_in_place_regeneration(spark, tmp_path, monkeyp
 
     assert generation(2) == [0, 1]
     assert generation(5) == [0, 1, 2, 3, 4]
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_footer_schema_equals_spark_inference(spark, sf_dir, sf):
+    """Every catalog table's footer schema is the one Spark's inference
+    job finds, nullability included."""
+    from simple_query_engine_spark.sources import catalog
+
+    root = os.path.join(os.path.dirname(os.path.abspath(sf_dir)), sf)
+    if not os.path.isdir(root):
+        pytest.skip(f"no {sf} testdata beside {sf_dir}")
+    for name in catalog.TABLE_NAMES:
+        path = os.path.join(root, f"{name}.parquet")
+        schema, nanos = catalog.footer_schema(spark, path)
+        assert schema == spark.read.parquet(path).schema, name
+        assert catalog.table(spark, root, name).schema == spark.read.parquet(path).schema
+        assert nanos == []
+
+
+def test_footer_schema_finds_nanos_columns(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from simple_query_engine_spark.sources import catalog
+
+    ts = pa.array([1_700_000_000_123_456_789, None], type=pa.timestamp("ns"))
+    path = str(tmp_path / "nanos.parquet")
+    pq.write_table(pa.table({"ts": ts, "k": [1, 2]}), path, version="2.6")
+    schema, nanos = catalog.footer_schema(spark, path)
+    assert nanos == ["ts"]
+    assert schema == spark.read.parquet(path).schema
+    assert dict(catalog.table(spark, str(tmp_path), "nanos").dtypes) == {
+        "ts": "timestamp",
+        "k": "bigint",
+    }
+
+
+def test_schema_file_is_the_one_spark_inference_reads(tmp_path):
+    from simple_query_engine_spark.sources.catalog import _schema_file
+
+    for name in ("_SUCCESS", ".part-0.parquet.crc", "part-1.parquet", "part-0.parquet"):
+        (tmp_path / name).write_bytes(b"")
+    assert _schema_file(str(tmp_path)) == str(tmp_path / "part-0.parquet")
+    (tmp_path / "_metadata").write_bytes(b"")
+    assert _schema_file(str(tmp_path)) == str(tmp_path / "_metadata")
+    (tmp_path / "_common_metadata").write_bytes(b"")
+    assert _schema_file(str(tmp_path)) == str(tmp_path / "_common_metadata")
+    assert _schema_file(str(tmp_path / "part-1.parquet")) == str(tmp_path / "part-1.parquet")
+    assert _schema_file(str(tmp_path / "missing")) is None
+
+
+def test_load_tables_launches_no_job(spark, sf_dir, tmp_path):
+    import shutil
+
+    from simple_query_engine_spark.sources import catalog
+
+    # A fresh copy, so no handle is memoized from an earlier test.
+    for name in catalog.TABLE_NAMES:
+        src = os.path.join(sf_dir, f"{name}.parquet")
+        shutil.copy(src, tmp_path / f"{name}.parquet")
+    sc = spark.sparkContext
+    sc.setJobGroup("load_tables_probe", "load_tables")
+    try:
+        tables = catalog.load_tables(spark, str(tmp_path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(tables) == len(catalog.TABLE_NAMES)
+    assert list(sc.statusTracker().getJobIdsForGroup("load_tables_probe")) == []
