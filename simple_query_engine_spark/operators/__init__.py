@@ -14,127 +14,21 @@ from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-# The driver's per-round correctness gate records verdicts for the FIRST 50
-# entries of ``queries()`` in registration order (verified against
-# CORRECTNESS_r01/r02: both files hold exactly entries 1-50).  The catalog is
-# larger than the window, so we rotate: ``_ROTATION_FRONT`` pins the queries
-# that have not yet received a driver verdict to the front of the dict;
-# everything else (already green in CORRECTNESS_r01/r02) follows in module
-# order.  ROUND3_NOTES.md tracks which round certified which query.
-#
-# Round-18 front window (exactly 50 = the driver's window size), per
-# VERDICT r17 item 9: the two names queued at r17 close
-# (stream_components_incremental — new at r17, never driver-certified —
-# and join_salted_skew, whose plan was re-pinned to SMJ) lead the front,
-# followed by the age queue — the 21 remaining r12-era certs (they would
-# cross front_audit's MAX_CERT_AGE = 6 bar at r19) and the 27 oldest
-# r13-era names, in registration order.  2 + 21 + 27 = exactly 50; after
-# a green r18 the oldest surviving cert is r13 (20 names, scheduled for
-# the r19 front).  ROUND3_NOTES.md started the ledger; front_audit.py
-# prints the live cert-age table.
-_ROTATION_FRONT = [
-    # --- 1. the r17 close queue (VERDICT r17 item 9): the streaming
-    #     cluster-maintenance door (new at r17, never driver-certified)
-    #     and the salted join whose plan was re-pinned to SMJ at r17 ---
-    "stream_components_incremental",
-    "join_salted_skew",
-    # --- 2. age queue: all 21 remaining r12-era certs, registration
-    #     order (they would cross front_audit's MAX_CERT_AGE = 6 bar
-    #     at r19) ---
-    "sim_power_iteration",
-    "sim_range_search",
-    "sim_diverse_topk",
-    "sim_ivf_delete_topk",
-    "sim_ivfadc_topk",
-    "sim_hybrid_retrieval",
-    "sim_multiprobe_lsh",
-    "source_csv_dialect",
-    "stream_clip_ingest",
-    "stream_bm25_postings",
-    "stream_mixture_sample",
-    "multimodal_clip_pairs",
-    "pipeline_dsir_weights",
-    "text_decontamination_fuzzy",
-    "pipeline_mixture_sample",
-    "sketch_kmv_union",
-    "stats_source_overlap",
-    "stats_k_anonymity",
-    "stats_token_gini",
-    "events_ema_features",
-    "events_forecast_holt",
-    # --- 3. age queue: the 27 oldest r13-era certs, registration order
-    #     (the remaining 20 r13 names take the r19 front) ---
-    "case_in_between",
-    "math_funcs",
-    "json_funcs",
-    "join_null_safe",
-    "stats_column_profile",
-    "events_sessionize_gap",
-    "events_rolling_wau",
-    "events_top_paths",
-    "events_markov_transitions",
-    "events_attribution_last_touch",
-    "dedup_cluster_keeper_quality",
-    "sim_ivf_rebuild",
-    "sim_neardup_pairs_baseline",
-    "sim_neardup_lsh",
-    "sim_neardup_planted",
-    "sim_ann_lsh",
-    "sim_ivf_topk",
-    "sim_label_centroids",
-    "events_partition_prune",
-    "join_bucketed_revenue",
-    "source_json_roundtrip",
-    "source_csv_roundtrip",
-    "source_python_datasource",
-    "stream_python_datasource",
-    "sink_python_datasource",
-    "stream_tumbling_counts",
-    "stream_decontamination",
-]
-
-# Entries added or function-changed THIS round that could not displace the
-# front (the front is full).  They sit immediately after the front in
-# registration order and lead the NEXT round's front.  tools/front_audit.py
-# treats queue membership as "pending" for the no-name-falls-through
-# invariant.  At round-17 open the queue is empty (the r16 queue moved
-# into the front); entries added or semantically changed during r17 are
-# appended here as the round progresses.
-_ROTATION_QUEUE: list[str] = [
-    # r18 is an optimization round: no new entries; the r17 queue
-    # (stream_components_incremental, join_salted_skew) moved into the
-    # front above.  Entries whose SEMANTICS change during r18 would be
-    # appended here — the r18 fast-path/materialization work is
-    # value-identical by construction (equality- and oracle-pinned), so
-    # nothing queues.
-]
-
-
-
-def _rotated(merged: dict) -> dict:
-    ordered = {}
-    for name in _ROTATION_FRONT + _ROTATION_QUEUE:
-        if name in merged:  # oracle dicts may lack rows-only entries
-            ordered[name] = merged.pop(name)
-    ordered.update(merged)
-    return ordered
-
 
 def all_queries() -> dict[str, QueryFn]:
+    """Every module's ``QUERIES``, merged in ``_modules()`` order."""
     merged: dict[str, QueryFn] = {}
     for module in _modules():
         merged.update(module.QUERIES)
-    missing = [n for n in _ROTATION_FRONT + _ROTATION_QUEUE if n not in merged]
-    if missing:  # typo guard: every front entry must exist in the catalog
-        raise KeyError(f"_ROTATION_FRONT names not in catalog: {missing}")
-    return _rotated(merged)
+    return merged
 
 
 def all_oracles() -> dict[str, str]:
+    """Every module's ``ORACLES``, merged in ``_modules()`` order."""
     merged: dict[str, str] = {}
     for module in _modules():
         merged.update(module.ORACLES)
-    return _rotated(merged)
+    return merged
 
 
 def _modules():

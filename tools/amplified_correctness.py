@@ -150,6 +150,11 @@ CORPUS_GATE = [
     # quality-scored keeper pick must stay hash-exact as the graph grows.
     "dedup_clusters_lsh",
     "dedup_cluster_keeper_quality",
+    # The graph solvers over the same x k near-dup graph: driver-side
+    # below the edge cap, per component above it.
+    "graph_pagerank_neardup",
+    "graph_kcore_neardup",
+    "graph_label_spread",
 ]
 
 
@@ -174,12 +179,7 @@ def main() -> int:
     from simple_query_engine_spark.session import get_spark
     from tools.amplify_testdata import ensure_amplified
 
-    spark = get_spark(
-        app_name="amplified-correctness",
-        extra_conf={
-            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
-        },
-    )
+    spark = get_spark(app_name="amplified-correctness")
     amp_dir = ensure_amplified(spark, sf_dir, k, corpus=corpus)
 
     con = duckdb.connect()

@@ -15,8 +15,8 @@ warehouse, and replicating identical texts/vectors would manufacture k²
 near-duplicate pairs that no real corpus has.
 
 Output layout matches the driver's (<name>.parquet per table), so every
-consumer — bench.py, the catalog, the REPL — can point at the amplified
-dir unchanged.
+consumer — tools/bench_one.py, the catalog, the REPL — can point at the
+amplified dir unchanged.
 """
 
 from __future__ import annotations

@@ -4,8 +4,7 @@ PQ-rerank wall time as the vector corpus grows.
 Builds a k×-amplified embeddings table (vec_id-shifted copies — query
 vectors stay vec_id < NUM_QUERY_VECTORS, so the query set is fixed while
 the corpus grows) in a staged sf_dir under the scratch root, then times
-the three catalog retrieval paths warm (min of 3 passes, same protocol
-as bench.py).
+the three catalog retrieval paths warm (min of 3 passes).
 
 Usage: python tools/ann_scale_probe.py [k] [sf_dir]
 Prints one JSON line; append it to ANN_SCALE.json by hand or via the
@@ -41,12 +40,7 @@ def main() -> int:
     from simple_query_engine_spark.session import get_spark
     from simple_query_engine_spark.sources.catalog import table
 
-    # Bench-sized driver heap: at 128× the rerank's broadcast build
-    # overflows the 1 GiB local-mode default (the rig has 128 GiB).
-    spark = get_spark(
-        app_name="ann-scale-probe",
-        extra_conf={"spark.driver.memory": "16g"},
-    )
+    spark = get_spark(app_name="ann-scale-probe")
     base = table(spark, sf_dir, "embeddings")
     n_base = base.count()
 

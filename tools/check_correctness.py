@@ -212,17 +212,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from simple_query_engine_spark.session import get_spark
 
-    # A full-catalog pass keeps ~180 queries' session caches alive in ONE
-    # long-lived driver; Spark's default 1g heap occasionally OOMs late in
-    # the sf0.1 leg (observed: JVM death ~140 queries in, GC-timing
-    # dependent — the identical catalog passed the same sweep hours
-    # earlier).  Same sizing convention as bench.py.
-    spark = get_spark(
-        app_name="correctness-check",
-        extra_conf={
-            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
-        },
-    )
+    spark = get_spark(app_name="correctness-check")
     con = duckdb.connect()
     for name in TABLE_NAMES:
         path = os.path.join(sf_dir, f"{name}.parquet")

@@ -34,12 +34,7 @@ def main() -> int:
 
     import __spark_entry__ as entrymod
 
-    spark = get_spark(
-        app_name="sqe-explain-dump",
-        extra_conf={
-            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g")
-        },
-    )
+    spark = get_spark(app_name="sqe-explain-dump")
     queries = entrymod.queries()
     unknown = [n for n in names if n not in queries]
     if unknown:

@@ -218,7 +218,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
     import __spark_entry__ as entrymod
-    from bench import HEADLINE
+    from tools.bench_one import HEADLINE
     from simple_query_engine_spark.session import get_spark
 
     spark = get_spark(app_name="plan-audit")

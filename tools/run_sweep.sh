@@ -3,24 +3,22 @@
 # determinism + the 32x fact and 8x corpus amplified gates + the REPL
 # end-to-end leg — the reference README's example queries piped through
 # the interactive binary against the reference's own example CSV, diffed
-# against the pinned expected session.  Written to RUNLOG_r<round>.txt at
-# the repo root; run detached (nohup) because the whole sequence exceeds
-# interactive timeouts.
+# against the pinned expected session.  Prints the log to stdout; the
+# whole sequence exceeds interactive timeouts, so run it detached and
+# redirect it to a file of your choice.
 #
-# Usage: tools/run_sweep.sh <round> <testdata_dir> [reference_csv]
+# Usage: tools/run_sweep.sh <testdata_dir> [reference_csv] > sweep.log
 #   <testdata_dir> holds sf0.001/, sf0.01/ and sf0.1/; the REPL leg is
 #   skipped when [reference_csv] is absent.
 set -u
-ROUND="${1:?usage: tools/run_sweep.sh <round> <testdata_dir> [reference_csv]}"
-TESTDATA="${2:?usage: tools/run_sweep.sh <round> <testdata_dir> [reference_csv]}"
-REF_CSV="${3:-}"
+TESTDATA="${1:?usage: tools/run_sweep.sh <testdata_dir> [reference_csv]}"
+REF_CSV="${2:-}"
 cd "$(dirname "$0")/.."
 NOISE="WARN|INFO|Using|Setting|To adjust|^\[Stage"
 {
-  echo "=== RUNLOG r$ROUND — full catalog sweep at HEAD $(git rev-parse --short HEAD) ($(date -u +%Y-%m-%dT%H:%MZ)) ==="
-  # Keep EVERY per-query FAIL line (the runlog is the permanent failure
-  # record — a tail cap would silently drop named failures past the cap)
-  # plus the one aggregate summary line per leg.
+  echo "=== full catalog sweep at HEAD $(git rev-parse --short HEAD) ($(date -u +%Y-%m-%dT%H:%MZ)) ==="
+  # Keep EVERY per-query FAIL line plus the one aggregate summary line
+  # per leg: a tail cap would silently drop named failures past the cap.
   for sf in sf0.001 sf0.01 sf0.1; do
     echo "--- $sf ---"
     python tools/check_correctness.py "$TESTDATA/$sf" 2>&1 \
@@ -57,4 +55,4 @@ NOISE="WARN|INFO|Using|Setting|To adjust|^\[Stage"
     echo "REPL leg: reference CSV not given or absent — skipped"
   fi
   echo "=== sweep done ($(date -u +%Y-%m-%dT%H:%MZ)) ==="
-} > "RUNLOG_r$ROUND.txt" 2>&1
+} 2>&1

@@ -46,9 +46,7 @@ def main() -> int:
     from simple_query_engine_spark.sources.catalog import table
     from tools.amplify_testdata import ensure_amplified
 
-    spark = get_spark(
-        app_name="skew-stress", extra_conf={"spark.driver.memory": "16g"}
-    )
+    spark = get_spark(app_name="skew-stress")
     if amplify > 1:
         sf_dir = ensure_amplified(spark, sf_dir, amplify)
 
