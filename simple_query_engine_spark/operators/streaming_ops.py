@@ -15,6 +15,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from simple_query_engine_spark.session import start_stream
 from simple_query_engine_spark.sources.catalog import table
 from simple_query_engine_spark.streaming.explain_capture import run_to_memory_sink
 from simple_query_engine_spark.streaming.stateful import run_stateful_user_profiles
@@ -476,13 +477,13 @@ def run_ivf_ingest(
     )
     ManagedTable.create(spark, table_path, base_members)
     stream = read_event_stream(spark, stream_path, max_files_per_trigger)
-    query = (
+    query = start_stream(
+        spark,
         stream.writeStream.foreachBatch(
             lambda df, bid: ingest_ivf_batch(spark, table_path, cent, df, bid)
         )
         .option("checkpointLocation", os.path.join(run_root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
     query.awaitTermination()
     record_explain(query, "ivf_ingest")
@@ -634,13 +635,13 @@ def run_components_ingest(
         stats_columns=["doc_id"],
     )
     stream = read_event_stream(spark, stream_path, max_files_per_trigger)
-    query = (
+    query = start_stream(
+        spark,
         stream.writeStream.foreachBatch(
             lambda df, bid: ingest_components_batch(spark, table_path, sf_dir, df, bid)
         )
         .option("checkpointLocation", os.path.join(run_root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
     query.awaitTermination()
     record_explain(query, "cc_ingest")

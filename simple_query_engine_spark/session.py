@@ -20,6 +20,7 @@ import hashlib
 import os
 import shutil
 import subprocess
+import threading
 from contextlib import contextmanager
 from typing import NamedTuple
 
@@ -69,6 +70,10 @@ _DEFAULT_CONF: dict[str, str] = {
     "spark.sql.ansi.enabled": "false",
     "spark.sql.shuffle.partitions": "32",
     "spark.ui.enabled": "false",
+    # A session launched as a pyspark shell (PYSPARK_SUBMIT_ARGS=...
+    # pyspark-shell) otherwise draws carriage-return [Stage ...] bars on
+    # stderr, between the lines of every tool's log.
+    "spark.ui.showConsoleProgress": "false",
 }
 
 
@@ -296,6 +301,34 @@ def configure(spark: SparkSession) -> SparkSession:
             except Exception:  # conf not runtime-settable on this build
                 pass
     return spark
+
+
+# Serializes start_stream's set/restore of the shared session's conf.
+_START_LOCK = threading.Lock()
+
+
+def start_stream(spark: SparkSession, writer):
+    """Start ``writer`` (a ``DataStreamWriter`` over a DataFrame of
+    ``spark``) with one state partition per core; return the query.
+
+    Structured Streaming has no AQE, so ``spark.sql.shuffle.partitions``
+    fixes a stateful query's state-store task count, and the session
+    default (32, sized for AQE to coalesce) would pay 32 tasks per
+    micro-batch for any state size.  ``start()`` clones the session
+    (``StreamExecution.sparkSessionForStream``), so the value set here
+    for just that call is the query's own: the first batch records it
+    in the checkpoint, and a query resumed from a checkpoint keeps the
+    count recorded there.  The shared session is restored as soon as
+    ``start()`` returns or raises.
+    """
+    key = "spark.sql.shuffle.partitions"
+    with _START_LOCK:
+        previous = spark.conf.get(key)
+        spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+        try:
+            return writer.start()
+        finally:
+            spark.conf.set(key, previous)
 
 
 def stop_spark() -> None:

@@ -25,6 +25,8 @@ from __future__ import annotations
 import shutil
 import uuid
 
+from simple_query_engine_spark.session import start_stream
+
 # label -> the last captured micro-batch physical plan (text).  One entry
 # may record several labels (e.g. a restart-resume entry runs two queries).
 LAST_EXPLAINS: dict[str, str] = {}
@@ -88,13 +90,13 @@ def run_to_memory_sink(df, prefix: str, label: str, output_mode: str = "complete
     spark = df.sparkSession
     sink_name = f"{prefix}_{uuid.uuid4().hex[:8]}"
     checkpoint = scratch_dir(spark, f"ckpt_{prefix}_")
-    query = (
+    query = start_stream(
+        spark,
         df.writeStream.format("memory")
         .queryName(sink_name)
         .outputMode(output_mode)
         .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
     query.awaitTermination()
     record_explain(query, label)

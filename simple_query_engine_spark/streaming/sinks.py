@@ -12,9 +12,12 @@ windows.
 
 from __future__ import annotations
 
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from simple_query_engine_spark.session import start_stream
 from simple_query_engine_spark.sources.catalog import footer_schema
 from simple_query_engine_spark.streaming.explain_capture import (
     record_batch_explain,
@@ -41,41 +44,33 @@ def run_streaming_to_parquet(
     from simple_query_engine_spark.operators.storage import scratch_dir
     from simple_query_engine_spark.streaming.windows import read_event_stream
 
-    # Scope the overwrite-mode change to this query: leaking
-    # partitionOverwriteMode=dynamic would silently change every later
-    # partitioned mode='overwrite' write in the session from full-table to
-    # partial overwrite.
-    previous_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        stream = read_event_stream(spark, events_path, max_files_per_trigger)
-        windowed = tumbling_window_counts(stream.withWatermark("ts", WATERMARK))
+    stream = read_event_stream(spark, events_path, max_files_per_trigger)
+    windowed = tumbling_window_counts(stream.withWatermark("ts", WATERMARK))
 
-        def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-            (
-                batch_df.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("window_start")
-                .parquet(output_path)
-            )
-
-        checkpoint = scratch_dir(spark, "ckpt_fb_")
-        query = (
-            windowed.writeStream.foreachBatch(upsert_batch)
-            .outputMode("complete")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+    def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # A per-write option, read before the session conf: the session's
+        # other partitioned overwrites stay full-table.
+        (
+            batch_df.withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("window_start")
+            .parquet(output_path)
         )
-        query.awaitTermination()
-        record_explain(query, "windowed_upsert")
-        # Per-run throwaway checkpoint (a fresh scratch dir, never handed out) —
-        # reap like run_to_memory_sink does.
-        import shutil
 
-        shutil.rmtree(checkpoint, ignore_errors=True)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", previous_mode)
+    checkpoint = scratch_dir(spark, "ckpt_fb_")
+    query = start_stream(
+        spark,
+        windowed.writeStream.foreachBatch(upsert_batch)
+        .outputMode("complete")
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True),
+    )
+    query.awaitTermination()
+    record_explain(query, "windowed_upsert")
+    # Per-run throwaway checkpoint (a fresh scratch dir, never handed out) —
+    # reap like run_to_memory_sink does.
+    shutil.rmtree(checkpoint, ignore_errors=True)
     return spark.read.parquet(output_path)
 
 
@@ -110,13 +105,13 @@ def run_resumable_file_sink(
     stream = reader.parquet(input_dir)
     if select_cols:
         stream = stream.select(*select_cols)
-    query = (
+    query = start_stream(
+        spark,
         stream.writeStream.format("parquet")
         .option("path", output_path)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
     if not await_termination:
         return query
@@ -211,13 +206,13 @@ def run_streaming_upsert_managed(
     from simple_query_engine_spark.streaming.windows import read_event_stream
 
     stream = read_event_stream(spark, events_dir, max_files_per_trigger)
-    query = (
+    query = start_stream(
+        spark,
         stream.writeStream.foreachBatch(
             lambda df, bid: upsert_users_batch(spark, table_path, df, bid)
         )
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
     query.awaitTermination()
     record_explain(query, "managed_merge_upsert")

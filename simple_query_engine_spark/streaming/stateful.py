@@ -21,6 +21,7 @@ exhibit.)
 
 from __future__ import annotations
 
+import shutil
 import uuid
 from collections.abc import Iterable
 
@@ -31,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from simple_query_engine_spark.session import start_stream
 from simple_query_engine_spark.streaming.explain_capture import (
     record_explain,
     run_to_memory_sink,
@@ -236,53 +238,40 @@ def run_ttl_session_counts(
             "output_dir (parquet sink) for restartable runs"
         )
 
-    # Stateful streaming gets no AQE coalescing: shuffle.partitions fixes
-    # the state-store task count for the query's LIFETIME (it is baked
-    # into the checkpoint) — size it to the workload up front, like
-    # run_stream_stream_join does.
-    previous_partitions = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        stream = read_event_stream(spark, events_path, max_files_per_trigger)
-        events = (
-            stream.withWatermark("ts", WATERMARK)
-            .select("user_id", "ts", F.col("ts").cast("long").alias("epoch"))
-        )
-        # APPEND semantics: a session row is emitted exactly once, when it
-        # closes — so the op composes with append-only sinks, and a
-        # parquet sink + checkpoint supports RESTART RECOVERY (memory
-        # sinks do not), which the restart test exercises.
-        sessions = events.groupBy("user_id").applyInPandasWithState(
-            _update_ttl_sessions,
-            outputStructType=SESSION_OUTPUT_SCHEMA,
-            stateStructType=SESSION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-        sink_name = f"ttlsess_{uuid.uuid4().hex[:8]}"
-        checkpoint = checkpoint_dir or scratch_dir(spark, "ckpt_ttlsess_")
-        if output_dir is not None:
-            writer = sessions.writeStream.format("parquet").option(
-                "path", output_dir
-            )
-        else:
-            writer = sessions.writeStream.format("memory").queryName(sink_name)
-        query = (
-            writer.outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        record_explain(query, "ttl_sessions")
-        if checkpoint_dir is None:
-            # Throwaway per-run checkpoint (nothing can resume it — the
-            # location was never handed out); reap like run_to_memory_sink.
-            import shutil
-
-            shutil.rmtree(checkpoint, ignore_errors=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", previous_partitions)
+    stream = read_event_stream(spark, events_path, max_files_per_trigger)
+    events = (
+        stream.withWatermark("ts", WATERMARK)
+        .select("user_id", "ts", F.col("ts").cast("long").alias("epoch"))
+    )
+    # APPEND semantics: a session row is emitted exactly once, when it
+    # closes — so the op composes with append-only sinks, and a
+    # parquet sink + checkpoint supports RESTART RECOVERY (memory
+    # sinks do not), which the restart test exercises.
+    sessions = events.groupBy("user_id").applyInPandasWithState(
+        _update_ttl_sessions,
+        outputStructType=SESSION_OUTPUT_SCHEMA,
+        stateStructType=SESSION_STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
+    sink_name = f"ttlsess_{uuid.uuid4().hex[:8]}"
+    checkpoint = checkpoint_dir or scratch_dir(spark, "ckpt_ttlsess_")
+    if output_dir is not None:
+        writer = sessions.writeStream.format("parquet").option("path", output_dir)
+    else:
+        writer = sessions.writeStream.format("memory").queryName(sink_name)
+    query = start_stream(
+        spark,
+        writer.outputMode("append")
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True),
+    )
+    query.awaitTermination()
+    record_explain(query, "ttl_sessions")
+    if checkpoint_dir is None:
+        # Throwaway per-run checkpoint (nothing can resume it — the
+        # location was never handed out); reap like run_to_memory_sink.
+        shutil.rmtree(checkpoint, ignore_errors=True)
     if output_dir is not None:
         return spark.read.schema(SESSION_OUTPUT_SCHEMA).parquet(output_dir)
     return spark.table(sink_name)

@@ -124,13 +124,6 @@ def run_stream_stream_join(
     single-batch ``availableNow`` replay the result equals the equivalent
     batch interval join, which is what the oracle checks.
     """
-    # Stateful streaming gets no AQE coalescing: shuffle.partitions fixes
-    # the state-store task count for the query's lifetime.  Size it to the
-    # workload (tiny local replay → few partitions; a real deployment sizes
-    # this to state volume / executor count before first start).
-    previous_partitions = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-
     def side(event_type: str, alias_prefix: str) -> DataFrame:
         stream = read_event_stream(spark, events_path)
         return (
@@ -157,10 +150,7 @@ def run_stream_stream_join(
         F.col("click_ts").cast("long").alias("click_epoch"),
         F.col("purchase_ts").cast("long").alias("purchase_epoch"),
     )
-    try:
-        return run_to_memory_sink(joined, "ssj", "stream_join", output_mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", previous_partitions)
+    return run_to_memory_sink(joined, "ssj", "stream_join", output_mode="append")
 
 
 def _run_windowed_stream(

@@ -563,3 +563,81 @@ def test_run_to_memory_sink_reaps_its_checkpoint(spark, tmp_path):
     assert {tuple(r) for r in out.collect()} == {(0, 4), (1, 3), (2, 3)}
     assert os.listdir(root) == []  # checkpoint made under the root, then reaped
     assert "reaptest_label" in LAST_EXPLAINS  # plan capture is structural
+
+
+def test_start_stream_sizes_state_to_cores_and_restores_the_session(
+    spark, sf_dir, tmp_path
+):
+    """start_stream gives a stateful query one state partition per core
+    and leaves the shared session's shuffle.partitions as it found it,
+    also when ``start()`` raises."""
+    from simple_query_engine_spark.session import start_stream
+    from simple_query_engine_spark.streaming.windows import (
+        WATERMARK,
+        read_event_stream,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    cores = spark.sparkContext.defaultParallelism
+    before = spark.conf.get(key)
+    assert int(before) != cores  # else the test could not tell them apart
+
+    stream = read_event_stream(spark, f"{sf_dir}/events.parquet")
+    counts = tumbling_window_counts(stream.withWatermark("ts", WATERMARK))
+    query = start_stream(
+        spark,
+        counts.writeStream.format("memory")
+        .queryName("start_stream_test")
+        .outputMode("complete")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True),
+    )
+    query.awaitTermination()
+    assert query.lastProgress["stateOperators"][0]["numShufflePartitions"] == cores
+    assert spark.conf.get(key) == before
+
+    seen = []
+
+    class FailingWriter:
+        def start(self):
+            seen.append(spark.conf.get(key))
+            raise RuntimeError("start failed")
+
+    with pytest.raises(RuntimeError):
+        start_stream(spark, FailingWriter())
+    assert seen == [str(cores)]
+    assert spark.conf.get(key) == before
+
+
+@pytest.mark.parametrize(
+    "entry",
+    [
+        "stream_tumbling_counts",
+        "stream_sliding_counts",
+        "stream_session_counts",
+        "stream_dedup_user_counts",
+        "stream_stateful_profiles",
+        "stream_ttl_sessions",
+        "stream_stream_join",
+    ],
+)
+def test_stateful_runners_start_through_start_stream(spark, sf_dir, entry, monkeypatch):
+    """Every stateful runner starts its query through session.start_stream,
+    so its state operators run one partition per core."""
+    from simple_query_engine_spark import session
+    from simple_query_engine_spark.streaming import explain_capture, stateful
+
+    queries = []
+
+    def counting(spark_, writer):
+        queries.append(session.start_stream(spark_, writer))
+        return queries[-1]
+
+    monkeypatch.setattr(explain_capture, "start_stream", counting)
+    monkeypatch.setattr(stateful, "start_stream", counting)
+    SO.QUERIES[entry](spark, sf_dir).collect()
+    assert len(queries) == 1
+    operators = queries[0].lastProgress["stateOperators"]
+    assert operators
+    cores = spark.sparkContext.defaultParallelism
+    assert {op["numShufflePartitions"] for op in operators} == {cores}

@@ -308,3 +308,35 @@ def test_components_ingest_matches_batch_incremental_with_commit_per_batch(
     )
     assert t.current_version() == v + 1  # one commit, even when no-change
     assert {tuple(r) for r in t.read().collect()} == rows  # labels unchanged
+
+
+def test_foreachbatch_overwrite_is_dynamic_without_session_conf(
+    spark, sf_dir, tmp_path
+):
+    """The upsert overwrites only the windows a batch carries: a partition
+    it does not carry survives (a static overwrite would delete it), and
+    the session's partitionOverwriteMode is left alone."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    out = str(tmp_path / "rollup")
+    spark.createDataFrame(
+        [("planted", 1, 1.0, -1)],
+        "event_type string, event_count long, value_sum double, batch_id int",
+    ).write.parquet(os.path.join(out, "window_start=0"))
+
+    on_disk = run_streaming_to_parquet(spark, f"{sf_dir}/events.parquet", out)
+
+    assert os.path.isdir(os.path.join(out, "window_start=0"))
+    rows = on_disk.collect()
+    assert [r.event_type for r in rows if r.window_start == 0] == ["planted"]
+    got = {
+        (r.window_start, r.event_type): (r.event_count, r.value_sum)
+        for r in rows
+        if r.window_start != 0
+    }
+    expected = {
+        (r.window_start, r.event_type): (r.event_count, r.value_sum)
+        for r in q_batch_tumbling(spark, sf_dir).collect()
+    }
+    assert got == expected
+    assert spark.conf.get(key) == before

@@ -14,7 +14,7 @@ set -u
 TESTDATA="${1:?usage: tools/run_sweep.sh <testdata_dir> [reference_csv]}"
 REF_CSV="${2:-}"
 cd "$(dirname "$0")/.."
-NOISE="WARN|INFO|Using|Setting|To adjust|^\[Stage"
+NOISE="WARN|INFO|Using|Setting|To adjust"
 {
   echo "=== full catalog sweep at HEAD $(git rev-parse --short HEAD) ($(date -u +%Y-%m-%dT%H:%MZ)) ==="
   # Keep EVERY per-query FAIL line plus the one aggregate summary line
