@@ -1,4 +1,4 @@
 from simple_query_engine_spark.sources.catalog import TABLE_NAMES, load_tables
-from simple_query_engine_spark.sources.readers import read_csv, read_json, read_parquet
+from simple_query_engine_spark.sources.readers import read_csv
 
-__all__ = ["TABLE_NAMES", "load_tables", "read_csv", "read_json", "read_parquet"]
+__all__ = ["TABLE_NAMES", "load_tables", "read_csv"]

@@ -29,6 +29,12 @@ Design — the three disciplines that make DML work at 100 TB:
 
 Everything heavy is a plain DataFrame write — Catalyst plans the rewrite,
 AQE sizes the shuffle, and no row ever passes through the driver.
+
+A table directory holds only ``_manifests/`` and ``data/``.  Per-run
+scratch — a merge's materialized source — lives under the engine's one
+scratch root (``storage.scratch_dir``), whose age-gated sweep reclaims
+whatever a crashed run strands, so the table layer decides nothing about
+where scratch lives.
 """
 
 from __future__ import annotations
@@ -41,31 +47,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _lock_owner_alive(lock_path: str) -> bool | None:
-    """Probe a scratch lock WITHOUT ever creating it.
-
-    ``open(path, "a")`` after an ``exists()`` check can recreate a lock
-    the owner unlinked in between — stranding a fresh zero-age orphan
-    until a later vacuum.  ``os.open`` with no ``O_CREAT`` cannot:
-    ``None`` = lock already gone (reaped or released), ``True`` = held by
-    a live owner, ``False`` = the owner is dead (we briefly acquired the
-    flock; closing the fd releases it immediately)."""
-    import fcntl
-
-    try:
-        fd = os.open(lock_path, os.O_RDWR)
-    except FileNotFoundError:
-        return None
-    try:
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-        except OSError:
-            return True
-        return False
-    finally:
-        os.close(fd)
-
-
 class TableVersionConflict(RuntimeError):
     """Another writer committed this version first — reread and retry."""
 
@@ -75,8 +56,8 @@ class ManagedTable:
     UPDATE / MERGE with copy-on-write rewrites and time-travel reads."""
 
     def __init__(self, spark: SparkSession, path: str):
-        # The layer lists, links and locks with local ``os``/``fcntl``
-        # calls, so a URI would half-work: ``abspath("hdfs://nn/t")`` is
+        # The layer lists and links with local ``os`` calls, so a URI
+        # would half-work: ``abspath("hdfs://nn/t")`` is
         # ``<cwd>/hdfs:/nn/t``, a local tree posing as the remote table.
         if "://" in path:
             raise ValueError(
@@ -643,72 +624,34 @@ class ManagedTable:
             os.remove(os.path.join(self._manifest_dir, f"v{v:05d}.json"))
         return doomed
 
-    # Crash leftovers older than this are presumed abandoned.  Commits hold
-    # their temp manifest for milliseconds and a merge holds its scratch
-    # for one job, so an hour is conservative by orders of magnitude.
+    # Temp manifests older than this are presumed abandoned.  A commit
+    # holds its temp for milliseconds, so an hour is conservative by
+    # orders of magnitude.
     _STALE_TMP_SEC = 3600
 
     def _sweep_stale_temps(self) -> None:
-        """Reclaim crash leftovers the commit/merge protocols can strand.
+        """Reclaim temp manifests a crashed commit strands.
 
         A writer that dies between ``os.link`` and the ``finally``'s
-        ``os.unlink`` strands a ``v*.json.tmp.<hex>`` in ``_manifests``
-        (``versions()`` ignores it, but nothing else ever removes it); a
-        merge driver that dies before its ``finally`` strands a scratch
-        dir under ``<table>/_tmp``.  Both are invisible to readers but
-        accumulate forever, so vacuum — the table's janitor — sweeps
-        them.  The sweep is AGE-GATED (mtime older than
-        ``_STALE_TMP_SEC``) so an in-flight commit's temp or a concurrent
-        merge's live scratch is never yanked out from under its owner."""
-        import shutil
+        ``os.unlink`` strands a ``v*.json.tmp.<hex>`` in ``_manifests``:
+        ``versions()`` ignores it, but nothing else ever removes it, so
+        vacuum — the table's janitor — sweeps it.  The sweep is AGE-GATED
+        (mtime older than ``_STALE_TMP_SEC``) so an in-flight commit's
+        temp is never yanked out from under its owner."""
         import time
 
+        if not os.path.isdir(self._manifest_dir):
+            return
         cutoff = time.time() - self._STALE_TMP_SEC
-        if os.path.isdir(self._manifest_dir):
-            for name in os.listdir(self._manifest_dir):
-                if ".json.tmp." not in name:
-                    continue
-                p = os.path.join(self._manifest_dir, name)
-                try:
-                    if os.path.getmtime(p) < cutoff:
-                        os.remove(p)
-                except FileNotFoundError:
-                    pass  # another vacuum or the owner got there first
-        scratch_root = os.path.join(self.path, "_tmp")
-        if os.path.isdir(scratch_root):
-            for name in os.listdir(scratch_root):
-                if name.endswith(".lock"):
-                    # Reaped with their scratch below; an ORPHAN lock (its
-                    # scratch already gone, owner dead) is reaped here so
-                    # nothing strands forever.
-                    p = os.path.join(scratch_root, name)
-                    base_entry = p[: -len(".lock")]
-                    try:
-                        if os.path.exists(base_entry) or os.path.getmtime(p) >= cutoff:
-                            continue
-                        if _lock_owner_alive(p):
-                            continue
-                        os.unlink(p)
-                    except FileNotFoundError:
-                        pass
-                    continue
-                p = os.path.join(scratch_root, name)
-                lock_path = f"{p}.lock"
-                try:
-                    if os.path.getmtime(p) >= cutoff:
-                        continue
-                    # Liveness check beats the age gate: a merge whose
-                    # probes outlive the gate still HOLDS its scratch lock
-                    # (kernel-released only on process death) — skip it.
-                    if _lock_owner_alive(lock_path):
-                        continue  # owner alive: not ours to reap
-                    shutil.rmtree(p, ignore_errors=True)
-                    try:
-                        os.unlink(lock_path)
-                    except FileNotFoundError:
-                        pass
-                except FileNotFoundError:
-                    pass
+        for name in os.listdir(self._manifest_dir):
+            if ".json.tmp." not in name:
+                continue
+            p = os.path.join(self._manifest_dir, name)
+            try:
+                if os.path.getmtime(p) < cutoff:
+                    os.remove(p)
+            except FileNotFoundError:
+                pass  # another vacuum or the owner got there first
 
     def changes(self, from_version: int, to_version: int) -> DataFrame:
         """Change feed between two snapshots: one row per inserted /
@@ -780,9 +723,9 @@ class ManagedTable:
 
         Three SQL/Delta-parity disciplines:
 
-        - The source is MATERIALIZED once (scratch parquet under
-          ``<table>/_tmp`` so a crashed merge's leak is reclaimed by the
-          next vacuum) before any of the four reads that consume it — a
+        - The source is MATERIALIZED once (parquet in a per-run
+          ``scratch_dir``, whose age-gated sweep reclaims a crashed
+          merge's copy) before any of the four reads that consume it — a
           non-deterministic source would otherwise present different rows
           to the duplicate check, the affected-file probe, the update
           join, and the insert anti-join, losing or duplicating rows
@@ -821,44 +764,22 @@ class ManagedTable:
                     f"table has {tgt.dataType}"
                 )
 
-        # Certification escape hatch (ADVICE r17): a sweep run with
-        # spark.sqe.strictMerge=true re-enables the duplicate-key scan even
-        # where a caller asserted uniqueness, so the callers' written
-        # uniqueness proofs get machine-checked periodically without the
-        # per-merge job riding every production call.
-        if not check_duplicate_keys and (
-            str(self.spark.conf.get("spark.sqe.strictMerge", "false")).lower()
-            == "true"
-        ):
-            check_duplicate_keys = True
+        from simple_query_engine_spark.functions.caching import cut_lineage
+        from simple_query_engine_spark.operators.storage import scratch_dir
 
         scratch = None
-        scratch_lock = None
         scratch_files: list[str] = []
         joined: DataFrame | None = None
-        if materialize_source:
-            scratch = os.path.join(
-                self.path, "_tmp", f"merge_src_{uuid.uuid4().hex}"
-            )
-            # Hold an exclusive flock on a sidecar for the scratch's whole
-            # life: vacuum's stale-temp sweep skips any scratch whose lock
-            # is still held (liveness, not mtime — a merge whose probes run
-            # longer than the age gate must not lose its materialized
-            # source mid-flight), while a crashed merge's lock is released
-            # by the kernel and its scratch becomes sweepable once stale.
-            import fcntl
-
-            os.makedirs(os.path.dirname(scratch), exist_ok=True)
-            scratch_lock = open(f"{scratch}.lock", "w")
-            fcntl.flock(scratch_lock, fcntl.LOCK_EX)
-            source.write.parquet(scratch)
-            scratch_files = sorted(
-                os.path.join(scratch, name)
-                for name in os.listdir(scratch)
-                if name.endswith(".parquet")
-            )
-            source = self.spark.read.schema(source.schema).parquet(scratch)
         try:
+            if materialize_source:
+                scratch = scratch_dir(self.spark, "merge_src_")
+                copy = os.path.join(scratch, "src")
+                source = cut_lineage(source, copy)
+                scratch_files = sorted(
+                    os.path.join(copy, name)
+                    for name in os.listdir(copy)
+                    if name.endswith(".parquet")
+                )
             # Key-range file pruning (the Delta data-skipping shape): a
             # target row can only MATCH a source key that actually occurs
             # in the batch, so when the manifest carries stats for the
@@ -1090,12 +1011,6 @@ class ManagedTable:
                 joined.unpersist()
             if scratch is not None:
                 shutil.rmtree(scratch, ignore_errors=True)
-            if scratch_lock is not None:
-                scratch_lock.close()
-                try:
-                    os.unlink(scratch_lock.name)
-                except FileNotFoundError:
-                    pass
 
     @staticmethod
     def _check_merge_schema(df: DataFrame, base_schema, ctx: str) -> None:

@@ -98,7 +98,30 @@ def _generate_batch(start: int, end: int):
     )
 
 
-class ReadingsReader(DataSourceReader):
+def _slices(lo: int, hi: int, n: int) -> list[_IdSlice]:
+    """[lo, hi) as at most ``n`` contiguous slices whose widths differ by
+    at most one (no skew); an empty range plans one empty slice."""
+    n = max(1, n)
+    width, extra = divmod(max(0, hi - lo), n)
+    slices, cursor = [], lo
+    for i in range(n):
+        step = width + (1 if i < extra else 0)
+        if step == 0:
+            break
+        slices.append(_IdSlice(cursor, cursor + step))
+        cursor += step
+    return slices or [_IdSlice(lo, lo)]
+
+
+class _SliceReader:
+    """The executor half both readers share: one slice as Arrow batches."""
+
+    def read(self, partition: _IdSlice):
+        for start in range(partition.start, partition.end, _BATCH_ROWS):
+            yield _generate_batch(start, min(start + _BATCH_ROWS, partition.end))
+
+
+class ReadingsReader(_SliceReader, DataSourceReader):
     def __init__(self, options: dict) -> None:
         self.lo = 0
         self.hi = int(options.get("rows", 1000))
@@ -135,24 +158,10 @@ class ReadingsReader(DataSourceReader):
             yield f
 
     def partitions(self) -> Sequence[InputPartition]:
-        lo, hi = self.lo, max(self.lo, self.hi)
-        n = max(1, self.num_partitions)
-        width, extra = divmod(hi - lo, n)
-        slices, cursor = [], lo
-        for i in range(n):
-            step = width + (1 if i < extra else 0)
-            if step == 0:
-                break
-            slices.append(_IdSlice(cursor, cursor + step))
-            cursor += step
-        return slices or [_IdSlice(lo, lo)]
-
-    def read(self, partition: _IdSlice):
-        for start in range(partition.start, partition.end, _BATCH_ROWS):
-            yield _generate_batch(start, min(start + _BATCH_ROWS, partition.end))
+        return _slices(self.lo, self.hi, self.num_partitions)
 
 
-class ReadingsStreamReader(DataSourceStreamReader):
+class ReadingsStreamReader(_SliceReader, DataSourceStreamReader):
     """Micro-batch stream over the same deterministic readings.
 
     The executor-parallel streaming variant (NOT the driver-side
@@ -191,20 +200,7 @@ class ReadingsStreamReader(DataSourceStreamReader):
                 "configured source shrank (rows option lowered?); refusing "
                 "to rewind a committed offset"
             )
-        n = max(1, self.num_partitions)
-        width, extra = divmod(max(0, hi - lo), n)
-        slices, cursor = [], lo
-        for i in range(n):
-            step = width + (1 if i < extra else 0)
-            if step == 0:
-                break
-            slices.append(_IdSlice(cursor, cursor + step))
-            cursor += step
-        return slices or [_IdSlice(lo, lo)]
-
-    def read(self, partition: _IdSlice):
-        for start in range(partition.start, partition.end, _BATCH_ROWS):
-            yield _generate_batch(start, min(start + _BATCH_ROWS, partition.end))
+        return _slices(lo, hi, self.num_partitions)
 
     def commit(self, end: dict) -> None:
         pass  # nothing to clean up — the generator has no retained state

@@ -5,8 +5,9 @@ header-as-schema and per-cell type sniffing (reference ``src/table.rs:87-136``).
 Spark's CSV reader with ``header`` + ``inferSchema`` subsumes that (strictly
 wider inference: long/double/timestamp/boolean, SURVEY.md §2.1 op #2);
 ``mode=FAILFAST`` reproduces the reference's error-out-on-malformed-row
-contract (``src/table.rs:59``).  Parquet/JSON are the extension sources the
-testdata and the 100 TB design point actually use — columnar Parquet scans
+contract (``src/table.rs:59``).  Parquet is the extension source the
+testdata and the 100 TB design point actually use, read with Spark's own
+reader (catalog handles: ``sources/catalog.py``) — columnar Parquet scans
 give Catalyst the pushdown the reference approximated with its per-column
 sorted indexes.
 """
@@ -31,11 +32,3 @@ def read_csv(
     if fail_fast:
         reader = reader.option("mode", "FAILFAST")
     return reader.csv(path)
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def read_json(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.json(path)

@@ -36,35 +36,3 @@ def write_parquet(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table_name: str,
-    bucket_key: str,
-    num_buckets: int = 16,
-) -> None:
-    """Persist as a bucketed+sorted managed table.
-
-    Two tables bucketed identically on their join key co-locate: Spark's
-    planner sees the matching ``HashPartitioning(bucket_key, N)`` output on
-    both scans and elides the exchange (and with sortBy, the sort) of a
-    sort-merge join — THE technique for repeated fact-fact joins at 100 TB,
-    where the shuffle would otherwise move the whole fact table every run.
-    Verified by plan assertion in tests/test_bucketing.py.
-    """
-    (
-        df.write.mode("overwrite")
-        .bucketBy(num_buckets, bucket_key)
-        .sortBy(bucket_key)
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
-
-
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).option("header", True).csv(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)

@@ -3,11 +3,9 @@ properties that matter at scale (no exchange on bucketed joins)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from simple_query_engine_spark.functions.joins import salted_join
-from simple_query_engine_spark.sources.sinks import write_bucketed_table
 
 
 def plan_of(df) -> str:
@@ -18,58 +16,6 @@ def plan_of(df) -> str:
     with contextlib.redirect_stdout(buffer):
         df.explain("formatted")
     return buffer.getvalue()
-
-
-@pytest.fixture(scope="module")
-def bucketed_tables(spark, sf_dir):
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet").withColumnRenamed(
-        "l_orderkey", "o_orderkey"
-    )
-    write_bucketed_table(orders, "orders_bkt", "o_orderkey", 8)
-    write_bucketed_table(lineitem, "lineitem_bkt", "o_orderkey", 8)
-    yield spark.table("orders_bkt"), spark.table("lineitem_bkt")
-    spark.sql("DROP TABLE IF EXISTS orders_bkt")
-    spark.sql("DROP TABLE IF EXISTS lineitem_bkt")
-
-
-def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
-    orders_bkt, lineitem_bkt = bucketed_tables
-    # Disable auto-broadcast: at test scale Spark would broadcast the small
-    # side, hiding exactly the shuffle that bucketing exists to elide at
-    # fact-fact scale.
-    previous = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = orders_bkt.join(lineitem_bkt, "o_orderkey").groupBy(
-            "o_orderpriority"
-        ).agg(F.count(F.lit(1)).alias("cnt"))
-        plan = plan_of(joined)
-        join_section = plan.split("HashAggregate")[0]
-        # The join consumes the bucketed scans directly — no shuffle
-        # exchange between the scans and the join.
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        assert "Exchange hashpartitioning(o_orderkey" not in join_section
-        assert "SelectedBucketsCount" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", previous)
-
-
-def test_bucketed_join_matches_unbucketed(spark, sf_dir, bucketed_tables):
-    orders_bkt, lineitem_bkt = bucketed_tables
-    bucketed = (
-        orders_bkt.join(lineitem_bkt, "o_orderkey")
-        .groupBy("o_orderstatus")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    plain = (
-        orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
-        .groupBy("o_orderstatus")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    assert sorted(map(tuple, bucketed.collect())) == sorted(map(tuple, plain.collect()))
 
 
 def test_bucketed_layout_reused_across_processes(spark, sf_dir):

@@ -767,49 +767,75 @@ def test_merge_nondeterministic_source_is_materialized_once(spark, tmp_path):
 
 def test_merge_unmaterialized_deterministic_source_matches(spark, tmp_path, people):
     """materialize_source=False on a deterministic source produces the
-    same table state as the default materialized path, with no scratch
-    dir ever created under <table>/_tmp."""
-    t_mat = ManagedTable.create(spark, str(tmp_path / "mat"), people)
-    t_raw = ManagedTable.create(spark, str(tmp_path / "raw"), people)
-    src = spark.createDataFrame(
-        [(1, "upd_1", -1.0, "odd"), (100, "new_100", 1000.0, "even")],
-        "id long, name string, balance double, parity string",
-    )
-    t_mat.merge(src, on="id", update_assignments={"name": F.col("s.name")})
-    t_raw.merge(
-        src,
-        on="id",
-        update_assignments={"name": F.col("s.name")},
-        materialize_source=False,
-    )
+    same table state as the default materialized path, with nothing ever
+    created under the scratch root."""
+    from simple_query_engine_spark.operators.storage import SCRATCH_CONF
+
+    root = tmp_path / "root"
+    spark.conf.set(SCRATCH_CONF, str(root))
+    try:
+        t_mat = ManagedTable.create(spark, str(tmp_path / "mat"), people)
+        t_raw = ManagedTable.create(spark, str(tmp_path / "raw"), people)
+        src = spark.createDataFrame(
+            [(1, "upd_1", -1.0, "odd"), (100, "new_100", 1000.0, "even")],
+            "id long, name string, balance double, parity string",
+        )
+        t_raw.merge(
+            src,
+            on="id",
+            update_assignments={"name": F.col("s.name")},
+            materialize_source=False,
+        )
+        assert not root.exists()
+        t_mat.merge(src, on="id", update_assignments={"name": F.col("s.name")})
+    finally:
+        spark.conf.unset(SCRATCH_CONF)
     assert _rows(t_mat.read()) == _rows(t_raw.read())
-    assert not os.path.isdir(os.path.join(t_raw.path, "_tmp"))
+
+
+def test_materialized_merge_stages_under_scratch_root(spark, tmp_path, people):
+    """A materialized merge copies its source under the engine's scratch
+    root, never under the table, and removes the copy whether the merge
+    commits or raises."""
+    from simple_query_engine_spark.operators.storage import SCRATCH_CONF
+
+    root = tmp_path / "root"
+    spark.conf.set(SCRATCH_CONF, str(root))
+    try:
+        t = ManagedTable.create(spark, str(tmp_path / "t"), people)
+        src = spark.createDataFrame(
+            [(1, "upd_1", -1.0, "odd"), (100, "new_100", 1000.0, "even")],
+            people.schema,
+        )
+        t.merge(src, on="id", update_assignments={"name": F.col("s.name")})
+        assert t.current_version() == 1
+        dup = spark.createDataFrame(
+            [(3, "first", 1.0, "odd"), (3, "second", 2.0, "odd")], people.schema
+        )
+        with pytest.raises(ValueError, match="multiple rows for matched key"):
+            t.merge(dup, on="id", update_assignments={"name": F.col("s.name")})
+    finally:
+        spark.conf.unset(SCRATCH_CONF)
+    assert t.current_version() == 1
+    assert not [n for n in os.listdir(root) if n.startswith("sqe_merge_src_")]
+    assert sorted(os.listdir(t.path)) == ["_manifests", "data"]
 
 
 def test_vacuum_sweeps_stale_temps_but_not_fresh_ones(spark, tmp_path, people):
-    """Crash leftovers — a stranded v*.json.tmp.<hex> in _manifests and a
-    dead merge's scratch dir under _tmp — are reclaimed by vacuum once
-    they age past the bar; FRESH temps (a possibly in-flight commit or a
-    live concurrent merge) are left alone."""
+    """A stranded v*.json.tmp.<hex> in _manifests (a crashed commit) is
+    reclaimed by vacuum once it ages past the bar; a FRESH temp (a
+    possibly in-flight commit) is left alone."""
     t = ManagedTable.create(spark, str(tmp_path / "t"), people)
     stale_manifest_tmp = os.path.join(t._manifest_dir, "v00001.json.tmp.deadbeef")
     fresh_manifest_tmp = os.path.join(t._manifest_dir, "v00001.json.tmp.cafef00d")
     for p in (stale_manifest_tmp, fresh_manifest_tmp):
         with open(p, "w") as fh:
             fh.write("{}")
-    scratch_root = os.path.join(t.path, "_tmp")
-    stale_scratch = os.path.join(scratch_root, "merge_src_dead")
-    fresh_scratch = os.path.join(scratch_root, "merge_src_live")
-    os.makedirs(stale_scratch)
-    os.makedirs(fresh_scratch)
     old = os.path.getmtime(stale_manifest_tmp) - ManagedTable._STALE_TMP_SEC - 60
     os.utime(stale_manifest_tmp, (old, old))
-    os.utime(stale_scratch, (old, old))
     assert t.vacuum(retain_versions=2) == []  # no expired versions; sweep still runs
     assert not os.path.exists(stale_manifest_tmp)
-    assert not os.path.exists(stale_scratch)
     assert os.path.exists(fresh_manifest_tmp)
-    assert os.path.exists(fresh_scratch)
     # The survivors don't confuse version discovery or reads.
     assert t.versions() == [0]
     assert _rows(t.read()) == _rows(people)
@@ -996,48 +1022,6 @@ def test_clone_carries_stats_policy(spark, tmp_path, people):
     assert set(m["stats"]) == set(m["files"])  # new files got stats too
 
 
-def test_sweep_skips_scratch_whose_lock_is_held(spark, tmp_path, people):
-    """A merge scratch older than the age gate but whose flock is still
-    HELD (long-running probes) must survive vacuum's sweep; once the lock
-    is released the same scratch is reaped."""
-    import fcntl
-
-    t = ManagedTable.create(spark, str(tmp_path / "t"), people)
-    scratch = os.path.join(t.path, "_tmp", "merge_src_longrunner")
-    os.makedirs(scratch)
-    lock = open(scratch + ".lock", "w")
-    fcntl.flock(lock, fcntl.LOCK_EX)
-    old = os.path.getmtime(scratch) - ManagedTable._STALE_TMP_SEC - 60
-    os.utime(scratch, (old, old))
-    t.vacuum(retain_versions=2)
-    assert os.path.exists(scratch)  # lock held: not reaped despite age
-    lock.close()
-    t.vacuum(retain_versions=2)
-    assert not os.path.exists(scratch)  # released: reaped
-    assert not os.path.exists(scratch + ".lock")
-
-
-def test_lock_owner_alive_never_creates_the_lock(tmp_path):
-    """ADVICE r13: the sweep's liveness probe must not be able to recreate
-    a lock the owner just unlinked — os.open without O_CREAT: missing →
-    None (and still missing), held → True, free file → False."""
-    import fcntl
-
-    from simple_query_engine_spark.sources.managed import _lock_owner_alive
-
-    missing = str(tmp_path / "gone.lock")
-    assert _lock_owner_alive(missing) is None
-    assert not os.path.exists(missing)  # the probe created nothing
-
-    held = str(tmp_path / "held.lock")
-    fh = open(held, "w")
-    fcntl.flock(fh, fcntl.LOCK_EX)
-    assert _lock_owner_alive(held) is True
-    fh.close()
-    assert _lock_owner_alive(held) is False  # dead owner: acquirable
-    assert os.path.exists(held)  # probe acquires+releases, never unlinks
-
-
 def test_certified_merge_entry_prunes_its_probes(spark, monkeypatch):
     """VERDICT r13 item 2: the CERTIFIED dml_merge_upsert path must
     exercise stats pruning — range-clustered 8-file layout + range-local
@@ -1130,27 +1114,6 @@ def test_all_null_key_source_with_footer_span_probe(spark, tmp_path):
     rows = sorted(map(tuple, t.read().collect()), key=lambda r: (r[0] is None, r))
     # Matched nothing: both NULL-key rows flow to WHEN NOT MATCHED inserts.
     assert rows == [(1, "a"), (2, "b"), (None, "x"), (None, "y")]
-
-
-def test_strict_merge_conf_reenables_duplicate_check(spark, tmp_path, people):
-    """spark.sqe.strictMerge=true machine-checks caller-asserted
-    uniqueness (ADVICE r17): a duplicate matched key must raise even when
-    the caller passed check_duplicate_keys=False."""
-    t = ManagedTable.create(spark, str(tmp_path / "t"), people)
-    dup_src = spark.createDataFrame(
-        [(3, "first", 1.0, "odd"), (3, "second", 2.0, "odd")], people.schema
-    )
-    spark.conf.set("spark.sqe.strictMerge", "true")
-    try:
-        with pytest.raises(ValueError, match="multiple rows for matched key"):
-            t.merge(
-                dup_src,
-                on="id",
-                update_assignments={"name": F.col("s.name")},
-                check_duplicate_keys=False,
-            )
-    finally:
-        spark.conf.unset("spark.sqe.strictMerge")
 
 
 @pytest.mark.parametrize("uri", ["hdfs://nn/t", "file:///tmp/sqe_uri_table"])

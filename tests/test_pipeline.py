@@ -547,7 +547,9 @@ def test_fuzzy_decontamination_catches_planted_leaks(spark, sf_dir):
         assert est >= PLANTED_JACCARD_THRESHOLD
 
 
-def test_inc_curation_merge_key_uniqueness_constants_pinned(spark, sf_dir):
+def test_inc_curation_merge_key_uniqueness_constants_pinned(
+    spark, sf_dir, strict_merge
+):
     """VERDICT r17 item 8: q_pipeline_incremental_curation passes
     check_duplicate_keys=False on a written uniqueness argument.  Pin the
     modular arithmetic that makes it true — if a future edit to the CDC
@@ -562,9 +564,9 @@ def test_inc_curation_merge_key_uniqueness_constants_pinned(spark, sf_dir):
       spaces are disjoint REGARDLESS of id magnitude (the runtime
       offset_doc_id guard separately enforces real ids < INC_NEW_OFFSET).
 
-    Then machine-check the claim end-to-end: re-run the query with
-    spark.sqe.strictMerge=true, which forces the duplicate-key scan back
-    on inside merge() — a non-unique source would raise."""
+    Then machine-check the claim end-to-end: re-run the query with the
+    duplicate-key scan forced back on inside merge() — a non-unique source
+    would raise."""
     from simple_query_engine_spark.operators.pipeline import (
         INC_EDIT_MOD,
         INC_EDIT_RES,
@@ -578,8 +580,5 @@ def test_inc_curation_merge_key_uniqueness_constants_pinned(spark, sf_dir):
     assert INC_NEW_MOD % INC_EDIT_MOD == 0
     assert (INC_NEW_RES % INC_EDIT_MOD) != INC_EDIT_RES
 
-    spark.conf.set("spark.sqe.strictMerge", "true")
-    try:
-        assert q_pipeline_incremental_curation(spark, sf_dir).count() > 0
-    finally:
-        spark.conf.unset("spark.sqe.strictMerge")
+    assert q_pipeline_incremental_curation(spark, sf_dir).count() > 0
+    assert strict_merge == [False]  # the caller-asserted merge was checked

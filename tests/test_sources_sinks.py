@@ -8,8 +8,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from simple_query_engine_spark.sources.readers import read_csv, read_json, read_parquet
-from simple_query_engine_spark.sources.sinks import write_csv, write_json, write_parquet
+from simple_query_engine_spark.sources.readers import read_csv
+from simple_query_engine_spark.sources.sinks import write_parquet
 
 
 def plan_of(df) -> str:
@@ -41,10 +41,10 @@ def test_csv_failfast_on_malformed(spark, tmp_path):
 
 
 def test_partitioned_parquet_roundtrip_and_pruning(spark, sf_dir, tmp_path):
-    orders = read_parquet(spark, f"{sf_dir}/orders.parquet")
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     out = str(tmp_path / "orders_by_status")
     write_parquet(orders, out, partition_by=["o_orderstatus"], target_files=2)
-    back = read_parquet(spark, out)
+    back = spark.read.parquet(out)
     assert back.count() == orders.count()
     # Partition pruning: filtering the partition key must hit PartitionFilters.
     pruned = back.filter(F.col("o_orderstatus") == "O")
@@ -54,19 +54,19 @@ def test_partitioned_parquet_roundtrip_and_pruning(spark, sf_dir, tmp_path):
 
 
 def test_json_roundtrip(spark, sf_dir, tmp_path):
-    nation = read_parquet(spark, f"{sf_dir}/nation.parquet").select("n_nationkey", "n_name")
+    nation = spark.read.parquet(f"{sf_dir}/nation.parquet").select("n_nationkey", "n_name")
     out = str(tmp_path / "nation_json")
-    write_json(nation, out)
-    back = read_json(spark, out)
+    nation.write.mode("overwrite").json(out)
+    back = spark.read.json(out)
     assert {tuple(sorted(r.asDict().items())) for r in back.collect()} == {
         tuple(sorted(r.asDict().items())) for r in nation.collect()
     }
 
 
 def test_csv_write_read_roundtrip(spark, sf_dir, tmp_path):
-    region = read_parquet(spark, f"{sf_dir}/region.parquet")
+    region = spark.read.parquet(f"{sf_dir}/region.parquet")
     out = str(tmp_path / "region_csv")
-    write_csv(region, out)
+    region.write.mode("overwrite").option("header", True).csv(out)
     back = read_csv(spark, out)
     assert sorted(tuple(r) for r in back.collect()) == sorted(
         tuple(r) for r in region.collect()

@@ -223,14 +223,17 @@ def test_scratch_dir_sweeps_stale_siblings_only(spark, tmp_path):
         root = os.path.dirname(fresh)
         assert root == str(tmp_path / "root")
         stale = os.path.join(root, f"{_SCRATCH_MARK}stale_leftover")
+        # A crashed merge's source copy is per-run scratch like any other.
+        stale_merge = os.path.join(root, f"{_SCRATCH_MARK}merge_src_dead")
         foreign = os.path.join(root, "stale_user_data")
         old = time.time() - _SCRATCH_TTL_SEC - 60
-        for p in (stale, foreign):
+        for p in (stale, stale_merge, foreign):
             os.makedirs(os.path.join(p, "t"))
             os.utime(p, (old, old))
 
         new = scratch_dir(spark, "next_")
         assert not os.path.exists(stale)
+        assert not os.path.exists(stale_merge)
         assert os.path.isdir(foreign)
         assert os.path.isdir(fresh) and os.path.isdir(new)
     finally:

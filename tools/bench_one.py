@@ -12,8 +12,8 @@ through the ``noop`` sink (``df.count()`` would let Catalyst prune
 projections), and a JVM-side sum over 500M longs is timed after each
 query as a host-speed calibration.  Prints one JSON line per query with
 its first invocation (one-time codegen plus in-session materializations),
-every warm run, the min, and the min divided by the calibration; the
-formatted physical plan goes to stderr.
+every warm run, the min, and the min divided by the calibration; the last
+warm run's formatted physical plan goes to stderr.
 """
 
 from __future__ import annotations
@@ -148,11 +148,12 @@ def main() -> int:
     for df in load_tables(spark, data_dir).values():
         df.cache().count()
 
-    def run(name: str) -> float:
+    def run(name: str):
+        """Time one invocation; return its seconds and the DataFrame it ran."""
         start = time.time()
         df = queries[name](spark, data_dir)
         df.write.mode("overwrite").format("noop").save()
-        return round(time.time() - start, 3)
+        return round(time.time() - start, 3), df
 
     probe = lambda: spark.range(500_000_000, numPartitions=32).selectExpr(
         "sum(id * 2)"
@@ -160,13 +161,18 @@ def main() -> int:
     probe()  # codegen warm-up
 
     for name in names:
-        first = run(name)
-        times = [run(name) for _ in range(runs)]
+        first, df = run(name)
+        times = []
+        for _ in range(runs):
+            seconds, df = run(name)
+            times.append(seconds)
         start = time.time()
         probe()
         calibration = round(time.time() - start, 3)
+        # Explain the last timed run's DataFrame: a fresh invocation would
+        # run a stream entry's whole stream again, untimed.
         with contextlib.redirect_stdout(sys.stderr):
-            queries[name](spark, data_dir).explain("formatted")
+            df.explain("formatted")
         print(
             json.dumps(
                 {
