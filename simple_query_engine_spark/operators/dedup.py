@@ -43,7 +43,7 @@ from simple_query_engine_spark.functions.hashing import (
     md5_prefix_long_sql,
 )
 from simple_query_engine_spark.functions.caching import cut_lineage, session_cache
-from simple_query_engine_spark.operators.text import _NORM, _normalized
+from simple_query_engine_spark.operators.text import _NORM, _normalized, _shingle_array
 from simple_query_engine_spark.sources.catalog import table
 
 JACCARD_THRESHOLD = 0.5
@@ -82,23 +82,12 @@ def _shingles_of(documents: DataFrame, sf_dir: str, cache_key: str) -> DataFrame
     documents = documents.repartition(
         documents.sparkSession.sparkContext.defaultParallelism, "doc_id"
     )
-    # The word array materializes in its own projection first: an inline
-    # split referenced inside the transform lambda defeats CSE and
-    # re-tokenizes the document once per shingle (see _contam_shingles in
-    # pipeline.py — measured 8x on the equivalent 5-gram derivation).
-    words = F.col("w")
-    shingle_array = F.when(
-        F.size(words) >= _SHINGLE_WIDTH,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(words) - (_SHINGLE_WIDTH - 1)),
-                lambda i: F.concat_ws(" ", F.slice(words, i, _SHINGLE_WIDTH)),
-            )
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", words)))
+    # The word array materializes in its own projection first (the CSE
+    # note on _shingle_array).
     tokenized = documents.select(
         "doc_id", F.split(_normalized(F.col("text")), " ").alias("w")
     )
+    shingle_array = _shingle_array(F.col("w"), _SHINGLE_WIDTH)
     return session_cache(
         tokenized.select("doc_id", F.explode(shingle_array).alias("shingle")),
         sf_dir,
@@ -277,19 +266,10 @@ def _row_minhash_signature(documents: DataFrame) -> DataFrame:
     parallelizes embarrassingly.  The tokenized/hashed arrays materialize
     in their own projections (the ``_shingles_of`` CSE discipline —
     64 permutation lambdas reference the hashed array)."""
-    words = F.col("w")
-    shingle_array = F.when(
-        F.size(words) >= _SHINGLE_WIDTH,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(words) - (_SHINGLE_WIDTH - 1)),
-                lambda i: F.concat_ws(" ", F.slice(words, i, _SHINGLE_WIDTH)),
-            )
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", words)))
     tokenized = documents.select(
         "doc_id", F.split(_normalized(F.col("text")), " ").alias("w")
     )
+    shingle_array = _shingle_array(F.col("w"), _SHINGLE_WIDTH)
     hashed = tokenized.select(
         "doc_id",
         F.transform(
@@ -995,23 +975,15 @@ MAX_CC_ITERATIONS = 15
 # under the cap even at 100 TB (their node set is ∝ batch by
 # construction), while a corpus-sized pair graph crosses it.  0 forces
 # the over-cap placement (tests pin both placements against each other).
-CC_LOCAL_EDGE_CAP_CONF = "spark.sqe.cc.localEdgeCap"
-CC_LOCAL_EDGE_CAP_DEFAULT = 200_000
+CC_LOCAL_EDGE_CAP = 200_000
 
 
 def _bounded_probe(df: DataFrame) -> pd.DataFrame | None:
-    """The one bounded probe of ``CC_LOCAL_EDGE_CAP_CONF``: every row of
+    """The one bounded probe of ``CC_LOCAL_EDGE_CAP``: every row of
     ``df`` as pandas when it holds at most cap rows, else None (always
     None at cap 0).  One job that stops after cap + 1 rows — an over-cap
     input is never scanned in full."""
-    try:
-        cap = int(
-            df.sparkSession.conf.get(
-                CC_LOCAL_EDGE_CAP_CONF, str(CC_LOCAL_EDGE_CAP_DEFAULT)
-            )
-        )
-    except ValueError:
-        cap = CC_LOCAL_EDGE_CAP_DEFAULT
+    cap = CC_LOCAL_EDGE_CAP
     if cap <= 0:
         return None
     head = df.limit(cap + 1).toPandas()
@@ -1024,7 +996,7 @@ def _solve_graph(edges: DataFrame, solver, schema: str) -> DataFrame:
     pandas result keyed by ``doc_id``; ``schema`` is the DDL of the
     result columns after ``doc_id``, whose type is the edges' node type.
 
-    Placement (see ``CC_LOCAL_EDGE_CAP_CONF``): under the cap the solver
+    Placement (see ``CC_LOCAL_EDGE_CAP``): under the cap the solver
     runs once on the driver over the bounded probe's rows; over it, every
     edge is tagged with its ``_propagate_labels`` component and the
     solver runs per component in a grouped map.  The per-group bound is
@@ -1137,7 +1109,7 @@ def _propagate_labels(
     edge list ``(src, dst)``; returns the fixpoint ``(doc_id, label)``
     table and the number of distributed rounds it took (0 when the
     size-adaptive driver fast path solved the graph — see
-    ``CC_LOCAL_EDGE_CAP_CONF``; both paths compute the identical
+    ``CC_LOCAL_EDGE_CAP``; both paths compute the identical
     min-label fixpoint, pinned against each other in tests).  ``probed``
     says the caller's own bounded probe already found ``edges`` over the
     cap, so the distributed rounds start without a second probe.
@@ -1181,7 +1153,7 @@ def _propagate_labels(
     # never a full scan of an over-cap graph) both sizes the graph and,
     # when it fits, already holds every edge — union-find on the driver
     # replaces the whole round loop.  Rounds are reported as 0: no
-    # distributed round ran.  See CC_LOCAL_EDGE_CAP_CONF above for why
+    # distributed round ran.  See CC_LOCAL_EDGE_CAP above for why
     # this is the at-scale path for batch-reduced graphs, not a local rig
     # shortcut.
     # Persist the edge list for the probe AND any distributed rounds
@@ -1265,7 +1237,7 @@ def _propagate_labels_distributed(
 
 def _localize_bounded_pairs(pairs: DataFrame) -> DataFrame:
     """Evaluate a (doc_id_a, doc_id_b) pair list ONCE and pin it as a
-    local relation when it fits under ``CC_LOCAL_EDGE_CAP_CONF`` (one
+    local relation when it fits under ``CC_LOCAL_EDGE_CAP`` (one
     :func:`_bounded_probe` job).
 
     The incremental/streaming component entries consume their delta-edge

@@ -92,16 +92,16 @@ def q_dml_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE a key-range-localized source into a range-clustered target.
 
     Target = customers with even c_custkey, laid out as 8 range-clustered
-    files with per-file min/max stats on the merge key (VERDICT r13
-    item 2 — the certified path exercises the Delta-style data-skipping
-    merge proven flat at 32x in DML_SCALE.json: with a range-local batch
-    only the ~2 of 8 files whose key box overlaps the band are probed,
-    the rest move as manifest strings).  Source = customers in the
-    [40%, 60%] key band, balances doubled: matched rows (even keys in
-    band) take the doubled balance; unmatched rows (odd keys in band)
-    insert.  The band bounds are exact integer arithmetic (mx*2 div 5 /
-    mx*3 div 5 — Spark div and DuckDB // both truncate) so the oracle
-    selects the identical key set."""
+    files, each with min/max stats on the integer merge key, which every
+    write records (VERDICT r13 item 2 — the certified path exercises the
+    Delta-style data-skipping merge proven flat at 32x in DML_SCALE.json:
+    with a range-local batch only the ~2 of 8 files whose key box
+    overlaps the band are probed, the rest move as manifest strings).
+    Source = customers in the [40%, 60%] key band, balances doubled:
+    matched rows (even keys in band) take the doubled balance; unmatched
+    rows (odd keys in band) insert.  The band bounds are exact integer
+    arithmetic (mx*2 div 5 / mx*3 div 5 — Spark div and DuckDB // both
+    truncate) so the oracle selects the identical key set."""
     customer = table(spark, sf_dir, "customer")
     mx = customer.agg(F.max("c_custkey")).collect()[0][0]  # 1-row aggregate
     lo, hi = mx * 2 // 5, mx * 3 // 5
@@ -111,7 +111,6 @@ def q_dml_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         customer.filter(F.col("c_custkey") % 2 == 0).repartitionByRange(
             8, "c_custkey"
         ),
-        stats_columns=["c_custkey"],
     )
     source = customer.filter(F.col("c_custkey").between(lo, hi)).withColumn(
         "c_acctbal", F.col("c_acctbal") * MERGE_SCALE
@@ -397,11 +396,11 @@ def q_dml_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     table) and the existence of real file-level skipping.  The measured
     skip ratio is pinned in ``tests/test_managed.py``.
 
-    Scale shape: the z-order rewrite is one range shuffle; stats
-    collection is one file-count-sized aggregate over just-written
-    files; pruning is driver-side arithmetic over manifest entries
-    (metadata, like every lakehouse); the box bounds come from a 1-row
-    min/max aggregate (table stats, at production scale).
+    Scale shape: the z-order rewrite is one range shuffle; stats come
+    from the just-written files' Parquet footers, no Spark job; pruning
+    is driver-side arithmetic over manifest entries (metadata, like
+    every lakehouse); the box bounds come from a 1-row min/max aggregate
+    (table stats, at production scale).
     """
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey",

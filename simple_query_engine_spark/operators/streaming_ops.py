@@ -625,15 +625,11 @@ def run_components_ingest(
     run_root = scratch_dir(spark, "stream_cc_")
     table_path = os.path.join(run_root, "table")
     run_components_ingest.last_table_path = table_path
-    # stats on the merge key: each micro-batch's merge probes prune to
-    # files whose doc_id box overlaps the batch (the streaming-upsert
-    # discipline — merge cost ∝ batch, not table).
-    ManagedTable.create(
-        spark,
-        table_path,
-        _standing_labels_managed(spark, sf_dir),
-        stats_columns=["doc_id"],
-    )
+    # Every write records the doc_id key's per-file box: each
+    # micro-batch's merge probes prune to files whose box overlaps the
+    # batch (the streaming-upsert discipline — merge cost ∝ batch, not
+    # table).
+    ManagedTable.create(spark, table_path, _standing_labels_managed(spark, sf_dir))
     stream = read_event_stream(spark, stream_path, max_files_per_trigger)
     query = start_stream(
         spark,

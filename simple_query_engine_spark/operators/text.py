@@ -327,6 +327,25 @@ def _word_ngrams(words_col, n: int):
     ).otherwise(F.array().cast("array<string>"))
 
 
+def _shingle_array(words_col, n: int):
+    """Distinct word n-grams of a tokenized doc; below n words the whole
+    text is its one shingle, so a short doc still has one.  The dedup
+    MinHash shingles and the contamination grams share this definition.
+    ``words_col`` should name the word array's own projected column:
+    referenced by the size and by every lambda element, an inline
+    split/normalize defeats common-subexpression elimination inside
+    ``transform`` and re-tokenizes the doc once per gram (8x at sf0.1)."""
+    return F.when(
+        F.size(words_col) >= n,
+        F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(1), F.size(words_col) - (n - 1)),
+                lambda i: F.concat_ws(" ", F.slice(words_col, i, n)),
+            )
+        ),
+    ).otherwise(F.array(F.concat_ws(" ", words_col)))
+
+
 def _word_bigrams(words_col):
     """Adjacent word pairs of a tokenized doc (empty array below 2 words)."""
     return _word_ngrams(words_col, 2)

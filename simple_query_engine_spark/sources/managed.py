@@ -45,6 +45,18 @@ import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ByteType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+# The column types whose Parquet footer min/max every write records.
+_INT_TYPES = (ByteType, ShortType, IntegerType, LongType)
 
 
 class TableVersionConflict(RuntimeError):
@@ -78,77 +90,25 @@ class ManagedTable:
     # -- creation / versions -------------------------------------------------
 
     @classmethod
-    def create(
-        cls,
-        spark: SparkSession,
-        path: str,
-        df: DataFrame,
-        stats_columns: list[str] | None = None,
-    ) -> "ManagedTable":
+    def create(cls, spark: SparkSession, path: str, df: DataFrame) -> "ManagedTable":
         """Materialize ``df`` as version 0 of a new managed table.
 
-        ``stats_columns`` opts the table into per-file min/max stats for
-        those columns at EVERY data write (create/insert/rewrite/merge) —
-        the Delta data-skipping discipline.  The column list is recorded
-        in the manifest and carried forward by every commit, so the
-        policy is durable table metadata, not a per-call flag; ``merge``
-        uses the stats to prune its key probes to range-overlapping
-        files.  Locally the stats job is a second file-parallel read of
-        just-written files (file-count-sized result); a production writer
-        collects the same min/max inline during the write."""
+        Like every data write (create/insert/rewrite/merge/compact), the
+        commit records per-file min/max of the table's integer columns,
+        lifted from the footers just written (``_collect_file_stats``);
+        ``merge`` and ``scan_box`` prune files by them."""
         table = cls(spark, path)
         if table.versions():
             raise ValueError(f"managed table already exists at {path}")
-        if stats_columns:
-            table._validate_stats_columns(df.schema, stats_columns)
         files = table._write_data_files(df)
         table._commit(
             0,
             files,
             schema=df.schema,
             op="create",
-            stats_columns=stats_columns,
-            new_stats=(
-                table._collect_file_stats(files, df.schema, stats_columns)
-                if stats_columns
-                else None
-            ),
+            new_stats=table._collect_file_stats(files, df.schema),
         )
         return table
-
-    @staticmethod
-    def _validate_stats_columns(schema, columns: list[str]) -> None:
-        """Stats values must be JSON-native and meaningfully ordered —
-        numeric/string/boolean top-level columns only."""
-        from pyspark.sql.types import (
-            BooleanType,
-            ByteType,
-            DoubleType,
-            FloatType,
-            IntegerType,
-            LongType,
-            ShortType,
-            StringType,
-        )
-
-        ok_types = (
-            ByteType, ShortType, IntegerType, LongType,
-            FloatType, DoubleType, StringType, BooleanType,
-        )
-        fields = {f.name: f for f in schema.fields}
-        for c in columns:
-            if c not in fields:
-                raise ValueError(f"stats column {c!r} not in table schema")
-            if not isinstance(fields[c].dataType, ok_types):
-                raise ValueError(
-                    f"stats column {c!r} has non-JSON-orderable type "
-                    f"{fields[c].dataType}"
-                )
-
-    def stats_columns(self, version: int | None = None) -> list[str]:
-        """The table's recorded stats-column policy (empty = stats off)."""
-        v = self.current_version() if version is None else version
-        return self._manifest(v).get("stats_columns", [])
 
     def versions(self) -> list[int]:
         if not os.path.isdir(self._manifest_dir):
@@ -170,9 +130,8 @@ class ManagedTable:
     def read(self, version: int | None = None) -> DataFrame:
         """The table as of ``version`` (default: latest snapshot).
 
-        When the manifest records a schema (every table committed since
-        schema tracking landed), the scan is planned FROM that schema —
-        files written before an evolution lack the added columns and the
+        The scan is planned FROM the schema the manifest records — files
+        written before an evolution lack the added columns and the
         Parquet reader fills them with NULL; no per-file footer merging
         ever happens at planning time (``mergeSchema`` over 800 k files
         reads 800 k footers on the driver — the manifest read is one JSON).
@@ -182,17 +141,11 @@ class ManagedTable:
         files = self._files(v)
         schema = self._schema(v)
         if not files:
-            if schema is not None:
-                return self.spark.createDataFrame([], schema)
-            # Pre-schema-tracking empty snapshot: replay version 0.
-            return self.spark.read.parquet(*self._files(0)).limit(0)
+            return self.spark.createDataFrame([], schema)
         return self._read_files(files, schema)
 
     def _read_files(self, files: list[str], schema) -> DataFrame:
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.parquet(*files)
+        return self.spark.read.schema(schema).parquet(*files)
 
     # -- mutations (each commits one new version) ----------------------------
 
@@ -214,7 +167,7 @@ class ManagedTable:
         exactly-once handle (``stream_ivf_ingest``): a replayed batch
         checks ``last_txn`` and skips."""
         base = self.current_version()
-        base_schema = self._schema(base) or self.read(base).schema
+        base_schema = self._schema(base)
         base_fields = {f.name: f for f in base_schema.fields}
         batch_fields = {f.name: f for f in df.schema.fields}
         missing = [n for n in base_fields if n not in batch_fields]
@@ -232,8 +185,6 @@ class ManagedTable:
                 f"insert batch adds columns {[f.name for f in extra]}; "
                 "pass evolve_schema=True to widen the table schema"
             )
-        from pyspark.sql.types import StructField, StructType
-
         new_schema = StructType(
             list(base_schema.fields)
             + [StructField(f.name, f.dataType, nullable=True) for f in extra]
@@ -246,7 +197,7 @@ class ManagedTable:
             schema=new_schema,
             txn=txn,
             op="insert",
-            new_stats=self._stats_for_new_files(base, new_files, new_schema),
+            new_stats=self._collect_file_stats(new_files, new_schema),
         )
 
     ZORDER_BITS = 8  # per-dimension grid for z-order compaction
@@ -277,10 +228,8 @@ class ManagedTable:
         along the Morton curve over those (numeric) columns — ONE range
         shuffle (``repartitionByRange`` on the interleaved z-value +
         ``sortWithinPartitions``, exactly what OPTIMIZE ZORDER plans) —
-        and the new manifest records per-file min/max stats for the
-        z-order columns, collected with one metadata-sized aggregate over
-        the just-written files (a production writer lifts the same stats
-        from the Parquet footers it just wrote).  ``scan_box`` then
+        and the integer columns' per-file min/max stats, recorded like at
+        every write, become tight boxes.  ``scan_box`` then
         prunes files whose stat boxes miss a query's box predicate: the
         z-curve keeps every dimension's range tight within each file, so
         a 2-D box touches few files — multi-dimensional data skipping,
@@ -305,29 +254,17 @@ class ManagedTable:
         n = target_files or max(1, -(-small_bytes // (128 << 20)))
         schema = self._schema(base)
         merged = self._read_files(small, schema)
-        # One stats pass covers BOTH column sets: the z-order columns (the
-        # scan_box read path) and the table's recorded stats policy (the
-        # merge-probe pruning path) — compaction must not silently strip
-        # merge-key stats from the files it rewrites.
-        stat_cols = list(
-            dict.fromkeys(
-                (zorder_by or []) + (self._manifest(base).get("stats_columns") or [])
-            )
-        )
         if zorder_by:
-            clustered = self._zorder(merged, zorder_by, n)
-            new_files = self._write_data_files(clustered)
+            new_files = self._write_data_files(self._zorder(merged, zorder_by, n))
         else:
             new_files = self._write_data_files(merged.coalesce(n))
-        new_stats = (
-            self._collect_file_stats(new_files, schema, stat_cols)
-            if stat_cols
-            else None
-        )
         small_set = set(small)
         untouched = [f for f in files if f not in small_set]
         return self._commit(
-            base + 1, untouched + new_files, op="compact", new_stats=new_stats
+            base + 1,
+            untouched + new_files,
+            op="compact",
+            new_stats=self._collect_file_stats(new_files, schema),
         )
 
     def _zorder(self, df: DataFrame, columns: list[str], n_files: int) -> DataFrame:
@@ -350,78 +287,39 @@ class ManagedTable:
             .drop("__z")
         )
 
-    def _collect_file_stats(
-        self, files: list[str], schema, columns: list[str]
-    ) -> dict[str, dict]:
-        """Per-file min/max for ``columns`` over just-written ``files``.
-
-        Fast path: the Parquet FOOTERS of the just-written files already
-        carry exact per-row-group min/max for integer columns, so the
-        driver lifts the stats from metadata — zero Spark jobs (this is
-        what a production writer does: stats come from the write itself).
-        Non-integer columns fall back to the original one-job aggregate:
-        binary (string) footer stats may be writer-truncated and
-        float/double footer stats are unreliable under NaN (where Spark's
-        ``max`` additionally orders NaN greatest), so only integral
-        min/max are bit-identical to the aggregate by the Parquet spec.
-        """
-        footer = self._footer_file_stats(files, schema, columns)
-        if footer is not None:
-            return footer
-        rows = (
-            self._read_files(files, schema)
-            .groupBy(F.col("_metadata.file_path").alias("__fp"))
-            .agg(
-                *[F.min(c).alias(f"mn_{i}") for i, c in enumerate(columns)],
-                *[F.max(c).alias(f"mx_{i}") for i, c in enumerate(columns)],
-            )
-            .collect()
-        )
-        out: dict[str, dict] = {}
-        for row in rows:
-            path = self._local_path(row["__fp"])
-            out[path] = {
-                c: [row[f"mn_{i}"], row[f"mx_{i}"]] for i, c in enumerate(columns)
-            }
-        return out
+    @classmethod
+    def _collect_file_stats(cls, files: list[str], schema) -> dict[str, dict]:
+        """Per-file [min, max] of every top-level integer column of
+        ``schema`` over just-written ``files``, lifted on the driver from
+        their Parquet footers — zero Spark jobs (a production writer's
+        stats come from the write itself).  Only integral footer min/max
+        are exact by the Parquet spec: binary (string) stats may be
+        writer-truncated and float/double stats are unreliable under NaN,
+        so other columns get no entry and are never pruned on."""
+        stats = cls._footer_file_stats(files, schema, schema.fieldNames())
+        return {f: s for f, s in stats.items() if s}
 
     @staticmethod
     def _footer_file_stats(
         files: list[str], schema, columns: list[str]
-    ) -> dict[str, dict] | None:
-        """Exact per-file [min, max] for integral ``columns`` straight
-        from local Parquet footers, or None when any column is
-        non-integral / any footer lacks usable statistics / the files are
-        not local (the caller then runs the Spark aggregate).  Matches the
-        aggregate exactly: empty files get no entry (the scan produces no
-        group row for them) and all-NULL files get [None, None]."""
-        from pyspark.sql.types import (
-            ByteType,
-            IntegerType,
-            LongType,
-            ShortType,
-        )
+    ) -> dict[str, dict]:
+        """Exact per-file [min, max] for the integral ``columns`` straight
+        from local Parquet footers, equal to a per-file Spark min/max
+        aggregate: empty files get no entry and all-NULL columns get
+        [None, None].  Every non-empty file gets an entry; a column that
+        is non-integral, or whose footer in that file lacks usable
+        statistics, is left out of that file's entry only."""
+        import pyarrow.parquet as pq
 
-        if schema is None or not files:
-            return None
         fields = {f.name: f for f in schema.fields}
-        int_types = (ByteType, ShortType, IntegerType, LongType)
-        for c in columns:
-            f = fields.get(c)
-            if f is None or not isinstance(f.dataType, int_types):
-                return None
-        if any("://" in f for f in files):
-            return None  # object-store paths: let Spark read the footers
-        try:
-            import pyarrow.parquet as pq
-        except ImportError:
-            return None
+        columns = [
+            c
+            for c in columns
+            if c in fields and isinstance(fields[c].dataType, _INT_TYPES)
+        ]
         out: dict[str, dict] = {}
         for path in files:
-            try:
-                md = pq.read_metadata(path)
-            except OSError:
-                return None
+            md = pq.read_metadata(path)
             if md.num_rows == 0:
                 continue
             idx = {
@@ -431,19 +329,18 @@ class ManagedTable:
             fstats: dict[str, list] = {}
             for c in columns:
                 if c not in idx:
-                    return None
+                    continue
                 lo = hi = None
                 for g in range(md.num_row_groups):
                     st = md.row_group(g).column(idx[c]).statistics
-                    if st is None:
-                        return None
+                    if st is None or (st.num_values and not st.has_min_max):
+                        break
                     if st.num_values == 0:
                         continue  # all-NULL row group contributes nothing
-                    if not st.has_min_max:
-                        return None
                     lo = st.min if lo is None else min(lo, st.min)
                     hi = st.max if hi is None else max(hi, st.max)
-                fstats[c] = [lo, hi]
+                else:
+                    fstats[c] = [lo, hi]
             out[path] = fstats
         return out
 
@@ -494,9 +391,7 @@ class ManagedTable:
             if hi is not None:
                 condition = condition & (F.col(col) <= F.lit(hi))
         if not kept:
-            if schema is not None:
-                return self.spark.createDataFrame([], schema), 0, total
-            return self.read(v).limit(0), 0, total
+            return self.spark.createDataFrame([], schema), 0, total
         return self._read_files(kept, schema).filter(condition), len(kept), total
 
     def clone_shallow(self, dest_path: str) -> "ManagedTable":
@@ -523,11 +418,6 @@ class ManagedTable:
             schema=self._schema(base),
             op="clone",
             new_stats=self._manifest(base).get("stats"),
-            # The stats-column policy is table metadata and must survive
-            # the clone — dropping it would make every later write to the
-            # clone collect no stats and compact() strip the inherited
-            # merge-key stats it was supposed to preserve.
-            stats_columns=self._manifest(base).get("stats_columns"),
         )
         return clone
 
@@ -683,11 +573,7 @@ class ManagedTable:
         # Columns evolve append-only; diff in the OLD schema so a pure
         # ADD COLUMN produces no phantom changes for untouched rows.
         schema = self._schema(from_version)
-        cols = (
-            [f.name for f in schema.fields]
-            if schema is not None
-            else self.read(from_version).columns
-        )
+        cols = [f.name for f in schema.fields]
 
         def side(files: set[str]) -> DataFrame:
             if not files:
@@ -747,7 +633,7 @@ class ManagedTable:
         import shutil
 
         base = self.current_version()
-        base_schema = self._schema(base) or self.read(base).schema
+        base_schema = self._schema(base)
         target_cols = [f.name for f in base_schema.fields]
         base_fields = {f.name: f for f in base_schema.fields}
         if update_assignments:
@@ -808,15 +694,16 @@ class ManagedTable:
                 # The batch's key span: a materialized source just wrote
                 # its rows to local scratch Parquet, so for integral keys
                 # the exact [min, max] is already in the scratch FOOTERS —
-                # lifted on the driver, no Spark job.  Non-materialized or
-                # non-integral sources keep the one-job aggregate.
+                # lifted on the driver, no Spark job.  A non-materialized
+                # source, or a footer without key stats, keeps the one-job
+                # aggregate.
                 b_lo = b_hi = None
                 probed = False
                 if scratch_files:
                     fst = self._footer_file_stats(
                         scratch_files, source.schema, [on]
                     )
-                    if fst is not None:
+                    if all(on in v for v in fst.values()):
                         los = [v[on][0] for v in fst.values() if v[on][0] is not None]
                         his = [v[on][1] for v in fst.values() if v[on][1] is not None]
                         b_lo = min(los) if los else None
@@ -851,8 +738,6 @@ class ManagedTable:
                     ]
                     boxed_set = set(boxed)
                     unboxed_set = {f for f in span if f not in boxed_set}
-                    from pyspark.sql.types import StringType, StructField, StructType
-
                     key_type = base_fields[on].dataType
                     boxes = self.spark.createDataFrame(
                         [(f, stats[f][on][0], stats[f][on][1]) for f in boxed],
@@ -1004,7 +889,7 @@ class ManagedTable:
                 untouched + new_files,
                 txn=txn,
                 op="merge",
-                new_stats=self._stats_for_new_files(base, new_files, base_schema),
+                new_stats=self._collect_file_stats(new_files, base_schema),
             )
         finally:
             if joined is not None:
@@ -1027,35 +912,24 @@ class ManagedTable:
 
     def _rewrite(self, condition: Column, transform, op: str) -> int:
         base = self.current_version()
+        schema = self._schema(base)
         affected = self._affected_files(self._with_file_path(base).filter(condition))
         new_files: list[str] = []
         if affected:
             # Schema-aware read: after a schema evolution the affected set
             # can mix file eras; inferring from one sampled footer would
             # silently drop evolved columns from the rewritten rows.
-            rewritten = transform(self._read_files(affected, self._schema(base)))
-            new_files = self._write_data_files(rewritten)
+            new_files = self._write_data_files(
+                transform(self._read_files(affected, schema))
+            )
         affected_set = set(affected)
         untouched = [f for f in self._files(base) if f not in affected_set]
         return self._commit(
             base + 1,
             untouched + new_files,
             op=op,
-            new_stats=self._stats_for_new_files(base, new_files, self._schema(base)),
+            new_stats=self._collect_file_stats(new_files, schema),
         )
-
-    def _stats_for_new_files(
-        self, base: int, new_files: list[str], schema
-    ) -> dict[str, dict] | None:
-        """Min/max stats for just-written files, per the table's recorded
-        stats-column policy (None when the policy is off or nothing was
-        written — commits then carry prior stats forward unchanged)."""
-        cols = self._manifest(base).get("stats_columns") if base >= 0 else None
-        if not cols or not new_files:
-            return None
-        if schema is None:
-            schema = self._schema(base)
-        return self._collect_file_stats(new_files, schema, cols)
 
     def _with_file_path(self, version: int, files: list[str] | None = None) -> DataFrame:
         if files is None:
@@ -1103,7 +977,6 @@ class ManagedTable:
         txn=None,
         op: str = "write",
         new_stats: dict[str, dict] | None = None,
-        stats_columns: list[str] | None = None,
     ) -> int:
         """Atomically publish ``version``.  The manifest records the
         snapshot's schema: passed explicitly by schema-changing commits
@@ -1120,9 +993,9 @@ class ManagedTable:
 
         Per-file stats ride the same protocol: stats for files CARRIED
         from the previous manifest carry with them (immutable files keep
-        immutable stats); ``new_stats`` adds entries for files written by
-        this commit (today: z-order compaction).  Files without stats are
-        simply never pruned."""
+        immutable stats); ``new_stats`` adds the entries every data write
+        collects for the files it wrote (``_collect_file_stats``).  Files
+        without stats are simply never pruned."""
         os.makedirs(self._manifest_dir, exist_ok=True)
         if schema is None and version > 0:
             schema = self._schema(version - 1)
@@ -1137,19 +1010,12 @@ class ManagedTable:
         stats = {f: s for f, s in prev_stats.items() if f in file_set}
         if new_stats:
             stats.update({f: s for f, s in new_stats.items() if f in file_set})
-        # The stats-column policy is table metadata: set once at create,
-        # carried forward by every later commit (like txns and schema).
-        if stats_columns is None and version > 0:
-            stats_columns = self._manifest(version - 1).get("stats_columns")
         payload = {"version": version, "files": files, "op": op}
-        if stats_columns:
-            payload["stats_columns"] = stats_columns
         if stats:
             payload["stats"] = stats
         if txns:
             payload["txns"] = txns
-        if schema is not None:
-            payload["schema"] = schema.json()
+        payload["schema"] = schema.json()
         manifest = os.path.join(self._manifest_dir, f"v{version:05d}.json")
         # Write-temp-then-link = the commit point.  Streaming json.dump
         # into the final name would make a half-written manifest visible
@@ -1206,11 +1072,5 @@ class ManagedTable:
         return self._manifest(self.current_version()).get("txns", {}).get(app)
 
     def _schema(self, version: int):
-        """The schema the manifest records for ``version`` (None for
-        manifests written before schema tracking)."""
-        raw = self._manifest(version).get("schema")
-        if raw is None:
-            return None
-        from pyspark.sql.types import StructType
-
-        return StructType.fromJson(json.loads(raw))
+        """The schema the manifest records for ``version``."""
+        return StructType.fromJson(json.loads(self._manifest(version)["schema"]))

@@ -382,14 +382,7 @@ def read_manifest_parquet(spark: SparkSession, path: str) -> DataFrame:
 
 
 def register_readings_source(spark: SparkSession) -> None:
-    """Register the connector (idempotent — re-registration replaces).
-
-    Also enables Python-source filter pushdown on sessions not built by
-    :func:`simple_query_engine_spark.session.get_spark` (the conf is
-    runtime-settable; without it Spark refuses to plan a reader that
-    implements ``pushFilters``).
-    """
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    """Register the connector (idempotent — re-registration replaces)."""
     spark.dataSource.register(ReadingsDataSource)
 
 

@@ -160,12 +160,10 @@ def upsert_users_batch(
         if not t.versions():
             # Empty shell first, then the normal txn-stamped merge path: a
             # crash between the two replays into an exists+no-txn state that
-            # simply merges again (nothing was applied).  stats_columns on
-            # the merge key: each micro-batch's merge probes prune to files
-            # whose user_id box overlaps the batch (VERDICT r13 item 2).
-            ManagedTable.create(
-                spark, table_path, agg.limit(0), stats_columns=["user_id"]
-            )
+            # simply merges again (nothing was applied).  Every write
+            # records the user_id key's per-file box, so each micro-batch's
+            # merge probes prune to files whose box overlaps the batch.
+            ManagedTable.create(spark, table_path, agg.limit(0))
         last = t.last_txn(UPSERT_APP)
         if last is not None and batch_id <= last:
             return  # replayed batch: already in the snapshot

@@ -180,7 +180,7 @@ def test_shingle_df_cap_is_inert_at_test_scale(spark, sf_dir):
     assert sorted(map(tuple, uncapped)) == sorted(map(tuple, capped))
 
 
-def test_label_propagation_doubles_pointers_on_chains(spark):
+def test_label_propagation_doubles_pointers_on_chains(spark, monkeypatch):
     """A 64-link chain needs ~63 rounds under plain neighbor-min
     propagation; pointer doubling must converge in O(log n) rounds and
     still label every node with the component minimum.  The local-edge
@@ -196,19 +196,16 @@ def test_label_propagation_doubles_pointers_on_chains(spark):
     edges = one_way.union(
         one_way.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    spark.conf.set(D.CC_LOCAL_EDGE_CAP_CONF, "0")
-    try:
-        labels, rounds = D._propagate_labels(edges, max_iterations=15)
-        rows = labels.collect()
-    finally:
-        spark.conf.unset(D.CC_LOCAL_EDGE_CAP_CONF)
+    monkeypatch.setattr(D, "CC_LOCAL_EDGE_CAP", 0)
+    labels, rounds = D._propagate_labels(edges, max_iterations=15)
+    rows = labels.collect()
     assert len(rows) == n
     assert all(r.label == 0 for r in rows)
     assert 1 <= rounds <= 8, f"took {rounds} rounds for a {n}-chain"
     labels.unpersist()
 
 
-def test_local_components_fast_path_matches_distributed(spark):
+def test_local_components_fast_path_matches_distributed(spark, monkeypatch):
     """The size-adaptive driver union-find and the distributed
     pointer-doubling rounds must compute the IDENTICAL min-label
     fixpoint — chains (deep trees), a star, a cycle, singleton-pair and
@@ -233,16 +230,13 @@ def test_local_components_fast_path_matches_distributed(spark):
     )
     fast, fast_rounds = D._propagate_labels(edges)
     assert fast_rounds == 0, "small graph must take the driver fast path"
-    spark.conf.set(D.CC_LOCAL_EDGE_CAP_CONF, "0")
-    try:
-        slow, slow_rounds = D._propagate_labels(edges)
-        assert slow_rounds >= 1, "cap=0 must force the distributed path"
-        assert (
-            sorted((r.doc_id, r.label) for r in fast.collect())
-            == sorted((r.doc_id, r.label) for r in slow.collect())
-        )
-    finally:
-        spark.conf.unset(D.CC_LOCAL_EDGE_CAP_CONF)
+    monkeypatch.setattr(D, "CC_LOCAL_EDGE_CAP", 0)
+    slow, slow_rounds = D._propagate_labels(edges)
+    assert slow_rounds >= 1, "cap=0 must force the distributed path"
+    assert (
+        sorted((r.doc_id, r.label) for r in fast.collect())
+        == sorted((r.doc_id, r.label) for r in slow.collect())
+    )
 
 
 def test_cc_scratch_root_session_conf_roundtrip(spark, sf_dir, tmp_path, monkeypatch):
@@ -264,7 +258,7 @@ def test_cc_scratch_root_session_conf_roundtrip(spark, sf_dir, tmp_path, monkeyp
     # The materialization assertion below is about the DISTRIBUTED
     # rounds' parquet round-trip; pin cap=0 so the tiny graph can't take
     # the driver fast path (which writes nothing).
-    spark.conf.set(D.CC_LOCAL_EDGE_CAP_CONF, "0")
+    monkeypatch.setattr(D, "CC_LOCAL_EDGE_CAP", 0)
     key = f"_scratch_root_test_{uuid.uuid4().hex[:8]}"
     try:
         one_way = spark.createDataFrame([(0, 1), (1, 2)], ["src", "dst"])
@@ -294,7 +288,6 @@ def test_cc_scratch_root_session_conf_roundtrip(spark, sf_dir, tmp_path, monkeyp
     finally:
         caching._MATERIALIZED.pop(key, None)
         spark.conf.unset(SCRATCH_CONF)
-        spark.conf.unset(D.CC_LOCAL_EDGE_CAP_CONF)
 
 
 def test_signatures_are_deterministic(spark, sf_dir):
@@ -889,22 +882,20 @@ def test_graph_fast_paths_match_distributed(spark, sf_dir, monkeypatch):
         D.q_graph_kcore_neardup,
     ):
         driver = q(spark, sf_dir)
-        try:
-            spark.conf.set(D.CC_LOCAL_EDGE_CAP_CONF, "0")
+        with monkeypatch.context() as m:
+            m.setattr(D, "CC_LOCAL_EDGE_CAP", 0)
             per_component = q(spark, sf_dir)
             assert "FlatMapGroupsInPandas" in (
                 per_component._jdf.queryExecution().executedPlan().toString()
             ), q.__name__
-            spark.conf.set(D.CC_LOCAL_EDGE_CAP_CONF, "1")
+            m.setattr(D, "CC_LOCAL_EDGE_CAP", 1)
             probes.clear()
             over_cap = q(spark, sf_dir)
-            assert len(probes) == 1, (q.__name__, len(probes))
-            expected = sorted(map(tuple, driver.collect()))
-            for other in (per_component, over_cap):
-                assert driver.dtypes == other.dtypes, q.__name__
-                assert expected == sorted(map(tuple, other.collect())), q.__name__
-        finally:
-            spark.conf.unset(D.CC_LOCAL_EDGE_CAP_CONF)
+        assert len(probes) == 1, (q.__name__, len(probes))
+        expected = sorted(map(tuple, driver.collect()))
+        for other in (per_component, over_cap):
+            assert driver.dtypes == other.dtypes, q.__name__
+            assert expected == sorted(map(tuple, other.collect())), q.__name__
 
 
 def test_label_spread_solver_orders_null_labels_first():
@@ -941,7 +932,7 @@ def test_label_spread_solver_orders_null_labels_first():
     }
 
 
-def test_solve_graph_empty_edges_both_placements(spark):
+def test_solve_graph_empty_edges_both_placements(spark, monkeypatch):
     """An empty edge list yields an empty, correctly typed result from
     every graph solver, on the driver and per component alike."""
     edges = spark.createDataFrame(
@@ -953,10 +944,8 @@ def test_solve_graph_empty_edges_both_placements(spark):
         (D._kcore_solver, "peel_round bigint, in_core bigint, core_degree bigint"),
     ):
         driver = D._solve_graph(edges, solver, schema)
-        spark.conf.set(D.CC_LOCAL_EDGE_CAP_CONF, "0")
-        try:
+        with monkeypatch.context() as m:
+            m.setattr(D, "CC_LOCAL_EDGE_CAP", 0)
             per_component = D._solve_graph(edges, solver, schema)
-            assert driver.dtypes == per_component.dtypes, solver.__name__
-            assert driver.collect() == per_component.collect() == [], solver.__name__
-        finally:
-            spark.conf.unset(D.CC_LOCAL_EDGE_CAP_CONF)
+        assert driver.dtypes == per_component.dtypes, solver.__name__
+        assert driver.collect() == per_component.collect() == [], solver.__name__

@@ -3,6 +3,7 @@ atomic commits, time travel, and merge semantics."""
 
 from __future__ import annotations
 
+import json
 import os
 import re
 
@@ -181,7 +182,6 @@ def test_concurrent_commit_exactly_one_winner(spark, tmp_path, people):
     """N real processes racing the same version commit: exactly one wins,
     every loser gets TableVersionConflict, and the surviving manifest is
     the winner's intact file list (no torn/mixed write)."""
-    import json
     import multiprocessing
 
     t = ManagedTable.create(spark, str(tmp_path / "t"), people)
@@ -496,18 +496,21 @@ def test_zorder_compact_records_stats_and_skips_files(spark, tmp_path):
     # 32x32 grid, hash-scattered across 8 files: every pre-compact file
     # spans essentially the whole (x, y) space.
     grid = spark.createDataFrame(
-        [(x, y, x * 32 + y) for x, y in itertools.product(range(32), range(32))],
-        "x long, y long, payload long",
+        [
+            (x, y, x * 32 + y, x * 0.5)
+            for x, y in itertools.product(range(32), range(32))
+        ],
+        "x long, y long, payload long, w double",
     )
     t = ManagedTable.create(spark, str(tmp_path / "t"), grid.repartition(8))
     v = t.compact(zorder_by=["x", "y"], target_files=16)
     assert v == 1
 
-    # Stats recorded for every new file, for exactly the z-order columns.
+    # Stats recorded for every new file, for exactly the integer columns.
     stats = t._manifest(v)["stats"]
     assert set(stats) == set(t._files(v))
     for fstats in stats.values():
-        assert set(fstats) == {"x", "y"}
+        assert set(fstats) == {"x", "y", "payload"}
         assert fstats["x"][0] <= fstats["x"][1]
 
     # 2-D box = one quadrant; pruning must skip files AND stay exact.
@@ -524,14 +527,14 @@ def test_zorder_compact_records_stats_and_skips_files(spark, tmp_path):
     # open at most half the files (measured locality, not just > 0).
     assert n_read <= n_total // 2
 
-    # Open-ended ranges and unstatted columns never prune.
-    _, all_read, _ = t.scan_box({"payload": (0, 0)})
+    # Unstatted columns never prune: the double w has no stats entry.
+    _, all_read, _ = t.scan_box({"w": (0, 0)})
     assert all_read == n_total
 
 
 def test_zorder_stats_carry_through_later_commits(spark, tmp_path):
-    """Stats ride the manifest like files do: carried for untouched
-    files, absent for rewritten ones (pruning stays an optimization)."""
+    """Stats ride the manifest like files do: carried unchanged for
+    untouched files, collected afresh for rewritten ones."""
     df = spark.createDataFrame(
         [(i, i % 10, float(i)) for i in range(1000)], "id long, bucket long, v double"
     )
@@ -542,11 +545,15 @@ def test_zorder_stats_carry_through_later_commits(spark, tmp_path):
     # Delete touches only files whose stats boxes contain id < 50.
     t.delete_where(F.col("id") < 50)
     manifest = t._manifest(t.current_version())
-    carried = set(manifest.get("stats", {}))
     untouched = set(manifest["files"]) & set(stats_before)
-    assert carried == untouched  # rewritten files: no stats, never pruned
-    for f in carried:
-        assert manifest["stats"][f] == stats_before[f]
+    rewritten = set(manifest["files"]) - untouched
+    assert untouched and rewritten
+    assert set(manifest["stats"]) == set(manifest["files"])
+    for f in untouched:
+        assert json.dumps(manifest["stats"][f]) == json.dumps(stats_before[f])
+    for f in rewritten:
+        assert set(manifest["stats"][f]) == {"id", "bucket"}
+        assert manifest["stats"][f]["id"][0] >= 50
 
     # A box read after the partial rewrite is still exact.
     boxed, n_read, n_total = t.scan_box({"id": (900, 999)})
@@ -899,43 +906,95 @@ def test_crash_between_temp_write_and_link_strands_nothing_vital(
     assert not os.path.exists(stranded_path)
 
 
-def test_stats_policy_recorded_and_maintained_by_every_write(spark, tmp_path, people):
-    """stats_columns at create is durable table metadata: every later
-    write (insert / rewrite / merge) collects min/max for those columns
-    on its new files, so the manifest's stats cover EVERY live file at
-    every version."""
-    t = ManagedTable.create(
-        spark, str(tmp_path / "t"), people, stats_columns=["id", "balance"]
-    )
-    t.insert(people.withColumn("id", F.col("id") + 100))
-    t.update(F.col("id") == 5, {"balance": F.lit(999.0)})
+def test_every_write_records_integer_column_stats(
+    spark, tmp_path, people, monkeypatch
+):
+    """Every data write — create, insert, update, merge, plain and
+    z-order compaction, and an insert into a shallow clone — records
+    per-file [min, max] for exactly the table's integer columns (``id``;
+    not the double ``balance`` or the strings ``name`` and ``parity``),
+    so the manifest's stats cover EVERY live file at every version.  The
+    stats come from the written files' footers: collecting them launches
+    no Spark job."""
+    sc = spark.sparkContext
+    collect = ManagedTable.__dict__["_collect_file_stats"].__func__
+    calls = []
+
+    def in_job_group(cls, files, schema):
+        calls.append(len(files))
+        sc.setJobGroup("collect_file_stats_probe", "stats")
+        try:
+            return collect(cls, files, schema)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(ManagedTable, "_collect_file_stats", classmethod(in_job_group))
+
+    def assert_integer_boxes(table):
+        manifest = table._manifest(table.current_version())
+        assert set(manifest["stats"]) == set(manifest["files"])
+        for box in manifest["stats"].values():
+            assert set(box) == {"id"}
+            lo, hi = box["id"]
+            assert lo <= hi
+
+    t = ManagedTable.create(spark, str(tmp_path / "t"), people.repartition(3))
+    assert_integer_boxes(t)
     src = spark.createDataFrame(
         [(200, "m", 1.0, "even")], "id long, name string, balance double, parity string"
     )
-    t.merge(src, on="id")
-    assert t.stats_columns() == ["id", "balance"]
-    v = t.current_version()
-    manifest = t._manifest(v)
-    stats = manifest.get("stats", {})
-    assert set(stats) == set(manifest["files"])  # every live file covered
-    for box in stats.values():
-        assert set(box) == {"id", "balance"}
-        lo, hi = box["id"]
-        assert lo <= hi
-    # The policy column must exist and be orderable.
-    with pytest.raises(ValueError, match="not in table schema"):
-        ManagedTable.create(spark, str(tmp_path / "bad"), people, stats_columns=["nope"])
+    for write in (
+        lambda: t.insert(people.withColumn("id", F.col("id") + 100)),
+        lambda: t.update(F.col("id") == 5, {"balance": F.lit(999.0)}),
+        lambda: t.merge(src, on="id"),
+        lambda: t.compact(target_files=2),
+        lambda: t.insert(people.withColumn("id", F.col("id") + 300)),
+        lambda: t.compact(zorder_by=["id"], target_files=2),
+    ):
+        base = t.current_version()
+        assert write() == base + 1
+        assert_integer_boxes(t)
+    assert [h["op"] for h in t.history()] == [
+        "create", "insert", "update", "merge", "compact", "insert", "compact",
+    ]
+    # The z-ordered files' fresh boxes prune the next merge's probes.
+    t.merge(
+        src.withColumn("id", F.lit(1).cast("long")),
+        on="id",
+        update_assignments={"balance": F.col("s.balance")},
+    )
+    assert t.last_merge_probe == {"candidate_files": 1, "total_files": 2}
+    assert t.read().filter(F.col("id") == 1).first().balance == 1.0
+    assert_integer_boxes(t)
+    clone = t.clone_shallow(str(tmp_path / "dst"))
+    clone.insert(people.withColumn("id", F.col("id") + 500))
+    assert_integer_boxes(clone)
+
+    assert len(calls) == 9 and all(calls)
+    assert list(sc.statusTracker().getJobIdsForGroup("collect_file_stats_probe")) == []
+    # The tracker does see a job run under a group.
+    sc.setJobGroup("collect_file_stats_control", "control")
+    try:
+        spark.range(3).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("collect_file_stats_control"))
 
 
-def test_merge_prunes_probes_to_key_range_overlapping_files(spark, tmp_path):
-    """On a stats table whose files partition the key range, a merge whose
+def test_merge_prunes_probes_to_key_range_overlapping_files(
+    spark, tmp_path, monkeypatch
+):
+    """On a table whose files partition the key range, a merge whose
     source keys live in ONE file's range probes only that file — and the
     result is identical to the same merge on a stats-less twin."""
     base = spark.range(0, 4000).select(
         F.col("id").alias("k"), (F.col("id") * 2.0).alias("v")
     ).repartitionByRange(8, "k")
-    t_stats = ManagedTable.create(spark, str(tmp_path / "s"), base, stats_columns=["k"])
-    t_plain = ManagedTable.create(spark, str(tmp_path / "p"), base)
+    t_stats = ManagedTable.create(spark, str(tmp_path / "s"), base)
+    with monkeypatch.context() as m:
+        m.setattr(ManagedTable, "_collect_file_stats", lambda *args: {})
+        t_plain = ManagedTable.create(spark, str(tmp_path / "p"), base)
+    assert "stats" not in t_plain._manifest(0)
     src = spark.createDataFrame(
         [(10, -1.0), (20, -2.0), (99999, -3.0)], "k long, v double"
     )
@@ -962,7 +1021,7 @@ def test_merge_pruning_null_only_source_inserts_everything(spark, tmp_path):
     the probe set is empty, no duplicate error fires (NULLs never match),
     and every row flows to WHEN NOT MATCHED."""
     base = spark.range(0, 100).select(F.col("id").alias("k"), F.lit(0.0).alias("v"))
-    t = ManagedTable.create(spark, str(tmp_path / "t"), base, stats_columns=["k"])
+    t = ManagedTable.create(spark, str(tmp_path / "t"), base)
     src = spark.createDataFrame(
         [(None, 1.0), (None, 2.0)], "k long, v double"
     )
@@ -976,50 +1035,10 @@ def test_merge_pruned_dup_check_still_raises_on_matched_duplicates(spark, tmp_pa
     base = spark.range(0, 1000).select(
         F.col("id").alias("k"), F.lit(0.0).alias("v")
     ).repartitionByRange(4, "k")
-    t = ManagedTable.create(spark, str(tmp_path / "t"), base, stats_columns=["k"])
+    t = ManagedTable.create(spark, str(tmp_path / "t"), base)
     dup = spark.createDataFrame([(7, 1.0), (7, 2.0)], "k long, v double")
     with pytest.raises(ValueError, match="multiple rows for matched key"):
         t.merge(dup, on="k", update_assignments={"v": F.col("s.v")})
-
-
-def test_compact_preserves_stats_policy_columns(spark, tmp_path):
-    """Compaction must not strip merge-key stats from rewritten files:
-    on a stats-policy table, compacted files carry stats for BOTH the
-    z-order columns and the policy columns."""
-    base = spark.range(0, 2000).select(
-        F.col("id").alias("k"), (F.col("id") % 7).alias("g"), F.lit(1.0).alias("v")
-    ).repartition(6)
-    t = ManagedTable.create(spark, str(tmp_path / "t"), base, stats_columns=["k"])
-    t.compact(zorder_by=["g"], target_files=2)
-    manifest = t._manifest(t.current_version())
-    stats = manifest["stats"]
-    assert set(stats) == set(manifest["files"])
-    for box in stats.values():
-        assert set(box) == {"g", "k"}
-    # Merge pruning still fires on the compacted table.
-    src = spark.createDataFrame([(1, 0, -1.0)], "k long, g long, v double")
-    t.merge(src, on="k", update_assignments={"v": F.col("s.v")})
-    assert t.last_merge_probe["candidate_files"] <= t.last_merge_probe["total_files"]
-    assert t.read().filter(F.col("k") == 1).first().v == -1.0
-    # Plain (non-zorder) compaction keeps policy stats too.
-    t2 = ManagedTable.create(
-        spark, str(tmp_path / "t2"), base.repartition(6), stats_columns=["k"]
-    )
-    t2.compact(target_files=2)
-    m2 = t2._manifest(t2.current_version())
-    assert set(m2["stats"]) == set(m2["files"])
-
-
-def test_clone_carries_stats_policy(spark, tmp_path, people):
-    """SHALLOW CLONE must carry the stats-column policy: without it every
-    later write to the clone collects no stats and compaction strips the
-    inherited merge-key stats."""
-    t = ManagedTable.create(spark, str(tmp_path / "src"), people, stats_columns=["id"])
-    clone = t.clone_shallow(str(tmp_path / "dst"))
-    assert clone.stats_columns() == ["id"]
-    clone.insert(people.withColumn("id", F.col("id") + 500))
-    m = clone._manifest(clone.current_version())
-    assert set(m["stats"]) == set(m["files"])  # new files got stats too
 
 
 def test_certified_merge_entry_prunes_its_probes(spark, monkeypatch):
@@ -1074,10 +1093,10 @@ def test_footer_stats_match_spark_aggregate(spark, tmp_path, people):
     df = spark.createDataFrame(
         [(7,), (None,), (3,), (99,)], schema
     ).repartition(2)
-    t = ManagedTable.create(spark, str(tmp_path / "t"), df, stats_columns=["k"])
+    t = ManagedTable.create(spark, str(tmp_path / "t"), df)
     files = t._files(0)
     footer = ManagedTable._footer_file_stats(files, schema, ["k"])
-    assert footer is not None and set(footer) <= set(files)
+    assert set(footer) <= set(files)
     agg = (
         t._read_files(files, schema)
         .groupBy(F.col("_metadata.file_path").alias("__fp"))
@@ -1090,12 +1109,15 @@ def test_footer_stats_match_spark_aggregate(spark, tmp_path, people):
     assert {f: s["k"] for f, s in footer.items()} == spark_stats
     # Manifest stats (written via the same path) agree too.
     assert {f: s["k"] for f, s in t._manifest(0)["stats"].items()} == spark_stats
-    # Non-integral columns refuse the footer path (the caller falls back
-    # to the aggregate): balance is double, name is string.
-    assert (
-        ManagedTable._footer_file_stats(files, people.schema, ["balance"]) is None
+    # Non-integral columns get no stats entry: balance is double, name
+    # is string.
+    p = ManagedTable.create(spark, str(tmp_path / "p"), people.repartition(2))
+    p_files = p._files(0)
+    p_stats = ManagedTable._footer_file_stats(
+        p_files, people.schema, ["balance", "name", "id"]
     )
-    assert ManagedTable._footer_file_stats(files, people.schema, ["name"]) is None
+    assert set(p_stats) == set(p_files)
+    assert all(set(box) == {"id"} for box in p_stats.values())
 
 
 def test_all_null_key_source_with_footer_span_probe(spark, tmp_path):
@@ -1107,7 +1129,7 @@ def test_all_null_key_source_with_footer_span_probe(spark, tmp_path):
         [StructField("k", LongType(), True), StructField("v", StringType(), True)]
     )
     base = spark.createDataFrame([(1, "a"), (2, "b")], schema)
-    t = ManagedTable.create(spark, str(tmp_path / "t"), base, stats_columns=["k"])
+    t = ManagedTable.create(spark, str(tmp_path / "t"), base)
     src = spark.createDataFrame([(None, "x"), (None, "y")], schema)
     t.merge(src, on="k", update_assignments={"v": F.col("s.v")})
     assert t.last_merge_probe["candidate_files"] == 0

@@ -58,8 +58,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
-from simple_query_engine_spark.sources.catalog import TABLE_NAMES
-from tools.check_correctness import _table_src, compare, compare_types
+from tools.check_correctness import compare, compare_types, register_views
 
 
 def _naive_utc(rows: list[tuple]) -> list[tuple]:
@@ -183,10 +182,7 @@ def main() -> int:
     amp_dir = ensure_amplified(spark, sf_dir, k, corpus=corpus)
 
     con = duckdb.connect()
-    for name in TABLE_NAMES:
-        path = os.path.join(amp_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{_table_src(path)}'")
+    register_views(con, amp_dir)
 
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()

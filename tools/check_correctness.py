@@ -165,6 +165,17 @@ def _table_src(path: str) -> str:
     return f"{path}/*.parquet"
 
 
+def register_views(con, sf_dir: str) -> None:
+    """One DuckDB view per catalog table present under ``sf_dir``.
+    Driver testdata is one file per table; Spark-written dirs (the
+    amplified fixtures) are directories of part files — ``_table_src``
+    globs those, so the oracle runs against either layout."""
+    for name in TABLE_NAMES:
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        if os.path.exists(path):
+            con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{_table_src(path)}'")
+
+
 def scan_oracle_types(sf_dir: str) -> int:
     """Standing DuckDB-only scan: flag every oracle column whose type is a
     widening hazard (HUGEINT/DECIMAL) — catches the round-5 failure class
@@ -172,15 +183,7 @@ def scan_oracle_types(sf_dir: str) -> int:
     import __spark_entry__ as entrymod
 
     con = duckdb.connect()
-    for name in TABLE_NAMES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if not os.path.exists(path):
-            continue
-        # Driver testdata is one file per table; Spark-written dirs (the
-        # amplified fixtures) are directories of part files — glob those
-        # so the gate runs against either layout.
-        src = _table_src(path)
-        con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{src}'")
+    register_views(con, sf_dir)
     hazards = []
     for name, sql in entrymod.oracle_sql().items():
         try:
@@ -214,15 +217,7 @@ def main() -> int:
 
     spark = get_spark(app_name="correctness-check")
     con = duckdb.connect()
-    for name in TABLE_NAMES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if not os.path.exists(path):
-            continue
-        # Driver testdata is one file per table; Spark-written dirs (the
-        # amplified fixtures) are directories of part files — glob those
-        # so the gate runs against either layout.
-        src = _table_src(path)
-        con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{src}'")
+    register_views(con, sf_dir)
 
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()

@@ -45,7 +45,7 @@ UPDATE_LO, UPDATE_HI = 2_000, 3_000
 INSERT_KEY_BASE = 10**15  # far above any replica's shifted key space
 
 
-def build_table(spark: SparkSession, src_dir: str, path: str, stats: bool):
+def build_table(spark: SparkSession, src_dir: str, path: str):
     from simple_query_engine_spark.sources.catalog import table
     from simple_query_engine_spark.sources.managed import ManagedTable
 
@@ -54,10 +54,7 @@ def build_table(spark: SparkSession, src_dir: str, path: str, stats: bool):
     n_files = max(1, n_rows // ROWS_PER_FILE)
     t0 = time.time()
     t = ManagedTable.create(
-        spark,
-        path,
-        orders.repartitionByRange(n_files, "o_orderkey"),
-        stats_columns=["o_orderkey"] if stats else None,
+        spark, path, orders.repartitionByRange(n_files, "o_orderkey")
     )
     create_sec = time.time() - t0
     return t, n_rows, len(t._files(0)), create_sec
@@ -66,11 +63,18 @@ def build_table(spark: SparkSession, src_dir: str, path: str, stats: bool):
 def probe_scale(
     spark: SparkSession, src_dir: str, label: str, stats: bool
 ) -> dict:
+    """One leg.  ``stats=False`` stubs out the per-file stats every
+    write records, so the leg's merge probes read every file."""
+    from simple_query_engine_spark.sources.managed import ManagedTable
+
+    collect = ManagedTable.__dict__["_collect_file_stats"]
+    if not stats:
+        ManagedTable._collect_file_stats = lambda *args: {}
     root = tempfile.mkdtemp(prefix=f"sqe_dml_scale_{label}_")
     out: dict = {"label": label}
     try:
         t, n_rows, n_files, create_sec = build_table(
-            spark, src_dir, os.path.join(root, "orders_t"), stats
+            spark, src_dir, os.path.join(root, "orders_t")
         )
         out.update(rows=n_rows, files=n_files, create_sec=round(create_sec, 2))
 
@@ -103,6 +107,7 @@ def probe_scale(
         out["merge_files_added"] = len(after - before)
         out["merge_probe_files"] = t.last_merge_probe
     finally:
+        ManagedTable._collect_file_stats = collect
         shutil.rmtree(root, ignore_errors=True)
     return out
 
@@ -121,9 +126,9 @@ def main() -> int:
     result = {
         "sf_dir": sf_dir,
         "k": k,
-        # plain = no stats policy (unpruned full-key merge probes);
-        # stats = per-file o_orderkey min/max recorded at every write and
-        # the merge probes pruned to box-hit files.
+        # plain = per-file stats stubbed out (unpruned full-key merge
+        # probes); stats = per-file o_orderkey min/max recorded at every
+        # write and the merge probes pruned to box-hit files.
         "scales": [
             probe_scale(spark, sf_dir, "1x_plain", stats=False),
             probe_scale(spark, amplified, f"{k}x_plain", stats=False),
