@@ -873,8 +873,8 @@ def q_pipeline_incremental_curation(spark: SparkSession, sf_dir: str) -> DataFra
         materialize_source=False,
         # Keys are unique by construction — edits keep their corpus
         # doc_id (≡ {INC_EDIT_RES} mod {INC_EDIT_MOD}, one row each) and
-        # news live above INC_NEW_OFFSET — so the per-merge duplicate
-        # scan is skippable (one full source job saved).
+        # news live above INC_NEW_OFFSET — so the duplicate check is
+        # off on the caller's word (tests/test_pipeline.py pins it).
         check_duplicate_keys=False,
     )
 

@@ -808,7 +808,7 @@ def ingest_components_batch(
             # still 1.8x the batch wall without it).
             # upd ⊂ standing doc_ids (one row per relabeled doc) and
             # new_rows are anti-joined against them then made distinct —
-            # disjoint and unique, so the duplicate scan is skippable.
+            # disjoint and unique, so the duplicate check is skippable.
             check_duplicate_keys=False,
         )
     finally:

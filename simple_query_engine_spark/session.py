@@ -74,6 +74,14 @@ _DEFAULT_CONF: dict[str, str] = {
     # pyspark-shell) otherwise draws carriage-return [Stage ...] bars on
     # stderr, between the lines of every tool's log.
     "spark.ui.showConsoleProgress": "false",
+    # PySpark otherwise wraps F.col and every Column method in a call-site
+    # capture (pyspark/errors/utils.py, _with_origin): about seven py4j
+    # round trips per call plus a stack walk that imports IPython once per
+    # process.  It only fills the Python file:line of a runtime error's
+    # "DataFrame" query context, which nothing here reads.  A static conf,
+    # so it holds only for sessions get_spark builds (SCALING.md, "Cold
+    # start").
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 
@@ -292,7 +300,9 @@ def configure(spark: SparkSession) -> SparkSession:
 
     Used when the session is handed to us (driver contract ``entry(spark)``)
     instead of built by :func:`get_spark`.  Only runtime-mutable confs are
-    applied; statically-bound ones (master, memory) are left as-is.
+    applied.  Static confs (master, memory, the UI settings and
+    ``spark.python.sql.dataFrameDebugging.enabled``) apply only to sessions
+    that :func:`get_spark` builds; a handed-in session keeps its own.
     """
     for key, value in _DEFAULT_CONF.items():
         if key.startswith("spark.sql."):

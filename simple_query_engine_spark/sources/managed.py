@@ -607,14 +607,18 @@ class ManagedTable:
         rewritten match-files plus appended insert-files land in the same
         manifest, so readers never observe a half-applied merge.
 
+        A merge is two passes over the candidate files: one probe collect
+        (affected files plus the duplicate check), then one write of the
+        update rewrite unioned with the inserts.
+
         Three SQL/Delta-parity disciplines:
 
         - The source is MATERIALIZED once (parquet in a per-run
           ``scratch_dir``, whose age-gated sweep reclaims a crashed
-          merge's copy) before any of the four reads that consume it — a
+          merge's copy) before any of the reads that consume it — a
           non-deterministic source would otherwise present different rows
-          to the duplicate check, the affected-file probe, the update
-          join, and the insert anti-join, losing or duplicating rows
+          to the probe (affected files and duplicate check), the update
+          join and the insert anti-join, losing or duplicating rows
           (Delta materializes the merge source for exactly this reason).
           Callers who KNOW their source is deterministic (a plain file
           scan, a change feed) can pass ``materialize_source=False`` to
@@ -624,6 +628,8 @@ class ManagedTable:
           target row (multiple updates of one target row are ambiguous);
           duplicates that match nothing — including NULL keys, which
           never equal anything — all flow to WHEN NOT MATCHED inserts.
+          The check rides on the affected-file probe, so it costs no job
+          of its own.
         - The source's overlapping columns must carry the table's exact
           types, and the rewritten projection is re-checked against the
           table schema — silently writing divergent types under a
@@ -655,7 +661,6 @@ class ManagedTable:
 
         scratch = None
         scratch_files: list[str] = []
-        joined: DataFrame | None = None
         try:
             if materialize_source:
                 scratch = scratch_dir(self.spark, "merge_src_")
@@ -669,9 +674,9 @@ class ManagedTable:
             # Key-range file pruning (the Delta data-skipping shape): a
             # target row can only MATCH a source key that actually occurs
             # in the batch, so when the manifest carries stats for the
-            # merge key, every probe below — duplicate check,
-            # affected-file probe, insert anti-join — reads ONLY the files
-            # whose recorded [min, max] key box CONTAINS some source key.
+            # merge key, both passes below — the probe and the insert
+            # anti-join — read ONLY the files whose recorded [min, max] key
+            # box CONTAINS some source key.
             # Two stages: the span filter ([src_min, src_max] overlap) is
             # driver-side manifest arithmetic, but a realistic CDC batch
             # mixes low-range updates with high-range inserts and its span
@@ -686,7 +691,6 @@ class ManagedTable:
             # makes merge ∝ batch instead of ∝ table: measured 32× table
             # growth at fixed batch, unpruned probes cost 2.3× wall vs
             # flat pruned (DML_SCALE.json carries the before/after).
-            keys = source.select(on).distinct()
             all_files = self._files(base)
             candidates = all_files
             stats = self._manifest(base).get("stats", {})
@@ -752,7 +756,9 @@ class ManagedTable:
                     # Boxes broadcast (file-count-sized, like the manifest);
                     # the batch's keys stream past them.
                     hits = (
-                        keys.filter(F.col(on).isNotNull())
+                        source.select(on)
+                        .distinct()
+                        .filter(F.col(on).isNotNull())
                         .join(
                             F.broadcast(boxes),
                             (F.col(on) >= F.col("__lo"))
@@ -770,108 +776,87 @@ class ManagedTable:
                 "candidate_files": len(candidates),
                 "total_files": len(all_files),
             }
-            # ONE read+join of the candidate files serves every remaining
-            # probe (fused-probe discipline, guide §2.4): the persisted
-            # target⟕source join yields the candidate key set (duplicate
-            # check, insert anti-join), the affected-file list (which
-            # matched rows' files to rewrite), and the update-rewrite rows
-            # themselves.  Before r18 each was its own job over a fresh
-            # read of the candidate files.  The cache is candidate-sized —
-            # already pruned ∝ batch on a stats table — and is released in
-            # the finally block.
-            matched = F.col("s.__matched").isNotNull()
+            # Pass 1, the probe: the candidate files' (key, file) pairs
+            # inner-join the source's per-key row counts and group by file.
+            # One collect of at most file-count rows names the affected
+            # files and, per file, the largest source multiplicity among
+            # its matched keys with a witness key.  Only the key column
+            # and the file path of the candidate files are read.
+            affected: list[str] = []
             if candidates:
-                marked = source.withColumn("__matched", F.lit(True))
-                joined = (
+                counts = (
+                    source.filter(F.col(on).isNotNull())
+                    .groupBy(on)
+                    .agg(F.count(F.lit(1)).alias("__n"))
+                )
+                probe = (
                     self._with_file_path(base, candidates)
+                    .select(on, "file_path")
+                    .join(counts, on, "inner")
+                    .groupBy("file_path")
+                    .agg(F.max("__n").alias("__n"), F.max_by(on, "__n").alias("__key"))
+                    .collect()
+                )
+                # SQL MERGE semantics: more than one source row per MATCHED
+                # target key is an error, not a silent fan-out of the
+                # matched target rows.  Duplicates that match nothing are
+                # not in the probe.  A caller who can PROVE its keys unique
+                # may skip the check — same caller-asserted contract as
+                # ``materialize_source=False``.
+                dup = max(probe, key=lambda r: r["__n"], default=None)
+                if check_duplicate_keys and dup is not None and dup["__n"] > 1:
+                    raise ValueError(
+                        f"merge source has multiple rows for matched key "
+                        f"{on}={dup['__key']!r}"
+                    )
+                affected = sorted(self._local_path(r["file_path"]) for r in probe)
+
+            # Pass 2, the write: the update rewrite of the affected files
+            # and the not-matched inserts, unioned into ONE job — the
+            # change feed diffs ROWS over the file symmetric difference,
+            # so which new file carries which branch is irrelevant.
+            branches: list[DataFrame] = []
+            if affected:
+                # __matched marks source presence explicitly: probing a
+                # data column would misread legitimately-NULL values as
+                # "no match".
+                matched = F.col("s.__matched").isNotNull()
+                projected = (
+                    self._read_files(affected, base_schema)
                     .alias("t")
                     .join(
-                        marked.alias("s"),
+                        source.withColumn("__matched", F.lit(True)).alias("s"),
                         F.col(f"t.{on}") == F.col(f"s.{on}"),
                         "left",
                     )
-                    .persist()
-                )
-                target_keys = joined.select(F.col(f"t.{on}").alias(on)).distinct()
-            else:
-                target_keys = self.spark.createDataFrame([], base_schema).select(on)
-            # SQL MERGE semantics: more than one source row per MATCHED
-            # target key is an error, not a silent fan-out of the matched
-            # target rows.  The check is one full job over the source; a
-            # caller who can PROVE its keys unique (disjoint
-            # filter-branches of a keyed table, a distinct-keyed delta)
-            # may skip it — same caller-asserted contract as
-            # ``materialize_source=False``, and the safe default stays on.
-            if check_duplicate_keys:
-                dup_keys = (
-                    source.filter(F.col(on).isNotNull())
-                    .groupBy(on)
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .filter(F.col("n") > 1)
-                )
-                dup = dup_keys.join(target_keys, on, "left_semi").limit(1).collect()
-                if dup:
-                    raise ValueError(
-                        f"merge source has multiple rows for matched key "
-                        f"{on}={dup[0][0]!r}"
+                    .select(
+                        *[
+                            (
+                                F.when(matched, update_assignments[name])
+                                .otherwise(F.col(f"t.{name}"))
+                                .alias(name)
+                                if update_assignments and name in update_assignments
+                                else F.col(f"t.{name}").alias(name)
+                            )
+                            for name in target_cols
+                        ]
                     )
-            if joined is not None:
-                # Affected files fall out of the SAME persisted join
-                # (__matched marks source presence explicitly — probing a
-                # data column would misread legitimately-NULL values as
-                # "no match"); only distinct file paths cross to the
-                # driver, bounded by file count, never row count.
-                raw_affected = sorted(
-                    r.file_path
-                    for r in joined.filter(matched)
-                    .select(F.col("t.file_path").alias("file_path"))
-                    .distinct()
-                    .collect()
-                    if r.file_path is not None
-                )
-                affected = sorted(self._local_path(p) for p in raw_affected)
-            else:
-                raw_affected = []
-                affected = []
-
-            # Update-rewrite and not-matched-insert branches are written
-            # in ONE job (union of identically-projected frames): the
-            # change feed diffs ROWS over the file symmetric difference,
-            # so which new file carries which branch is irrelevant, and
-            # a merge costs one write instead of two.
-            branches: list[DataFrame] = []
-            if affected:
-                # Rewrite rows come from the persisted join, restricted to
-                # rows whose file actually holds a match — row-for-row what
-                # re-reading the affected files and re-joining produced
-                # (the join is row-independent), minus the second read.
-                # isin() over a manifest-scale path list keeps the filter
-                # a local predicate; at extreme file counts this would
-                # become a broadcast semi-join on file_path.
-                projected = joined.filter(
-                    F.col("t.file_path").isin(raw_affected)
-                ).select(
-                    *[
-                        (
-                            F.when(matched, update_assignments[name])
-                            .otherwise(F.col(f"t.{name}"))
-                            .alias(name)
-                            if update_assignments and name in update_assignments
-                            else F.col(f"t.{name}").alias(name)
-                        )
-                        for name in target_cols
-                    ]
                 )
                 self._check_merge_schema(projected, base_schema, "update")
                 branches.append(projected)
 
             if insert_not_matched:
-                # target_keys is already the pruned, exact key set: a
-                # table key outside the candidate files lies outside the
-                # source key range and can never anti-join-match.
-                inserts = source.join(target_keys, on, "left_anti").select(
-                    *target_cols
-                )
+                # The candidate files hold every table key that can equal a
+                # source key: a key outside them lies outside every source
+                # key's file box.
+                inserts = source
+                if candidates:
+                    inserts = inserts.join(
+                        self._read_files(candidates, base_schema).select(on),
+                        on,
+                        "left_anti",
+                    )
+                inserts = inserts.select(*target_cols)
                 self._check_merge_schema(inserts, base_schema, "insert")
                 branches.append(inserts)
 
@@ -892,8 +877,6 @@ class ManagedTable:
                 new_stats=self._collect_file_stats(new_files, base_schema),
             )
         finally:
-            if joined is not None:
-                joined.unpersist()
             if scratch is not None:
                 shutil.rmtree(scratch, ignore_errors=True)
 

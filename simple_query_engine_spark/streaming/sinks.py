@@ -140,10 +140,10 @@ def upsert_users_batch(
 
     from simple_query_engine_spark.sources.managed import ManagedTable
 
-    # Cache the rollup: merge() evaluates its source several times (the
-    # duplicate-key guard, the affected-file probe, the rewrite join, and
-    # the not-matched insert) — uncached, each would re-aggregate the
-    # micro-batch from the source files.
+    # Cache the rollup: merge() evaluates its source three times (the
+    # affected-file probe, the rewrite join and the not-matched insert) —
+    # uncached, each would re-aggregate the micro-batch from the source
+    # files.
     rollup = batch_df.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.max("ts").alias("last_ts"),

@@ -123,8 +123,8 @@ def test_merge_check_duplicate_keys_off_skips_scan_and_result_unchanged(
     spark, tmp_path, people
 ):
     """``check_duplicate_keys=False`` is the caller-asserted skip of the
-    per-merge duplicate scan (one full source job): on a unique-keyed
-    source the merge result is identical with the check on or off."""
+    duplicate-key check: on a unique-keyed source the merge result is
+    identical with the check on or off."""
     src_rows = [(3, "updated_3", 999.0, "odd"), (200, "name_200", 2000.0, "even")]
     results = []
     for flag in (True, False):

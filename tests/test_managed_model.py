@@ -13,11 +13,13 @@ schema-evolving insert, vacuum mid-chain, delete over compacted files).
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 
 pytest.importorskip("hypothesis")
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -25,12 +27,13 @@ from pyspark.sql import functions as F
 from simple_query_engine_spark.sources.managed import ManagedTable
 
 # Each op is (tag, param) drawn small: ids stay in a tiny universe so
-# deletes/updates actually hit rows.
+# deletes/updates/merges actually hit rows.
 _OPS = st.lists(
     st.one_of(
         st.tuples(st.just("insert"), st.integers(0, 2)),
         st.tuples(st.just("delete_mod"), st.integers(2, 4)),
         st.tuples(st.just("update_mod"), st.integers(2, 4)),
+        st.tuples(st.just("merge"), st.integers(0, 2)),
         st.tuples(st.just("compact"), st.just(0)),
         st.tuples(st.just("vacuum"), st.just(0)),
     ),
@@ -45,45 +48,76 @@ _OPS = st.lists(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(ops=_OPS)
+# A duplicated source key that matches a row is ambiguous: the merge
+# raises and the table stays at its version.
+@example(ops=[("merge", 1), ("merge_dup", 0), ("compact", 0)])
 def test_random_dml_sequences_match_model(spark, tmp_path_factory, ops):
     path = str(tmp_path_factory.mktemp("mbt") / "t")
 
     def snapshot(table: ManagedTable, version=None):
-        return {
+        return Counter(
             (r.id, r.val) for r in table.read(version).select("id", "val").collect()
-        }
+        )
 
-    # Model: id -> val.  Start with ids 0..9, val = id * 10.
-    model = {i: i * 10 for i in range(10)}
-    t = ManagedTable.create(
-        spark,
-        path,
-        spark.createDataFrame([(i, v) for i, v in model.items()], "id long, val long"),
-    )
+    # Model: the table's (id, val) rows as a multiset, since merges insert
+    # NULL ids and unmatched duplicated ids.  Start with ids 0..9,
+    # val = id * 10.  A NULL id never satisfies a predicate on id.
+    model = [(i, i * 10) for i in range(10)]
+    t = ManagedTable.create(spark, path, spark.createDataFrame(model, "id long, val long"))
     next_id = 100
     # history[v] = model state at version v (None once vacuumed away).
-    history: dict[int, set] = {0: {(i, v) for i, v in model.items()}}
+    history: dict[int, Counter] = {0: Counter(model)}
 
     for tag, param in ops:
         if tag == "insert":
-            batch = {next_id + j: (next_id + j) * 10 for j in range(param + 1)}
+            batch = [(next_id + j, (next_id + j) * 10) for j in range(param + 1)]
             next_id += 10
-            v = t.insert(
-                spark.createDataFrame(
-                    [(i, val) for i, val in batch.items()], "id long, val long"
-                ).coalesce(1)
-            )
-            model.update(batch)
+            v = t.insert(spark.createDataFrame(batch, "id long, val long").coalesce(1))
+            model += batch
         elif tag == "delete_mod":
             v = t.delete_where(F.col("id") % param == 0)
-            model = {i: val for i, val in model.items() if i % param != 0}
+            model = [(i, val) for i, val in model if i is None or i % param != 0]
         elif tag == "update_mod":
             v = t.update(
                 F.col("id") % param == 1, {"val": F.col("val") + F.lit(1)}
             )
-            model = {
-                i: (val + 1 if i % param == 1 else val) for i, val in model.items()
-            }
+            model = [
+                (i, val + 1 if i is not None and i % param == 1 else val)
+                for i, val in model
+            ]
+        elif tag == "merge":
+            # SQL MERGE: matched rows take the source val; new keys, the
+            # NULL key and both rows of the duplicated new key insert.
+            present = sorted({i for i, _ in model if i is not None})
+            updates = {i: i * 10 + 7 for i in present[param::3][:2]}
+            batch = list(updates.items()) + [
+                (next_id, next_id * 10),
+                (None, next_id * 10 + 1),
+                (next_id + 1, next_id * 10 + 2),
+                (next_id + 1, next_id * 10 + 3),
+            ]
+            next_id += 10
+            v = t.merge(
+                spark.createDataFrame(batch, "id long, val long"),
+                on="id",
+                update_assignments={"val": F.col("s.val")},
+            )
+            model = [(i, updates.get(i, val)) for i, val in model] + [
+                r for r in batch if r[0] not in updates
+            ]
+        elif tag == "merge_dup":  # only in the @example: ids 0..9 remain
+            hit = min(i for i, _ in model if i is not None)
+            before = t.current_version()
+            with pytest.raises(ValueError, match="multiple rows for matched key"):
+                t.merge(
+                    spark.createDataFrame(
+                        [(next_id, 1), (hit, 2), (hit, 3)], "id long, val long"
+                    ),
+                    on="id",
+                    update_assignments={"val": F.col("s.val")},
+                )
+            v = t.current_version()
+            assert v == before
         elif tag == "compact":
             v = t.compact(target_files=1)
         else:  # vacuum: drops expired manifests, current state untouched
@@ -92,9 +126,9 @@ def test_random_dml_sequences_match_model(spark, tmp_path_factory, ops):
             for dv in doomed_versions:
                 history.pop(dv, None)
             v = t.current_version()
-        history[v] = {(i, val) for i, val in model.items()}
+        history[v] = Counter(model)
 
-        assert snapshot(t) == {(i, val) for i, val in model.items()}, (tag, param)
+        assert snapshot(t) == Counter(model), (tag, param)
 
     # Time travel: every still-retained version reads as its archived
     # model state (vacuum may have trimmed history; versions() is truth).

@@ -140,3 +140,44 @@ def test_dispatch_routes_sql_and_minilang(spark, sf_dir):
     assert mini.count() == tables["nation"].count()
     with pytest.raises(QueryExecutionError):
         dispatch(spark, "PROJECT n_name")
+
+
+# py4j round trips of one warm PROJECT/FILTER line through dispatch and
+# format_result: 31 on a get_spark session, 71 with PySpark's per-call
+# origin capture on (spark.python.sql.dataFrameDebugging.enabled).
+_WARM_LINE_ROUND_TRIPS = 34
+
+
+def test_warm_minilang_line_round_trip_budget(spark, tmp_path, monkeypatch):
+    """Counts the calling thread's commands only: py4j's finalizer thread
+    sends object releases on its own schedule."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    from simple_query_engine_spark.repl import dispatch, format_result
+    from simple_query_engine_spark.sources.readers import read_csv
+
+    path = tmp_path / "abc.csv"
+    path.write_text("a,b,c\n" + "".join(f"{i},x{i},{i % 7}\n" for i in range(50)))
+    df = read_csv(spark, str(path)).cache()
+    df.count()
+    line = "PROJECT a, b FILTER c = 5"
+    expected = format_result(dispatch(spark, line, df))
+
+    calls = []
+    send = ClientServerConnection.send_command
+    caller = threading.get_ident()
+
+    def counted(self, command):
+        if threading.get_ident() == caller:
+            calls.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    got = format_result(dispatch(spark, line, df))
+    monkeypatch.undo()
+    df.unpersist()
+    assert got == expected
+    assert got.splitlines()[2:] == [f"{i},x{i}" for i in range(5, 50, 7)]
+    assert len(calls) <= _WARM_LINE_ROUND_TRIPS, len(calls)

@@ -188,3 +188,12 @@ def test_fresh_processes_build_then_map_the_archive(tmp_path):
         second.kill()
         shutil.rmtree(root, ignore_errors=True)  # 150 MB or more
     assert "".join(seen) + rest == first.stdout
+
+
+def test_engine_sessions_skip_dataframe_debugging(spark):
+    """``get_spark`` turns off PySpark's per-call origin capture, so no
+    Column call pays its py4j round trips or its IPython import."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
