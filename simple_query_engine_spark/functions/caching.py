@@ -153,12 +153,10 @@ def session_materialize(df: DataFrame, sf_dir: str, key: str) -> DataFrame:
     Why this exists next to ``session_cache``: caching serves the rows
     but leaves the full LOGICAL plan in place, and Spark's classic-mode
     eager analysis re-walks it on every transformation built on top —
-    for the minhash signature table (64 aggregate expressions over a
-    shingle explode) that re-analysis costs seconds per consumer query
-    (measured: graph_label_spread spent ~9 s of a 12 s invocation in
-    JVM analysis/canonicalization of plans embedding the signature
-    subtree).  Each build writes under a fresh ``mkdtemp`` dir, so nothing
-    is ever served across processes."""
+    a wide plan such as the planted minhash signature table pays that
+    re-analysis in every consumer query (see ``dedup._planted_sig``).
+    Each build writes under a fresh ``mkdtemp`` dir, so nothing is ever
+    served across processes."""
     from simple_query_engine_spark.operators.storage import scratch_dir
 
     def build() -> tuple[DataFrame, str, DataFrame]:

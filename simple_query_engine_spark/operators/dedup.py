@@ -67,29 +67,38 @@ _MINHASH_PARAMS = [
 ]
 
 
-def _shingles_of(documents: DataFrame, sf_dir: str, cache_key: str) -> DataFrame:
-    """doc_id → exploded distinct word-3-gram shingles (short docs collapse
-    to one whole-text shingle) for any ``(doc_id, text)`` source.
+def _tokenized(documents: DataFrame) -> DataFrame:
+    """(doc_id, text) → (doc_id, w): the normalized word array every
+    shingle consumer reads, in its own projection (the CSE note on
+    _shingle_array).
 
-    The input is repartitioned on doc_id — with an EXPLICIT partition count
-    — before the compute-heavy shingle/explode work: a small single-split
-    parquet file would otherwise pin the CPU-bound stage to one task, and a
-    count-less ``repartition("doc_id")`` gets AQE-coalesced back to ~1
-    partition because the *bytes* are small even though the *compute* isn't
-    (measured: 3.7 s → 0.9 s for the sf0.1 shingle stage).  At scale the
-    same repartition bounds per-task skew from variable-length documents.
+    The input is repartitioned on doc_id — with an EXPLICIT partition
+    count — before the compute-heavy shingle work: a small single-split
+    parquet file would otherwise pin the CPU-bound stage to one task, and
+    a count-less ``repartition("doc_id")`` gets AQE-coalesced back to ~1
+    partition because the *bytes* are small even though the *compute*
+    isn't (measured: 3.7 s → 0.9 s for the sf0.1 shingle stage).  At
+    scale the same repartition bounds per-task skew from variable-length
+    documents.  A streaming input gets it per micro-batch too (sf0.1
+    stream_decontamination warm runs: 2.0–2.4 s with it, 3.9–4.7 s
+    without).
     """
     documents = documents.repartition(
         documents.sparkSession.sparkContext.defaultParallelism, "doc_id"
     )
-    # The word array materializes in its own projection first (the CSE
-    # note on _shingle_array).
-    tokenized = documents.select(
+    return documents.select(
         "doc_id", F.split(_normalized(F.col("text")), " ").alias("w")
     )
+
+
+def _shingles_of(documents: DataFrame, sf_dir: str, cache_key: str) -> DataFrame:
+    """doc_id → exploded distinct word-3-gram shingles (short docs collapse
+    to one whole-text shingle) for any ``(doc_id, text)`` source."""
     shingle_array = _shingle_array(F.col("w"), _SHINGLE_WIDTH)
     return session_cache(
-        tokenized.select("doc_id", F.explode(shingle_array).alias("shingle")),
+        _tokenized(documents).select(
+            "doc_id", F.explode(shingle_array).alias("shingle")
+        ),
         sf_dir,
         cache_key,
     )
@@ -234,51 +243,32 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _jaccard_pairs(_cap_shingle_df(_shingles(spark, sf_dir)), sf_dir)
 
 
-def _minhash_sig_of(shingles: DataFrame) -> DataFrame:
-    """(doc_id, shingle) → array of NUM_MINHASH minimum permuted hashes.
+def _minhash_signature(documents: DataFrame) -> DataFrame:
+    """(doc_id, text) → (doc_id, signature): the array of NUM_MINHASH
+    minimum permuted hashes over the document's distinct shingles (the
+    ``_shingles_of`` definition), the ONE MinHash construction.
 
-    The 64 min-aggregates are built as F.expr strings (one py4j call
-    each) rather than Column graphs (~2,000 py4j round-trips ≈ 0.8 s of
-    driver wall per construction — this helper is on the build path of
-    every LSH-family query); ``{a}L * h`` promotes exactly like
-    ``F.lit(a) * col`` did, so the values are bit-identical."""
-    base = md5_prefix_long("shingle", 15) % _MERSENNE_P
-    hashed = shingles.select("doc_id", base.alias("h"))
-    mins = [
-        F.expr(f"min(({a}L * h + {b}L) % {_MERSENNE_P}L) AS m{i}")
-        for i, (a, b) in enumerate(_MINHASH_PARAMS)
-    ]
-    sig = hashed.groupBy("doc_id").agg(*mins)
-    return sig.selectExpr(
-        "doc_id",
-        "array(" + ", ".join(f"m{i}" for i in range(NUM_MINHASH)) + ") AS signature",
-    )
+    A pure projection — no explode, no groupBy — so it serves batch and
+    streaming inputs alike (Structured Streaming allows one stateful
+    operator, and the decontamination rollup needs it); each min is an
+    ``array_min`` over the in-row hashed shingle array, so cost is per-row
+    and the operator parallelizes embarrassingly.  Signature width is
+    constant per doc regardless of doc length.  The hashed array
+    materializes in its own projection (the 64 permutation lambdas all
+    reference it), and the 64 permutations are ONE ``F.expr`` string —
+    a py4j call, where 64 lambda-bearing Column graphs cost ~2,000 round
+    trips on the build path of every LSH-family query.
 
-
-def _row_minhash_signature(documents: DataFrame) -> DataFrame:
-    """(doc_id, text) → (doc_id, signature) as a PURE PROJECTION — no
-    explode/groupBy — for STREAMING pipelines where the signature must be
-    stateless (Structured Streaming allows only one stateful operator and
-    the decontamination rollup needs it).  Same shingle definition, base
-    hash, and permutations as :func:`_minhash_sig_of` (equality of the
-    two constructions is pinned in tests); each min is an ``array_min``
-    over the in-row shingle array, so cost is per-row and the operator
-    parallelizes embarrassingly.  The tokenized/hashed arrays materialize
-    in their own projections (the ``_shingles_of`` CSE discipline —
-    64 permutation lambdas reference the hashed array)."""
-    tokenized = documents.select(
-        "doc_id", F.split(_normalized(F.col("text")), " ").alias("w")
-    )
+    A NULL text has no shingles, so its document gets no signature row:
+    it pairs with nothing (the oracle's NULL signature matches nothing).
+    """
     shingle_array = _shingle_array(F.col("w"), _SHINGLE_WIDTH)
-    hashed = tokenized.select(
+    hashed = _tokenized(documents.filter(F.col("text").isNotNull())).select(
         "doc_id",
         F.transform(
             shingle_array, lambda s: md5_prefix_long(s, 15) % _MERSENNE_P
         ).alias("hs"),
     )
-    # One F.expr instead of 64 lambda-bearing Column graphs (the
-    # _minhash_sig_of py4j discipline — this runs on the per-micro-batch
-    # construction path of the streaming entries).
     sig = F.expr(
         "array("
         + ", ".join(
@@ -291,13 +281,10 @@ def _row_minhash_signature(documents: DataFrame) -> DataFrame:
 
 
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """doc_id → array of NUM_MINHASH minimum permuted shingle hashes.
-
-    One explode + one groupBy: the shuffle carries (doc_id, shingle_hash)
-    longs; signature width is constant per doc regardless of doc length.
-    The base hash is md5-derived (engine-portable) — see module docstring.
-    """
-    return _minhash_sig_of(_shingles(spark, sf_dir))
+    """doc_id → array of NUM_MINHASH minimum permuted shingle hashes over
+    the documents table.  The base hash is md5-derived (engine-portable)
+    — see module docstring."""
+    return _minhash_signature(table(spark, sf_dir, "documents"))
 
 
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -333,7 +320,7 @@ def _band_rows(sig: DataFrame, keep_signature: bool = False) -> DataFrame:
     keep = ["doc_id", "signature"] if keep_signature else ["doc_id"]
     # Portable band key: md5 over the pipe-joined band slice (longs render
     # identically in both engines).  One F.expr for the whole band array
-    # (the _minhash_sig_of py4j discipline).
+    # (the _minhash_signature py4j discipline).
     bands_sql = ", ".join(
         "named_struct('band_idx', {b}, 'band_hash', md5(concat_ws('|', {refs})))".format(
             b=band,
@@ -450,19 +437,19 @@ def _planted_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _planted_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The planted-corpus signature table, MATERIALIZED for the session
-    (scan-leaf lineage): it feeds band joins in six-plus catalog entries
-    (planted/incremental/streaming dedup, the graph family, semantic
-    clusters), and as a cached-but-unmaterialized plan its 64-aggregate
-    subtree was re-analyzed by the JVM inside every consumer's every
-    transformation — see ``session_materialize``."""
+    (scan-leaf lineage): it feeds the band joins of the planted,
+    incremental and components entries, batch and streaming, and a
+    cached-but-unmaterialized plan keeps its subtree — the planted union
+    under 64 lambda ``transform`` expressions — for the JVM to re-analyze
+    inside every consumer's every transformation (see
+    ``session_materialize``).  Measured at sf0.1 against a
+    ``session_cache`` twin, two processes each: graph_components_incremental
+    warm runs 2.0–2.4 s materialized vs 2.3–2.9 s cached; the planted and
+    incremental entries were within noise."""
     from simple_query_engine_spark.functions.caching import session_materialize
 
     return session_materialize(
-        _minhash_sig_of(
-            _shingles_of(
-                _planted_documents(spark, sf_dir), sf_dir, "dedup_shingles_planted"
-            )
-        ),
+        _minhash_signature(_planted_documents(spark, sf_dir)),
         sf_dir,
         "dedup_minhash_sig_planted",
     )
@@ -1840,13 +1827,13 @@ def _cc_state_format() -> str:
     the r15 design needed a hand-bumped version string, and a forgotten
     bump would have served stale state silently.  The leading literal is
     the escape hatch for semantic changes the parameters can't see
-    (e.g. the propagation contract)."""
+    (e.g. the propagation contract; v3: a NULL text gets no signature)."""
     import hashlib
 
     basis = "|".join(
         str(x)
         for x in (
-            "cc-v2",
+            "cc-v3",
             NUM_MINHASH,
             MINHASH_BANDS,
             MAX_SHINGLE_DF,

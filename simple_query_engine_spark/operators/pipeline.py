@@ -39,8 +39,7 @@ from simple_query_engine_spark.operators.dedup import (
     PLANTED_JACCARD_THRESHOLD,
     _band_rows,
     _minhash_oracle_sql,
-    _minhash_sig_of,
-    _shingles_of,
+    _minhash_signature,
     q_dedup_exact,
     q_dedup_minhash_lsh,
 )
@@ -350,11 +349,7 @@ def q_text_decontamination_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.col("text"), F.lit(" " + PLANT_SUFFIX)).alias("text"),
     )
     sig = session_cache(
-        _minhash_sig_of(
-            _shingles_of(base.union(leaked), sf_dir, "decontam_fuzzy_shingles")
-        ),
-        sf_dir,
-        "decontam_fuzzy_sig",
+        _minhash_signature(base.union(leaked)), sf_dir, "decontam_fuzzy_sig"
     )
     evals = sig.filter(F.col("doc_id") < EVAL_SET_MAX_DOC_ID)
     corpus = sig.filter(F.col("doc_id") >= EVAL_SET_MAX_DOC_ID)
@@ -846,9 +841,7 @@ def q_pipeline_incremental_curation(spark: SparkSession, sf_dir: str) -> DataFra
             F.sum("n_tokens").alias("total_tokens"),
         )
     )
-    sig_v0 = _minhash_sig_of(
-        _shingles_of(v0.select("doc_id", "text"), sf_dir, "inccur_shingles_v0")
-    )
+    sig_v0 = _minhash_signature(v0.select("doc_id", "text"))
 
     # -- the changed-docs batch MERGEs in (v1) ------------------------------
     edits = documents.filter(
@@ -871,11 +864,6 @@ def q_pipeline_incremental_curation(spark: SparkSession, sf_dir: str) -> DataFra
         # Deterministic source (filters/projections of the documents
         # scan): skip the defensive scratch materialization.
         materialize_source=False,
-        # Keys are unique by construction — edits keep their corpus
-        # doc_id (≡ {INC_EDIT_RES} mod {INC_EDIT_MOD}, one row each) and
-        # news live above INC_NEW_OFFSET — so the duplicate check is
-        # off on the caller's word (tests/test_pipeline.py pins it).
-        check_duplicate_keys=False,
     )
 
     # -- everything below reads the CHANGE FEED, not the corpus -------------
@@ -887,11 +875,7 @@ def q_pipeline_incremental_curation(spark: SparkSession, sf_dir: str) -> DataFra
 
     # Signature-table maintenance: drop deleted ids, append signatures
     # computed over inserted rows only.
-    sig_delta = _minhash_sig_of(
-        _shingles_of(
-            inserted.select("doc_id", "text"), sf_dir, "inccur_shingles_delta"
-        )
-    )
+    sig_delta = _minhash_signature(inserted.select("doc_id", "text"))
     sig_v1 = session_cache(
         sig_v0.join(deleted_ids, "doc_id", "left_anti").unionByName(sig_delta),
         sf_dir,

@@ -682,9 +682,9 @@ def ingest_components_batch(
         _band_rows,
         _localize_bounded_pairs,
         _minhash_lsh_pairs,
+        _minhash_signature,
         _planted_sig,
         _propagate_labels,
-        _row_minhash_signature,
         _symmetric_edges,
     )
     from simple_query_engine_spark.sources.managed import ManagedTable
@@ -703,14 +703,14 @@ def ingest_components_batch(
     # Released after the merge commits; the NEXT batch reads the NEW
     # snapshot, so nothing stale can be served.
     std = t.read().persist()  # (doc_id, label): corpus + prior ingested
-    # Stateless per-row signatures for the batch (pinned bit-identical to
-    # the grouped construction); the SEEN side reads the shared planted
-    # signature cache — the session stand-in for the persisted signature
-    # table a production pipeline maintains next to the label state —
-    # restricted to the corpus plus documents already committed to the
-    # label table (prior micro-batches), so a replayed or future document
-    # can never pair against itself.
-    batch_sig = _row_minhash_signature(batch_df.select("doc_id", "text"))
+    # Per-row signatures for the batch (the one MinHash construction);
+    # the SEEN side reads the shared planted signature cache — the
+    # session stand-in for the persisted signature table a production
+    # pipeline maintains next to the label state — restricted to the
+    # corpus plus documents already committed to the label table (prior
+    # micro-batches), so a replayed or future document can never pair
+    # against itself.
+    batch_sig = _minhash_signature(batch_df.select("doc_id", "text"))
     sig_all = _planted_sig(spark, sf_dir)
     prior_ids = std.filter(F.col("doc_id") >= PLANT_DOC_OFFSET).select("doc_id")
     seen_sig = sig_all.filter(F.col("doc_id") < PLANT_DOC_OFFSET).unionByName(
@@ -806,10 +806,6 @@ def ingest_components_batch(
             # probes — the scratch write is what keeps that pipeline
             # evaluated once (re-measured r18 with the fused probe chain:
             # still 1.8x the batch wall without it).
-            # upd ⊂ standing doc_ids (one row per relabeled doc) and
-            # new_rows are anti-joined against them then made distinct —
-            # disjoint and unique, so the duplicate check is skippable.
-            check_duplicate_keys=False,
         )
     finally:
         std.unpersist()
@@ -1041,10 +1037,9 @@ def q_stream_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually need it (a leaked benchmark paraphrase should never reach
     the corpus, not be found there later).  Documents replay as a
     file-source stream; everything up to the rollup is STATELESS:
-    per-row MinHash signatures via the projection form
-    (``dedup._row_minhash_signature`` — equality with the grouped batch
-    construction is pinned in tests), band keys exploded per row with
-    the signature riding along, candidates from a stream-static join
+    per-row MinHash signatures (``dedup._minhash_signature``, the one
+    construction the batch tier uses too), band keys exploded per row
+    with the signature riding along, candidates from a stream-static join
     against the BROADCAST eval band rows (|eval| docs — tiny), estimated
     Jaccard as a projection, and the ≥ {PLANTED_JACCARD_THRESHOLD}
     verify filter map-side.  The single streaming aggregation maintains
@@ -1083,9 +1078,7 @@ def run_stream_decontamination(
         PLANT_SUFFIX,
         PLANTED_JACCARD_THRESHOLD,
         _band_rows,
-        _minhash_sig_of,
-        _row_minhash_signature,
-        _shingles_of,
+        _minhash_signature,
     )
     from simple_query_engine_spark.operators.pipeline import EVAL_SET_MAX_DOC_ID
     from simple_query_engine_spark.streaming.windows import read_event_stream
@@ -1112,7 +1105,7 @@ def run_stream_decontamination(
         )
         .select(F.col("r.doc_id").alias("doc_id"), F.col("r.text").alias("text"))
     )
-    banded = _band_rows(_row_minhash_signature(corpus), keep_signature=True)
+    banded = _band_rows(_minhash_signature(corpus), keep_signature=True)
 
     eval_docs = (
         table(spark, sf_dir, "documents")
@@ -1120,11 +1113,7 @@ def run_stream_decontamination(
         .select("doc_id", "text")
     )
     eval_sig = session_cache(
-        _minhash_sig_of(
-            _shingles_of(eval_docs, sf_dir, "stream_decontam_eval_shingles")
-        ),
-        sf_dir,
-        "stream_decontam_eval_sig",
+        _minhash_signature(eval_docs), sf_dir, "stream_decontam_eval_sig"
     )
     eval_bands = _band_rows(eval_sig).select(
         F.col("doc_id").alias("eval_doc_id"), "band_idx", "band_hash"

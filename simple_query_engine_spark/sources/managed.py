@@ -596,7 +596,6 @@ class ManagedTable:
         insert_not_matched: bool = True,
         txn: tuple[str, int] | None = None,
         materialize_source: bool = True,
-        check_duplicate_keys: bool = True,
     ) -> int:
         """Upsert ``source`` by equality on key column ``on``.
 
@@ -800,11 +799,9 @@ class ManagedTable:
                 # SQL MERGE semantics: more than one source row per MATCHED
                 # target key is an error, not a silent fan-out of the
                 # matched target rows.  Duplicates that match nothing are
-                # not in the probe.  A caller who can PROVE its keys unique
-                # may skip the check — same caller-asserted contract as
-                # ``materialize_source=False``.
+                # not in the probe.
                 dup = max(probe, key=lambda r: r["__n"], default=None)
-                if check_duplicate_keys and dup is not None and dup["__n"] > 1:
+                if dup is not None and dup["__n"] > 1:
                     raise ValueError(
                         f"merge source has multiple rows for matched key "
                         f"{on}={dup['__key']!r}"

@@ -35,20 +35,3 @@ def tables(spark, sf_dir):
     return load_tables(spark, sf_dir)
 
 
-@pytest.fixture
-def strict_merge(monkeypatch):
-    """Force ``ManagedTable.merge``'s duplicate-key scan on, even where a
-    caller asserts key uniqueness with ``check_duplicate_keys=False``, so
-    the test machine-checks that assertion: a non-unique source raises.
-    Yields the ``check_duplicate_keys`` value each merge was called with."""
-    from simple_query_engine_spark.sources.managed import ManagedTable
-
-    asked: list[bool] = []
-    merge = ManagedTable.merge
-
-    def checked_merge(self, *args, check_duplicate_keys=True, **kwargs):
-        asked.append(check_duplicate_keys)
-        return merge(self, *args, check_duplicate_keys=True, **kwargs)
-
-    monkeypatch.setattr(ManagedTable, "merge", checked_merge)
-    yield asked

@@ -91,25 +91,88 @@ def test_clusters_match_union_find(spark, sf_dir, exact_pairs):
         assert got[root].keep_doc_id == min(members)
 
 
-def test_row_minhash_signature_equals_grouped_construction(spark, sf_dir):
-    """The stateless projection form (streaming decontamination's
-    signature path) must produce bit-identical signatures to the
-    explode+groupBy batch construction — the invariant that lets the
-    streaming gate share the batch tier's oracle."""
+def _model_signature(text: str) -> tuple[int, ...]:
+    """Pure-Python MinHash signature: lower-case, collapse the whitespace
+    class to one space, trim, split; distinct word 3-grams (the whole
+    text below three words); base hash ``int(md5[:15], 16) % P``; the
+    ``_MINHASH_PARAMS`` affine permutations."""
+    import hashlib
+    import re
+
+    w = re.sub(r"[ \t\n\x0b\f\r]+", " ", text.lower()).strip(" ").split(" ")
+    width = D._SHINGLE_WIDTH
+    if len(w) >= width:
+        shingles = {" ".join(w[i : i + width]) for i in range(len(w) - width + 1)}
+    else:
+        shingles = {" ".join(w)}
+    hs = [
+        int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % D._MERSENNE_P
+        for s in shingles
+    ]
+    return tuple(
+        min((a * h + b) % D._MERSENNE_P for h in hs) for a, b in D._MINHASH_PARAMS
+    )
+
+
+def test_minhash_signature_matches_python_model(spark, sf_dir):
+    """The one signature construction equals an independent pure-Python
+    model on the fixture corpus plus edge documents: empty and
+    whitespace-only text, one and two words, exactly three words, and
+    repeated trigrams (shingles are distinct, so a third repeat changes
+    nothing)."""
     from simple_query_engine_spark.sources.catalog import table
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    row_form = {
+    edge = [
+        "",
+        " \t\n ",
+        "Word",
+        "two  WORDS",
+        "a b c",
+        "a b c a b c",
+        "a b c a b c a b c",
+    ]
+    base_id = docs.agg({"doc_id": "max"}).first()[0] + 1
+    docs = docs.unionByName(
+        spark.createDataFrame(
+            [(base_id + i, t) for i, t in enumerate(edge)], "doc_id long, text string"
+        )
+    )
+    texts = {r.doc_id: r.text for r in docs.collect()}
+    got = {
         r.doc_id: tuple(r.signature)
-        for r in D._row_minhash_signature(docs).collect()
+        for r in D._minhash_signature(docs).collect()
     }
-    grouped = {
-        r.doc_id: tuple(r.signature)
-        for r in D._minhash_sig_of(
-            D._shingles_of(docs, sf_dir, "rowsig_pin_shingles")
-        ).collect()
-    }
-    assert row_form == grouped
+    assert got == {i: _model_signature(t) for i, t in texts.items()}
+    assert got[base_id + 5] == got[base_id + 6]
+    assert got[base_id] == got[base_id + 1]
+
+
+def test_minhash_null_text_pairs_with_nothing(spark, tmp_path):
+    """A NULL text has no shingles: its document pairs with nothing — not
+    with another NULL-text document, and not with an empty one — exactly
+    as the DuckDB oracle pairs the same relation.  Two empty documents
+    do pair (identical one-shingle sets)."""
+    import duckdb
+
+    rows = [
+        (1, None),
+        (2, None),
+        (3, ""),
+        (4, ""),
+        (5, "a b c d"),
+        (6, "x"),
+    ]
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    got = {tuple(r) for r in D.q_dedup_minhash_lsh(spark, str(tmp_path)).collect()}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    want = set(con.execute(D._minhash_oracle_sql()).fetchall())
+    assert got == want
+    assert want == {(3, 4, 1.0)}
 
 
 def test_cluster_keeper_quality_matches_model(spark, sf_dir):
@@ -710,17 +773,7 @@ def test_incremental_components_equal_full_recompute(spark, sf_dir):
     propagation over the delta) must produce EXACTLY the cluster table a
     full recompute over all planted pairs produces — and the reduced
     graph it propagates over must be batch-sized, not corpus-sized."""
-    sig = D.session_cache(
-        D._minhash_sig_of(
-            D._shingles_of(
-                D._planted_documents(spark, sf_dir),
-                sf_dir,
-                "dedup_shingles_planted",
-            )
-        ),
-        sf_dir,
-        "dedup_minhash_sig_planted",
-    )
+    sig = D._planted_sig(spark, sf_dir)
     full_pairs = D._minhash_lsh_pairs(sig, D.PLANTED_JACCARD_THRESHOLD).select(
         "doc_id_a", "doc_id_b"
     )

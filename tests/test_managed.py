@@ -119,26 +119,6 @@ def test_merge_rejects_duplicate_source_keys(spark, tmp_path, people):
         t.merge(source, on="id", update_assignments={"name": F.col("s.name")})
 
 
-def test_merge_check_duplicate_keys_off_skips_scan_and_result_unchanged(
-    spark, tmp_path, people
-):
-    """``check_duplicate_keys=False`` is the caller-asserted skip of the
-    duplicate-key check: on a unique-keyed source the merge result is
-    identical with the check on or off."""
-    src_rows = [(3, "updated_3", 999.0, "odd"), (200, "name_200", 2000.0, "even")]
-    results = []
-    for flag in (True, False):
-        t = ManagedTable.create(spark, str(tmp_path / f"t_{flag}"), people)
-        t.merge(
-            spark.createDataFrame(src_rows, people.schema),
-            on="id",
-            update_assignments={"name": F.col("s.name")},
-            check_duplicate_keys=flag,
-        )
-        results.append(sorted(map(tuple, t.read().collect())))
-    assert results[0] == results[1]
-
-
 def test_concurrent_commit_conflict(spark, tmp_path, people):
     t = ManagedTable.create(spark, str(tmp_path / "t"), people)
     extra = spark.createDataFrame([(42, "x", 0.0, "even")], people.schema)

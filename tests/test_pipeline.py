@@ -547,14 +547,12 @@ def test_fuzzy_decontamination_catches_planted_leaks(spark, sf_dir):
         assert est >= PLANTED_JACCARD_THRESHOLD
 
 
-def test_inc_curation_merge_key_uniqueness_constants_pinned(
-    spark, sf_dir, strict_merge
-):
-    """VERDICT r17 item 8: q_pipeline_incremental_curation passes
-    check_duplicate_keys=False on a written uniqueness argument.  Pin the
-    modular arithmetic that makes it true — if a future edit to the CDC
-    id-range constants breaks disjointness, this fails before the merge
-    can silently fan out matched rows:
+def test_inc_curation_merge_key_uniqueness_constants_pinned(spark, sf_dir):
+    """VERDICT r17 item 8: q_pipeline_incremental_curation's merge source
+    has unique keys by construction.  Pin the modular arithmetic that
+    makes it true — if a future edit to the CDC id-range constants breaks
+    disjointness, this fails here, before the merge's duplicate-key check
+    fails the query:
 
     - news ids are (real ≡ INC_NEW_RES mod INC_NEW_MOD) + INC_NEW_OFFSET;
       the offset is ≡ 0 (mod INC_NEW_MOD) so the residue class survives,
@@ -564,9 +562,8 @@ def test_inc_curation_merge_key_uniqueness_constants_pinned(
       spaces are disjoint REGARDLESS of id magnitude (the runtime
       offset_doc_id guard separately enforces real ids < INC_NEW_OFFSET).
 
-    Then machine-check the claim end-to-end: re-run the query with the
-    duplicate-key scan forced back on inside merge() — a non-unique source
-    would raise."""
+    Then machine-check the claim end-to-end: run the query, whose merge
+    raises on a non-unique matched key."""
     from simple_query_engine_spark.operators.pipeline import (
         INC_EDIT_MOD,
         INC_EDIT_RES,
@@ -581,4 +578,3 @@ def test_inc_curation_merge_key_uniqueness_constants_pinned(
     assert (INC_NEW_RES % INC_EDIT_MOD) != INC_EDIT_RES
 
     assert q_pipeline_incremental_curation(spark, sf_dir).count() > 0
-    assert strict_merge == [False]  # the caller-asserted merge was checked

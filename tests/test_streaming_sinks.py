@@ -249,7 +249,7 @@ def test_ivf_ingest_matches_batch_append_with_commit_per_batch(spark, sf_dir):
 
 
 def test_components_ingest_matches_batch_incremental_with_commit_per_batch(
-    spark, sf_dir, strict_merge
+    spark, sf_dir
 ):
     """r17: the streaming cluster-maintenance door — 3 micro-batches MERGE
     into the managed label table (v0 = corpus-only standing labels, one
@@ -265,14 +265,12 @@ def test_components_ingest_matches_batch_incremental_with_commit_per_batch(
     )
     from simple_query_engine_spark.sources.managed import ManagedTable
 
-    # strict_merge forces the duplicate-key scan back ON inside every
-    # per-batch merge (ADVICE r17): the handler's caller-asserted
-    # uniqueness proof (upd ⊂ standing ids, new_rows anti-joined then
+    # Every per-batch merge runs the duplicate-key check, so the handler's
+    # source uniqueness (upd ⊂ standing ids, new_rows anti-joined then
     # distinct) is machine-checked end-to-end by this run.
     got = {
         tuple(r) for r in S.q_stream_components_incremental(spark, sf_dir).collect()
     }
-    assert strict_merge == [False] * 3  # one caller-asserted merge per batch
     want = {
         tuple(r) for r in q_graph_components_incremental(spark, sf_dir).collect()
     }
