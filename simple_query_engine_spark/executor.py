@@ -50,8 +50,9 @@ def execute(query: Query, df: DataFrame) -> DataFrame:
     for name in query.column_names:
         if name not in df.columns:
             raise QueryExecutionError(f"Column '{name}' not found in the table")
-    # F.col per name keeps duplicates legal and preserves user order.
-    return result.select([F.col(name) for name in query.column_names])
+    # One column per name keeps duplicates legal and preserves user order;
+    # ``df[name]`` binds through the table in one py4j call.
+    return result.select([df[name] for name in query.column_names])
 
 
 def _predicate(filter_: Filter, df: DataFrame) -> Column:
@@ -66,10 +67,13 @@ def _predicate(filter_: Filter, df: DataFrame) -> Column:
         # comparison matches nothing (reference: derived PartialEq is false
         # across variants, src/value.rs:4; SURVEY.md §7.1.1).
         return F.lit(False)
-    column = F.col(filter_.column_name)
+    # The typed Python literal goes to the comparison as is: py4j converts
+    # it exactly as ``F.lit`` would, and ``_type_literal`` has already
+    # fixed its type.
+    column = df[filter_.column_name]
     if filter_.filter_type is FilterType.GREATER:
-        return column > F.lit(literal)
-    return column == F.lit(literal)
+        return column > literal
+    return column == literal
 
 
 # Python's int()/float()/Decimal() accept forms the declared literal

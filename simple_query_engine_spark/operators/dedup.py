@@ -82,8 +82,12 @@ def _tokenized(documents: DataFrame) -> DataFrame:
     documents.  A streaming input gets it per micro-batch too (sf0.1
     stream_decontamination warm runs: 2.0–2.4 s with it, 3.9–4.7 s
     without).
+
+    A NULL text has no words, so its document gets no row: it shingles
+    to nothing and pairs with nothing, as in the DuckDB oracles (where
+    ``_shingle_array`` would turn ``size(NULL)`` = −1 into ``['']``).
     """
-    documents = documents.repartition(
+    documents = documents.filter(F.col("text").isNotNull()).repartition(
         documents.sparkSession.sparkContext.defaultParallelism, "doc_id"
     )
     return documents.select(
@@ -259,11 +263,11 @@ def _minhash_signature(documents: DataFrame) -> DataFrame:
     a py4j call, where 64 lambda-bearing Column graphs cost ~2,000 round
     trips on the build path of every LSH-family query.
 
-    A NULL text has no shingles, so its document gets no signature row:
-    it pairs with nothing (the oracle's NULL signature matches nothing).
+    A NULL text gets no signature row (``_tokenized``): it pairs with
+    nothing (the oracle's NULL signature matches nothing).
     """
     shingle_array = _shingle_array(F.col("w"), _SHINGLE_WIDTH)
-    hashed = _tokenized(documents.filter(F.col("text").isNotNull())).select(
+    hashed = _tokenized(documents).select(
         "doc_id",
         F.transform(
             shingle_array, lambda s: md5_prefix_long(s, 15) % _MERSENNE_P

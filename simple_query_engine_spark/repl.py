@@ -95,6 +95,25 @@ def _render(value) -> str:
     return str(value)
 
 
+def load_csv(spark, path: str) -> DataFrame:
+    """Read ``path`` with type inference and cache it, materialized up
+    front like the reference's eager load.
+
+    A scan that plans exactly one input partition is cached as
+    ``coalesce(1)``: the cached relation then reports ``SinglePartition``,
+    so an aggregate, sort, DISTINCT, window or sort-merge join over it
+    plans no shuffle and runs as one job.  ``getNumPartitions`` plans the
+    scan but runs no job.  A multi-split input is cached as scanned, so
+    its lines keep their parallel plans.
+    """
+    df = read_csv(spark, path)
+    if df.rdd.getNumPartitions() == 1:
+        df = df.coalesce(1)
+    df = df.cache()
+    df.count()
+    return df
+
+
 def run(
     data_path: str,
     input_stream=None,
@@ -126,8 +145,7 @@ def run(
             file=output_stream,
         )
     else:
-        df = read_csv(spark, data_path).cache()
-        df.count()  # materialize up front, like the reference's eager load
+        df = load_csv(spark, data_path)
         df.createOrReplaceTempView(default_table or "t")
     print(
         "Enter a query (PROJECT col, ... [FILTER col (>|=) value]) or SQL; "

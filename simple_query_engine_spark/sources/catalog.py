@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -151,13 +152,20 @@ def footer_schema(spark: SparkSession, path: str) -> tuple[StructType, list[str]
     )
     # A file source reads every column as nullable.
     schema = StructType.fromJson(json.loads(spark_schema.asNullable().json()))
-    nanos = [
-        field.getName()
-        for field in meta.getFileMetaData().getSchema().getFields()
-        if field.isPrimitive()
-        and str(field.getLogicalTypeAnnotation()).startswith("TIMESTAMP(NANOS")
-    ]
+    # The footer schema's text in one call: iterating its field list from
+    # Python would cost round trips per field plus the JVM exception that
+    # ends a py4j iterator.
+    nanos = _TOP_LEVEL_NANOS.findall(meta.getFileMetaData().getSchema().toString())
     return schema, nanos
+
+
+# A top-level TIMESTAMP(NANOS) column in Parquet's schema text
+# (``MessageType.toString``): two-space indent, repetition, physical type,
+# name, logical type, optional field id.  Nested fields sit deeper.
+_TOP_LEVEL_NANOS = re.compile(
+    r"^  [a-z]+ int64 (.+) \(TIMESTAMP\(NANOS,(?:true|false)\)\)(?: = \d+)?;$",
+    re.MULTILINE,
+)
 
 
 _SUMMARY_FILES = ("_common_metadata", "_metadata")

@@ -175,6 +175,37 @@ def test_minhash_null_text_pairs_with_nothing(spark, tmp_path):
     assert want == {(3, 4, 1.0)}
 
 
+def test_ngram_jaccard_null_text_pairs_with_nothing(spark, tmp_path):
+    """The exact n-gram baseline shares the signature's tokenization, so
+    a NULL text shingles to nothing there too: only the two empty
+    documents pair, as in the DuckDB oracle."""
+    import duckdb
+
+    rows = [
+        (1, None),
+        (2, None),
+        (3, ""),
+        (4, ""),
+        (5, "a b c d"),
+        (6, "x"),
+    ]
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    got = {
+        (r.doc_id_a, r.doc_id_b)
+        for r in D.q_dedup_ngram_jaccard(spark, str(tmp_path)).collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    want = {
+        (a, b) for a, b, *_ in con.execute(D.ORACLES["dedup_ngram_jaccard"]).fetchall()
+    }
+    assert got == want
+    assert want == {(3, 4)}
+
+
 def test_cluster_keeper_quality_matches_model(spark, sf_dir):
     """Quality-keeper clusters must equal a driver-side model: union-find
     over the SAME LSH pair list, keeper = argmax (score_micro, -doc_id)

@@ -143,41 +143,103 @@ def test_dispatch_routes_sql_and_minilang(spark, sf_dir):
 
 
 # py4j round trips of one warm PROJECT/FILTER line through dispatch and
-# format_result: 31 on a get_spark session, 71 with PySpark's per-call
-# origin capture on (spark.python.sql.dataFrameDebugging.enabled).
-_WARM_LINE_ROUND_TRIPS = 34
+# format_result: 22 on a get_spark session (31 while the executor bound
+# columns through ``F.col`` and literals through ``F.lit``).
+_WARM_LINE_ROUND_TRIPS = 24
 
 
-def test_warm_minilang_line_round_trip_budget(spark, tmp_path, monkeypatch):
-    """Counts the calling thread's commands only: py4j's finalizer thread
-    sends object releases on its own schedule."""
-    import threading
-
-    from py4j.clientserver import ClientServerConnection
-
-    from simple_query_engine_spark.repl import dispatch, format_result
-    from simple_query_engine_spark.sources.readers import read_csv
+def test_warm_minilang_line_round_trip_budget(spark, tmp_path):
+    from tools.round_trips import count_round_trips
 
     path = tmp_path / "abc.csv"
     path.write_text("a,b,c\n" + "".join(f"{i},x{i},{i % 7}\n" for i in range(50)))
-    df = read_csv(spark, str(path)).cache()
-    df.count()
+    df = repl.load_csv(spark, str(path))
     line = "PROJECT a, b FILTER c = 5"
-    expected = format_result(dispatch(spark, line, df))
-
-    calls = []
-    send = ClientServerConnection.send_command
-    caller = threading.get_ident()
-
-    def counted(self, command):
-        if threading.get_ident() == caller:
-            calls.append(command)
-        return send(self, command)
-
-    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
-    got = format_result(dispatch(spark, line, df))
-    monkeypatch.undo()
+    expected = repl.format_result(repl.dispatch(spark, line, df))
+    with count_round_trips() as calls:
+        got = repl.format_result(repl.dispatch(spark, line, df))
     df.unpersist()
     assert got == expected
     assert got.splitlines()[2:] == [f"{i},x{i}" for i in range(5, 50, 7)]
     assert len(calls) <= _WARM_LINE_ROUND_TRIPS, len(calls)
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+_SHUFFLING_LINES = (
+    "SELECT c, count(*) AS n, sum(a) AS s FROM {t} GROUP BY c",
+    "SELECT a, b FROM {t} ORDER BY a DESC",
+    "SELECT DISTINCT b FROM {t}",
+)
+
+
+def test_one_split_csv_plans_no_exchange(spark, tmp_path):
+    """A one-split CSV is cached as one declared partition: a GROUP BY,
+    ORDER BY and DISTINCT line over it plans no exchange, and each
+    returns the rows of the same CSV cached as scanned."""
+    path = tmp_path / "one.csv"
+    path.write_text("a,b,c\n" + "".join(f"{i},x{i % 11},{i % 7}\n" for i in range(300)))
+    df = repl.load_csv(spark, str(path))
+    df.createOrReplaceTempView("one_split")
+    plain = repl.read_csv(spark, str(path)).cache()
+    plain.createOrReplaceTempView("one_split_plain")
+    try:
+        for line in _SHUFFLING_LINES:
+            got = spark.sql(line.format(t="one_split"))
+            rows = got.collect()
+            assert "Exchange" not in _executed_plan(got), line
+            plain_line = spark.sql(line.format(t="one_split_plain"))
+            want = plain_line.collect()
+            assert "Exchange" in _executed_plan(plain_line), line
+            if "ORDER BY" in line:
+                assert rows == want, line
+            else:
+                assert sorted(rows) == sorted(want), line
+    finally:
+        df.unpersist()
+        plain.unpersist()
+
+
+def test_multi_split_csv_keeps_its_exchange(spark, tmp_path):
+    """Two files plan two scan partitions: the cache keeps them, and a
+    GROUP BY over it still shuffles."""
+    directory = tmp_path / "two"
+    directory.mkdir()
+    for part in range(2):
+        (directory / f"part-{part}.csv").write_text(
+            "a,b,c\n" + "".join(f"{i},x{i % 11},{i % 7}\n" for i in range(part, 300, 2))
+        )
+    assert repl.read_csv(spark, str(directory)).rdd.getNumPartitions() == 2
+    df = repl.load_csv(spark, str(directory))
+    try:
+        assert df.rdd.getNumPartitions() == 2
+        got = df.groupBy("c").count()
+        assert sorted(tuple(r) for r in got.collect()) == [
+            (c, len(range(c, 300, 7))) for c in range(7)
+        ]
+        assert "Exchange" in _executed_plan(got)
+    finally:
+        df.unpersist()
+
+
+def test_csv_inference_reads_every_row(spark, tmp_path):
+    """Type inference sees every cell: a column whose only non-digit cell
+    is its last row is a string, and a column whose only fraction is its
+    last row is a double.  A sampled inference would call both integer."""
+    path = tmp_path / "late.csv"
+    path.write_text(
+        "code,score\n"
+        + "".join(f"{i},{i % 3}\n" for i in range(2000))
+        + "abc,2.5\n"
+    )
+    df = repl.load_csv(spark, str(path))
+    try:
+        assert dict(df.dtypes) == {"code": "string", "score": "double"}
+        answer = repl.format_result(repl.dispatch(spark, "PROJECT code FILTER score > 2", df))
+        assert answer.splitlines() == ["code", "----", "abc"]
+        answer = repl.format_result(repl.dispatch(spark, "PROJECT score FILTER code = abc", df))
+        assert answer.splitlines() == ["score", "-----", "2.5"]
+    finally:
+        df.unpersist()

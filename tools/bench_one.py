@@ -12,8 +12,10 @@ through the ``noop`` sink (``df.count()`` would let Catalyst prune
 projections), and a JVM-side sum over 500M longs is timed after each
 query as a host-speed calibration.  Prints one JSON line per query with
 its first invocation (one-time codegen plus in-session materializations),
-every warm run, the min, and the min divided by the calibration; the last
-warm run's formatted physical plan goes to stderr.
+every warm run, the min, the min divided by the calibration, and the
+calling thread's py4j round trips during the last warm run's query-function
+call (``build_round_trips``, Python plan building); the last warm run's
+formatted physical plan goes to stderr.
 """
 
 from __future__ import annotations
@@ -131,6 +133,7 @@ def main() -> int:
 
     from simple_query_engine_spark.session import get_spark
     from simple_query_engine_spark.sources.catalog import load_tables
+    from tools.round_trips import count_round_trips
 
     import __spark_entry__ as entrymod
 
@@ -149,11 +152,13 @@ def main() -> int:
         df.cache().count()
 
     def run(name: str):
-        """Time one invocation; return its seconds and the DataFrame it ran."""
+        """Time one invocation; return its seconds, the DataFrame it ran
+        and the py4j round trips of the query-function call."""
         start = time.time()
-        df = queries[name](spark, data_dir)
+        with count_round_trips() as calls:
+            df = queries[name](spark, data_dir)
         df.write.mode("overwrite").format("noop").save()
-        return round(time.time() - start, 3), df
+        return round(time.time() - start, 3), df, len(calls)
 
     probe = lambda: spark.range(500_000_000, numPartitions=32).selectExpr(
         "sum(id * 2)"
@@ -161,10 +166,10 @@ def main() -> int:
     probe()  # codegen warm-up
 
     for name in names:
-        first, df = run(name)
+        first, df, _ = run(name)
         times = []
         for _ in range(runs):
-            seconds, df = run(name)
+            seconds, df, build_round_trips = run(name)
             times.append(seconds)
         start = time.time()
         probe()
@@ -182,6 +187,7 @@ def main() -> int:
                     "min": min(times),
                     "calibration_jvm_sum_sec": calibration,
                     "min_normalized": round(min(times) / calibration, 2),
+                    "build_round_trips": build_round_trips,
                     "sf_dir": sf_dir,
                     "amplify": amplify,
                 }
