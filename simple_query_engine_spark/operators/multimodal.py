@@ -117,19 +117,6 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
-def resize_image(payload: bytes, side: int) -> bytes:
-    """Image resize.  PPM payloads resize for real (integer-exact box-mean
-    pooling, ``functions/ppm.py``); compressed formats stay stubbed (no
-    codec libraries in this container)."""
-    from simple_query_engine_spark.functions.ppm import MAGIC, resize_ppm
-
-    if payload[:2] == MAGIC:
-        return resize_ppm(payload, side)
-    raise NotImplementedError(
-        "codec libraries unavailable for compressed formats; see fake_resizer"
-    )
-
-
 def fake_resizer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Deterministic resize stand-in: tile/truncate the payload to a fixed
     8×8 grid of byte values — same output shape a real thumbnailer has."""

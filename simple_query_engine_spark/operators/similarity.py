@@ -1,23 +1,30 @@
 """Embedding similarity search over the ``embeddings`` table
 (``array<float>`` column, 64-dim).
 
-Two paths, mirroring production ANN practice:
+Every ranked search is a candidate strategy plus one exact-rank core:
 
-- **brute-force cosine top-k** — the correctness baseline.  The query set
-  is small and broadcast; the candidate side streams: per (query, candidate)
-  the dot product runs JVM-side via ``zip_with``/``aggregate`` (no Python in
-  the loop).  Cost is |Q|·N — fine when |Q| is small; at 100 TB the
-  candidate scan is embarrassingly parallel and shuffle-free until the
-  final per-query top-k (TakeOrdered per group over k rows).
-- **LSH-bucketed ANN (random hyperplanes)** — the scale path: each vector
-  gets a b-bit sign signature against fixed INTEGER-coefficient hyperplanes
-  over an integer-grid-scaled copy of the embedding (exact arithmetic in
-  both engines → the pipeline is oracle-checked, not rows-only); candidates
-  are an equi-join on the bucket key, so candidate volume is controlled by
-  b, independent of N².
+- **candidate strategies** each keep their own join shape and hand the
+  core (query, candidate) rows that carry both vectors and norms
+  (``q_emb``/``q_norm``, ``c_emb``/``c_norm``): the broadcast all-pairs
+  cross join (brute force), bucket equality on random-hyperplane LSH
+  signatures (single-bucket and multi-probe), probed IVF cells
+  (hash-seeded and cosine-assigned in ``sim_ivf_topk``; the trained
+  integer k-means quantizer everywhere else), and the SQ/PQ coarse
+  shortlists.  LSH planes have INTEGER coefficients over an
+  integer-grid-scaled copy of the embedding, so bucket bits are exact in
+  both engines and every pipeline is oracle-checked, not rows-only.
+- **one core**: :func:`_cosine` is the single exact-cosine expression and
+  :func:`_rank_exact` the single scorer — round-4 similarity, self-pairs
+  dropped, then the ``(similarity desc, neighbor_id)`` top-k page or the
+  radius filter.  Page size and radius are arguments of the one query,
+  not copies of it.  The near-dup pair entries score with the same
+  :func:`_cosine`.
 
-All arithmetic is cast to double *before* summation, in array-index order,
-so results are bit-comparable with the DuckDB oracle's double math.
+The dot products run JVM-side via ``zip_with``/``aggregate`` (no Python
+in the loop).  All arithmetic is cast to double *before* summation, in
+array-index order, so results are bit-comparable with the DuckDB oracle's
+double math.  The oracles are plain SQL text and share no code with the
+Spark side, so they stay independent reference implementations.
 """
 
 from __future__ import annotations
@@ -58,20 +65,79 @@ def _norm(a: Column) -> Column:
 
 
 def _with_norm(
-    df: DataFrame,
-    id_alias: str,
-    emb_alias: str,
-    norm_alias: str,
-    label_alias: str | None = None,
+    df: DataFrame, id_alias: str, side: str, *keep: str | Column
 ) -> DataFrame:
-    cols = [
+    """One side of a scored pair: ``vec_id`` as ``id_alias``, the
+    embedding and its norm as ``{side}_emb``/``{side}_norm`` (``q`` for
+    the query side, ``c`` for the candidate side — the columns
+    :func:`_cosine` reads), plus the ``keep`` columns."""
+    return df.select(
         F.col("vec_id").alias(id_alias),
-        F.col("embedding").alias(emb_alias),
-        _norm(F.col("embedding")).alias(norm_alias),
-    ]
-    if label_alias is not None:
-        cols.append(F.col("label").alias(label_alias))
-    return df.select(*cols)
+        F.col("embedding").alias(f"{side}_emb"),
+        _norm(F.col("embedding")).alias(f"{side}_norm"),
+        *keep,
+    )
+
+
+def _normed_side(vecs: DataFrame, id_alias: str, side: str, *keep: str) -> DataFrame:
+    """:func:`_with_norm` for a relation whose norm is already the ``nrm``
+    column (a cached or shared vector table): ``keep`` columns first,
+    then ``vec_id`` as ``id_alias`` and ``{side}_emb``/``{side}_norm``."""
+    return vecs.select(
+        *keep,
+        F.col("vec_id").alias(id_alias),
+        F.col("embedding").alias(f"{side}_emb"),
+        F.col("nrm").alias(f"{side}_norm"),
+    )
+
+
+def _cosine() -> Column:
+    """The exact cosine of the ``q_emb``/``c_emb`` pair — the one
+    expression every ranked search and every near-dup pair entry scores
+    with."""
+    return _dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_norm") * F.col("c_norm"))
+
+
+def _rank_exact(
+    joined: DataFrame,
+    k: int = TOP_K,
+    radius: float | None = None,
+    cell_cap: int | None = None,
+) -> DataFrame:
+    """The exact-rank core every ranked search ends in.  ``joined`` holds
+    a strategy's (query_id, neighbor_id) candidates with both vectors and
+    norms; the core drops self-pairs, scores round-4 :func:`_cosine`
+    ``similarity`` and keeps either each query's top-``k`` page by
+    (similarity desc, neighbor_id), numbered ``sim_rank``, or — with
+    ``radius`` — every candidate at or above it, unranked.  ``cell_cap``
+    first keeps at most that many candidates per (query_id, cell_id) in
+    the same order (the diversified page, which keeps ``cell_id``)."""
+    keep = ["cell_id"] if cell_cap is not None else []
+    scored = joined.filter(F.col("query_id") != F.col("neighbor_id")).select(
+        "query_id", "neighbor_id", *keep, F.round(_cosine(), 4).alias("similarity")
+    )
+    if radius is not None:
+        return scored.filter(F.col("similarity") >= radius)
+    best_first = (F.col("similarity").desc(), F.col("neighbor_id"))
+    if cell_cap is not None:
+        w_cell = Window.partitionBy("query_id", "cell_id").orderBy(*best_first)
+        scored = (
+            scored.withColumn("cell_slot", F.row_number().over(w_cell))
+            .filter(F.col("cell_slot") <= cell_cap)
+            .drop("cell_slot")
+        )
+    w = Window.partitionBy("query_id").orderBy(*best_first)
+    return scored.withColumn("sim_rank", F.row_number().over(w)).filter(
+        F.col("sim_rank") <= k
+    )
+
+
+def _query_side(df: DataFrame, *keep: str | Column) -> DataFrame:
+    """The query side: the NUM_QUERY_VECTORS rows of ``df`` as
+    (query_id, q_emb, q_norm, *keep)."""
+    return _with_norm(
+        df.filter(F.col("vec_id") < NUM_QUERY_VECTORS), "query_id", "q", *keep
+    )
 
 
 def q_sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -81,28 +147,9 @@ def q_sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     a |Q|-row build side, i.e. a single streaming pass over candidates.
     """
     embeddings = table(spark, sf_dir, "embeddings")
-    queries = _with_norm(
-        embeddings.filter(F.col("vec_id") < NUM_QUERY_VECTORS), "query_id", "q_emb", "q_norm"
-    )
-    candidates = _with_norm(embeddings, "neighbor_id", "c_emb", "c_norm")
-    cosine = _dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_norm") * F.col("c_norm"))
-    scored = (
-        F.broadcast(queries)
-        .crossJoin(candidates)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine, 4).alias("similarity"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("similarity").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("sim_rank", F.row_number().over(w))
-        .filter(F.col("sim_rank") <= TOP_K)
-    )
+    queries = _query_side(embeddings)
+    candidates = _with_norm(embeddings, "neighbor_id", "c")
+    return _rank_exact(F.broadcast(queries).crossJoin(candidates))
 
 
 ALL_PAIRS_MAX_VECTORS = 100_000
@@ -126,13 +173,12 @@ def q_sim_neardup_pairs_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"refused above {ALL_PAIRS_MAX_VECTORS} vectors — "
             "use sim_ann_lsh (LSH-bucketed) or sim_ivf_topk instead"
         )
-    a = _with_norm(embeddings, "vec_id_a", "emb_a", "norm_a")
-    b = _with_norm(embeddings, "vec_id_b", "emb_b", "norm_b")
-    cosine = _dot(F.col("emb_a"), F.col("emb_b")) / (F.col("norm_a") * F.col("norm_b"))
+    a = _with_norm(embeddings, "vec_id_a", "q")
+    b = _with_norm(embeddings, "vec_id_b", "c")
     return (
         a.crossJoin(b)
         .filter(F.col("vec_id_a") < F.col("vec_id_b"))
-        .withColumn("similarity", F.round(cosine, 4))
+        .withColumn("similarity", F.round(_cosine(), 4))
         .filter(F.col("similarity") >= NEARDUP_COSINE)
         .select("vec_id_a", "vec_id_b", "similarity")
     )
@@ -181,24 +227,24 @@ def _plane_dot_sql(vec_sql: str, plane: list[int]) -> str:
     )
 
 
+def _bucket_sql(planes: list[list[int]]) -> str:
+    """SQL text for the LSH bucket of the ``sv`` column: bit i is set iff
+    the dot product with ``planes[i]`` is non-negative.  One ``F.expr``
+    instead of a per-literal Column graph — see :func:`_plane_dot_sql`."""
+    return " + ".join(
+        f"(CASE WHEN {_plane_dot_sql('sv', plane)} >= 0 THEN {1 << i} ELSE 0 END)"
+        for i, plane in enumerate(planes)
+    )
+
+
 def _signed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embeddings + their LSH bucket: sign bits of NUM_HYPERPLANES
     integer-plane dot products over the integer-grid-scaled embedding
     (see :func:`_int_hyperplanes` — exact arithmetic, so bucket
     assignment is engine-exact and LSH pipelines hash-match their DuckDB
     oracles)."""
-    embeddings = table(spark, sf_dir, "embeddings")
-    planes = _int_hyperplanes()
-    scaled = embeddings.withColumn("sv", _scaled_embedding())
-    # One F.expr instead of a per-literal Column graph — see _plane_dot_sql.
-    signature = F.expr(
-        " + ".join(
-            f"(CASE WHEN {_plane_dot_sql('sv', plane)} >= 0 "
-            f"THEN {1 << i} ELSE 0 END)"
-            for i, plane in enumerate(planes)
-        )
-    )
-    return scaled.withColumn("bucket", signature)
+    scaled = table(spark, sf_dir, "embeddings").withColumn("sv", _scaled_embedding())
+    return scaled.withColumn("bucket", F.expr(_bucket_sql(_int_hyperplanes())))
 
 
 def q_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -209,32 +255,9 @@ def q_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     force by construction — recall is asserted in tests.
     """
     signed = _signed_embeddings(spark, sf_dir)
-    queries = signed.filter(F.col("vec_id") < NUM_QUERY_VECTORS).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        _norm(F.col("embedding")).alias("q_norm"),
-        "bucket",
-    )
-    candidates = signed.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        _norm(F.col("embedding")).alias("c_norm"),
-        "bucket",
-    )
-    cosine = _dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_norm") * F.col("c_norm"))
-    scored = (
-        F.broadcast(queries)
-        .join(candidates, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", F.round(cosine, 4).alias("similarity"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("similarity").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("sim_rank", F.row_number().over(w))
-        .filter(F.col("sim_rank") <= TOP_K)
-    )
+    queries = _query_side(signed, "bucket")
+    candidates = _with_norm(signed, "neighbor_id", "c", "bucket")
+    return _rank_exact(F.broadcast(queries).join(candidates, "bucket"))
 
 
 MULTIPROBE_T = 4  # query-directed sign-flip probes per query (plus home)
@@ -254,8 +277,10 @@ def q_sim_multiprobe_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: margins are the same integer-grid plane dot products that
     make the bucket bits engine-exact (integral doubles < 2⁵³); the
-    flip choice is totally ordered (margin asc, plane index asc) and the
-    probe set is deduplicated before ranking, mirrored in the oracle.
+    flip choice is totally ordered (margin asc, plane index asc).  Each
+    flip changes a different bit, so a query's probe buckets are
+    distinct and every candidate (one bucket each) matches at most one
+    probe: the scored pairs need no DISTINCT before ranking.
 
     Scale shape: identical to ``sim_ann_lsh`` with (T+1)× the probe
     rows on the QUERY side only — the corpus-side signature table is
@@ -275,45 +300,19 @@ def q_sim_multiprobe_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         + ")"
     )
-    queries = (
-        signed.filter(F.col("vec_id") < NUM_QUERY_VECTORS)
-        .withColumn("flips", F.slice(F.array_sort(margins), 1, MULTIPROBE_T))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            _norm(F.col("embedding")).alias("q_norm"),
-            F.explode(
-                F.array_union(
-                    F.array(F.col("bucket")),
-                    F.transform(
-                        F.col("flips"),
-                        lambda s: F.col("bucket").bitwiseXOR(s["flipbit"]),
-                    ),
-                )
-            ).alias("bucket"),
-        )
+    queries = _query_side(
+        signed.withColumn("flips", F.slice(F.array_sort(margins), 1, MULTIPROBE_T)),
+        F.explode(
+            F.array_union(
+                F.array(F.col("bucket")),
+                F.transform(
+                    F.col("flips"), lambda s: F.col("bucket").bitwiseXOR(s["flipbit"])
+                ),
+            )
+        ).alias("bucket"),
     )
-    candidates = _signed_embeddings(spark, sf_dir).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        _norm(F.col("embedding")).alias("c_norm"),
-        "bucket",
-    )
-    cosine = _dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_norm") * F.col("c_norm"))
-    scored = (
-        F.broadcast(queries)
-        .join(candidates, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", F.round(cosine, 4).alias("similarity"))
-        .distinct()
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("similarity").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("sim_rank", F.row_number().over(w))
-        .filter(F.col("sim_rank") <= TOP_K)
-    )
+    candidates = _with_norm(signed, "neighbor_id", "c", "bucket")
+    return _rank_exact(F.broadcast(queries).join(candidates, "bucket"))
 
 
 # Multi-table LSH for the near-dup SELF-join: a self-join's candidate
@@ -355,16 +354,13 @@ def _neardup_lsh_pairs(
     scaled = embeddings.withColumn("sv", _scaled_embedding())
     # One F.expr per table instead of a per-literal Column graph (9,216
     # F.lit py4j round-trips ≈ 10 s of driver wall) — see _plane_dot_sql.
-    bucket_cols = []
-    for t in range(NEARDUP_TABLES):
-        bucket_sql = " + ".join(
-            f"(CASE WHEN {_plane_dot_sql('sv', planes[t * NEARDUP_BITS + i])} >= 0 "
-            f"THEN {1 << i} ELSE 0 END)"
-            for i in range(NEARDUP_BITS)
+    bucket_cols = [
+        F.expr(
+            f"named_struct('table_idx', {t}, 'bucket', "
+            f"{_bucket_sql(planes[t * NEARDUP_BITS:(t + 1) * NEARDUP_BITS])})"
         )
-        bucket_cols.append(
-            F.expr(f"named_struct('table_idx', {t}, 'bucket', {bucket_sql})")
-        )
+        for t in range(NEARDUP_TABLES)
+    ]
     # Shuffle keys, not payloads (guide §2.3/§8): the bucket SELF-join
     # moves only (vec_id, table_idx, bucket) — ~24 bytes/row — while the
     # 64-double embeddings stay in a one-row-per-vector table that is
@@ -404,25 +400,10 @@ def _neardup_lsh_pairs(
         )
         .dropDuplicates(["vec_id_a", "vec_id_b"])
     )
-    cosine = _dot(F.col("emb_a"), F.col("emb_b")) / (F.col("norm_a") * F.col("norm_b"))
     return (
-        candidates.join(
-            vecs.select(
-                F.col("vec_id").alias("vec_id_a"),
-                F.col("embedding").alias("emb_a"),
-                F.col("nrm").alias("norm_a"),
-            ),
-            "vec_id_a",
-        )
-        .join(
-            vecs.select(
-                F.col("vec_id").alias("vec_id_b"),
-                F.col("embedding").alias("emb_b"),
-                F.col("nrm").alias("norm_b"),
-            ),
-            "vec_id_b",
-        )
-        .select("vec_id_a", "vec_id_b", F.round(cosine, 4).alias("similarity"))
+        candidates.join(_normed_side(vecs, "vec_id_a", "q"), "vec_id_a")
+        .join(_normed_side(vecs, "vec_id_b", "c"), "vec_id_b")
+        .select("vec_id_a", "vec_id_b", F.round(_cosine(), 4).alias("similarity"))
         .filter(F.col("similarity") >= threshold)
     )
 
@@ -497,13 +478,15 @@ def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     whatever happens to sit at the head of insertion order, yet still
     engine-exact (both engines compute the identical md5 prefix, see
     ``functions/hashing.py``), so the whole pipeline stays oracle-checked.
-    True k-means / k-means|| training is out of oracle scope by design:
-    its result depends on float accumulation order across partitions, so
-    no DuckDB twin could hash-match it.  Selection is a 16-row
-    TakeOrderedAndProject over (hash, vec_id) — no full sort at scale.
-    Every vector is assigned to its nearest centroid (one
-    broadcast pass — |cells| is tiny); each query probes its IVF_NPROBE
-    nearest cells and searches exactly inside them.  At 100 TB the
+    This is the untrained point of the IVF family: the trained quantizer
+    (:func:`_kmeans_trained`, integer-exact and oracle-checked too) serves
+    ``sim_ivf_trained_topk`` and its siblings; this entry keeps its own
+    cosine-assigned cells as its candidate strategy and shares only the
+    exact-rank core.  Selection is a 16-row TakeOrderedAndProject over
+    (hash, vec_id) — no full sort at scale.  Every vector is assigned to
+    its nearest centroid by cosine (one broadcast pass — |cells| is tiny);
+    each query probes its IVF_NPROBE nearest cells and searches exactly
+    inside them.  At 100 TB the
     assignment is a narrow broadcast map over the corpus and the search
     touches nprobe/cells of the data — the standard recall/throughput dial.
 
@@ -525,15 +508,17 @@ def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(NUM_IVF_CELLS)
         .drop("centroid_hash")
     )
-    centroids = _with_norm(sampled, "cell_id", "cent_emb", "cent_norm")
-    vectors = _with_norm(embeddings, "vec_id", "emb", "nrm")
-    affinity = _dot(F.col("emb"), F.col("cent_emb")) / (F.col("nrm") * F.col("cent_norm"))
+    # Cell affinity is the exact cosine too: each vector (``q`` side)
+    # against the centroids (``c`` side).
+    centroids = _with_norm(sampled, "cell_id", "c")
+    vectors = _with_norm(embeddings, "vec_id", "q")
     scored_cells = vectors.crossJoin(F.broadcast(centroids)).select(
-        "vec_id", "emb", "nrm", "cell_id", affinity.alias("cell_affinity")
+        "vec_id", "q_emb", "q_norm", "cell_id", _cosine().alias("cell_affinity")
     )
     # Struct max is lexicographic: highest affinity, then lowest cell_id —
-    # the same tie-break as the oracle's ROW_NUMBER ordering.  emb/nrm are
-    # constant within a vec_id group, so first() is deterministic in value.
+    # the same tie-break as the oracle's ROW_NUMBER ordering.  The vector
+    # is constant within a vec_id group, so first() is deterministic in
+    # value; assigned, it becomes the candidate side.
     assignments = (
         scored_cells.groupBy("vec_id")
         .agg(
@@ -542,8 +527,8 @@ def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("cell_affinity"), (-F.col("cell_id")).alias("neg_cell")
                 )
             ).alias("best"),
-            F.first("emb").alias("c_emb"),
-            F.first("nrm").alias("c_norm"),
+            F.first("q_emb").alias("c_emb"),
+            F.first("q_norm").alias("c_norm"),
         )
         .select(
             F.col("vec_id").alias("neighbor_id"),
@@ -552,38 +537,16 @@ def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             (-F.col("best.neg_cell")).alias("cell_id"),
         )
     )
-    probe_cells = (
-        vectors.filter(F.col("vec_id") < NUM_QUERY_VECTORS)
-        .crossJoin(F.broadcast(centroids))
-        .select("vec_id", "emb", "nrm", "cell_id", affinity.alias("cell_affinity"))
-    )
     w_probe = Window.partitionBy("vec_id").orderBy(
         F.col("cell_affinity").desc(), F.col("cell_id")
     )
     probes = (
-        probe_cells.withColumn("cell_rank", F.row_number().over(w_probe))
+        scored_cells.filter(F.col("vec_id") < NUM_QUERY_VECTORS)
+        .withColumn("cell_rank", F.row_number().over(w_probe))
         .filter(F.col("cell_rank") <= IVF_NPROBE)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("emb").alias("q_emb"),
-            F.col("nrm").alias("q_norm"),
-            "cell_id",
-        )
+        .select(F.col("vec_id").alias("query_id"), "q_emb", "q_norm", "cell_id")
     )
-    cosine = _dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_norm") * F.col("c_norm"))
-    scored = (
-        F.broadcast(probes)
-        .join(assignments, "cell_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", F.round(cosine, 4).alias("similarity"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("similarity").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("sim_rank", F.row_number().over(w))
-        .filter(F.col("sim_rank") <= TOP_K)
-    )
+    return _rank_exact(F.broadcast(probes).join(assignments, "cell_id"))
 
 
 def q_sim_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -624,15 +587,53 @@ def q_sim_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Oracle tail: per-query recall@k of the ``approx`` CTE against the
+# ``exact`` CTE (both (query_id, neighbor_id) pages).
+_RECALL_ROLLUP_SQL = """SELECT e.query_id,
+               COUNT(*) AS n_exact,
+               CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+                    AS BIGINT) AS n_hits,
+               ROUND(CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+                          AS DOUBLE) / COUNT(*), 4) AS recall_at_k
+        FROM exact e
+        LEFT JOIN approx a
+          ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
+        GROUP BY e.query_id"""
+
+
+def _page_sql(source: str, radius: float | None = None) -> str:
+    """Oracle tail over a scored ``source`` CTE of (query_id, neighbor_id,
+    similarity): each query's top-TOP_K page by (similarity DESC,
+    neighbor_id) with its ``sim_rank`` or, with ``radius``, every row at
+    or above it."""
+    if radius is not None:
+        return (
+            f"SELECT query_id, neighbor_id, similarity FROM {source} "
+            f"WHERE similarity >= {radius}"
+        )
+    return f"""SELECT query_id, neighbor_id, similarity, sim_rank FROM (
+            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                                         ORDER BY similarity DESC,
+                                                  neighbor_id) AS sim_rank
+            FROM {source}
+        ) WHERE sim_rank <= {TOP_K}"""
+
+
+def _bucket_oracle_sql(planes: list[list[int]]) -> str:
+    """DuckDB LSH bucket of the ``sv`` column over ``planes`` — the
+    oracle's own text for the sign-bit signature."""
+    return " + ".join(
+        f"(CASE WHEN list_dot_product(sv, {plane}::DOUBLE[]) >= 0 "
+        f"THEN {1 << i} ELSE 0 END)"
+        for i, plane in enumerate(planes)
+    )
+
+
 def _lsh_sig_cte() -> str:
     """Shared oracle CTE: per-vector norm + LSH bucket from the same
     integer planes and floor-scaled grid the Spark side uses, so signature
     bits — and therefore buckets and candidates — are bit-identical."""
-    bucket_expr = " + ".join(
-        f"(CASE WHEN list_dot_product(sv, {plane}::DOUBLE[]) >= 0 "
-        f"THEN {1 << i} ELSE 0 END)"
-        for i, plane in enumerate(_int_hyperplanes())
-    )
+    bucket_expr = _bucket_oracle_sql(_int_hyperplanes())
     return f"""e AS (
             SELECT vec_id, embedding::DOUBLE[] AS v,
                    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm,
@@ -655,10 +656,8 @@ def _neardup_lsh_oracle_sql(
     table_selects = "\n            UNION ALL ".join(
         "SELECT vec_id, v, nrm, {t} AS table_idx, {bucket} AS bucket FROM e".format(
             t=t,
-            bucket=" + ".join(
-                f"(CASE WHEN list_dot_product(sv, {planes[t * NEARDUP_BITS + i]}::DOUBLE[]) >= 0 "
-                f"THEN {1 << i} ELSE 0 END)"
-                for i in range(NEARDUP_BITS)
+            bucket=_bucket_oracle_sql(
+                planes[t * NEARDUP_BITS:(t + 1) * NEARDUP_BITS]
             ),
         )
         for t in range(NEARDUP_TABLES)
@@ -709,11 +708,7 @@ def _ann_lsh_oracle_sql() -> str:
             FROM sig q JOIN sig c ON q.bucket = c.bucket
             WHERE q.vec_id < {NUM_QUERY_VECTORS} AND q.vec_id <> c.vec_id
         )
-        SELECT query_id, neighbor_id, similarity, sim_rank FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                         ORDER BY similarity DESC, neighbor_id) AS sim_rank
-            FROM scored
-        ) WHERE sim_rank <= {TOP_K}
+        {_page_sql("scored")}
     """
 
 
@@ -751,11 +746,7 @@ def _multiprobe_lsh_oracle_sql() -> str:
             JOIN sig c ON c.bucket = p.probe AND c.vec_id <> p.query_id
             JOIN sig q ON q.vec_id = p.query_id
         )
-        SELECT query_id, neighbor_id, similarity, sim_rank FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                         ORDER BY similarity DESC, neighbor_id) AS sim_rank
-            FROM scored
-        ) WHERE sim_rank <= {TOP_K}
+        {_page_sql("scored")}
     """
 
 
@@ -912,58 +903,16 @@ def q_sim_recall_floor_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = _kmeans_assign(vectors, cent).select(
         F.col("vec_id").alias("neighbor_id"), "cell_id"
     )
-    qvec = vectors.filter(F.col("vec_id") < NUM_QUERY_VECTORS)
-    probe_scored = qvec.crossJoin(F.broadcast(cent)).select(
-        F.col("vec_id").alias("query_id"),
-        "cell_id",
-        _kmeans_sqdist(F.col("sv"), F.col("cv")).alias("d"),
-    )
-    probes = (
-        probe_scored.groupBy("query_id")
-        .agg(
-            F.slice(
-                F.array_sort(F.collect_list(F.struct("d", "cell_id"))),
-                1,
-                KMEANS_NPROBE,
-            ).alias("cells")
-        )
-        .select("query_id", F.explode(F.col("cells.cell_id")).alias("cell_id"))
-    )
-    queries = _with_norm(
-        members.filter(F.col("vec_id") < NUM_QUERY_VECTORS),
-        "query_id",
-        "q_emb",
-        "q_norm",
-    )
-    cands = _with_norm(members, "neighbor_id", "c_emb", "c_norm")
-    cosine = _dot(F.col("q_emb"), F.col("c_emb")) / (
-        F.col("q_norm") * F.col("c_norm")
-    )
-    searched = (
+    probes = _probe_cells(vectors, cent)
+    queries = _query_side(members)
+    cands = _with_norm(members, "neighbor_id", "c")
+    approx = _rank_exact(
         probes.join(cells, "cell_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
         .join(queries, "query_id")
         .join(cands, "neighbor_id")
-        .select("query_id", "neighbor_id", F.round(cosine, 4).alias("similarity"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("similarity").desc(), F.col("neighbor_id")
-    )
-    approx = (
-        searched.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "neighbor_id")
-    )
-    exact_scored = (
-        F.broadcast(queries)
-        .crossJoin(cands)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", F.round(cosine, 4).alias("similarity"))
-    )
-    exact = (
-        exact_scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "neighbor_id")
+    ).select("query_id", "neighbor_id")
+    exact = _rank_exact(F.broadcast(queries).crossJoin(cands)).select(
+        "query_id", "neighbor_id"
     )
     return _recall_vs_exact(spark, sf_dir, approx, exact)
 
@@ -1075,12 +1024,7 @@ _SQ_RERANK_SQL = f"""
             JOIN e q ON q.vec_id = s.query_id
             JOIN e c ON c.vec_id = s.neighbor_id
         )
-        SELECT query_id, neighbor_id, similarity, sim_rank FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                         ORDER BY similarity DESC, neighbor_id)
-                   AS sim_rank
-            FROM scored
-        ) WHERE sim_rank <= {TOP_K}
+        {_page_sql("scored")}
 """
 
 
@@ -1217,30 +1161,9 @@ def _pq_exact_rerank(base: DataFrame, shortlist: DataFrame) -> DataFrame:
     """Exact-cosine rerank of a (query_id, neighbor_id) shortlist to
     TOP_K — the full-precision corpus is touched only for |queries| ×
     SQ_CAND rows."""
-    q_full = base.filter(F.col("vec_id") < NUM_QUERY_VECTORS).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        _norm(F.col("embedding")).alias("q_norm"),
-    )
-    c_full = base.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        _norm(F.col("embedding")).alias("c_norm"),
-    )
-    cosine = _dot(F.col("q_emb"), F.col("c_emb")) / (
-        F.col("q_norm") * F.col("c_norm")
-    )
-    scored = (
-        shortlist.join(c_full, "neighbor_id")
-        .join(F.broadcast(q_full), "query_id")
-        .select("query_id", "neighbor_id", F.round(cosine, 4).alias("similarity"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("similarity").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("sim_rank", F.row_number().over(w)).filter(
-        F.col("sim_rank") <= TOP_K
-    )
+    c_full = _with_norm(base, "neighbor_id", "c")
+    q_full = F.broadcast(_query_side(base))
+    return _rank_exact(shortlist.join(c_full, "neighbor_id").join(q_full, "query_id"))
 
 
 def q_sim_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1317,12 +1240,7 @@ _PQ_RERANK_SQL = f"""
             JOIN e q ON q.vec_id = s.query_id
             JOIN e c ON c.vec_id = s.neighbor_id
         )
-        SELECT query_id, neighbor_id, similarity, sim_rank FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                         ORDER BY similarity DESC, neighbor_id)
-                   AS sim_rank
-            FROM scored
-        ) WHERE sim_rank <= {TOP_K}
+        {_page_sql("scored")}
 """
 
 
@@ -1495,6 +1413,30 @@ def q_sim_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     return report.join(checks, "cell_id")
 
 
+# Oracle text: integer squared L2 between a ``v.sv`` vector and a
+# ``c.cv`` centroid.
+_SQDIST_SQL = (
+    f"CAST(list_sum(list_transform(range(1, {EMB_DIM + 1}), "
+    "j -> (v.sv[j] - c.cv[j]) * (v.sv[j] - c.cv[j]))) AS BIGINT)"
+)
+
+
+def _probes_oracle_cte(final_cent: str, all_vectors: bool = False) -> str:
+    """Oracle ``probes`` CTE: each query vector's (with ``all_vectors``,
+    every vector's) KMEANS_NPROBE nearest ``final_cent`` cells, ties to
+    the lowest cell_id."""
+    where = "" if all_vectors else f"WHERE v.vec_id < {NUM_QUERY_VECTORS}"
+    return f"""probes AS (
+            SELECT query_id, cell_id FROM (
+                SELECT v.vec_id AS query_id, c.cell_id,
+                       ROW_NUMBER() OVER (PARTITION BY v.vec_id
+                                          ORDER BY {_SQDIST_SQL}, c.cell_id) AS rn
+                FROM v, {final_cent} c
+                {where}
+            ) WHERE rn <= {KMEANS_NPROBE}
+        )"""
+
+
 def _kmeans_oracle_parts(
     k: int | str = KMEANS_K,
     iters: int = KMEANS_ITERS,
@@ -1510,10 +1452,6 @@ def _kmeans_oracle_parts(
     set (seeds + iterations + the final ``af`` assignment);
     ``batch_where`` adds an ``abatch`` assignment of the held-out rows to
     the final centroids and a union CTE ``am`` — the index-append twin."""
-    sq = (
-        f"CAST(list_sum(list_transform(range(1, {EMB_DIM + 1}), "
-        "j -> (v.sv[j] - c.cv[j]) * (v.sv[j] - c.cv[j]))) AS BIGINT)"
-    )
 
     def assign(name: str, cent: str, src: str = "v") -> str:
         return f"""{name} AS (
@@ -1522,7 +1460,7 @@ def _kmeans_oracle_parts(
                        ROW_NUMBER() OVER (PARTITION BY vec_id
                                           ORDER BY d, cell_id) AS rn
                 FROM (
-                    SELECT v.vec_id, v.sv, c.cell_id, {sq} AS d
+                    SELECT v.vec_id, v.sv, c.cell_id, {_SQDIST_SQL} AS d
                     FROM {src} v, {cent} c
                 )
             ) WHERE rn = 1
@@ -1805,21 +1743,21 @@ def q_sim_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     that now ADAPT to the data instead of being a hash sample (recall
     improvement pinned in tests/test_similarity.py).
     """
-    return _ivf_trained_search(spark, sf_dir, cand_filter=None)
+    return _ivf_trained_search(spark, sf_dir)
 
 
 def _ivf_trained_search(
     spark: SparkSession,
     sf_dir: str,
-    cand_filter: Column | None,
+    cand_filter: Column | None = None,
     pair_filter: Column | None = None,
-    range_threshold: float | None = None,
+    radius: float | None = None,
+    cell_cap: int | None = None,
 ) -> DataFrame:
-    """Trained-IVF top-k search, optionally restricted to candidates
-    passing ``cand_filter`` (static) and pairs passing ``pair_filter``
-    (per-query) — shared by the unfiltered, metadata-filtered, and
-    hard-negative variants.  ``range_threshold`` swaps the top-k page
-    for the radius predicate (``sim_range_search``)."""
+    """:func:`_ivf_search` over the trained quantizer's standing posting
+    lists — shared by the top-k, filtered, hard-negative, range and
+    diversified entries, which differ only in the arguments passed
+    through."""
     vectors, cent = _kmeans_trained(spark, sf_dir)
     # The trained posting lists are the standing index every trained-IVF
     # read path shares (top-k, range, diverse, hard-negatives, the
@@ -1844,7 +1782,8 @@ def _ivf_trained_search(
         members,
         cand_filter,
         pair_filter,
-        range_threshold,
+        radius,
+        cell_cap,
     )
 
 
@@ -1879,60 +1818,33 @@ def _ivf_search(
     members: DataFrame,
     cand_filter: Column | None = None,
     pair_filter: Column | None = None,
-    range_threshold: float | None = None,
+    radius: float | None = None,
+    cell_cap: int | None = None,
 ) -> DataFrame:
-    """Probe-and-rank core shared by every trained-quantizer search:
-    nprobe cells per query against ``cent``, exact-cosine ranking of the
-    probed ``members`` (posting lists keyed by cell_id).  ``cand_filter``
-    statically restricts the candidate scan; ``pair_filter`` is a
-    per-(query, candidate) predicate over ``q_label``/``c_label`` applied
-    after the probe join, before ranking (hard-negative mining);
-    ``range_threshold`` replaces the top-k window with the radius
-    predicate — no window at all, the scored rows filter directly."""
-    probes = _probe_cells(vectors, cent)
-    with_labels = pair_filter is not None
-    queries = _with_norm(
-        table(spark, sf_dir, "embeddings").filter(
-            F.col("vec_id") < NUM_QUERY_VECTORS
-        ),
-        "query_id",
-        "q_emb",
-        "q_norm",
-        "q_label" if with_labels else None,
-    )
-    cands_src = table(spark, sf_dir, "embeddings")
-    if cand_filter is not None:
-        cands_src = cands_src.filter(cand_filter)
-    cands = _with_norm(
-        cands_src,
-        "neighbor_id",
-        "c_emb",
-        "c_norm",
-        "c_label" if with_labels else None,
-    )
-    cosine = _dot(F.col("q_emb"), F.col("c_emb")) / (
-        F.col("q_norm") * F.col("c_norm")
-    )
+    """The trained-quantizer candidate strategy: nprobe cells per query
+    against ``cent``, joined to the probed ``members`` (posting lists
+    keyed by cell_id), then ranked by :func:`_rank_exact` (``radius`` and
+    ``cell_cap`` pass through).  ``cand_filter`` statically restricts the
+    candidate scan; ``pair_filter`` is a per-(query, candidate) predicate
+    over ``q_label``/``c_label`` applied after the probe join, before
+    ranking (hard-negative mining)."""
+
+    def label(side: str) -> list[Column]:
+        if pair_filter is None:
+            return []
+        return [F.col("label").alias(f"{side}_label")]
+
+    embeddings = table(spark, sf_dir, "embeddings")
+    cands_src = embeddings if cand_filter is None else embeddings.filter(cand_filter)
     joined = (
-        F.broadcast(probes)
+        F.broadcast(_probe_cells(vectors, cent))
         .join(members, "cell_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .join(F.broadcast(queries), "query_id")
-        .join(cands, "neighbor_id")
+        .join(F.broadcast(_query_side(embeddings, *label("q"))), "query_id")
+        .join(_with_norm(cands_src, "neighbor_id", "c", *label("c")), "neighbor_id")
     )
     if pair_filter is not None:
         joined = joined.filter(pair_filter)
-    scored = joined.select(
-        "query_id", "neighbor_id", F.round(cosine, 4).alias("similarity")
-    )
-    if range_threshold is not None:
-        return scored.filter(F.col("similarity") >= range_threshold)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("similarity").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("sim_rank", F.row_number().over(w)).filter(
-        F.col("sim_rank") <= TOP_K
-    )
+    return _rank_exact(joined, radius=radius, cell_cap=cell_cap)
 
 
 # Radius for the range-search entry — inside the corpus's probed-cosine
@@ -1959,9 +1871,7 @@ def q_sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     point).  Recall caveat identical to IVF top-k: matches outside the
     probed cells are missed; the audit-entry pattern
     (``sim_recall_audit_trained``) applies unchanged."""
-    return _ivf_trained_search(
-        spark, sf_dir, cand_filter=None, range_threshold=SIM_RANGE_THRESHOLD
-    )
+    return _ivf_trained_search(spark, sf_dir, radius=SIM_RANGE_THRESHOLD)
 
 
 DIVERSE_CELL_CAP = 2  # max results per coarse cell in the diversified page
@@ -1987,74 +1897,18 @@ def q_sim_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (query_id, cell_id) — FINER than the per-query window, so no new
     skew risk — and feeds the per-query window at most
     nprobe·{DIVERSE_CELL_CAP} rows."""
-    vectors, cent = _kmeans_trained(spark, sf_dir)
-    members = _kmeans_assign(vectors, cent).select(
-        F.col("vec_id").alias("neighbor_id"), "cell_id"
-    )
-    probes = _probe_cells(vectors, cent)
-    queries = _with_norm(
-        table(spark, sf_dir, "embeddings").filter(
-            F.col("vec_id") < NUM_QUERY_VECTORS
-        ),
-        "query_id",
-        "q_emb",
-        "q_norm",
-    )
-    cands = _with_norm(
-        table(spark, sf_dir, "embeddings"), "neighbor_id", "c_emb", "c_norm"
-    )
-    cosine = _dot(F.col("q_emb"), F.col("c_emb")) / (
-        F.col("q_norm") * F.col("c_norm")
-    )
-    scored = (
-        F.broadcast(probes)
-        .join(members, "cell_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .join(F.broadcast(queries), "query_id")
-        .join(cands, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cell_id",
-            F.round(cosine, 4).alias("similarity"),
-        )
-    )
-    w_cell = Window.partitionBy("query_id", "cell_id").orderBy(
-        F.col("similarity").desc(), F.col("neighbor_id")
-    )
-    w_page = Window.partitionBy("query_id").orderBy(
-        F.col("similarity").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("cell_slot", F.row_number().over(w_cell))
-        .filter(F.col("cell_slot") <= DIVERSE_CELL_CAP)
-        .withColumn("sim_rank", F.row_number().over(w_page))
-        .filter(F.col("sim_rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cell_id", "similarity", "sim_rank")
-    )
+    return _ivf_trained_search(spark, sf_dir, cell_cap=DIVERSE_CELL_CAP)
 
 
 def _diverse_topk_oracle_sql() -> str:
     """Trained-IVF probe SQL with the two-stage (per-cell cap, then
     per-query page) ROW_NUMBER ranking of q_sim_diverse_topk."""
     parts, final_cent, members = _kmeans_oracle_parts()
-    sq = (
-        f"CAST(list_sum(list_transform(range(1, {EMB_DIM + 1}), "
-        "j -> (v.sv[j] - c.cv[j]) * (v.sv[j] - c.cv[j]))) AS BIGINT)"
-    )
     return (
         "WITH "
         + ",\n        ".join(parts)
         + f""",
-        probes AS (
-            SELECT query_id, cell_id FROM (
-                SELECT v.vec_id AS query_id, c.cell_id,
-                       ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                          ORDER BY {sq}, c.cell_id) AS rn
-                FROM v, {final_cent} c
-                WHERE v.vec_id < {NUM_QUERY_VECTORS}
-            ) WHERE rn <= {KMEANS_NPROBE}
-        ),
+        {_probes_oracle_cte(final_cent)},
         e AS (
             SELECT vec_id, embedding::DOUBLE[] AS ev,
                    sqrt(list_dot_product(embedding::DOUBLE[],
@@ -2138,10 +1992,7 @@ def q_sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     inequality on the searched pair.
     """
     return _ivf_trained_search(
-        spark,
-        sf_dir,
-        cand_filter=None,
-        pair_filter=F.col("q_label") != F.col("c_label"),
+        spark, sf_dir, pair_filter=F.col("q_label") != F.col("c_label")
     )
 
 
@@ -2468,32 +2319,18 @@ def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("query_id", F.explode(F.col("cells.cell_id")).alias("cell_id"))
     )
-    queries = _with_norm(
-        table(spark, sf_dir, "embeddings"), "query_id", "q_emb", "q_norm"
-    )
-    cands = _with_norm(
-        table(spark, sf_dir, "embeddings"), "neighbor_id", "c_emb", "c_norm"
-    )
-    cosine = _dot(F.col("q_emb"), F.col("c_emb")) / (
-        F.col("q_norm") * F.col("c_norm")
-    )
-    scored = (
+    embeddings = table(spark, sf_dir, "embeddings")
+    ranked = _rank_exact(
         probes.join(members, "cell_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .join(queries, "query_id")
-        .join(cands, "neighbor_id")
-        .select("query_id", "neighbor_id", F.round(cosine, 4).alias("similarity"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("similarity").desc(), F.col("neighbor_id")
+        .join(_with_norm(embeddings, "query_id", "q"), "query_id")
+        .join(_with_norm(embeddings, "neighbor_id", "c"), "neighbor_id"),
+        k=KNN_GRAPH_K,
     )
     return session_cache(
-        scored.withColumn("knn_rank", F.row_number().over(w))
-        .filter(F.col("knn_rank") <= KNN_GRAPH_K)
-        .select(
+        ranked.select(
             F.col("query_id").alias("vec_id"),
             "neighbor_id",
-            "knn_rank",
+            F.col("sim_rank").alias("knn_rank"),
             "similarity",
         ),
         sf_dir,
@@ -2614,22 +2451,11 @@ def _knn_edge_oracle_ctes() -> str:
     parts, final_cent, members = _kmeans_oracle_parts(
         k=_adaptive_k_sql(KNN_K_FLOOR)
     )
-    sq = (
-        f"CAST(list_sum(list_transform(range(1, {EMB_DIM + 1}), "
-        "j -> (v.sv[j] - c.cv[j]) * (v.sv[j] - c.cv[j]))) AS BIGINT)"
-    )
     return (
         "WITH "
         + ",\n        ".join(parts)
         + f""",
-        probes AS (
-            SELECT query_id, cell_id FROM (
-                SELECT v.vec_id AS query_id, c.cell_id,
-                       ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                          ORDER BY {sq}, c.cell_id) AS rn
-                FROM v, {final_cent} c
-            ) WHERE rn <= {KMEANS_NPROBE}
-        ),
+        {_probes_oracle_cte(final_cent, all_vectors=True)},
         e AS (
             SELECT vec_id, embedding::DOUBLE[] AS ev,
                    sqrt(list_dot_product(embedding::DOUBLE[],
@@ -2730,23 +2556,11 @@ def _recall_floor_planted_oracle_sql() -> str:
     parts, final_cent, members = _kmeans_oracle_parts(
         k=_adaptive_k_sql(KNN_K_FLOOR), source="planted"
     )
-    sq = (
-        f"CAST(list_sum(list_transform(range(1, {EMB_DIM + 1}), "
-        "j -> (v.sv[j] - c.cv[j]) * (v.sv[j] - c.cv[j]))) AS BIGINT)"
-    )
     return (
         "WITH "
         + ",\n        ".join(planted_ctes + parts)
         + f""",
-        probes AS (
-            SELECT query_id, cell_id FROM (
-                SELECT v.vec_id AS query_id, c.cell_id,
-                       ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                          ORDER BY {sq}, c.cell_id) AS rn
-                FROM v, {final_cent} c
-                WHERE v.vec_id < {NUM_QUERY_VECTORS}
-            ) WHERE rn <= {KMEANS_NPROBE}
-        ),
+        {_probes_oracle_cte(final_cent)},
         pe AS (
             SELECT vec_id, embedding AS ev,
                    sqrt(list_dot_product(embedding, embedding)) AS nrm
@@ -2781,17 +2595,7 @@ def _recall_floor_planted_oracle_sql() -> str:
                   ON q.vec_id < {NUM_QUERY_VECTORS} AND q.vec_id <> c.vec_id
             ) WHERE rn <= {TOP_K}
         )
-        SELECT e.query_id,
-               COUNT(*) AS n_exact,
-               CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_hits,
-               ROUND(CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL
-                                   THEN 1 ELSE 0 END) AS DOUBLE)
-                     / COUNT(*), 4) AS recall_at_k
-        FROM exact e
-        LEFT JOIN approx a
-          ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-        GROUP BY e.query_id"""
+        {_RECALL_ROLLUP_SQL}"""
     )
 
 
@@ -2801,23 +2605,11 @@ def _ivfadc_oracle_sql() -> str:
     ``sim_pq_rerank`` derivation) restricted to probed posting lists +
     exact-cosine rerank."""
     parts, final_cent, members = _kmeans_oracle_parts()
-    sq = (
-        f"CAST(list_sum(list_transform(range(1, {EMB_DIM + 1}), "
-        "j -> (v.sv[j] - c.cv[j]) * (v.sv[j] - c.cv[j]))) AS BIGINT)"
-    )
     return (
         "WITH "
         + ",\n        ".join(parts)
         + f""",
-        probes AS (
-            SELECT query_id, cell_id FROM (
-                SELECT v.vec_id AS query_id, c.cell_id,
-                       ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                          ORDER BY {sq}, c.cell_id) AS rn
-                FROM v, {final_cent} c
-                WHERE v.vec_id < {NUM_QUERY_VECTORS}
-            ) WHERE rn <= {KMEANS_NPROBE}
-        ),
+        {_probes_oracle_cte(final_cent)},
         e AS (
             SELECT vec_id, embedding::DOUBLE[] AS ev,
                    list_transform(embedding::DOUBLE[],
@@ -2853,12 +2645,7 @@ def _ivfadc_oracle_sql() -> str:
             JOIN e q ON q.vec_id = s.query_id
             JOIN e c ON c.vec_id = s.neighbor_id
         )
-        SELECT query_id, neighbor_id, similarity, sim_rank FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                         ORDER BY similarity DESC, neighbor_id)
-                   AS sim_rank
-            FROM scored
-        ) WHERE sim_rank <= {TOP_K}"""
+        {_page_sql("scored")}"""
     )
 
 
@@ -2895,26 +2682,17 @@ def q_sim_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     lex = q_text_bm25_search(spark, sf_dir).select(
         "query_id", "doc_id", F.col("rank").alias("lex_rank")
     )
-    qids = sorted(BM25_QUERIES)
     embeddings = table(spark, sf_dir, "embeddings")
     queries = _with_norm(
-        embeddings.filter(F.col("vec_id").isin(qids)), "query_id", "q_emb", "q_norm"
+        embeddings.filter(F.col("vec_id").isin(sorted(BM25_QUERIES))), "query_id", "q"
     )
-    candidates = _with_norm(embeddings, "doc_id", "c_emb", "c_norm")
-    cosine = _dot(F.col("q_emb"), F.col("c_emb")) / (
-        F.col("q_norm") * F.col("c_norm")
-    )
-    w_dense = Window.partitionBy("query_id").orderBy(
-        F.col("similarity").desc(), F.col("doc_id")
-    )
-    dense = (
-        F.broadcast(queries)
-        .crossJoin(candidates)
-        .filter(F.col("query_id") != F.col("doc_id"))
-        .select("query_id", "doc_id", F.round(cosine, 4).alias("similarity"))
-        .withColumn("dense_rank", F.row_number().over(w_dense))
-        .filter(F.col("dense_rank") <= HYBRID_TOP_K)
-        .select("query_id", "doc_id", "dense_rank")
+    dense = _rank_exact(
+        F.broadcast(queries).crossJoin(_with_norm(embeddings, "neighbor_id", "c")),
+        k=HYBRID_TOP_K,
+    ).select(
+        "query_id",
+        F.col("neighbor_id").alias("doc_id"),
+        F.col("sim_rank").alias("dense_rank"),
     )
     fused = (
         lex.join(dense, ["query_id", "doc_id"], "full_outer")
@@ -3045,29 +2823,19 @@ def q_sim_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         iters=SEMDEDUP_ITERS,
     )
     mem = _kmeans_assign(vectors, cent).select("vec_id", "cell_id")
-    emb = _with_norm(table(spark, sf_dir, "embeddings"), "vec_id", "ev", "nrm")
+    emb = table(spark, sf_dir, "embeddings").select(
+        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
+    )
     m = mem.join(emb, "vec_id")
-    a = m.select(
-        "cell_id",
-        F.col("vec_id").alias("vec_id_a"),
-        F.col("ev").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    b = m.select(
-        "cell_id",
-        F.col("vec_id").alias("vec_id_b"),
-        F.col("ev").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
-    cosine = _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
     pairs = (
-        a.join(b, "cell_id")
+        _normed_side(m, "vec_id_a", "q", "cell_id")
+        .join(_normed_side(m, "vec_id_b", "c", "cell_id"), "cell_id")
         .filter(F.col("vec_id_a") < F.col("vec_id_b"))
         .select(
             "cell_id",
             "vec_id_a",
             "vec_id_b",
-            F.round(cosine, 4).alias("similarity"),
+            F.round(_cosine(), 4).alias("similarity"),
         )
         .filter(F.col("similarity") >= NEARDUP_COSINE)
     )
@@ -3135,23 +2903,11 @@ def _ivf_trained_oracle_sql(
     parts, final_cent, members = _kmeans_oracle_parts(
         base_where=base_where, batch_where=batch_where
     )
-    sq = (
-        f"CAST(list_sum(list_transform(range(1, {EMB_DIM + 1}), "
-        "j -> (v.sv[j] - c.cv[j]) * (v.sv[j] - c.cv[j]))) AS BIGINT)"
-    )
     return (
         "WITH "
         + ",\n        ".join(parts)
         + f""",
-        probes AS (
-            SELECT query_id, cell_id FROM (
-                SELECT v.vec_id AS query_id, c.cell_id,
-                       ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                          ORDER BY {sq}, c.cell_id) AS rn
-                FROM v, {final_cent} c
-                WHERE v.vec_id < {NUM_QUERY_VECTORS}
-            ) WHERE rn <= {KMEANS_NPROBE}
-        ),
+        {_probes_oracle_cte(final_cent)},
         e AS (
             SELECT vec_id, label, embedding::DOUBLE[] AS ev,
                    sqrt(list_dot_product(embedding::DOUBLE[],
@@ -3174,22 +2930,8 @@ def _ivf_trained_oracle_sql(
             JOIN ec ce ON ce.vec_id = a.vec_id
             {pair_where}
         )
-        {_ivf_final_select(range_threshold)}"""
+        {_page_sql("searched", range_threshold)}"""
     )
-
-
-def _ivf_final_select(range_threshold: float | None) -> str:
-    if range_threshold is not None:
-        return (
-            "SELECT query_id, neighbor_id, similarity FROM searched "
-            f"WHERE similarity >= {range_threshold}"
-        )
-    return f"""SELECT query_id, neighbor_id, similarity, sim_rank FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                         ORDER BY similarity DESC,
-                                                  neighbor_id) AS sim_rank
-            FROM searched
-        ) WHERE sim_rank <= {TOP_K}"""
 
 
 QUERIES = {
@@ -3237,11 +2979,7 @@ _BRUTE_TOPK_SQL = f"""
                    ROUND(list_dot_product(q.v, c.v) / (q.nrm * c.nrm), 4) AS similarity
             FROM e q JOIN e c ON q.vec_id < {NUM_QUERY_VECTORS} AND q.vec_id <> c.vec_id
         )
-        SELECT query_id, neighbor_id, similarity, sim_rank FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                         ORDER BY similarity DESC, neighbor_id) AS sim_rank
-            FROM scored
-        ) WHERE sim_rank <= {TOP_K}
+        {_page_sql("scored")}
 """
 
 ORACLES = {
@@ -3366,40 +3104,18 @@ _IVF_TOPK_SQL = f"""
             FROM probes p JOIN assign a USING (cell_id)
             WHERE p.query_id <> a.neighbor_id
         )
-        SELECT query_id, neighbor_id, similarity, sim_rank FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                         ORDER BY similarity DESC, neighbor_id) AS sim_rank
-            FROM scored
-        ) WHERE sim_rank <= {TOP_K}
+        {_page_sql("scored")}
 """
 ORACLES["sim_ivf_topk"] = _IVF_TOPK_SQL
 
 ORACLES["sim_recall_audit"] = f"""
         WITH exact AS ({_BRUTE_TOPK_SQL}),
         approx AS ({_IVF_TOPK_SQL})
-        SELECT e.query_id,
-               COUNT(*) AS n_exact,
-               CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_hits,
-               ROUND(CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-                          AS DOUBLE) / COUNT(*), 4) AS recall_at_k
-        FROM exact e
-        LEFT JOIN approx a
-          ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-        GROUP BY e.query_id
+        {_RECALL_ROLLUP_SQL}
 """
 
 ORACLES["sim_recall_audit_trained"] = f"""
         WITH exact AS ({_BRUTE_TOPK_SQL}),
         approx AS ({_ivf_trained_oracle_sql()})
-        SELECT e.query_id,
-               COUNT(*) AS n_exact,
-               CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_hits,
-               ROUND(CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-                          AS DOUBLE) / COUNT(*), 4) AS recall_at_k
-        FROM exact e
-        LEFT JOIN approx a
-          ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-        GROUP BY e.query_id
+        {_RECALL_ROLLUP_SQL}
 """

@@ -39,9 +39,7 @@ def test_features_match_python_recomputation(spark, sf_dir):
         assert got.byte_max == int(arr.max())
 
 
-def test_resize_is_stubbed_and_fake_has_fixed_shape(spark, sf_dir):
-    with pytest.raises(NotImplementedError):
-        M.resize_image(b"...", 8)
+def test_fake_resizer_has_fixed_shape(spark, sf_dir):
     rows = M.resized_thumbnails(spark, sf_dir).limit(10).collect()
     assert all(len(r.thumbnail) == M.THUMB_SIDE * M.THUMB_SIDE for r in rows)
     assert all(0 <= v <= 255 for r in rows for v in r.thumbnail)
@@ -244,18 +242,12 @@ class TestPpmCodec:
         import pytest
 
         from simple_query_engine_spark.functions.ppm import encode_ppm
-        from simple_query_engine_spark.operators.multimodal import (
-            decode_image,
-            resize_image,
-        )
+        from simple_query_engine_spark.operators.multimodal import decode_image
 
         payload = encode_ppm(2, 2, bytes(12))
         assert decode_image(payload) == (2, 2, bytes(12))
-        assert resize_image(payload, 1) == encode_ppm(1, 1, bytes(3))
         with pytest.raises(NotImplementedError):
             decode_image(b"\x89PNG....")
-        with pytest.raises(NotImplementedError):
-            resize_image(b"\xff\xd8jpeg", 8)
 
 
 class TestPpmProperties:

@@ -43,6 +43,47 @@ def test_cosine_matches_numpy(spark, sf_dir, exact_topk):
             assert abs(r.similarity - round(expected, 4)) <= 1e-4
 
 
+@pytest.fixture(scope="module")
+def oracle_con(sf_dir):
+    import duckdb
+
+    from tools.check_correctness import register_views
+
+    con = duckdb.connect()
+    register_views(con, sf_dir)
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "sim_topk_bruteforce",
+        "sim_ann_lsh",
+        "sim_multiprobe_lsh",
+        "sim_ivf_topk",
+        "sim_sq_rerank",
+        "sim_range_search",
+        "sim_diverse_topk",
+        "sim_hard_negatives",
+    ],
+)
+def test_exact_rank_callers_match_oracle(spark, sf_dir, oracle_con, name):
+    """Each candidate strategy ranked by the one exact-rank core
+    (``_rank_exact``: page, radius, per-cell cap) returns its DuckDB
+    oracle's rows, column names and type kinds — the type-strict
+    comparison of tools/check_correctness.py."""
+    from tools.check_correctness import compare, compare_types
+
+    df = S.QUERIES[name](spark, sf_dir)
+    duck = oracle_con.sql(S.ORACLES[name])
+    duck_cols = list(duck.columns)
+    problem = compare_types(df.schema, duck_cols, list(duck.types)) or compare(
+        [tuple(r) for r in df.collect()], duck.fetchall(), df.columns, duck_cols
+    )
+    assert problem is None, problem
+
+
 def test_ann_results_are_valid_and_bounded(spark, sf_dir, exact_topk):
     ann_rows = S.q_sim_ann_lsh(spark, sf_dir).collect()
     best_exact = {qid: rows[0].similarity for qid, rows in exact_topk.items()}
